@@ -129,9 +129,6 @@ def main() -> None:
     from concept_hierarchy_formation_in_property_graphs_spark.fixtures.pages import (
         pages_spark_df,
     )
-    from concept_hierarchy_formation_in_property_graphs_spark.plans.checkpoint import (
-        drop_checkpoint_tables,
-    )
     from concept_hierarchy_formation_in_property_graphs_spark.plans.pipeline import (
         run_pipeline,
     )
@@ -149,7 +146,6 @@ def main() -> None:
         n_triples = out["triples"].count()
         out["concepts"].count()
         pipeline_runs.append(round(time.time() - t0, 3))
-        drop_checkpoint_tables(spark, wd)  # before rmtree: no dangling entries
         shutil.rmtree(wd, ignore_errors=True)
         print(f"# pipeline run: {pipeline_runs[-1]}s", file=sys.stderr)
     pages.unpersist()

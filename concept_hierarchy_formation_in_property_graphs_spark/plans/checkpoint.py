@@ -1,29 +1,26 @@
 """Checkpointed stage runner — the resume spine (north rule).
 
-Each pipeline stage materializes to Parquet (Iceberg at cluster scale — the
-writer is format-agnostic) together with:
-  * per-partition lineage counters (stage, partition_id, rows), and
-  * a stage metrics row (rows, partitions, wall seconds).
+Each pipeline stage materializes to a flat snapshot directory (Parquet;
+Iceberg at cluster scale — the writer is format-agnostic) together with:
+  * per-partition lineage counters (``_lineage.json``), and
+  * a stage metrics record (``_metrics.json``: rows, partitions, seconds).
 
-A re-run finds the committed snapshot (_SUCCESS) and skips the stage, so a
-mid-pipeline kill resumes from the latest complete stage with byte-identical
-final output (tests/test_pipeline.py::test_resume_after_partial_failure
-proves it).
+A stage commits by rename: snapshot, lineage and metrics are written into
+a sibling ``_tmp_<name>`` directory (Hadoop readers skip ``_``-prefixed
+names), which then replaces ``<name>``. A stage counts as complete only
+when ``<name>/_metrics.json`` exists — the last file written before the
+rename — so a kill at any point leaves either the committed snapshot or
+nothing a re-run trusts, and a failed rebuild never touches ``<name>``.
 
-Stages may checkpoint BUCKETED (``bucket_key=``): the snapshot is written
-``bucketBy(N, key) + sortBy(key)`` as an EXTERNAL table whose location is
-the ordinary stage directory, so every downstream join/groupBy on that key
-is exchange-free by layout — the shuffle is paid once at checkpoint time,
-not per consumer (the 100 TB story for the kg_* joins and the pagerank
-loop over a checkpointed edge table). Resume is catalog-independent: the
-files outlive the session's in-memory catalog, and a fresh session
-re-registers the bucket spec with CREATE TABLE ... CLUSTERED BY ...
-LOCATION before reading, so the layout survives restarts too.
+A re-run skips every complete stage, so a mid-pipeline kill resumes from
+the latest committed stage with byte-identical final output
+(tests/test_pipeline.py::test_resume_after_partial_failure proves it).
+Nothing is registered in the Spark catalog: a snapshot is read back by
+path, so resume needs no catalog state and leaves none behind.
 """
 
 from __future__ import annotations
 
-import hashlib
 import json
 import os
 import shutil
@@ -45,11 +42,11 @@ class StageRunner:
         return os.path.join(self.base_dir, name)
 
     def is_complete(self, name: str) -> bool:
-        return os.path.exists(os.path.join(self._path(name), "_SUCCESS"))
+        return os.path.exists(os.path.join(self._path(name), "_metrics.json"))
 
     @staticmethod
     def _footer_lineage(path: str) -> list[tuple[str, int]]:
-        """(file, num_rows) per committed part file, from columnar footers
+        """(file, num_rows) per written part file, from columnar footers
         (parquet or ORC — both carry row counts in file metadata; an
         Iceberg snapshot exposes the identical counts in its manifest)."""
         out = []
@@ -67,118 +64,39 @@ class StageRunner:
                 out.append((fn, po.ORCFile(full).nrows))
         return out
 
-    def _table_name(self, name: str) -> str:
-        """Catalog name for a bucketed stage — unique per workdir so two
-        concurrent runs never collide on a table name."""
-        tag = hashlib.md5(os.path.abspath(self.base_dir).encode()).hexdigest()[:10]
-        return f"chf_ck_{tag}_{name}".lower()
-
-    def _committed_layout(self, path: str) -> dict | None:
-        """The layout RECORDED at write time (stage ``_metrics.json``), or
-        None if the metrics file is missing (killed in the narrow window
-        between the snapshot's _SUCCESS and the metrics write)."""
-        try:
-            with open(os.path.join(path, "_metrics.json")) as f:
-                return json.load(f)
-        except (OSError, ValueError):
-            return None
-
-    def _read_bucketed(self, name: str, path: str, bucket_key: str,
-                       n_buckets: int) -> DataFrame:
-        """Read a committed bucketed snapshot, re-registering the bucket
-        spec if this session's catalog has never seen it (resume after
-        restart — the files carry no bucket metadata, the catalog does).
-
-        The spec registered is the one RECORDED at write time, never the
-        caller's current arguments: a resume with a different
-        ``n_buckets`` (or over a flat-era snapshot) must not declare a
-        layout the committed files don't have — Spark would trust the
-        catalog, elide exchanges, and silently mis-join (wrong-spec case)
-        or crash on flat part-file names (flat case)."""
-        rec = self._committed_layout(path)
-        if rec is not None:
-            if rec.get("bucketed_by") is None:
-                # committed FLAT (bucketed=False era): read it flat even
-                # though the caller now asks for the bucketed layout
-                return self.spark.read.format(self.fmt).load(path)
-            bucket_key = rec["bucketed_by"]
-            n_buckets = rec["n_buckets"]
-        tbl = self._table_name(name)
-        if not self.spark.catalog.tableExists(tbl):
-            schema = self.spark.read.format(self.fmt).load(path).schema
-            cols = ", ".join(
-                f"`{f.name}` {f.dataType.simpleString()}" for f in schema.fields
-            )
-            self.spark.sql(
-                f"CREATE TABLE {tbl} ({cols}) USING {self.fmt} "
-                f"CLUSTERED BY (`{bucket_key}`) SORTED BY (`{bucket_key}`) "
-                f"INTO {n_buckets} BUCKETS LOCATION '{path}'"
-            )
-        return self.spark.table(tbl)
-
-    def stage(self, name: str, build: Callable[[], DataFrame],
-              bucket_key: str | None = None, n_buckets: int = 8) -> DataFrame:
-        """Run (or resume) one stage; returns the materialized DataFrame.
-
-        ``bucket_key`` switches the snapshot to the bucketed layout:
-        downstream joins/groupBys on that key read it exchange-free."""
+    def stage(self, name: str, build: Callable[[], DataFrame]) -> DataFrame:
+        """Run (or resume) one stage; returns the materialized DataFrame."""
         path = self._path(name)
         t0 = time.time()
         if self.is_complete(name):
-            if bucket_key is not None:
-                df = self._read_bucketed(name, path, bucket_key, n_buckets)
-            else:
-                df = self.spark.read.format(self.fmt).load(path)
+            df = self.spark.read.format(self.fmt).load(path)
             self.metrics.append(
                 {"stage": name, "resumed": True, "seconds": round(time.time() - t0, 3)}
             )
             return df
-        df = build()
-        if bucket_key is not None:
-            tbl = self._table_name(name)
-            # external table: DROP forgets the spec but keeps files; the
-            # incomplete dir is ours to clear (same overwrite semantics
-            # as the flat path)
-            self.spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-            shutil.rmtree(path, ignore_errors=True)
-            (
-                # one output file per bucket — without the repartition a
-                # bucketed write emits up to tasks×buckets files
-                df.repartition(n_buckets, bucket_key)
-                .write.format(self.fmt)
-                .mode("overwrite")
-                .bucketBy(n_buckets, bucket_key)
-                .sortBy(bucket_key)
-                .option("path", path)
-                .saveAsTable(tbl)
-            )
-            out = self.spark.table(tbl)
-        else:
-            df.write.mode("overwrite").format(self.fmt).save(path)
-            out = self.spark.read.format(self.fmt).load(path)
+        tmp = self._path(f"_tmp_{name}")
+        build().write.mode("overwrite").format(self.fmt).save(tmp)
         # per-partition lineage counters from the parquet footers — pure
         # metadata reads on the driver, zero extra Spark jobs per stage
         # (works the same against HDFS/S3 via pyarrow filesystems; an
         # Iceberg snapshot exposes the identical counts in its manifest)
-        lineage = self._footer_lineage(path)
-        with open(os.path.join(path, "_lineage.json"), "w") as f:
+        lineage = self._footer_lineage(tmp)
+        with open(os.path.join(tmp, "_lineage.json"), "w") as f:
             json.dump({"stage": name, "files": lineage}, f)
-        rows = sum(r for _, r in lineage)
-        n_parts = len(lineage)
         rec = {
             "stage": name,
             "resumed": False,
-            "rows": rows,
-            "partitions": n_parts,
+            "rows": sum(r for _, r in lineage),
+            "partitions": len(lineage),
             "seconds": round(time.time() - t0, 3),
         }
-        if bucket_key is not None:
-            rec["bucketed_by"] = bucket_key
-            rec["n_buckets"] = n_buckets
-        self.metrics.append(rec)
-        with open(os.path.join(path, "_metrics.json"), "w") as f:
+        with open(os.path.join(tmp, "_metrics.json"), "w") as f:
             json.dump(rec, f)
-        return out
+        # commit: clear any uncommitted leftover, then rename into place
+        shutil.rmtree(path, ignore_errors=True)
+        os.replace(tmp, path)
+        self.metrics.append(rec)
+        return self.spark.read.format(self.fmt).load(path)
 
     def write_run_metrics(self) -> str:
         p = os.path.join(self.base_dir, "run_metrics.json")
@@ -188,16 +106,8 @@ class StageRunner:
 
 
 def drop_checkpoint_tables(spark: SparkSession, base_dir: str) -> int:
-    """Drop every ``chf_ck_<tag>_*`` catalog entry this workdir's bucketed
-    stages registered (EXTERNAL tables — files are untouched). Call before
-    deleting a workdir inside a live session; otherwise the entries dangle
-    at a removed location and any later catalog enumeration that reads
-    them fails. Returns the number of tables dropped."""
-    tag = hashlib.md5(os.path.abspath(base_dir).encode()).hexdigest()[:10]
-    prefix = f"chf_ck_{tag}_"
-    n = 0
-    for t in spark.catalog.listTables():
-        if t.name.startswith(prefix) and not t.isTemporary:
-            spark.sql(f"DROP TABLE IF EXISTS {t.name}")
-            n += 1
-    return n
+    """No-op kept for callers written when pipeline checkpoints were
+    registered as catalog tables (the benchmark harness still calls it).
+    ``StageRunner`` registers nothing in the catalog, so there is nothing
+    to drop before deleting a workdir; always returns 0."""
+    return 0

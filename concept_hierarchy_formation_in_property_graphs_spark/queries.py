@@ -2187,7 +2187,6 @@ def pl_open_vocab_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from .plans.checkpoint import drop_checkpoint_tables
     from .plans.pipeline import run_pipeline
 
     pages = _fixture_pages(spark, 150, 80)
@@ -2197,7 +2196,6 @@ def pl_open_vocab_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
                            mention_entities=80)
         triples = out["triples"].localCheckpoint(eager=True)
     finally:
-        drop_checkpoint_tables(spark, wd)  # before rmtree: no dangling entries
         shutil.rmtree(wd, ignore_errors=True)
     return triples
 

@@ -11,6 +11,7 @@ from __future__ import annotations
 import os
 import shutil
 import tempfile
+from pathlib import Path
 
 import pytest
 
@@ -29,17 +30,24 @@ N_PAGES = 120
 N_ENT = 60
 
 
+def _catalog_tables(spark) -> set[str]:
+    return {t.name for t in spark.catalog.listTables()}
+
+
 @pytest.fixture(scope="module")
 def pipeline_run(spark):
     wd = tempfile.mkdtemp(prefix="chf_e2e_")
     pages = pages_spark_df(spark, N_PAGES, n_entities=N_ENT)
+    tables_before = _catalog_tables(spark)
     out = run_pipeline(spark, pages, wd, n_entities=N_ENT)
-    yield wd, out
+    yield wd, out, tables_before
     shutil.rmtree(wd, ignore_errors=True)
 
 
 def test_pipeline_precision_recall_and_invariants(spark, pipeline_run):
-    _, out = pipeline_run
+    _, out, tables_before = pipeline_run
+    # checkpoints are read back by path: the run registers no catalog tables
+    assert _catalog_tables(spark) == tables_before
     _, _, expected = generate_pages(N_PAGES, N_ENT)
     got = set(map(tuple, out["triples"].collect()))
     exp = set(map(tuple, expected.itertuples(index=False)))
@@ -59,7 +67,7 @@ def test_pipeline_precision_recall_and_invariants(spark, pipeline_run):
 
 
 def test_resume_after_partial_failure_identical_output(spark, pipeline_run):
-    wd, out1 = pipeline_run
+    wd, out1, _ = pipeline_run
     final1 = sorted(map(tuple, out1["concepts"].drop("intent").collect()))
     # simulate a crash after S5: wipe the last two stages
     shutil.rmtree(wd + "/s6_concepts")
@@ -73,6 +81,71 @@ def test_resume_after_partial_failure_identical_output(spark, pipeline_run):
     assert final1 == final2
     # per-partition lineage exists for recomputed stages
     assert os.path.exists(wd + "/s6_concepts/_lineage.json")
+
+
+def test_stage_without_metrics_is_rebuilt(spark, pipeline_run):
+    """``_metrics.json`` is the commit marker: a stage dir without it (a
+    kill after the snapshot landed) is rebuilt, not resumed, and the
+    final hierarchy is unchanged. Earlier tests rewrite fixture stage
+    dirs, so fresh handles come from an all-resumed re-run."""
+    wd, _, _ = pipeline_run
+    pages = pages_spark_df(spark, N_PAGES, n_entities=N_ENT)
+    out1 = run_pipeline(spark, pages, wd, n_entities=N_ENT)
+    final1 = sorted(map(tuple, out1["concepts"].drop("intent").collect()))
+    os.remove(os.path.join(wd, "s6_concepts", "_metrics.json"))
+    out2 = run_pipeline(spark, pages, wd, n_entities=N_ENT)
+    resumed = {m["stage"] for m in out2["metrics"] if m.get("resumed")}
+    assert "s6_concepts" not in resumed
+    assert "s6_assignments" in resumed and "s5_char_sets" in resumed
+    final2 = sorted(map(tuple, out2["concepts"].drop("intent").collect()))
+    assert final1 == final2
+    assert os.path.exists(os.path.join(wd, "s6_concepts", "_metrics.json"))
+    assert not [d for d in os.listdir(wd) if d.startswith("_tmp_")]
+
+
+def test_failed_build_leaves_no_trusted_snapshot(spark):
+    """A build whose write raises never touches ``<name>``: a fresh stage
+    stays absent, an uncommitted leftover stays byte-for-byte as it was,
+    neither counts as complete, and the next run commits normally."""
+    from pyspark.sql import functions as F
+
+    from concept_hierarchy_formation_in_property_graphs_spark.plans.checkpoint import (
+        StageRunner,
+    )
+
+    def failing():
+        return spark.range(20).select(
+            F.when(F.col("id") < 100, F.raise_error(F.lit("boom")))
+            .otherwise(F.col("id")).alias("id")
+        )
+
+    def snapshot(d):
+        return {p.name: p.read_bytes() for p in sorted(Path(d).iterdir())}
+
+    wd = tempfile.mkdtemp(prefix="chf_fail_")
+    try:
+        StageRunner(spark, wd).stage("left", lambda: spark.range(5))
+        left = os.path.join(wd, "left")
+        os.remove(os.path.join(left, "_metrics.json"))  # uncommitted leftover
+        before = snapshot(left)
+
+        runner = StageRunner(spark, wd)
+        for name in ("left", "fresh"):
+            with pytest.raises(Exception, match="boom"):
+                runner.stage(name, failing)
+            assert not runner.is_complete(name)
+        assert snapshot(left) == before
+        assert not os.path.exists(os.path.join(wd, "fresh"))
+
+        runner = StageRunner(spark, wd)
+        for name in ("left", "fresh"):
+            df = runner.stage(name, lambda: spark.range(7))
+            assert sorted(r.id for r in df.collect()) == list(range(7))
+            assert runner.is_complete(name)
+        assert not any(m["resumed"] for m in runner.metrics)
+        assert not [d for d in os.listdir(wd) if d.startswith("_tmp_")]
+    finally:
+        shutil.rmtree(wd, ignore_errors=True)
 
 
 def test_pipeline_deterministic_across_partition_counts(spark):
@@ -176,150 +249,3 @@ def test_iceberg_read_surfaces_real_error_without_fallback(spark):
     with pytest.raises(RuntimeError, match="Iceberg read") as ei:
         read_pages(spark, iceberg_table="db.pages")
     assert ei.value.__cause__ is not None  # the Spark loader error is chained
-
-
-def _assert_no_hash_exchange(spark, df):
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange hashpartitioning" not in plan, plan
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-
-
-def test_bucketed_checkpoints_zero_exchange_and_flat_equivalence(
-        spark, pipeline_run):
-    """r4 carry-over task 5: the default pipeline checkpoints the graph
-    stages bucketBy(node id). (a) A downstream join of two checkpoints
-    on the bucket key plans with ZERO hash exchanges; (b) the flat
-    layout produces identical output (layout never changes semantics).
-
-    Earlier tests may rewrite fixture stage dirs (resume test), which
-    stales the fixture's DataFrame handles — so this test re-resumes the
-    fixture workdir for fresh handles instead of reusing them."""
-    import json as _json
-
-    wd, _ = pipeline_run
-    pages = pages_spark_df(spark, N_PAGES, n_entities=N_ENT)
-    out = run_pipeline(spark, pages, wd, n_entities=N_ENT)  # all resumed
-    # bucket specs were recorded at original build time, per stage dir
-    expected = {
-        "s4_nodes": "id", "s4_edges": "src",
-        "s5_struct_features": "id", "s5_char_sets": "id",
-        "s6_assignments": "instance_id",
-    }
-    for stage, key in expected.items():
-        with open(os.path.join(wd, stage, "_metrics.json")) as f:
-            rec = _json.load(f)
-        assert rec.get("bucketed_by") == key, (stage, rec)
-    # (a) features ⋈ intents on id — both bucketed by id — no exchange
-    j = out["struct_features"].join(out["intents"], "id")
-    _assert_no_hash_exchange(spark, j)
-    assert j.count() == out["intents"].count()
-    # (b) flat run in its own workdir: identical stage outputs
-    wd2 = tempfile.mkdtemp(prefix="chf_flat_")
-    try:
-        flat = run_pipeline(spark, pages, wd2, n_entities=N_ENT,
-                            bucketed=False)
-        assert not [m for m in flat["metrics"] if "bucketed_by" in m]
-        for k in ("triples", "concepts", "assignments"):
-            got = sorted(map(tuple, flat[k].collect()))
-            exp = sorted(map(tuple, out[k].collect()))
-            assert got == exp, f"{k} differs between layouts"
-    finally:
-        shutil.rmtree(wd2, ignore_errors=True)
-
-
-def test_bucketed_resume_survives_catalog_loss(spark, pipeline_run):
-    """Bucketed snapshots resume catalog-independently: drop every
-    checkpoint table (a fresh session's in-memory catalog), rerun on the
-    same workdir — every stage resumes from disk and the re-registered
-    bucket spec still yields exchange-free joins."""
-    wd, _ = pipeline_run
-    for t in spark.catalog.listTables():
-        if t.name.startswith("chf_ck_"):
-            spark.sql(f"DROP TABLE {t.name}")
-    pages = pages_spark_df(spark, N_PAGES, n_entities=N_ENT)
-    out2 = run_pipeline(spark, pages, wd, n_entities=N_ENT)
-    resumed = {m["stage"] for m in out2["metrics"] if m.get("resumed")}
-    assert {"s4_edges", "s5_struct_features", "s5_char_sets"} <= resumed
-    j = out2["struct_features"].join(out2["intents"], "id")
-    _assert_no_hash_exchange(spark, j)
-    # sanity: the re-registered table reads the committed snapshot
-    n_disk = spark.read.parquet(os.path.join(wd, "s5_char_sets")).count()
-    assert out2["intents"].count() == n_disk > 0
-
-
-def test_resume_uses_recorded_layout_not_caller_args(spark, pipeline_run):
-    """The bucket spec registered on resume is the one RECORDED at write
-    time: resuming with a different n_buckets must not declare a layout
-    the committed files don't have (Spark would trust the catalog, elide
-    exchanges, and silently mis-join), and resuming a FLAT-era workdir
-    under the bucketed default must read it flat, not crash on part-file
-    names that carry no bucket id."""
-    import json as _json
-
-    wd, _ = pipeline_run  # written with the default n_buckets=16
-    for t in spark.catalog.listTables():  # fresh-session catalog
-        if t.name.startswith("chf_ck_"):
-            spark.sql(f"DROP TABLE {t.name}")
-    pages = pages_spark_df(spark, N_PAGES, n_entities=N_ENT)
-    out = run_pipeline(spark, pages, wd, n_entities=N_ENT, n_buckets=4)
-    assert all(m.get("resumed") for m in out["metrics"])
-    with open(os.path.join(wd, "s4_edges", "_metrics.json")) as f:
-        recorded = _json.load(f)["n_buckets"]
-    edges_tbl = next(
-        t.name for t in spark.catalog.listTables()
-        if t.name.startswith("chf_ck_") and t.name.endswith("_s4_edges")
-    )
-    ddl = spark.sql(f"SHOW CREATE TABLE {edges_tbl}").collect()[0][0]
-    assert f"INTO {recorded} BUCKETS" in ddl, ddl  # recorded wins, not 4
-    # joins on the recorded layout stay exchange-free and correct
-    j = out["struct_features"].join(out["intents"], "id")
-    _assert_no_hash_exchange(spark, j)
-    assert j.count() == out["intents"].count()
-
-    # flat-era workdir resumed under the bucketed default: reads flat
-    wd2 = tempfile.mkdtemp(prefix="chf_flatresume_")
-    try:
-        flat = run_pipeline(spark, pages, wd2, n_entities=N_ENT,
-                            bucketed=False)
-        n_exp = flat["assignments"].count()
-        out2 = run_pipeline(spark, pages, wd2, n_entities=N_ENT)  # bucketed
-        assert all(m.get("resumed") for m in out2["metrics"])
-        assert out2["assignments"].count() == n_exp > 0
-    finally:
-        shutil.rmtree(wd2, ignore_errors=True)
-
-
-def test_drop_checkpoint_tables_scoped_to_workdir(spark, pipeline_run):
-    """drop_checkpoint_tables removes exactly this workdir's chf_ck_*
-    catalog entries (so callers can rmtree a tempdir without leaving
-    dangling external tables) and never touches another workdir's."""
-    from concept_hierarchy_formation_in_property_graphs_spark.plans.checkpoint import (
-        drop_checkpoint_tables,
-    )
-
-    wd, _ = pipeline_run
-    pages = pages_spark_df(spark, N_PAGES, n_entities=N_ENT)
-    run_pipeline(spark, pages, wd, n_entities=N_ENT)  # ensure registered
-    wd2 = tempfile.mkdtemp(prefix="chf_drop_")
-    try:
-        run_pipeline(spark, pages, wd2, n_entities=N_ENT)
-        before = {t.name for t in spark.catalog.listTables()
-                  if t.name.startswith("chf_ck_")}
-        n = drop_checkpoint_tables(spark, wd2)
-        after = {t.name for t in spark.catalog.listTables()
-                 if t.name.startswith("chf_ck_")}
-        assert n == len(before) - len(after) > 0
-        removed = before - after
-        import hashlib as _hl
-        tag2 = _hl.md5(os.path.abspath(wd2).encode()).hexdigest()[:10]
-        assert all(name.startswith(f"chf_ck_{tag2}_") for name in removed)
-        # the OTHER workdir's tables survive and still resume cleanly
-        out = run_pipeline(spark, pages, wd, n_entities=N_ENT)
-        assert all(m.get("resumed") for m in out["metrics"])
-    finally:
-        drop_checkpoint_tables(spark, wd2)
-        shutil.rmtree(wd2, ignore_errors=True)
