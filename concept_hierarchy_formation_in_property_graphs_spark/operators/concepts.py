@@ -24,18 +24,20 @@ instances and children gets a synthetic residual child leaf — the analogue
 of Cobweb's "leaves stay leaves" intermediate-parent insertion
 (`algos/Cobweb.java:113-160`).
 
-Scale notes: #concepts = #distinct intents ≪ #instances. Subsumption
-candidates are generated through each intent's globally RAREST item (not
-all items), so hub items (head-entity skew) never drive the self-join
-fan-out; verification is a codegen'd array_except. The per-level loops are
-driver-driven but bounded by tree depth (≤ max intent size + 1), each
-iteration localCheckpoint'ed to keep lineage O(1).
+Scale notes: #concepts = #distinct intents ≪ #instances, so one engine
+serves every size: instance-sized work (intent dedup, assignment) is
+distributed, and the concept table is collected once and built on the
+driver. Subsumption candidates come from each intent's globally RAREST
+item (not all items), so hub items (head-entity skew) never drive the
+fan-out; containment is tested over NumPy item bitsets. Sizes measured
+up to 379k concepts are in BASELINE.md ("One lattice engine").
 """
 
 from __future__ import annotations
 
 import logging
 
+import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -181,8 +183,6 @@ def galois_close_intents(intents: DataFrame, max_rounds: int = 32,
 
 
 def build_hierarchy(instances: DataFrame, root_seed: str = "c",
-                    max_depth: int = 64,
-                    driver_threshold: int = 200_000,
                     galois: bool = False) -> dict[str, DataFrame]:
     """instances(instance_id, intent ARRAY<STRING>) → hierarchy tables.
 
@@ -191,25 +191,16 @@ def build_hierarchy(instances: DataFrame, root_seed: str = "c",
       assignments(instance_id, concept_id)   # leaf concepts only
       closure(desc, anc)                     # reflexive-transitive
 
-    The heavy relational work (intent dedup, instance assignment) is
-    distributed. The whole CONCEPT-side computation — Galois closure,
-    subsumption, residual insertion, depth/label/closure/count — runs
-    driver-side when the distinct-intent table is ≤ ``driver_threshold``
-    rows: #concepts = #distinct intents, orders of magnitude below
-    #instances even at corpus scale, and the driver pass costs ONE Spark
-    job (scan + exact-intent aggregate + bounded collect) where the
-    distributed path pays ~12 AQE stage launches of pure scheduling
-    overhead on concept-sized data. Above the threshold the distributed
-    path (subsumption self-join, level-by-level label sweep,
-    localCheckpoint per round) takes over; the two branches are
-    bit-identical (enforced by parity tests).
+    The instance-sized work (intent dedup, instance assignment) is
+    distributed. The concept-sized work — Galois closure, subsumption,
+    residual insertion, depth/label/closure/count — is one driver pass
+    over the collected exact-intent table (``_hierarchy_from_state``):
+    #concepts = #distinct intents, orders of magnitude below #instances.
     """
     spark = instances.sparkSession
     inst = _canonical_intents(instances)
     exact = intent_state(instances)
-    return _hierarchy_from_state(
-        spark, exact, inst, root_seed, max_depth, driver_threshold, galois
-    )
+    return _hierarchy_from_state(spark, exact, inst, root_seed, galois)
 
 
 def intent_state(instances: DataFrame) -> DataFrame:
@@ -241,18 +232,17 @@ def merge_intent_state(a: DataFrame, b: DataFrame) -> DataFrame:
 
 def update_hierarchy(prev_state: DataFrame | None, new_instances: DataFrame,
                      prev_inst: DataFrame | None = None,
-                     root_seed: str = "c", max_depth: int = 64,
-                     driver_threshold: int = 200_000,
+                     root_seed: str = "c",
                      galois: bool = False) -> dict[str, DataFrame]:
     """Incremental hierarchy maintenance — the distributed, ORDER-FREE
     analogue of the reference's incremental Cobweb insertion (O3/O4/O5:
     create/merge/split, `algos/Cobweb.java:23-160`).
 
     The new batch contributes only its concept-sized intent-state delta;
-    old INSTANCES are never rescanned (the reference's incremental claim,
-    kept at 100 TB: each ingest touches new data + a concept-sized state
-    table). Because the lattice construction is a pure function of the
-    merged state, ``update_hierarchy(state(D1), D2)`` is BIT-IDENTICAL to
+    old INSTANCES are never rescanned (the reference's incremental claim):
+    each ingest touches the new data plus a concept-sized state table.
+    Because the lattice construction is a pure function of the merged
+    state, ``update_hierarchy(state(D1), D2)`` is BIT-IDENTICAL to
     ``build_hierarchy(D1 ∪ D2)`` — the order-effect the reference
     mitigates by shuffling (T8) cannot exist here. Test-enforced,
     including the leaf→inner transition where previously-assigned
@@ -269,261 +259,26 @@ def update_hierarchy(prev_state: DataFrame | None, new_instances: DataFrame,
     state = delta if prev_state is None else merge_intent_state(prev_state, delta)
     inst_new = _canonical_intents(new_instances)
     inst = inst_new if prev_inst is None else prev_inst.unionByName(inst_new)
-    out = _hierarchy_from_state(
-        spark, state, inst, root_seed, max_depth, driver_threshold, galois
-    )
+    out = _hierarchy_from_state(spark, state, inst, root_seed, galois)
     out["state"] = state
     out["inst"] = inst
     return out
 
 
-def _hierarchy_from_state(spark, exact: DataFrame, inst: DataFrame,
-                          root_seed: str, max_depth: int,
-                          driver_threshold: int, galois: bool) -> dict[str, DataFrame]:
-    # ONE fused job decides the branch AND feeds the driver pass: collect
-    # at most threshold+1 concept rows — if we got ≤ threshold, that IS the
-    # full exact-intent table (limit short-circuits the scan otherwise)
-    probe = (
-        exact.limit(driver_threshold + 1).collect()
-        if driver_threshold > 0
-        else None
-    )
-    if probe is not None and len(probe) <= driver_threshold:
-        out = _hierarchy_driver(spark, inst, probe, root_seed, galois)
-        if out is not None:
-            return out
-        _log.info(
-            "build_hierarchy: driver fast path over budget "
-            "(hub-item fan-out); using the distributed branch"
-        )
-
-    # lazy checkpoint: materialized by the first downstream job, then
-    # reused — truncates lineage without a separate synchronous job
-    exact = exact.localCheckpoint(eager=False)
-
-    intents = exact.select("cid", "intent", "size", "n_exact")
-    if galois:
-        closed = galois_close_intents(exact.select("cid", "intent"))
-        extra = (
-            closed.join(exact.select("cid"), "cid", "left_anti")
-            .select(
-                "cid", "intent", F.size("intent").alias("size"),
-                F.lit(0).cast("long").alias("n_exact"),
-            )
-        )
-        intents = intents.unionByName(extra)
-    # ensure the ⊤ root (empty intent) exists exactly once: union a zero-
-    # count root row and merge — avoids a blocking existence-check job
-    root_row = spark.createDataFrame(
-        [(ROOT_ID, [], 0, 0)], "cid string, intent array<string>, size int, n_exact long"
-    )
-    intents = (
-        intents.unionByName(root_row)
-        .groupBy("cid")
-        .agg(
-            F.first("intent").alias("intent"),
-            F.max("size").alias("size"),
-            F.sum("n_exact").alias("n_exact"),
-        )
-        .select("cid", "intent", "size", "n_exact")
-    )
-
-    pairs = subsumption_pairs(intents)
-    w = Window.partitionBy("desc_cid").orderBy(F.desc("anc_size"), F.asc("anc_cid"))
-    best = (
-        pairs.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") == 1)
-        .select(F.col("desc_cid").alias("cid"), F.col("anc_cid").alias("parent_id"))
-    )
-    parents = (
-        intents.join(best, "cid", "left")
-        .select(
-            "cid",
-            "intent",
-            "n_exact",
-            F.when(F.col("cid") == ROOT_ID, F.lit(None).cast("string"))
-            .otherwise(F.coalesce("parent_id", F.lit(ROOT_ID)))
-            .alias("parent_id"),
-        )
-        # lazy: the subsumption join runs ONCE (materialized by the eager
-        # residual-union checkpoint below) even though three downstream
-        # branches reference it
-        .localCheckpoint(eager=False)
-    )
-
-    # residual leaves: concept has children AND exact-intent instances
-    inner_ids = parents.where(F.col("parent_id").isNotNull()).select(
-        F.col("parent_id").alias("cid")
-    ).distinct()
-    needs_residual = parents.join(inner_ids, "cid").where(F.col("n_exact") > 0)
-    residuals = needs_residual.select(
-        F.concat(F.col("cid"), F.lit(RESIDUAL_SUFFIX)).alias("cid"),
-        F.col("intent"),
-        F.col("n_exact"),
-        F.col("cid").alias("parent_id"),
-    )
-    parents = (
-        parents.join(inner_ids.withColumn("_inner", F.lit(True)), "cid", "left")
-        .select(
-            "cid",
-            "intent",
-            F.when(F.col("_inner") & (F.col("n_exact") > 0), F.lit(0))
-            .otherwise(F.col("n_exact"))
-            .alias("n_exact"),
-            "parent_id",
-        )
-        .unionByName(residuals)
-        .localCheckpoint(eager=True)
-    )
-
-    # assignments: instance → exact-intent concept, remapped to residual
-    # leaf; residual map is concept-sized (tiny) → broadcast, so the big
-    # instance side never shuffles here
-    res_map = F.broadcast(
-        residuals.select(
-            F.col("parent_id").alias("cid"), F.col("cid").alias("res_cid")
-        )
-    )
-    assignments = (
-        inst.join(res_map, "cid", "left")
-        .select(
-            "instance_id", F.coalesce("res_cid", "cid").alias("concept_id")
-        )
-    )
-
-    # Prune zero-count subtrees BEFORE labeling, exactly as the driver pass
-    # does (a concept survives iff some descendant-or-self has exact-intent
-    # instances), so both branches yield identical concepts/labels/closure.
-    # keep = exact-count concepts ∪ their ancestors ∪ roots, computed by
-    # O(tree depth) parent hops over the concept-sized edge table. Only
-    # Galois closure can introduce zero-count concepts, so skip otherwise.
-    if galois:
-        keep = parents.where(
-            (F.col("n_exact") > 0) | F.col("parent_id").isNull()
-        ).select("cid").localCheckpoint(eager=True)
-        parent_edges = (
-            parents.select("cid", "parent_id")
-            .where(F.col("parent_id").isNotNull())
-            .localCheckpoint(eager=True)
-        )
-        hop = keep
-        for _ in range(max_depth):
-            hop = (
-                parent_edges.join(hop, "cid")
-                .select(F.col("parent_id").alias("cid"))
-                .distinct()
-                .join(keep, "cid", "left_anti")
-                .localCheckpoint(eager=True)
-            )
-            if hop.limit(1).count() == 0:
-                break
-            keep = keep.unionByName(hop).localCheckpoint(eager=True)
-        parents = parents.join(keep, "cid").localCheckpoint(eager=True)
-
-    # depth / path labels / ancestor paths in one level-by-level sweep (T3)
-    frontier = (
-        parents.where(F.col("parent_id").isNull())
-        .select(
-            "cid",
-            F.lit(0).alias("depth"),
-            F.lit(root_seed).alias("label"),
-            F.array().cast("array<string>").alias("path"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    levels = [frontier]
-    child_rank_w = Window.partitionBy("parent_id").orderBy("cid")
-    for _ in range(max_depth):
-        kids = (
-            parents.join(
-                frontier.select(
-                    F.col("cid").alias("parent_id"),
-                    F.col("depth").alias("p_depth"),
-                    F.col("label").alias("p_label"),
-                    F.col("path").alias("p_path"),
-                ),
-                "parent_id",
-            )
-            .withColumn("rank", F.row_number().over(child_rank_w) - 1)
-            .select(
-                "cid",
-                (F.col("p_depth") + 1).alias("depth"),
-                F.concat(F.col("p_label"), F.col("rank").cast("string")).alias("label"),
-                F.concat(F.col("p_path"), F.array(F.col("parent_id"))).alias("path"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        if kids.limit(1).count() == 0:
-            break
-        levels.append(kids)
-        frontier = kids
-
-    labeled = levels[0]
-    for lv in levels[1:]:
-        labeled = labeled.unionByName(lv)
-    labeled = labeled.localCheckpoint(eager=True)
-
-    closure = labeled.select(
-        F.col("cid").alias("desc"), F.col("cid").alias("anc")
-    ).union(
-        labeled.select(F.col("cid").alias("desc"), F.explode("path").alias("anc"))
-    )
-
-    # subtree counts: leaf exact counts rolled up through the closure
-    leaf_counts = parents.where(F.col("n_exact") > 0).select(
-        F.col("cid").alias("desc"), "n_exact"
-    )
-    counts = (
-        closure.join(leaf_counts, "desc")
-        .groupBy(F.col("anc").alias("cid"))
-        .agg(F.sum("n_exact").alias("count"))
-    )
-
-    has_kids = parents.where(F.col("parent_id").isNotNull()).select(
-        F.col("parent_id").alias("cid")
-    ).distinct().withColumn("_haskids", F.lit(True))
-
-    concepts = (
-        labeled.join(parents.select("cid", "intent", "parent_id"), "cid")
-        .join(counts, "cid", "left")
-        .join(has_kids, "cid", "left")
-        .select(
-            F.col("cid").alias("concept_id"),
-            "parent_id",
-            "depth",
-            "label",
-            F.coalesce("count", F.lit(0)).alias("count"),
-            "intent",
-            F.coalesce(~F.col("_haskids"), F.lit(True)).alias("is_leaf"),
-        )
-    )
-    return {"concepts": concepts, "assignments": assignments, "closure": closure}
-
-
-# Candidate-probe budget for the pure-Python subsumption pass: the exact
-# work is Σ_item |rarest-registered(item)| · freq(item), computable BEFORE
-# doing it. Above this, Python would crawl (hub items on small alphabets
-# make the pass quadratic) — bail to the distributed branch, which spreads
-# the same fan-out across executors. ~20M set-ops ≈ a few seconds driver-side.
-DRIVER_SUBSUMPTION_BUDGET = 20_000_000
-# Galois closure driver cap: bail if the closed set grows past this.
+# Galois closure driver cap: the closure raises past this many closed sets.
 DRIVER_CLOSURE_CAP = 250_000
 
 
-def _hierarchy_driver(spark, inst: DataFrame, exact_rows, root_seed: str,
-                      galois: bool):
-    """Concept-side computation on the collected exact-intent table —
-    byte-identical semantics to the distributed path (see the parity tests
-    in tests/test_concepts.py), at the cost of ONE already-paid Spark job.
-    Returns None when the estimated Python work exceeds the budget
-    (caller falls back to the distributed branch, same results).
-
-    Pure-Python mirrors of the distributed steps:
-      * Galois closure: frontier×generators intersection fixpoint
-        (= ``galois_close_intents``)
-      * parent: most specific proper subsumer, ties → smallest cid,
-        candidates through each ancestor's globally rarest item
-        (= ``subsumption_pairs`` + the best-parent window)
+def _hierarchy_from_state(spark, exact: DataFrame, inst: DataFrame,
+                          root_seed: str, galois: bool) -> dict[str, DataFrame]:
+    """The lattice engine. ONE Spark job collects the exact-intent state
+    (cid, intent, n_exact, size); the concept side then runs on the driver:
+      * Galois closure: frontier×generators intersection fixpoint (the
+        fixpoint of ``galois_close_intents``), ValueError past
+        ``DRIVER_CLOSURE_CAP`` closed sets
+      * parent: most specific proper subsumer, ties → smallest cid
+        (``_best_parents``, the semantics of ``subsumption_pairs`` + a
+        best-parent window)
       * residual leaves, zero-count pruning, labels/depth/closure/counts
         via ``_tree_metadata_driver``
     Only ``assignments`` stays distributed: instance → concept with the
@@ -531,7 +286,7 @@ def _hierarchy_driver(spark, inst: DataFrame, exact_rows, root_seed: str,
     """
     intent_of: dict[str, tuple] = {}
     n_exact: dict[str, int] = {}
-    for r in exact_rows:
+    for r in exact.collect():
         cid = r["cid"]
         intent_of[cid] = tuple(r["intent"])
         n_exact[cid] = n_exact.get(cid, 0) + int(r["n_exact"])
@@ -549,7 +304,10 @@ def _hierarchy_driver(spark, inst: DataFrame, exact_rows, root_seed: str,
                         new.add(x)
             closed |= new
             if len(closed) > DRIVER_CLOSURE_CAP:
-                return None
+                raise ValueError(
+                    f"Galois closure reached {len(closed)} closed sets, "
+                    f"over DRIVER_CLOSURE_CAP={DRIVER_CLOSURE_CAP}"
+                )
             frontier = new
         for s in closed:
             t = tuple(sorted(s))
@@ -562,34 +320,8 @@ def _hierarchy_driver(spark, inst: DataFrame, exact_rows, root_seed: str,
         intent_of[ROOT_ID] = ()
         n_exact.setdefault(ROOT_ID, 0)
 
-    # most specific proper subsumer via rarest-item candidate probing
-    freq: dict[str, int] = {}
-    for t in intent_of.values():
-        for item in t:
-            freq[item] = freq.get(item, 0) + 1
-    by_rare: dict[str, list[str]] = {}
-    for cid, t in intent_of.items():
-        if t:
-            rare = min(t, key=lambda i: (freq[i], i))
-            by_rare.setdefault(rare, []).append(cid)
-    est_work = sum(len(v) * freq[i] for i, v in by_rare.items())
-    if est_work > DRIVER_SUBSUMPTION_BUDGET:
-        return None
-    parent: dict[str, str | None] = {}
-    for cid, t in intent_of.items():
-        if cid == ROOT_ID:
-            parent[cid] = None
-            continue
-        mine = set(t)
-        best: tuple[int, str] | None = None
-        for item in t:
-            for anc in by_rare.get(item, ()):
-                ta = intent_of[anc]
-                if len(ta) < len(t) and set(ta) <= mine:
-                    key = (-len(ta), anc)
-                    if best is None or key < best:
-                        best = key
-        parent[cid] = best[1] if best is not None else ROOT_ID
+    parent: dict[str, str | None] = _best_parents(intent_of)
+    parent[ROOT_ID] = None
 
     # residual leaves: concept has children AND exact-intent instances
     inner = {p for p in parent.values() if p is not None}
@@ -621,6 +353,62 @@ def _hierarchy_driver(spark, inst: DataFrame, exact_rows, root_seed: str,
             "instance_id", F.col("cid").alias("concept_id")
         )
     return {"concepts": concepts, "assignments": assignments, "closure": closure}
+
+
+def _best_parents(intent_of: dict[str, tuple]) -> dict[str, str]:
+    """Most specific proper subsumer of every nonempty intent: the largest
+    proper subset among the intents, ties → smallest cid, none → ROOT_ID.
+
+    Intents become uint64 bitset rows over the item alphabet. Each intent
+    is a candidate ancestor only at its globally RAREST item (by (freq,
+    item)), so hub items never drive the fan-out: an item's ancestors are
+    tested against just the intents holding that item, in chunks of ~2^18
+    bitset words to bound the temporaries. a ⊂ d iff a & ~d == 0 and
+    |a| < |d|.
+    """
+    cids = sorted(c for c, t in intent_of.items() if t)
+    n = len(cids)
+    if n == 0:
+        return {}
+    alphabet = sorted({i for c in cids for i in intent_of[c]})
+    m = len(alphabet)
+    col = {item: k for k, item in enumerate(alphabet)}
+    size = np.fromiter((len(intent_of[c]) for c in cids), np.int64, n)
+    row = np.repeat(np.arange(n), size)
+    item = np.fromiter((col[i] for c in cids for i in intent_of[c]), np.int64, len(row))
+    bits = np.zeros((n, (m + 63) // 64), np.uint64)
+    np.bitwise_or.at(
+        bits, (row, item >> 6), np.left_shift(np.uint64(1), (item & 63).astype(np.uint64))
+    )
+    # item ids follow the sorted alphabet, so (freq, id) orders as (freq, item)
+    freq = np.bincount(item, minlength=m)
+    starts = np.concatenate(([0], np.cumsum(size)[:-1]))
+    rare = np.minimum.reduceat(freq[item] * m + item, starts) % m
+    # rows follow sorted cids: best parent = min position in (−size, cid) order
+    by_rank = np.lexsort((np.arange(n), -size))
+    rank = np.empty(n, np.int64)
+    rank[by_rank] = np.arange(n)
+    holders = np.split(row[np.argsort(item, kind="stable")], np.cumsum(freq)[:-1])
+    registered = np.split(
+        by_rank[np.argsort(rare[by_rank], kind="stable")],
+        np.cumsum(np.bincount(rare, minlength=m))[:-1],
+    )
+    best = np.full(n, n)
+    for k in np.unique(rare):
+        anc, desc = registered[k], holders[k]
+        a_bits, a_size = bits[anc], size[anc]
+        step = max(1, (1 << 18) // (len(anc) * bits.shape[1]))
+        for lo in range(0, len(desc), step):
+            d = desc[lo:lo + step]
+            ok = ((a_bits[None] & ~bits[d][:, None]) == 0).all(axis=2)
+            ok &= a_size[None] < size[d][:, None]
+            # anc is in rank order, so the first hit is the best
+            first = ok.argmax(axis=1)
+            hit = ok[np.arange(len(d)), first]
+            best[d[hit]] = np.minimum(best[d[hit]], rank[anc[first[hit]]])
+    return {
+        c: cids[by_rank[b]] if b < n else ROOT_ID for c, b in zip(cids, best.tolist())
+    }
 
 
 def _tree_metadata_driver(spark, rows, root_seed: str):

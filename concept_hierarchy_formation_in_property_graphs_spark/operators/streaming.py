@@ -331,10 +331,7 @@ def hierarchy_from_state_dir(spark: SparkSession, state_dir: str,
         if b <= cur
     ]
     inst = spark.read.parquet(*paths)
-    return _hierarchy_from_state(
-        spark, state, inst, root_seed="c", max_depth=64,
-        driver_threshold=200_000, galois=galois,
-    )
+    return _hierarchy_from_state(spark, state, inst, root_seed="c", galois=galois)
 
 
 def state_versions(state_dir: str) -> list[int]:
@@ -404,10 +401,7 @@ def hierarchy_at(spark: SparkSession, state_dir: str, batch_id: int,
     inst = spark.read.parquet(
         *[os.path.join(idir, f"b{b}") for b in wanted]
     )
-    return _hierarchy_from_state(
-        spark, state, inst, root_seed="c", max_depth=64,
-        driver_threshold=200_000, galois=galois,
-    )
+    return _hierarchy_from_state(spark, state, inst, root_seed="c", galois=galois)
 
 
 def run_dedup_stream(docs_stream: DataFrame, store_dir: str,

@@ -5,9 +5,11 @@ EAP/CU math — the reference's tree-invariant suite
 
 from __future__ import annotations
 
+import itertools
 import math
 import random
 
+import pytest
 from pyspark.sql import functions as F
 
 from concept_hierarchy_formation_in_property_graphs_spark.operators.concepts import (
@@ -199,29 +201,34 @@ def test_hierarchy_deterministic_across_partitionings(spark):
     )
 
 
-def test_driver_vs_distributed_branch_parity_galois(spark):
-    """The ≤/> driver_threshold branches must agree bit-for-bit — including
-    pruning of zero-count Galois-added subtrees (the diamond {a,d} below is
-    closure-added but ends up childless and instance-free, so BOTH branches
-    must drop it) and the sibling label ranks that shift when it vanishes."""
+def test_galois_diamond_pruned_and_labels_exact(spark):
+    """Zero-count Galois-added subtrees are pruned before labeling: the
+    diamond {a,d} below is closure-added but ends up childless and
+    instance-free, so it must vanish, and the surviving sibling ranks
+    (residual leaf first, then by cid) must be exact."""
     rows = [
         ("i1", ["a", "b", "c"]),
         ("i2", ["a", "b", "d"]),
         ("i3", ["a", "c", "d"]),
         ("i4", ["a", "b"]),
     ]
-    drv = build_hierarchy(_instances(spark, rows), galois=True)
-    dist = build_hierarchy(_instances(spark, rows), galois=True, driver_threshold=0)
-
-    ad = "a" + SEP + "d"
-    drv_ids = {r["concept_id"] for r in drv["concepts"].collect()}
-    assert ad not in drv_ids  # the zero-count diamond concept is pruned
-
-    for key in ("concepts", "assignments", "closure"):
-        a = sorted(map(tuple, drv[key].collect()))
-        b = sorted(map(tuple, dist[key].collect()))
-        assert a == b, f"branch divergence in {key}"
-    assert invariant_violations(dist["concepts"], dist["assignments"]) == {
+    h = build_hierarchy(_instances(spark, rows), galois=True)
+    ab, ac = "a" + SEP + "b", "a" + SEP + "c"
+    got = {
+        r["concept_id"]: (r["parent_id"], r["label"], r["count"])
+        for r in h["concepts"].collect()
+    }
+    assert got == {
+        "": (None, "c", 4),
+        "a": ("", "c0", 4),
+        ab: ("a", "c00", 3),
+        ab + RESIDUAL_SUFFIX: (ab, "c000", 1),
+        ab + SEP + "c": (ab, "c001", 1),
+        ab + SEP + "d": (ab, "c002", 1),
+        ac: ("a", "c01", 1),
+        ac + SEP + "d": (ac, "c010", 1),
+    }  # the zero-count diamond a|d is absent
+    assert invariant_violations(h["concepts"], h["assignments"]) == {
         "dup_instance": 0,
         "assign_to_inner": 0,
         "orphans": 0,
@@ -229,17 +236,70 @@ def test_driver_vs_distributed_branch_parity_galois(spark):
     }
 
 
-def test_driver_vs_distributed_branch_parity_random(spark):
-    rows = [
-        (f"i{k}", sorted({random.Random(1000 + k).choice("abcdef") for _ in range(4)}))
-        for k in range(80)
+def test_galois_closure_cap_raises(spark, monkeypatch):
+    """Past the closure cap the driver pass raises a ValueError naming the
+    cap and the closed-set size, instead of returning a partial lattice."""
+    from concept_hierarchy_formation_in_property_graphs_spark.operators import (
+        concepts as C,
+    )
+
+    rows = [("i1", ["a", "b", "c"]), ("i2", ["a", "b", "d"]), ("i3", ["a", "c", "d"])]
+    monkeypatch.setattr(C, "DRIVER_CLOSURE_CAP", 1)
+    with pytest.raises(ValueError, match=r"reached 6 closed sets, over DRIVER_CLOSURE_CAP=1"):
+        build_hierarchy(_instances(spark, rows), galois=True)
+
+
+def _skewed_rows(alphabet, n, max_size, seed):
+    rnd = random.Random(seed)
+    return [
+        (
+            f"i{k}",
+            sorted({
+                alphabet[int(len(alphabet) * rnd.random() ** 2)]
+                for _ in range(rnd.randint(1, max_size))
+            }),
+        )
+        for k in range(n)
     ]
-    drv = build_hierarchy(_instances(spark, rows), galois=True)
-    dist = build_hierarchy(_instances(spark, rows), galois=True, driver_threshold=0)
-    for key in ("concepts", "assignments", "closure"):
-        a = sorted(map(tuple, drv[key].collect()))
-        b = sorted(map(tuple, dist[key].collect()))
-        assert a == b, f"branch divergence in {key}"
+
+
+_ALL_SUBSETS_2_3 = [
+    (f"i{k}", list(s))
+    for k, s in enumerate(
+        list(itertools.combinations("abcdef", 2))
+        + list(itertools.combinations("abcdef", 3))
+    )
+]
+
+
+@pytest.mark.parametrize(
+    "rows",
+    [
+        # hub items: quadratic skew toward the head of a 40-item alphabet
+        _skewed_rows([f"h{i:02d}" for i in range(40)], 400, 8, 3),
+        # 150 items: intents span three 64-bit words
+        _skewed_rows([f"w{i:03d}" for i in range(150)], 400, 4, 5),
+        # every 3-set has three equal-size parents: ties → smallest cid
+        _ALL_SUBSETS_2_3,
+    ],
+    ids=["hub_skewed", "three_words", "equal_size_ties"],
+)
+def test_parent_map_matches_all_pairs_reference(spark, rows):
+    """Parent = the largest proper subsumer, ties → smallest cid, none →
+    root; checked against a brute-force all-pairs scan."""
+    intents = {tuple(sorted(set(t))) for _, t in rows}
+    want = {"": None}
+    for d in intents:
+        subs = [a for a in intents if len(a) < len(d) and set(a) <= set(d)]
+        best = min(subs, key=lambda a: (-len(a), SEP.join(a)), default=())
+        want[SEP.join(d)] = SEP.join(best)
+    h = build_hierarchy(_instances(spark, rows))
+    got = {
+        r["concept_id"]: r["parent_id"]
+        for r in h["concepts"].collect()
+        if not r["concept_id"].endswith(RESIDUAL_SUFFIX)
+    }
+    assert got == want
 
 
 def test_galois_closure_equals_bruteforce_at_10x(spark):
@@ -335,24 +395,3 @@ def test_empty_inputs_degenerate_gracefully(spark):
     assert [r["concept_id"] for r in rows] == [""]
     assert rows[0]["label"] == "c" and rows[0]["count"] == 0 and rows[0]["is_leaf"]
     assert h["assignments"].count() == 0
-
-
-def test_driver_budget_guard_falls_back_to_distributed(spark, monkeypatch):
-    """When the estimated Python subsumption work exceeds the budget, the
-    driver fast path must bail and the distributed branch must produce the
-    identical hierarchy (hub-item fan-out safety)."""
-    from concept_hierarchy_formation_in_property_graphs_spark.operators import (
-        concepts as C,
-    )
-
-    rows = [
-        (f"i{k}", sorted({random.Random(40 + k).choice("abc") for _ in range(2)}))
-        for k in range(50)
-    ]
-    normal = build_hierarchy(_instances(spark, rows), galois=True)
-    monkeypatch.setattr(C, "DRIVER_SUBSUMPTION_BUDGET", 1)
-    forced = build_hierarchy(_instances(spark, rows), galois=True)
-    for key in ("concepts", "assignments", "closure"):
-        assert sorted(map(tuple, normal[key].collect())) == sorted(
-            map(tuple, forced[key].collect())
-        ), key

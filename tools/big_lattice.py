@@ -1,19 +1,17 @@
-"""Giant-lattice validation: force the DISTRIBUTED hierarchy branch at
-~10^5 concepts and verify the full tree-invariant suite + wall time.
+"""Giant-lattice validation: build the concept hierarchy at ~10^5
+concepts and verify the full tree-invariant suite + wall time.
 
-The driver fast path in ``build_hierarchy`` self-protects with a work
-estimate and only covers concept tables that fit on the driver; this run
-is the evidence that the distributed branch (subsumption self-join,
-level-by-level label sweep) holds at lattice sizes where the driver pass
-is impossible — the 100 TB shape, where #distinct intents is itself a
-big table.
+The instance side (intent dedup, assignments) is distributed; the
+concept table is collected once and the lattice is built on the driver
+with bitset subsumption. This run is the evidence that the single engine
+holds at lattice sizes far above the tested fixtures.
 
 Deterministic hub-heavy corpus (no RNG): 120k instances over a 40-item
 alphabet, item popularity skewed quadratically toward the low indices
-(hub items appear in most intents — the head-entity skew case the salted
-closure joins exist for), intent size 1-12. Generated executor-side from
-``spark.range`` + md5 expressions, so the input itself never touches the
-driver.
+(hub items appear in most intents — the head-entity skew case the
+rarest-item candidate lists exist for), intent size 1-12. Generated
+executor-side from ``spark.range`` + md5 expressions, so the input itself
+never touches the driver.
 
 Usage: python tools/big_lattice.py [n_instances] [out_json]
 """
@@ -62,7 +60,7 @@ def main() -> None:
     n_intents = instances.select("intent").distinct().count()  # also warms input
 
     t0 = time.time()
-    h = build_hierarchy(instances, driver_threshold=0)  # force distributed branch
+    h = build_hierarchy(instances)
     n_concepts = h["concepts"].count()
     h["assignments"].count()
     wall = round(time.time() - t0, 2)
