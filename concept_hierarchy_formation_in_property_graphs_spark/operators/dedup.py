@@ -230,20 +230,21 @@ def simhash(docs: DataFrame, text_col: str = "text", bits: int = 32) -> DataFram
 # ---------------------------------------------------------------------------
 
 
-def _committed_batches(store_dir: str, sub: str) -> list[int]:
-    """Sorted batch ids under store_dir/sub whose parquet write committed
-    (_SUCCESS marker) — the replay-safe source of truth."""
+def committed_ids(parent: str, prefix: str) -> list[int]:
+    """Sorted ids N of the ``<prefix>N`` dirs under ``parent`` whose parquet
+    write committed (_SUCCESS marker) — the replay-safe source of truth for
+    every versioned store: the dedup store's ``b{i}``/``g{hi}`` dirs and the
+    hierarchy stream's ``state/v{N}``/``inst/b{N}`` dirs."""
     import os
 
-    d = os.path.join(store_dir, sub)
-    if not os.path.isdir(d):
+    if not os.path.isdir(parent):
         return []
     return sorted(
-        int(name[1:])
-        for name in os.listdir(d)
-        if name.startswith("b")
-        and name[1:].isdigit()
-        and os.path.exists(os.path.join(d, name, "_SUCCESS"))
+        int(name[len(prefix):])
+        for name in os.listdir(parent)
+        if name.startswith(prefix)
+        and name[len(prefix):].isdigit()
+        and os.path.exists(os.path.join(parent, name, "_SUCCESS"))
     )
 
 
@@ -252,16 +253,7 @@ def _committed_gens(store_dir: str, sub: str) -> list[int]:
     (``g{hi}`` dirs, each the union of every batch id <= hi)."""
     import os
 
-    d = os.path.join(store_dir, sub)
-    if not os.path.isdir(d):
-        return []
-    return sorted(
-        int(name[1:])
-        for name in os.listdir(d)
-        if name.startswith("g")
-        and name[1:].isdigit()
-        and os.path.exists(os.path.join(d, name, "_SUCCESS"))
-    )
+    return committed_ids(os.path.join(store_dir, sub), "g")
 
 
 def _history_paths(store_dir: str, sub: str, below: float) -> list[str]:
@@ -279,7 +271,7 @@ def _history_paths(store_dir: str, sub: str, below: float) -> list[str]:
     )
     paths += [
         os.path.join(store_dir, sub, f"b{b}")
-        for b in _committed_batches(store_dir, sub)
+        for b in committed_ids(os.path.join(store_dir, sub), "b")
         if g_hi < b < below
     ]
     return paths
@@ -325,7 +317,7 @@ def compact_store(spark, store_dir: str,
 
     stats: dict = {}
     for sub in subs:
-        ids = _committed_batches(store_dir, sub)
+        ids = committed_ids(os.path.join(store_dir, sub), "b")
         if len(ids) < 2:
             continue
         hi = ids[-2]

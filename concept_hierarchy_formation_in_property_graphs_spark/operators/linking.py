@@ -1,7 +1,8 @@
 """S3 — entity linking + surface-form canonicalization.
 
 Stages (per BASELINE.json north_star):
-  1. exact gazetteer link (broadcast dimension join),
+  1. exact gazetteer link (broadcast dimension join, inline in
+     `plans/pipeline.py` S3),
   2. MinHash-LSH blocking over character-3-gram shingles for residual
      surfaces — candidate pairs only form inside an LSH band bucket, so the
      all-pairs O(n²) never materializes,
@@ -24,11 +25,6 @@ from pyspark.sql import functions as F
 from ..functions.hashing import md5_long, perm_coeffs, permuted
 
 _log = logging.getLogger(__name__)
-
-
-def link_exact(surfaces: DataFrame, gazetteer: DataFrame) -> DataFrame:
-    """surfaces(surface) ⋈ gazetteer(surface, canonical) — broadcast."""
-    return surfaces.join(F.broadcast(gazetteer), "surface", "left")
 
 
 def char_shingles(col, n: int = 3):

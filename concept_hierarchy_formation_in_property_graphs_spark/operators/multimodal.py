@@ -4,15 +4,13 @@ metadata, processed through Arrow-batched pandas stages.
 The Spark-side plumbing — schema, Arrow batch shape, partition sizing,
 output contracts — is real and tested. Codecs dispatch through
 :func:`decode_asset`: PNG images decode FOR REAL (dependency-free decoder,
-stdlib zlib, all five scanline filters), baseline JPEG decodes FOR REAL
-(stdlib + numpy sequential-DCT decoder: Huffman, interleaved MCUs with
-subsampling, restart markers, 8x8 IDCT — luma plane out), and RIFF/WAVE
-PCM audio decodes FOR REAL (stdlib wave); the remaining formats
-(progressive JPEG/MP3/H.264) fall back to ``_decode_stub`` because the
-sandbox has no imaging/audio libraries — the stub derives deterministic
-pseudo-features from the bytes (md5-seeded), so every pipeline property
-(schemas, shapes, determinism, partitioning) is exercised end-to-end.
-Extending the registry with PIL/librosa/pyav changes ONE function.
+stdlib zlib, all five scanline filters) and RIFF/WAVE PCM audio decodes
+FOR REAL (stdlib wave); every other format (JPEG/MP3/H.264) falls back to
+``_decode_stub`` because the environment has no imaging/audio libraries —
+the stub derives deterministic pseudo-features from the bytes
+(md5-seeded), so every pipeline property (schemas, shapes, determinism,
+partitioning) is exercised end-to-end. Extending the registry with
+PIL/librosa/pyav changes ONE function.
 
 Asset schema (the `pages.html` pattern generalized):
 
@@ -117,275 +115,6 @@ def decode_png(data: bytes) -> dict:
             "pixels": bytes(out)}
 
 
-JPEG_MAGIC = b"\xff\xd8\xff"
-
-# zigzag order: index i of the scan -> (row, col) position in the 8x8 block
-_ZIGZAG = [
-    0, 1, 8, 16, 9, 2, 3, 10, 17, 24, 32, 25, 18, 11, 4, 5,
-    12, 19, 26, 33, 40, 48, 41, 34, 27, 20, 13, 6, 7, 14, 21, 28,
-    35, 42, 49, 56, 57, 50, 43, 36, 29, 22, 15, 23, 30, 37, 44, 51,
-    58, 59, 52, 45, 38, 31, 39, 46, 53, 60, 61, 54, 47, 55, 62, 63,
-]
-
-
-class _BitReader:
-    """MSB-first bit reader over entropy-coded JPEG data with 0xFF00
-    byte-stuffing; stops (raises) at any real marker."""
-
-    def __init__(self, data: bytes, pos: int):
-        self.data = data
-        self.pos = pos
-        self.bits = 0
-        self.acc = 0
-
-    def read_bit(self) -> int:
-        if self.bits == 0:
-            b = self.data[self.pos]
-            self.pos += 1
-            if b == 0xFF:
-                nxt = self.data[self.pos]
-                if nxt == 0x00:
-                    self.pos += 1  # stuffed byte
-                else:
-                    raise EOFError("marker inside entropy data")
-            self.acc = b
-            self.bits = 8
-        self.bits -= 1
-        return (self.acc >> self.bits) & 1
-
-    def read_bits(self, n: int) -> int:
-        v = 0
-        for _ in range(n):
-            v = (v << 1) | self.read_bit()
-        return v
-
-    def align_and_expect_rst(self) -> None:
-        """Byte-align and consume one RSTn marker (restart interval)."""
-        self.bits = 0
-        if self.data[self.pos] != 0xFF or not (
-            0xD0 <= self.data[self.pos + 1] <= 0xD7
-        ):
-            raise ValueError("expected RST marker")
-        self.pos += 2
-
-
-def _build_huffman(counts: list[int], symbols: bytes) -> dict:
-    """Canonical Huffman table: {(length, code): symbol} (T.81 C.2)."""
-    table = {}
-    code = 0
-    k = 0
-    for length in range(1, 17):
-        for _ in range(counts[length - 1]):
-            table[(length, code)] = symbols[k]
-            code += 1
-            k += 1
-        code <<= 1
-    return table
-
-
-def _huff_decode(br: _BitReader, table: dict) -> int:
-    code = 0
-    for length in range(1, 17):
-        code = (code << 1) | br.read_bit()
-        sym = table.get((length, code))
-        if sym is not None:
-            return sym
-    raise ValueError("invalid Huffman code")
-
-
-def _extend(v: int, size: int) -> int:
-    """T.81 F.2.2.1 EXTEND: map a ``size``-bit magnitude to its signed
-    value."""
-    if size == 0:
-        return 0
-    return v if v >= (1 << (size - 1)) else v - (1 << size) + 1
-
-
-def _idct_matrix():
-    import numpy as np
-
-    a = np.zeros((8, 8))
-    for x in range(8):
-        for u in range(8):
-            alpha = (1 / (2 ** 0.5)) if u == 0 else 1.0
-            a[x, u] = alpha / 2 * __import__("math").cos(
-                (2 * x + 1) * u * 3.141592653589793 / 16
-            )
-    return a
-
-
-_IDCT_A = None
-
-
-def decode_jpeg(data: bytes) -> dict:
-    """REAL codec for baseline JPEG (stdlib + numpy only): SOF0/SOF1
-    sequential DCT with Huffman coding — the format every camera and
-    crawl thumbnail emits. Parses DQT/DHT/DRI/SOS, entropy-decodes every
-    component (interleaved MCUs, 4:4:4 / 4:2:2 / 4:2:0 sampling, restart
-    markers), dequantizes, inverse-DCTs (numpy 8x8 basis multiply), and
-    returns width/height/channels plus the full-resolution LUMA plane as
-    grayscale pixel bytes — the signal a dedup/quality stage actually
-    consumes. Progressive (SOF2), arithmetic coding, and 12-bit depth
-    raise NotImplementedError and fall back to the stub in
-    :func:`decode_asset`, exactly like :func:`decode_png`."""
-    import numpy as np
-
-    global _IDCT_A
-    if _IDCT_A is None:
-        _IDCT_A = _idct_matrix()
-
-    if data[:3] != JPEG_MAGIC:
-        raise ValueError("not a JPEG payload")
-    qt: dict[int, list[int]] = {}
-    huff: dict[tuple[int, int], dict] = {}  # (class, id) -> table
-    frame = None
-    restart_interval = 0
-    pos = 2
-    while pos + 4 <= len(data):
-        if data[pos] != 0xFF:
-            raise ValueError("bad marker alignment")
-        marker = data[pos + 1]
-        pos += 2
-        if marker in (0xD8, 0x01) or 0xD0 <= marker <= 0xD7:
-            continue
-        seglen = int.from_bytes(data[pos:pos + 2], "big")
-        seg = data[pos + 2:pos + seglen]
-        if marker == 0xDB:  # DQT
-            i = 0
-            while i < len(seg):
-                prec, tid = seg[i] >> 4, seg[i] & 0xF
-                i += 1
-                if prec == 0:
-                    qt[tid] = list(seg[i:i + 64]); i += 64
-                else:
-                    qt[tid] = [
-                        int.from_bytes(seg[i + 2 * j:i + 2 * j + 2], "big")
-                        for j in range(64)
-                    ]
-                    i += 128
-        elif marker in (0xC0, 0xC1):  # SOF0/SOF1 baseline
-            if seg[0] != 8:
-                raise NotImplementedError(f"JPEG precision {seg[0]}")
-            h = int.from_bytes(seg[1:3], "big")
-            w = int.from_bytes(seg[3:5], "big")
-            ncomp = seg[5]
-            comps = []
-            for c in range(ncomp):
-                cid, samp, tq = seg[6 + 3 * c:9 + 3 * c]
-                comps.append(
-                    {"id": cid, "h": samp >> 4, "v": samp & 0xF, "tq": tq}
-                )
-            frame = {"w": w, "h": h, "comps": comps}
-        elif marker in (0xC2, 0xC3, 0xC5, 0xC6, 0xC7,
-                        0xC9, 0xCA, 0xCB, 0xCD, 0xCE, 0xCF):
-            raise NotImplementedError("non-baseline JPEG (progressive/"
-                                      "arithmetic/lossless)")
-        elif marker == 0xC4:  # DHT
-            i = 0
-            while i < len(seg):
-                tc, th = seg[i] >> 4, seg[i] & 0xF
-                counts = list(seg[i + 1:i + 17])
-                n = sum(counts)
-                syms = seg[i + 17:i + 17 + n]
-                huff[(tc, th)] = _build_huffman(counts, syms)
-                i += 17 + n
-        elif marker == 0xDD:  # DRI
-            restart_interval = int.from_bytes(seg[:2], "big")
-        elif marker == 0xDA:  # SOS — entropy-coded data follows
-            if frame is None:
-                raise ValueError("SOS before SOF")
-            ns = seg[0]
-            if ns != len(frame["comps"]):
-                # a legal baseline variant (one scan per component) whose
-                # blocks are NOT in interleaved-MCU order — decoding it
-                # with the interleaved walk below would return a silently
-                # block-permuted plane, so refuse and take the stub path
-                raise NotImplementedError(
-                    "non-interleaved JPEG scan (ns != frame components)"
-                )
-            scan = []
-            for c in range(ns):
-                cs, tda = seg[1 + 2 * c:3 + 2 * c]
-                comp = next(x for x in frame["comps"] if x["id"] == cs)
-                scan.append(
-                    {"comp": comp, "dc": tda >> 4, "ac": tda & 0xF}
-                )
-            return _decode_scan(
-                data, pos + seglen, frame, scan, qt, huff,
-                restart_interval, np,
-            )
-        elif marker == 0xD9:  # EOI
-            break
-        pos += seglen
-    raise ValueError("JPEG missing SOS")
-
-
-def _decode_scan(data, pos, frame, scan, qt, huff, restart_interval, np):
-    hmax = max(c["h"] for c in frame["comps"])
-    vmax = max(c["v"] for c in frame["comps"])
-    mcu_w, mcu_h = 8 * hmax, 8 * vmax
-    mcus_x = -(-frame["w"] // mcu_w)
-    mcus_y = -(-frame["h"] // mcu_h)
-    luma = frame["comps"][0]
-    lw, lh = mcus_x * luma["h"] * 8, mcus_y * luma["v"] * 8
-    yplane = np.zeros((lh, lw), dtype=np.float64)
-    br = _BitReader(data, pos)
-    pred = {id(s): 0 for s in scan}
-    a, at = _IDCT_A, _IDCT_A.T
-    n_mcu = 0
-    for my in range(mcus_y):
-        for mx in range(mcus_x):
-            if restart_interval and n_mcu and n_mcu % restart_interval == 0:
-                br.align_and_expect_rst()
-                for s in scan:
-                    pred[id(s)] = 0
-            n_mcu += 1
-            for s in scan:
-                comp = s["comp"]
-                q = qt[comp["tq"]]
-                dc_tbl, ac_tbl = huff[(0, s["dc"])], huff[(1, s["ac"])]
-                for by in range(comp["v"]):
-                    for bx in range(comp["h"]):
-                        coeffs = np.zeros(64)
-                        t = _huff_decode(br, dc_tbl)
-                        diff = _extend(br.read_bits(t), t)
-                        pred[id(s)] += diff
-                        coeffs[0] = pred[id(s)] * q[0]
-                        k = 1
-                        while k < 64:
-                            rs = _huff_decode(br, ac_tbl)
-                            r, sz = rs >> 4, rs & 0xF
-                            if sz == 0:
-                                if r == 15:  # ZRL
-                                    k += 16
-                                    continue
-                                break  # EOB
-                            k += r
-                            if k > 63:
-                                raise ValueError("AC index overflow")
-                            coeffs[_ZIGZAG[k]] = (
-                                _extend(br.read_bits(sz), sz) * q[k]
-                            )
-                            k += 1
-                        if comp is luma:
-                            block = np.zeros((8, 8))
-                            block.flat[:] = coeffs
-                            px = a @ block @ at + 128.0
-                            y0 = (my * luma["v"] + by) * 8
-                            x0 = (mx * luma["h"] + bx) * 8
-                            yplane[y0:y0 + 8, x0:x0 + 8] = px
-    # crop the luma plane to its true resolution (Y has max sampling in
-    # every common layout; general case scales by its sampling ratio)
-    out_h = -(-frame["h"] * luma["v"] // vmax)
-    out_w = -(-frame["w"] * luma["h"] // hmax)
-    pixels = np.clip(np.rint(yplane[:out_h, :out_w]), 0, 255).astype(np.uint8)
-    return {
-        "width": frame["w"], "height": frame["h"],
-        "channels": len(frame["comps"]),
-        "pixels": pixels.tobytes(),
-    }
-
-
 def decode_wav(data: bytes) -> dict:
     """REAL codec for the ``audio`` kind: RIFF/WAVE PCM via the stdlib
     ``wave`` module. Returns sample_rate/n_samples/channels plus the raw
@@ -419,13 +148,6 @@ def decode_asset(data: bytes, kind: str) -> dict:
         try:
             m = decode_png(data)
         except Exception:  # 16-bit/interlaced/truncated PNG → stub, like WAV
-            return _decode_stub(data, kind)
-        return {"width": m["width"], "height": m["height"],
-                "channels": m["channels"]}
-    if kind == "image" and data[:3] == JPEG_MAGIC:
-        try:
-            m = decode_jpeg(data)
-        except Exception:  # progressive/arithmetic/truncated JPEG → stub
             return _decode_stub(data, kind)
         return {"width": m["width"], "height": m["height"],
                 "channels": m["channels"]}

@@ -10,36 +10,29 @@ counts, `algos/PropertyGraphCobweb.java:394-431`); this is an engine
 addition in the same spirit as its graph feature extraction — a global
 rather than 1-hop structural feature.
 
-Execution shape — two edge layouts, both MEASURED (sf0.1: 1.37M edges,
-186k nodes, 5 iterations, local[32]; medians of 3):
+Execution shape — MEASURED (sf0.1: 1.37M edges, 186k nodes, 5
+iterations, local[32]; medians of 3): the loop runs on the xxhash64
+surrogate graph from :func:`build_surrogate_graph`, whose edge list is
+``localCheckpoint``ed once (11.5 s). Each iteration's ``edges ⋈ ranks``
+sees two ExistingRDD sides; AQE materializes the edge-side exchange as a
+cheap local shuffle stage and converts the join to broadcast-hash at
+runtime when the rank-state stage turns out small. The per-iteration edge
+exchange is real but node-local and pipelined — at single-machine scale
+it costs less than any scheme that avoids it:
 
-- ``edge_layout="checkpoint"`` (default, 11.5 s): the surrogate edge list
-  is ``localCheckpoint``ed once; each iteration's ``edges ⋈ ranks`` sees
-  two ExistingRDD sides, AQE materializes the edge-side exchange as a
-  cheap local shuffle stage and converts the join to broadcast-hash at
-  runtime when the rank-state stage turns out small. The per-iteration
-  edge exchange is real but node-local and pipelined — at single-machine
-  scale it costs less than any scheme that avoids it (below).
-- ``edge_layout="bucketed"`` (14.1 s here INCLUDING the one-time bucketed
-  write — the write amortizes across reruns/iterations): edges are
-  persisted as a managed table ``bucketBy(shuffle_n, id)`` via
-  `sources/bucketed.py`, so every iteration's edge side scans
-  pre-partitioned parquet with ZERO exchange (SelectedBucketsCount = all,
-  no ``Exchange hashpartitioning(id`` above the scan — pinned in
-  tests/test_features.py). This is the 100 TB path: on a real cluster the
-  per-iteration edge exchange is O(E) over the network × iters, and the
-  bucketed layout pays that cost once at write time.
-- REJECTED by measurement — ``repartition(id).persist()`` (the plan that
-  looks right on paper: cached InMemoryTableScan keeps HashPartitioning,
-  so ENSURE_REQUIREMENTS would exchange only the rank state): 13-15 s
-  medians, plus multi-minute GC-stall outliers on this VM (one 301 s run)
-  — the deserialized cache scan costs more per iteration than the
-  exchange it saves, and large deserialized caches aggravate the G1
-  behavior documented in BASELINE.md. Kept out.
+- a bucketed edge table (one ``bucketBy(shuffle_n, id)`` write, then
+  exchange-free edge scans) measured 14.1 s including the write;
+- ``repartition(id).persist()`` (the plan that looks right on paper:
+  cached InMemoryTableScan keeps HashPartitioning, so
+  ENSURE_REQUIREMENTS would exchange only the rank state) measured
+  13-15 s medians, plus multi-minute GC-stall outliers on the 32-vCPU
+  host (one 301 s run) — the deserialized cache scan costs more per
+  iteration than the exchange it saves, and large deserialized caches
+  aggravate the G1 behavior documented in BASELINE.md.
 
-State handling (both layouts):
+State handling:
 - The rank state is node-sized and `localCheckpoint`ed every
-  ``checkpoint_interval`` (default 5) iterations, NOT every iteration —
+  ``CHECKPOINT_INTERVAL`` (5) iterations, NOT every iteration —
   measured: within one segment Catalyst/AQE compile the unrolled
   iterations into a single query whose repeated subtrees reuse exchanges,
   so 5 un-checkpointed iterations run in 1.6 s where 5 per-iteration
@@ -48,7 +41,13 @@ State handling (both layouts):
   is O(3^K) — K=5 ≈ 243 nodes is cheap to plan, K=10 already plans slower
   than it runs: iters=10 measured 6.3 s at interval 5 vs 7.1 s at 10).
   The checkpoint is the same segment-barrier pattern as the linking CC
-  loop, just batched.
+  loop, just batched; the output is bit-identical at any interval.
+- Surrogate keys: fixed-width longs hash-join and aggregate ~2× faster
+  than URI-sized strings, and the per-iteration state shrinks; the output
+  is mapped back to the original ids, so the keys never leak. Birthday
+  bound: p(collision) ≈ k²/2^65 — negligible to ~10^7 nodes (3e-6) and
+  acceptable to ~10^8 (3e-4); past that widen to a 128-bit key pair (two
+  seeded hashes).
 - Dangling mass (nodes without out-edges) is a single scalar aggregate
   cross-joined back as a broadcast literal — no collect in the loop beyond
   the one up-front node count.
@@ -66,10 +65,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def build_surrogate_graph(edges: DataFrame, src_col: str = "src",
-                          dst_col: str = "dst") -> tuple[DataFrame, DataFrame]:
-    """(id_map, hashed_edges): the xxhash64 surrogate-key graph, both
-    eagerly checkpointed.
+CHECKPOINT_INTERVAL = 5
+
+
+def build_surrogate_graph(edges: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(id_map, hashed_edges): the xxhash64 surrogate-key graph over
+    ``edges(src, dst)``, both eagerly checkpointed.
 
     ``id_map(id, orig)`` is one distinct over all raw node ids — it serves
     the node set, the node count, AND the final surrogate→orig map-back.
@@ -79,88 +80,38 @@ def build_surrogate_graph(edges: DataFrame, src_col: str = "src",
     build it once and pass it via ``graph=`` — the build is ~40% of a
     5-iteration run's cost (measured sf0.1: 5.8 s of 14 s)."""
     id_map = (
-        edges.select(F.col(src_col).alias("orig"))
-        .unionByName(edges.select(F.col(dst_col).alias("orig")))
+        edges.select(F.col("src").alias("orig"))
+        .unionByName(edges.select(F.col("dst").alias("orig")))
         .distinct()
         .select(F.xxhash64("orig").alias("id"), "orig")
         .localCheckpoint(eager=True)
     )
     hashed = edges.select(
-        F.xxhash64(src_col).alias("id"), F.xxhash64(dst_col).alias("dst_id")
+        F.xxhash64("src").alias("id"), F.xxhash64("dst").alias("dst_id")
     ).localCheckpoint(eager=True)
     return id_map, hashed
 
 
 def pagerank(edges: DataFrame, iters: int = 5, damping: float = 0.85,
-             src_col: str = "src", dst_col: str = "dst",
-             hash_keys: bool = True,
-             edge_layout: str = "checkpoint",
-             bucketed_table: str = "pagerank_edges_bkt",
-             graph: tuple[DataFrame, DataFrame] | None = None,
-             checkpoint_interval: int = 5) -> DataFrame:
-    """(id, rank) after ``iters`` synchronous iterations.
+             graph: tuple[DataFrame, DataFrame] | None = None) -> DataFrame:
+    """(id, rank) over ``edges(src, dst)`` after ``iters`` synchronous
+    iterations.
 
     rank_{t+1}(v) = (1−d)/N + d·(Σ_{u→v} rank_t(u)/outdeg(u) + dangling_t/N)
 
     Ranks sum to 1 every iteration (dangling mass redistributed
     uniformly). Deterministic: no sampling, no rand(), stable under any
-    partitioning.
-
-    ``hash_keys`` runs the loop on ``xxhash64`` surrogate keys instead of
-    the raw (string) node ids — fixed-width longs hash-join and aggregate
-    ~2× faster than URI-sized strings, and the per-iteration state
-    shrinks; the output is mapped back to the original ids, so the keys
-    never leak. Birthday bound: p(collision) ≈ k²/2^65 — negligible to
-    ~10^7 nodes (3e-6) and acceptable to ~10^8 (3e-4); past that widen to
-    a 128-bit key pair (two seeded hashes) or set ``hash_keys=False``.
-
-    ``edge_layout`` picks the iteration substrate (measured trade-off in
-    the module docstring): ``"checkpoint"`` for in-session graphs,
-    ``"bucketed"`` to pay one bucketed write up front and run every
-    iteration exchange-free on the edge side (the cluster-scale layout;
-    ``bucketed_table`` names the managed table, overwritten per call).
+    partitioning. The loop runs on surrogate keys (module docstring) and
+    returns the original ids.
 
     ``graph`` accepts a pre-built :func:`build_surrogate_graph` pair so
-    repeated rankings of one graph skip the build (implies
-    ``hash_keys=True`` semantics). ``checkpoint_interval`` sets how many
-    iterations compile into one query segment before a state barrier
-    (module docstring: measured sweet spot 5; the output is bit-identical
-    at any interval).
+    repeated rankings of one graph skip the build.
     """
-    if edge_layout not in ("checkpoint", "bucketed"):
-        raise ValueError(f"unknown edge_layout {edge_layout!r}")
-    spark = edges.sparkSession
-
-    if graph is not None:
-        id_map, e = graph
-        hash_keys = True
-        node_ids = id_map.select("id")
-    elif hash_keys:
-        id_map, e = build_surrogate_graph(edges, src_col, dst_col)
-        node_ids = id_map.select("id")
-    else:
-        node_ids = (
-            edges.select(F.col(src_col).alias("id"))
-            .unionByName(edges.select(F.col(dst_col).alias("id")))
-            .distinct()
-        )
-        e = edges.select(
-            F.col(src_col).alias("id"), F.col(dst_col).alias("dst_id"))
-
-    if edge_layout == "bucketed":
-        from ..sources.bucketed import write_bucketed
-
-        shuffle_n = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-        write_bucketed(e, bucketed_table, "id", n_buckets=shuffle_n)
-        edge_tbl = spark.table(bucketed_table)
-    elif hash_keys:
-        edge_tbl = e  # build_surrogate_graph already checkpointed it
-    else:
-        edge_tbl = e.localCheckpoint(eager=True)
+    id_map, edge_tbl = graph if graph is not None else build_surrogate_graph(edges)
 
     out_deg = edge_tbl.groupBy("id").agg(F.count("*").alias("od"))
     nodes = (
-        node_ids
+        id_map.select("id")
         .join(out_deg, "id", "left")
         .na.fill({"od": 0})
         .localCheckpoint(eager=True)
@@ -171,7 +122,7 @@ def pagerank(edges: DataFrame, iters: int = 5, damping: float = 0.85,
 
     ranks = nodes.select("id", "od", F.lit(1.0 / n).alias("rank"))
     for i in range(iters):
-        if i and i % checkpoint_interval == 0:
+        if i and i % CHECKPOINT_INTERVAL == 0:
             ranks = ranks.localCheckpoint(eager=True)
         dangling = ranks.where(F.col("od") == 0).agg(
             F.coalesce(F.sum("rank"), F.lit(0.0)).alias("dm"))
@@ -191,7 +142,4 @@ def pagerank(edges: DataFrame, iters: int = 5, damping: float = 0.85,
                     + F.col("dm") / F.lit(float(n)))).alias("rank"),
             )
         )
-    if hash_keys:
-        return (ranks.join(id_map, "id")
-                .select(F.col("orig").alias("id"), "rank"))
-    return ranks.select("id", "rank")
+    return ranks.join(id_map, "id").select(F.col("orig").alias("id"), "rank")

@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .dedup import committed_ids
+
 EVENTS_SCHEMA = (
     "event_id long, ts timestamp, user_id long, event_type string, "
     "value double, props string"
@@ -197,9 +199,9 @@ def run_hierarchy_stream(instances_stream: DataFrame, state_dir: str,
     than duplicate. CURRENT is repointed last, purely for readers.
 
     Returns the completed StreamingQuery; read the result with
-    ``load_hierarchy_state`` + ``concepts.update_hierarchy`` or
-    ``hierarchy_from_state_dir`` (pass ``galois`` there — the flag only
-    affects materialization, not the maintained state).
+    ``hierarchy_from_state_dir`` or ``hierarchy_at`` (pass ``galois``
+    there — the flag only affects materialization, not the maintained
+    state).
     """
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         merge_batch_into_state(batch_df, batch_id, state_dir)
@@ -227,9 +229,7 @@ def merge_batch_into_state(batch_df: DataFrame, batch_id: int,
     from .concepts import _canonical_intents, intent_state, merge_intent_state
 
     spark = batch_df.sparkSession
-    prev_versions = [
-        v for v in _committed_state_versions(state_dir) if v < batch_id
-    ]
+    prev_versions = [v for v in state_versions(state_dir) if v < batch_id]
     prev = (
         spark.read.parquet(
             os.path.join(state_dir, "state", f"v{prev_versions[-1]}")
@@ -250,42 +250,6 @@ def merge_batch_into_state(batch_df: DataFrame, batch_id: int,
     os.replace(tmp, os.path.join(state_dir, "CURRENT"))
 
 
-def _committed_state_versions(state_dir: str) -> list[int]:
-    """Sorted batch ids whose state/v{id} snapshot finished writing
-    (parquet _SUCCESS marker) — the replay-safe source of truth."""
-    import os
-
-    sdir = os.path.join(state_dir, "state")
-    if not os.path.isdir(sdir):
-        return []
-    out = []
-    for name in os.listdir(sdir):
-        if (
-            name.startswith("v")
-            and name[1:].isdigit()
-            and os.path.exists(os.path.join(sdir, name, "_SUCCESS"))
-        ):
-            out.append(int(name[1:]))
-    return sorted(out)
-
-
-def _committed_inst_batches(state_dir: str) -> list[int]:
-    """Sorted batch ids whose inst/b{id} instance dir finished writing
-    (parquet _SUCCESS marker) — mirror of :func:`_committed_state_versions`."""
-    import os
-
-    idir = os.path.join(state_dir, "inst")
-    if not os.path.isdir(idir):
-        return []
-    return sorted(
-        int(name[1:])
-        for name in os.listdir(idir)
-        if name.startswith("b")
-        and name[1:].isdigit()
-        and os.path.exists(os.path.join(idir, name, "_SUCCESS"))
-    )
-
-
 def current_version(state_dir: str) -> int | None:
     """Batch id the CURRENT pointer names, or None before the first commit.
     CURRENT is the transaction authority: dirs above it (state/v{N} or
@@ -300,43 +264,23 @@ def current_version(state_dir: str) -> int | None:
         return int(f.read().strip().lstrip("v"))
 
 
-def load_hierarchy_state(spark: SparkSession, state_dir: str):
-    """The committed intent-state snapshot, or None before the first batch."""
-    import os
-
-    v = current_version(state_dir)
-    if v is None:
-        return None
-    return spark.read.parquet(os.path.join(state_dir, "state", f"v{v}"))
-
-
 def hierarchy_from_state_dir(spark: SparkSession, state_dir: str,
                              galois: bool = False) -> dict:
-    """Materialize the full hierarchy tables from a stream's state dir."""
-    import os
-
-    from .concepts import _hierarchy_from_state
-
-    state = load_hierarchy_state(spark, state_dir)
-    if state is None:
-        raise ValueError(f"no committed state under {state_dir}")
-    # only _SUCCESS-committed inst/b{N} dirs at or below CURRENT — a
-    # half-written batch dir, or an orphan above a crashed run's CURRENT
-    # (about to be overwritten by the relaunch), must not contribute
-    # duplicate assignments
+    """Materialize the full hierarchy tables from a stream's state dir:
+    :func:`hierarchy_at` the CURRENT version, so orphan dirs above it (a
+    crashed run's, about to be overwritten by the relaunch) and half-written
+    dirs never contribute."""
     cur = current_version(state_dir)
-    paths = [
-        os.path.join(state_dir, "inst", f"b{b}")
-        for b in _committed_inst_batches(state_dir)
-        if b <= cur
-    ]
-    inst = spark.read.parquet(*paths)
-    return _hierarchy_from_state(spark, state, inst, root_seed="c", galois=galois)
+    if cur is None:
+        raise ValueError(f"no committed state under {state_dir}")
+    return hierarchy_at(spark, state_dir, cur, galois)
 
 
 def state_versions(state_dir: str) -> list[int]:
     """Committed snapshot versions, oldest first — the time-travel axis."""
-    return _committed_state_versions(state_dir)
+    import os
+
+    return committed_ids(os.path.join(state_dir, "state"), "v")
 
 
 def prune_state(state_dir: str, keep_last: int = 5) -> list[int]:
@@ -353,7 +297,7 @@ def prune_state(state_dir: str, keep_last: int = 5) -> list[int]:
     import os
     import shutil
 
-    versions = _committed_state_versions(state_dir)
+    versions = state_versions(state_dir)
     removed = []
     for v in versions[:-keep_last] if keep_last > 0 else versions[:-1]:
         shutil.rmtree(os.path.join(state_dir, "state", f"v{v}"))
@@ -369,16 +313,16 @@ def hierarchy_at(spark: SparkSession, state_dir: str, batch_id: int,
     ``inst/b{N}`` dirs, both _SUCCESS-committed) makes any committed
     batch reconstructible after the fact: intent state from the highest
     snapshot <= batch_id, instances from only the batches <= batch_id.
-    Must be bit-identical to what ``hierarchy_from_state_dir`` returned
-    when ``batch_id`` WAS current (pinned in tests), so audits and
-    reproductions never need the stream replayed.
+    ``hierarchy_from_state_dir`` is this call at the CURRENT version, so
+    the answer for a past batch equals what was served when it WAS
+    current (pinned in tests), and audits and reproductions never need
+    the stream replayed.
     """
     import os
 
     from .concepts import _hierarchy_from_state
 
-    versions = [v for v in _committed_state_versions(state_dir)
-                if v <= batch_id]
+    versions = [v for v in state_versions(state_dir) if v <= batch_id]
     if not versions:
         raise ValueError(
             f"no committed state at or below batch {batch_id} "
@@ -386,7 +330,7 @@ def hierarchy_at(spark: SparkSession, state_dir: str, batch_id: int,
         )
     snap = versions[-1]
     idir = os.path.join(state_dir, "inst")
-    wanted = [b for b in _committed_inst_batches(state_dir) if b <= batch_id]
+    wanted = [b for b in committed_ids(idir, "b") if b <= batch_id]
     # the snapshot must cover every instance batch in the window — a
     # pruned intermediate snapshot silently falling back to older state
     # would drop those batches' intents

@@ -222,8 +222,7 @@ def pagerank_graph_cached(spark: SparkSession, sf_dir: str):
     id↔orig map and fixed-width edge list are INPUTS the ranking queries
     share (kg_pagerank, kg_salient_entities — and the node count for the
     scale-free rank comes free from id_map), not part of any one query's
-    work. Production shape: a bucketed surrogate-key edge table written
-    once (`operators/pagerank.pagerank(edge_layout="bucketed")`)."""
+    work; both go to `operators/pagerank.pagerank(graph=...)`."""
     from .operators.pagerank import build_surrogate_graph
 
     key = (spark.sparkContext.applicationId, sf_dir)

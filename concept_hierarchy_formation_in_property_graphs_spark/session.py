@@ -48,7 +48,7 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.ui.enabled", "false")
-        # heap scales with concurrency (same rule as tools/scaling_run.py):
+        # heap scales with concurrency (tools/scaling.py relies on it):
         # N simultaneous tasks each hold shuffle buffers + an Arrow batch,
         # and a 16g heap under 32 tasks GC-thrashes exactly the queries
         # that build per-task hash tables (observed as multi-10s outliers

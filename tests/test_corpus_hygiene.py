@@ -128,44 +128,6 @@ def test_pagerank_star_and_mass_conservation(spark):
     assert pr["hub"] > pr["a"] == pr["b"] == pr["c"]
 
 
-def test_pagerank_bucketed_layout_matches_and_is_exchange_free(spark):
-    """edge_layout='bucketed' (the cluster-scale path) must return the
-    SAME ranks as the default checkpoint layout, and its per-iteration
-    edge side must scan the bucketed table with no hash exchange above it
-    — the whole point of paying the bucketed write once."""
-    from pyspark.sql import functions as F
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
-    edges = docs.select(
-        F.concat(F.lit("o"), F.col("o_orderkey").cast("string")).alias("src"),
-        F.concat(F.lit("c"), (F.col("o_custkey") % 50).cast("string")).alias("dst"),
-    )
-    base = {r["id"]: r["rank"] for r in pagerank(edges, iters=3).collect()}
-    bkt = {r["id"]: r["rank"] for r in pagerank(
-        edges, iters=3, edge_layout="bucketed",
-        bucketed_table="pr_bkt_test").collect()}
-    assert base.keys() == bkt.keys()
-    assert all(abs(base[k] - bkt[k]) < 1e-12 for k in base)
-
-    # plan property: joining the bucketed edge table on its bucket key
-    # plans with NO exchange above the scan (broadcast disabled so a BHJ
-    # can't mask the answer)
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        ew = spark.table("pr_bkt_test")
-        ranks = ew.groupBy("id").agg(F.count("*").alias("od"))
-        plan = (ew.join(ranks, "id")._jdf.queryExecution()
-                .executedPlan().toString())
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-    scan_side = plan.split("FileScan")[1] if "FileScan" in plan else ""
-    assert "Bucketed: true" in scan_side
-    assert plan.count("Exchange hashpartitioning") <= 1, (
-        "edge side of a bucket-key join re-exchanged:\n" + plan
-    )
-
-
 def test_pagerank_cycle_is_uniform(spark):
     edges = spark.createDataFrame(
         [("a", "r", "b"), ("b", "r", "c"), ("c", "r", "a")],

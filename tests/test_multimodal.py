@@ -173,312 +173,3 @@ def test_real_wav_through_decode_assets(spark):
     assert rows[1000]["sample_rate"] == 22050
     assert rows[1000]["width"] == 0 and rows[1000]["n_frames"] == 0
     assert rows[1001]["sample_rate"] == _decode_stub(fake, "audio")["sample_rate"]
-
-
-# ---------------------------------------------------------------------------
-# baseline JPEG: test-side encoder (T.81 Annex K tables) + decoder tests
-# ---------------------------------------------------------------------------
-
-# standard luminance DC/AC Huffman tables (ITU T.81 Annex K.3.3)
-_DC_COUNTS = [0, 1, 5, 1, 1, 1, 1, 1, 1, 0, 0, 0, 0, 0, 0, 0]
-_DC_SYMS = list(range(12))
-_AC_COUNTS = [0, 2, 1, 3, 3, 2, 4, 3, 5, 5, 4, 4, 0, 0, 1, 0x7D]
-_AC_SYMS = [
-    0x01, 0x02, 0x03, 0x00, 0x04, 0x11, 0x05, 0x12, 0x21, 0x31, 0x41, 0x06,
-    0x13, 0x51, 0x61, 0x07, 0x22, 0x71, 0x14, 0x32, 0x81, 0x91, 0xA1, 0x08,
-    0x23, 0x42, 0xB1, 0xC1, 0x15, 0x52, 0xD1, 0xF0, 0x24, 0x33, 0x62, 0x72,
-    0x82, 0x09, 0x0A, 0x16, 0x17, 0x18, 0x19, 0x1A, 0x25, 0x26, 0x27, 0x28,
-    0x29, 0x2A, 0x34, 0x35, 0x36, 0x37, 0x38, 0x39, 0x3A, 0x43, 0x44, 0x45,
-    0x46, 0x47, 0x48, 0x49, 0x4A, 0x53, 0x54, 0x55, 0x56, 0x57, 0x58, 0x59,
-    0x5A, 0x63, 0x64, 0x65, 0x66, 0x67, 0x68, 0x69, 0x6A, 0x73, 0x74, 0x75,
-    0x76, 0x77, 0x78, 0x79, 0x7A, 0x83, 0x84, 0x85, 0x86, 0x87, 0x88, 0x89,
-    0x8A, 0x92, 0x93, 0x94, 0x95, 0x96, 0x97, 0x98, 0x99, 0x9A, 0xA2, 0xA3,
-    0xA4, 0xA5, 0xA6, 0xA7, 0xA8, 0xA9, 0xAA, 0xB2, 0xB3, 0xB4, 0xB5, 0xB6,
-    0xB7, 0xB8, 0xB9, 0xBA, 0xC2, 0xC3, 0xC4, 0xC5, 0xC6, 0xC7, 0xC8, 0xC9,
-    0xCA, 0xD2, 0xD3, 0xD4, 0xD5, 0xD6, 0xD7, 0xD8, 0xD9, 0xDA, 0xE1, 0xE2,
-    0xE3, 0xE4, 0xE5, 0xE6, 0xE7, 0xE8, 0xE9, 0xEA, 0xF1, 0xF2, 0xF3, 0xF4,
-    0xF5, 0xF6, 0xF7, 0xF8, 0xF9, 0xFA,
-]
-
-
-def _enc_codes(counts, syms):
-    codes = {}
-    code = 0
-    k = 0
-    for length in range(1, 17):
-        for _ in range(counts[length - 1]):
-            codes[syms[k]] = (length, code)
-            code += 1
-            k += 1
-        code <<= 1
-    return codes
-
-
-class _BitWriter:
-    def __init__(self):
-        self.out = bytearray()
-        self.acc = 0
-        self.n = 0
-
-    def write(self, length, value):
-        for i in range(length - 1, -1, -1):
-            self.acc = (self.acc << 1) | ((value >> i) & 1)
-            self.n += 1
-            if self.n == 8:
-                self.out.append(self.acc)
-                if self.acc == 0xFF:
-                    self.out.append(0x00)  # byte stuffing
-                self.acc = 0
-                self.n = 0
-
-    def flush(self):
-        while self.n:
-            self.write(1, 1)  # pad with 1s per T.81
-        return bytes(self.out)
-
-
-def _encode_block(bw, block, q_zz, dc_codes, ac_codes, pred):
-    """Forward-DCT + quantize one 8x8 block, entropy-code it; returns the
-    new DC predictor."""
-    import numpy as np
-
-    from concept_hierarchy_formation_in_property_graphs_spark.operators.multimodal import (
-        _ZIGZAG,
-        _idct_matrix,
-    )
-
-    a = _idct_matrix()
-    coefs = a.T @ (block.astype(np.float64) - 128.0) @ a
-    zz = np.array(
-        [round(coefs.flat[_ZIGZAG[k]] / q_zz[k]) for k in range(64)],
-        dtype=np.int64,
-    )
-
-    def emit(codes, sym, v):
-        length, code = codes[sym]
-        bw.write(length, code)
-        if sym_size := (sym & 0xF) if codes is ac_codes else sym:
-            if v < 0:
-                v = v + (1 << sym_size) - 1
-            bw.write(sym_size, v)
-
-    diff = int(zz[0]) - pred
-    size = int(diff).bit_length() if diff else 0
-    emit(dc_codes, size, diff)
-    run = 0
-    for k in range(1, 64):
-        v = int(zz[k])
-        if v == 0:
-            run += 1
-            continue
-        while run >= 16:
-            bw.write(*ac_codes[0xF0])  # ZRL
-            run -= 16
-        size = abs(v).bit_length()
-        emit(ac_codes, (run << 4) | size, v)
-        run = 0
-    if run:
-        bw.write(*ac_codes[0x00])  # EOB
-    return int(zz[0])
-
-
-def _seg(marker, payload):
-    return bytes([0xFF, marker]) + (len(payload) + 2).to_bytes(2, "big") + payload
-
-
-def _encode_jpeg(pixels, q_zz=None, subsample=False, restart=0):
-    """Minimal baseline JPEG encoder (grayscale, or 4:2:0 with flat-gray
-    chroma when subsample=True) — test twin of decode_jpeg."""
-    import numpy as np
-
-    from concept_hierarchy_formation_in_property_graphs_spark.operators.multimodal import (
-        _ZIGZAG,
-    )
-
-    px = np.asarray(pixels, dtype=np.uint8)
-    h, w = px.shape
-    q_zz = q_zz or [1] * 64
-    dc_codes = _enc_codes(_DC_COUNTS, _DC_SYMS)
-    ac_codes = _enc_codes(_AC_COUNTS, _AC_SYMS)
-
-    mcu = 16 if subsample else 8
-    ph, pw = -(-h // mcu) * mcu, -(-w // mcu) * mcu
-    pad = np.pad(px, ((0, ph - h), (0, pw - w)), mode="edge")
-
-    bw = _BitWriter()
-    out = bytearray(b"\xff\xd8")  # SOI
-    dqt = bytes([0x00]) + bytes(q_zz)
-    out += _seg(0xDB, dqt)
-    if subsample:
-        comps = bytes([1, 0x22, 0]) + bytes([2, 0x11, 0]) + bytes([3, 0x11, 0])
-        ncomp = 3
-    else:
-        comps = bytes([1, 0x11, 0])
-        ncomp = 1
-    sof = bytes([8]) + h.to_bytes(2, "big") + w.to_bytes(2, "big") \
-        + bytes([ncomp]) + comps
-    out += _seg(0xC0, sof)
-    dht = bytes([0x00]) + bytes(_DC_COUNTS) + bytes(_DC_SYMS)
-    dht += bytes([0x10]) + bytes(_AC_COUNTS) + bytes(_AC_SYMS)
-    out += _seg(0xC4, dht)
-    if restart:
-        out += _seg(0xDD, restart.to_bytes(2, "big"))
-    scomp = b"".join(bytes([cid, 0x00]) for cid in range(1, ncomp + 1))
-    out += _seg(0xDA, bytes([ncomp]) + scomp + bytes([0, 63, 0]))
-
-    preds = [0] * ncomp
-    gray = np.full((8, 8), 128, dtype=np.uint8)  # flat chroma plane
-    n_mcu = 0
-    rst = 0
-    data = bytearray()
-    for my in range(ph // mcu):
-        for mx in range(pw // mcu):
-            if restart and n_mcu and n_mcu % restart == 0:
-                data += bw.flush()
-                bw = _BitWriter()
-                data += bytes([0xFF, 0xD0 + rst % 8])
-                rst += 1
-                preds = [0] * ncomp
-            n_mcu += 1
-            if subsample:
-                for by in range(2):
-                    for bx in range(2):
-                        blk = pad[my * 16 + by * 8:my * 16 + by * 8 + 8,
-                                  mx * 16 + bx * 8:mx * 16 + bx * 8 + 8]
-                        preds[0] = _encode_block(
-                            bw, blk, q_zz, dc_codes, ac_codes, preds[0])
-                for c in (1, 2):
-                    preds[c] = _encode_block(
-                        bw, gray, q_zz, dc_codes, ac_codes, preds[c])
-            else:
-                blk = pad[my * 8:my * 8 + 8, mx * 8:mx * 8 + 8]
-                preds[0] = _encode_block(
-                    bw, blk, q_zz, dc_codes, ac_codes, preds[0])
-    data += bw.flush()
-    out += data
-    out += b"\xff\xd9"  # EOI
-    return bytes(out)
-
-
-def _gradient(h, w):
-    import numpy as np
-
-    y, x = np.mgrid[0:h, 0:w]
-    return ((x * 5 + y * 3) % 256).astype(np.uint8)
-
-
-def test_jpeg_decoder_grayscale_roundtrip():
-    """Flat Q=1 quantization makes baseline JPEG near-lossless: the
-    decoded luma plane must match the source within DCT rounding."""
-    import numpy as np
-
-    from concept_hierarchy_formation_in_property_graphs_spark.operators.multimodal import (
-        decode_jpeg,
-    )
-
-    px = _gradient(17, 24)  # non-multiple-of-8 dims exercise padding/crop
-    jpg = _encode_jpeg(px)
-    m = decode_jpeg(jpg)
-    assert (m["width"], m["height"], m["channels"]) == (24, 17, 1)
-    got = np.frombuffer(m["pixels"], dtype=np.uint8).reshape(17, 24)
-    err = np.abs(got.astype(int) - px.astype(int))
-    assert err.max() <= 3, f"max pixel error {err.max()}"
-
-
-def test_jpeg_decoder_420_subsampled_and_restart_markers():
-    """Interleaved 4:2:0 MCUs (4 luma + 2 chroma blocks) with a restart
-    interval: the luma plane still reconstructs, channels report 3."""
-    import numpy as np
-
-    from concept_hierarchy_formation_in_property_graphs_spark.operators.multimodal import (
-        decode_jpeg,
-    )
-
-    px = _gradient(24, 40)
-    jpg = _encode_jpeg(px, subsample=True, restart=2)
-    m = decode_jpeg(jpg)
-    assert (m["width"], m["height"], m["channels"]) == (40, 24, 3)
-    got = np.frombuffer(m["pixels"], dtype=np.uint8).reshape(24, 40)
-    err = np.abs(got.astype(int) - px.astype(int))
-    assert err.max() <= 3, f"max pixel error {err.max()}"
-
-
-def test_jpeg_decoder_annexk_quant_plausible():
-    """With the real Annex K luminance table the roundtrip is lossy but
-    must stay visually close on a smooth gradient."""
-    import numpy as np
-
-    from concept_hierarchy_formation_in_property_graphs_spark.operators.multimodal import (
-        decode_jpeg,
-    )
-
-    annex_k = [
-        16, 11, 12, 14, 12, 10, 16, 14, 13, 14, 18, 17, 16, 19, 24, 40,
-        26, 24, 22, 22, 24, 49, 35, 37, 29, 40, 58, 51, 61, 60, 57, 51,
-        56, 55, 64, 72, 92, 78, 64, 68, 87, 69, 55, 56, 80, 109, 81, 87,
-        95, 98, 103, 104, 103, 62, 77, 113, 121, 112, 100, 120, 92, 101,
-        103, 99,
-    ]
-    y, x = __import__("numpy").mgrid[0:32, 0:32]
-    px = (96 + x * 2 + y).astype("uint8")
-    jpg = _encode_jpeg(px, q_zz=annex_k)
-    m = decode_jpeg(jpg)
-    got = np.frombuffer(m["pixels"], dtype=np.uint8).reshape(32, 32)
-    err = np.abs(got.astype(int) - px.astype(int))
-    assert err.mean() < 6 and err.max() < 40, (err.mean(), err.max())
-
-
-def test_progressive_jpeg_falls_back_to_stub():
-    """A progressive (SOF2) header must NOT crash the operator — it
-    raises inside decode_jpeg and decode_asset falls back to the stub."""
-    from concept_hierarchy_formation_in_property_graphs_spark.operators.multimodal import (
-        _decode_stub,
-        decode_asset,
-        decode_jpeg,
-    )
-
-    px = _gradient(8, 8)
-    jpg = bytearray(_encode_jpeg(px))
-    i = jpg.index(b"\xff\xc0")
-    jpg[i + 1] = 0xC2  # rewrite SOF0 -> SOF2 (progressive)
-    jpg = bytes(jpg)
-    with pytest.raises(NotImplementedError):
-        decode_jpeg(jpg)
-    assert decode_asset(jpg, "image") == _decode_stub(jpg, "image")
-
-
-def test_non_interleaved_jpeg_scan_falls_back_to_stub():
-    """A baseline JPEG whose scan covers only SOME frame components
-    (ns != ncomp — the legal one-scan-per-component variant) is NOT in
-    interleaved-MCU order; decoding it with the interleaved walk would
-    return a silently block-permuted plane, so decode_jpeg must refuse
-    and decode_asset must take the stub path."""
-    from concept_hierarchy_formation_in_property_graphs_spark.operators.multimodal import (
-        _decode_stub,
-        decode_asset,
-        decode_jpeg,
-    )
-
-    sof = bytes([0xFF, 0xC0, 0x00, 0x11, 8, 0, 8, 0, 8, 3,
-                 1, 0x22, 0, 2, 0x11, 1, 3, 0x11, 1])
-    sos = bytes([0xFF, 0xDA, 0x00, 0x08, 1, 1, 0x00, 0, 63, 0])
-    jpg = b"\xff\xd8" + sof + sos
-    with pytest.raises(NotImplementedError, match="non-interleaved"):
-        decode_jpeg(jpg)
-    assert decode_asset(jpg, "image") == _decode_stub(jpg, "image")
-
-
-def test_real_jpeg_through_decode_assets(spark):
-    """A real baseline JPEG rides the SAME mapInPandas operator as the
-    stub payloads and reports its true geometry."""
-    from concept_hierarchy_formation_in_property_graphs_spark.operators.multimodal import (
-        ASSET_SCHEMA,
-        decode_assets,
-    )
-
-    jpg = _encode_jpeg(_gradient(16, 48), subsample=True)
-    df = spark.createDataFrame(
-        [(7001, "image", jpg, {"source": "test/jpeg"})], ASSET_SCHEMA
-    )
-    row = decode_assets(df).collect()[0]
-    assert (row.width, row.height) == (48, 16)

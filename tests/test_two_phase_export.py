@@ -11,6 +11,8 @@ from concept_hierarchy_formation_in_property_graphs_spark.operators.concepts imp
 from concept_hierarchy_formation_in_property_graphs_spark.operators.export import (
     render_ascii,
     to_tex_forest,
+    to_tex_tables,
+    trees_to_tex_file,
 )
 from concept_hierarchy_formation_in_property_graphs_spark.operators.two_phase import (
     two_phase_hierarchy,
@@ -68,6 +70,53 @@ def test_ascii_and_forest_render(spark):
     assert forest.startswith("\\begin{forest}") and forest.rstrip().endswith(
         "\\end{forest}"
     )
+
+
+def test_tex_tables_prune_at_5pct_and_tex_file_sinks(spark, tmp_path):
+    """T5 getTexTables + T6 treesToTexFile: a child at or under 5% of its
+    parent's count gets no tabular (the forest keeps it — its cut is
+    0.5%); nominal rows print the value count, numeric rows the Gaussian."""
+    concepts = spark.createDataFrame(
+        [
+            ("c", None, 0, "c", 100),
+            ("c0", "c", 1, "c0", 60),
+            ("c1", "c", 1, "c1", 35),
+            ("c2", "c", 1, "c2", 5),      # exactly 5% of c: pruned
+            ("c00", "c0", 2, "c00", 4),   # 6.7% of c0: kept
+            ("c01", "c0", 2, "c01", 2),   # 3.3% of c0: pruned
+        ],
+        "concept_id string, parent_id string, depth int, label string, count long",
+    )
+    stats = spark.createDataFrame(
+        [
+            ("c", "city", "nom", "X", 60, None, None, None),
+            ("c", "age", "num", None, None, 100, 30.5, 2.25),
+            ("c00", "city", "nom", "X", 4, None, None, None),
+            ("c2", "city", "nom", "Y", 5, None, None, None),
+            ("c01", "city", "nom", "Z", 2, None, None, None),
+        ],
+        "concept_id string, attr string, kind string, nom_value string, "
+        "cnt long, num_count long, num_mean double, num_std double",
+    )
+    tex = to_tex_tables(stats, concepts)
+    assert tex.count("\\begin{tabular}{lll}") == 4
+    for kept in ("c (count=100)", "c0 (count=60)", "c1 (count=35)",
+                 "c00 (count=4)"):
+        assert f"\\multicolumn{{3}}{{c}}{{{kept}}}" in tex
+    assert "c2 (count" not in tex and "c01 (count" not in tex
+    assert "city & Y" not in tex and "city & Z" not in tex
+    rows = tex.splitlines()
+    assert "city & X & n=60 \\\\" in rows
+    assert "city & X & n=4 \\\\" in rows
+    assert "age & gaussian & $\\mu$=30.500, $\\sigma$=2.250, n=100 \\\\" in rows
+
+    base = str(tmp_path / "h")
+    trees_to_tex_file(concepts, base)
+    assert (tmp_path / "hTree.tex").read_text() == to_tex_forest(concepts)
+    assert "c01 (2)" in (tmp_path / "hTree.tex").read_text()
+    assert not (tmp_path / "hConcepts.tex").exists()
+    trees_to_tex_file(concepts, base, concept_stats=stats)
+    assert (tmp_path / "hConcepts.tex").read_text() == tex
 
 
 def test_cluster_representatives_intersection(spark):

@@ -1,61 +1,186 @@
-"""Scaling-efficiency evidence (north rule): the same pipeline job on the
-same input at two parallelism levels (local[8] ≙ N executors, local[32] ≙
-4N), reporting throughput at both plus efficiency = T_8 / (4 · T_32).
+"""Scaling-efficiency evidence: one job on one input at two local[]
+parallelism levels, each in a fresh JVM.
 
-Each level runs in its own subprocess (fresh JVM) against one shared
-pages parquet, so only the executor-thread count differs.
+Usage: python tools/scaling.py {pipeline|corpus} [n] [lo] [hi]
 
-Usage: python tools/scaling.py [n_pages] [n_entities] [content_scale]
+  pipeline  ``run_pipeline`` over n synthetic pages (default 120000;
+            500 entities, content_scale 12)
+  corpus    ``jobs/run_corpus_job.run`` over n synthetic documents
+            (default 400000)
+  lo, hi    the two parallelism levels; default 1 and the host's cores
+
+The input is generated once at the host's core count, then each level
+runs as a fresh subprocess of this file: one small warm-up run of the
+same worker (JIT, codegen, Python workers), then the timed run. The JVM
+heap follows ``session.get_spark``'s rule. Prints one JSON line with both
+level records and efficiency = (T_lo·lo) / (T_hi·hi).
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 import subprocess
 import sys
 import tempfile
+import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+sys.path.insert(0, os.path.join(REPO, "jobs"))
+
+N_ENTITIES = 500
+CONTENT_SCALE = 12
+DEFAULT_N = {"pipeline": 120_000, "corpus": 400_000}
 
 
-def main() -> None:
-    n_pages = int(sys.argv[1]) if len(sys.argv) > 1 else 120_000
-    n_entities = int(sys.argv[2]) if len(sys.argv) > 2 else 500
-    content_scale = int(sys.argv[3]) if len(sys.argv) > 3 else 12
+def host_cpus() -> int:
+    return len(os.sched_getaffinity(0))
 
-    workdir = tempfile.mkdtemp(prefix="chf_scaling_")
-    pages_path = os.path.join(workdir, "pages.parquet")
-    here = os.path.dirname(os.path.abspath(__file__))
-    subprocess.run(
-        [sys.executable, os.path.join(here, "gen_pages.py"),
-         str(n_pages), str(n_entities), str(content_scale), pages_path],
-        check=True,
+
+def efficiency(t_lo: float, lo: int, t_hi: float, hi: int) -> float:
+    """Fraction of the ideal hi/lo speedup that was achieved."""
+    return (t_lo * lo) / (t_hi * hi)
+
+
+def pipeline_level(spark, pages) -> dict:
+    """Time the full KG pipeline over ``pages`` in a fresh workdir."""
+    from concept_hierarchy_formation_in_property_graphs_spark.plans.pipeline import (
+        run_pipeline,
     )
-    print(f"# generated {n_pages} pages -> {pages_path}", file=sys.stderr)
 
-    results = {}
-    here = os.path.dirname(os.path.abspath(__file__))
-    for cpus in (8, 32):
-        out_json = os.path.join(workdir, f"scale_{cpus}.json")
-        subprocess.run(
-            [sys.executable, os.path.join(here, "scaling_run.py"),
-             str(cpus), pages_path, str(n_entities), out_json],
-            check=True,
+    n = pages.count()  # warm the scan, exclude it from timing
+    wd = tempfile.mkdtemp(prefix="chf_scale_")
+    try:
+        t0 = time.time()
+        out = run_pipeline(spark, pages, wd, n_entities=N_ENTITIES)
+        n_triples = out["triples"].count()
+        out["concepts"].count()
+        wall = time.time() - t0
+    finally:
+        shutil.rmtree(wd, ignore_errors=True)
+    return {"cpus": spark.sparkContext.defaultParallelism, "items": n,
+            "triples": n_triples, "wall_s": round(wall, 2),
+            "items_per_s": round(n / wall, 2)}
+
+
+def corpus_level(spark, docs: str, bench: str) -> dict:
+    """Time the corpus-curation job over the ``docs`` parquet."""
+    from run_corpus_job import run
+
+    wd = tempfile.mkdtemp(prefix="chf_corpus_scale_")
+    try:
+        t0 = time.time()
+        out = run(spark, docs, wd, bench_path=bench, n_shards=16)
+        wall = time.time() - t0
+    finally:
+        shutil.rmtree(wd, ignore_errors=True)
+    return {"cpus": spark.sparkContext.defaultParallelism,
+            "items": out["total"], "admitted": out["admitted"],
+            "wall_s": round(wall, 2),
+            "items_per_s": round(out["total"] / wall, 2)}
+
+
+def _synth_corpus(spark, path: str, n_docs: int, seed: int) -> None:
+    from pyspark.sql import functions as F
+
+    # 60 tokens/doc: every 3rd token a stopword (passes language/quality),
+    # the rest md5-derived (trigram-unique, passes repetition thresholds)
+    tok = (
+        "CASE WHEN i % 3 = 0 THEN (CASE WHEN i % 2 = 0 THEN 'the' ELSE 'of' END) "
+        f"ELSE substr(md5(concat(cast(id as string), ':', cast(i as string), ':{seed}')), 1, 6) END"
+    )
+    spark.range(n_docs).select(
+        F.col("id").alias("doc_id"),
+        F.expr(f"array_join(transform(sequence(1, 60), i -> {tok}), ' ')").alias("text"),
+    ).write.mode("overwrite").parquet(path)
+
+
+def _session(mode: str, cpus: int):
+    from concept_hierarchy_formation_in_property_graphs_spark.session import get_spark
+
+    # a ~25 MB synthetic corpus packs into ONE 128 MB file-partition, which
+    # serializes every scan stage; a real corpus has thousands of splits.
+    # Model that: 1 MB split target -> ~25 scan partitions at 100k docs.
+    conf = {"spark.sql.files.maxPartitionBytes": str(1 << 20)} if mode == "corpus" else {}
+    spark = get_spark(app_name=f"chf-scale-{mode}-{cpus}", cpus=cpus, extra_conf=conf)
+    spark.sparkContext.setLogLevel("ERROR")
+    return spark
+
+
+def _gen(mode: str, n: int, data: str) -> None:
+    spark = _session(mode, host_cpus())
+    if mode == "pipeline":
+        from concept_hierarchy_formation_in_property_graphs_spark.fixtures.pages import (
+            pages_spark_df_distributed,
         )
-        with open(out_json) as f:
-            results[cpus] = json.load(f)
-        print(f"# local[{cpus}]: {results[cpus]}", file=sys.stderr)
 
-    eff = results[8]["wall_sec"] / (4 * results[32]["wall_sec"])
+        pages_spark_df_distributed(
+            spark, n, n_entities=N_ENTITIES, content_scale=CONTENT_SCALE,
+            partitions=128,
+        ).write.mode("overwrite").parquet(os.path.join(data, "pages"))
+    else:
+        _synth_corpus(spark, os.path.join(data, "docs"), n, seed=1)
+        _synth_corpus(spark, os.path.join(data, "warm"), 5_000, seed=1)
+        _synth_corpus(spark, os.path.join(data, "bench"), 2_000, seed=2)
+    spark.stop()
+
+
+def _level(mode: str, cpus: int, data: str) -> dict:
+    spark = _session(mode, cpus)
+    if mode == "pipeline":
+        from concept_hierarchy_formation_in_property_graphs_spark.fixtures.pages import (
+            pages_spark_df,
+        )
+
+        pipeline_level(spark, pages_spark_df(spark, 300, n_entities=N_ENTITIES))
+        record = pipeline_level(spark, spark.read.parquet(os.path.join(data, "pages")))
+    else:
+        bench = os.path.join(data, "bench")
+        corpus_level(spark, os.path.join(data, "warm"), bench)
+        record = corpus_level(spark, os.path.join(data, "docs"), bench)
+    spark.stop()
+    return record
+
+
+def _child(*args) -> str:
+    """Run this file with ``args`` in a fresh interpreter; its stdout."""
+    return subprocess.run(
+        [sys.executable, os.path.abspath(__file__), *map(str, args)],
+        check=True, stdout=subprocess.PIPE, text=True,
+    ).stdout
+
+
+def main(argv: list[str]) -> None:
+    if argv[:1] == ["--gen"]:
+        _gen(argv[1], int(argv[2]), argv[3])
+        return
+    if argv[:1] == ["--level"]:
+        print(json.dumps(_level(argv[1], int(argv[2]), argv[3])))
+        return
+    if not argv or argv[0] not in DEFAULT_N:
+        raise SystemExit(__doc__)
+    mode = argv[0]
+    n = int(argv[1]) if len(argv) > 1 else DEFAULT_N[mode]
+    lo = int(argv[2]) if len(argv) > 2 else 1
+    hi = int(argv[3]) if len(argv) > 3 else host_cpus()
+
+    data = tempfile.mkdtemp(prefix=f"chf_scaling_{mode}_")
+    try:
+        _child("--gen", mode, n, data)
+        levels = {}
+        for cpus in (lo, hi):
+            levels[cpus] = json.loads(_child("--level", mode, cpus, data).splitlines()[-1])
+            print(f"# local[{cpus}]: {levels[cpus]}", file=sys.stderr)
+    finally:
+        shutil.rmtree(data, ignore_errors=True)
     print(json.dumps({
-        "n_pages": n_pages,
-        "local8": results[8],
-        "local32": results[32],
-        "speedup_8_to_32": round(results[8]["wall_sec"] / results[32]["wall_sec"], 3),
-        "scaling_efficiency": round(eff, 3),
+        "mode": mode, "n": n, "lo": levels[lo], "hi": levels[hi],
+        "efficiency": round(efficiency(levels[lo]["wall_s"], lo,
+                                       levels[hi]["wall_s"], hi), 3),
     }))
 
 
 if __name__ == "__main__":
-    main()
+    main(sys.argv[1:])
