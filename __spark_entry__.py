@@ -50,7 +50,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 def oracle_sql() -> dict[str, str]:
     """DuckDB twins for every registered query. SQL-expressible queries
-    recompute semantics relationally; the pandas-UDF / iterative pipeline
+    recompute semantics relationally; the Python-pass / iterative pipeline
     stages compare against committed golden snapshots
     (tools/gen_goldens.py) — since round 3 every query is checked."""
     return _q.oracles()

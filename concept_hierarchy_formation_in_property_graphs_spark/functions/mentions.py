@@ -1,11 +1,19 @@
-"""S2 — trie/gazetteer mention detection + relation-pattern matching.
+"""S1+S2 — text extraction, then trie/gazetteer mention detection and
+relation-pattern matching, in ONE Arrow pass (``mapInArrow``).
 
-Vectorized pandas/Arrow path (``mapInPandas``): the gazetteer is broadcast
-once per executor as a compiled leftmost-longest regex (the regex engine's
-alternation over length-sorted literals IS a trie walk in C — no per-row
-Python beyond the batch loop). Output is long-form mention-pair rows; the
-relational rest of the pipeline (linking, dedup, graph build) stays in
-Catalyst.
+Each page crosses into Python once. The pass receives ``url``, ``text``
+and ``CASE WHEN text IS NULL THEN html END``: pages that already carry
+text (the Common-Crawl WET case) send no html bytes and skip extraction.
+For every page it emits the text and the page's mention pairs as an
+``array<struct<subj_surface, pred, obj_surface>>``; S2 is then a JVM
+``explode`` (:func:`explode_pairs`). Every Python task costs a fixed
+~0.3 s of worker set-up on a 4-vCPU host (BASELINE.md "One Python pass"),
+so one pass instead of two also halves that.
+
+The gazetteer is compiled once per executor into a :class:`SurfaceMatcher`
+(regex-identical semantics, one C-level scan for first words); the pure
+functions :func:`~.text.extract_text_py` and
+:func:`extract_mention_pairs_py` are shared with the pytest oracles.
 
 This is the graft of the reference's record→typed-edges emission
 (`src/main/cypher/load_yelp.cql:1-111`) onto free text: pattern predicates
@@ -17,9 +25,11 @@ from __future__ import annotations
 import re
 from collections.abc import Iterator
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
-from pyspark.sql.types import StringType, StructField, StructType
+from pyspark.sql import functions as F
+
+from .text import extract_text_py
 
 # module-level per-executor cache: gazetteer fingerprint -> compiled matcher
 _REGEX_CACHE: dict[int, re.Pattern] = {}
@@ -46,38 +56,64 @@ _WORD_START_RE = re.compile(r"(?<!\w)\w+")
 _WORD_CHAR_RE = re.compile(r"\w")
 
 
+def _trie_pattern(words) -> str:
+    """Regex source matching exactly ``words``, shaped as their character
+    trie: the engine follows one branch per character instead of trying
+    every word in turn (CPython's ``re`` does not factor a flat
+    alternation), and skips positions whose character starts no word."""
+    trie: dict = {}
+    for w in words:
+        node = trie
+        for ch in w:
+            node = node.setdefault(ch, {})
+        node[""] = {}  # a word ends here
+
+    def emit(node: dict) -> str:
+        alts = [re.escape(ch) + emit(sub) for ch, sub in sorted(node.items()) if ch]
+        if not alts:
+            return ""
+        body = alts[0] if len(alts) == 1 else "(?:" + "|".join(alts) + ")"
+        return f"(?:{body})?" if "" in node else body
+
+    return emit(trie)
+
+
 class SurfaceMatcher:
     """Gazetteer matcher with regex-identical semantics, trie-style cost.
 
     Candidate start positions are word starts (a (?<!\\w) boundary can only
-    precede one); each position does ONE dict probe on its leading word,
-    then verifies the few same-first-word surfaces longest-first with a
-    string-slice compare + trailing (?!\\w) boundary check. Matches are
-    non-overlapping leftmost-longest — exactly finditer over the sorted
-    alternation, at O(words + verified candidates) instead of
-    O(chars × |gazetteer|).
+    precede one) whose whole word is the first word of some surface. One
+    scan of a trie-shaped regex over the first words finds them in C, so a
+    line with no first word costs no Python step. Each candidate verifies
+    its few same-first-word surfaces longest-first with a string-slice
+    compare + trailing (?!\\w) boundary check. Matches are non-overlapping
+    leftmost-longest — exactly finditer over the sorted alternation, at
+    O(chars + verified candidates) in C instead of O(chars × |gazetteer|).
     """
 
     def __init__(self, surfaces: tuple[str, ...]):
         self.by_first: dict[str, list[str]] = {}
         for s in surfaces:
-            m = _WORD_START_RE.search(s)
-            key = m.group(0) if m else s
-            self.by_first.setdefault(key, []).append(s)
-        for key, lst in self.by_first.items():
+            # a surface with no word char never starts at a word start
+            if m := _WORD_START_RE.search(s):
+                self.by_first.setdefault(m.group(0), []).append(s)
+        for lst in self.by_first.values():
             lst.sort(key=len, reverse=True)
+        # a first word ending at a word boundary; "(?!)" matches nothing
+        self._first_re = re.compile(
+            "(?:" + (_trie_pattern(self.by_first) or "(?!)") + r")\b"
+        )
 
     def finditer(self, line: str):
         n = len(line)
         last_end = 0
-        for m in _WORD_START_RE.finditer(line):
+        for m in self._first_re.finditer(line):
             pos = m.start()
-            if pos < last_end:
+            # a first word that ends a longer word (x|Acme5) is no word
+            # start; its match ends that word, so it hides no word start
+            if pos < last_end or (pos and _WORD_CHAR_RE.match(line[pos - 1])):
                 continue
-            candidates = self.by_first.get(m.group(0))
-            if not candidates:
-                continue
-            for s in candidates:
+            for s in self.by_first[m.group(0)]:
                 end = pos + len(s)
                 if end <= n and line.startswith(s, pos) and (
                     end == n or not _WORD_CHAR_RE.match(line[end])
@@ -94,16 +130,6 @@ def compile_surface_matcher(surfaces: tuple[str, ...]) -> SurfaceMatcher:
         mt = SurfaceMatcher(surfaces)
         _TRIE_CACHE[key] = mt
     return mt
-
-
-MENTION_PAIR_SCHEMA = StructType(
-    [
-        StructField("url", StringType()),
-        StructField("subj_surface", StringType()),
-        StructField("pred", StringType()),
-        StructField("obj_surface", StringType()),
-    ]
-)
 
 
 def extract_mention_pairs_py(
@@ -136,28 +162,60 @@ def extract_mention_pairs_py(
     return out
 
 
-def extract_mention_pairs(
-    pages_with_text: DataFrame,
+_PAIR_FIELDS = ("subj_surface", "pred", "obj_surface")
+TEXT_AND_PAIRS_SCHEMA = (
+    "url string, text string, pairs array<struct<"
+    + ", ".join(f"{f}: string" for f in _PAIR_FIELDS) + ">>"
+)
+
+
+def text_and_mention_pairs(
+    pages: DataFrame,
     surfaces: tuple[str, ...],
     phrase_to_pred: dict[str, str],
 ) -> DataFrame:
-    """Distributed mention-pair extraction.
+    """pages(url, html, text) -> (url, text, pairs), one Python pass.
 
-    Input needs (url, text). Only those two columns cross the Arrow
-    boundary (column pruning — check ReadSchema in .explain()).
+    Rows that already carry ``text`` keep it and send no html; NULL-text
+    rows run :func:`extract_text_py`. ``pairs`` holds the page's mention
+    pairs in text order, built as Arrow arrays (no pandas frame).
     """
     surfaces = tuple(surfaces)
     phrases = dict(phrase_to_pred)
-    src = pages_with_text.select("url", "text")
+    src = pages.select(
+        "url", "text", F.when(F.col("text").isNull(), F.col("html")).alias("html")
+    )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        pattern = compile_surface_matcher(surfaces)
-        for pdf in batches:
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        matcher = compile_surface_matcher(surfaces)
+        for rb in batches:
+            urls = rb.column("url").to_pylist()
+            texts = rb.column("text").to_pylist()
+            htmls = rb.column("html").to_pylist()
             rows: list[tuple[str, str, str, str]] = []
-            for url, text in zip(pdf["url"], pdf["text"]):
-                rows.extend(extract_mention_pairs_py(url, text, pattern, phrases))
-            yield pd.DataFrame(
-                rows, columns=["url", "subj_surface", "pred", "obj_surface"]
+            offsets = [0]
+            for k, (url, html) in enumerate(zip(urls, htmls)):
+                if texts[k] is None:
+                    texts[k] = extract_text_py(html)
+                rows.extend(extract_mention_pairs_py(url, texts[k], matcher, phrases))
+                offsets.append(len(rows))
+            cols = list(zip(*rows))[1:] or [(), (), ()]  # drop url
+            pairs = pa.ListArray.from_arrays(
+                pa.array(offsets, pa.int32()),
+                pa.StructArray.from_arrays(
+                    [pa.array(c, pa.string()) for c in cols], names=_PAIR_FIELDS
+                ),
+            )
+            yield pa.RecordBatch.from_arrays(
+                [rb.column("url"), pa.array(texts, pa.string()), pairs],
+                names=["url", "text", "pairs"],
             )
 
-    return src.mapInPandas(run, schema=MENTION_PAIR_SCHEMA)
+    return src.mapInArrow(run, schema=TEXT_AND_PAIRS_SCHEMA)
+
+
+def explode_pairs(text_and_pairs: DataFrame) -> DataFrame:
+    """(url, text, pairs) -> long-form (url, subj_surface, pred, obj_surface)."""
+    return text_and_pairs.select("url", F.explode("pairs").alias("p")).select(
+        "url", *(f"p.{f}" for f in _PAIR_FIELDS)
+    )

@@ -3,8 +3,8 @@
 The per-row invariant (BASELINE.json input_hint) is *byte-identical extracted
 text per url* between the distributed path and the single-node oracle. Both
 paths therefore call the same pure function :func:`extract_text_py`; the
-distributed path wraps it in a vectorized pandas UDF (Arrow batches, no
-per-row Python round trips through Spark's row serializer).
+distributed path is the fused S1+S2 Arrow pass,
+:func:`..mentions.text_and_mention_pairs`.
 
 The algorithm is deliberately dependency-free and deterministic:
   1. decode utf-8 (errors=replace),
@@ -19,10 +19,6 @@ from __future__ import annotations
 
 import re
 
-import pandas as pd
-from pyspark.sql import functions as F
-from pyspark.sql.types import StringType
-
 _DROP_SUBTREE_RE = re.compile(
     r"<(script|style|nav|header|footer|aside)\b[^>]*>.*?</\1\s*>",
     re.IGNORECASE | re.DOTALL,
@@ -35,7 +31,6 @@ _BLOCK_TAG_RE = re.compile(
 _ANY_TAG_RE = re.compile(r"<[^>]+>")
 _NUMERIC_ENTITY_RE = re.compile(r"&#(\d{1,7});")
 _HEX_ENTITY_RE = re.compile(r"&#[xX]([0-9a-fA-F]{1,6});")
-_SPACE_RUN_RE = re.compile(r"[ \t]+")
 _BLANK_LINES_RE = re.compile(r"\n\s*\n+")
 
 _NAMED_ENTITIES = {
@@ -48,10 +43,21 @@ _NAMED_ENTITIES = {
 }
 
 
+def collapse_space_runs(s: str) -> str:
+    """Each run of spaces and tabs becomes one space, as
+    ``re.sub(r"[ \\t]+", " ", s)`` does. String methods run in C; that
+    regex stops at every lone space, which made it most of the cost of
+    extracting prose pages."""
+    s = s.replace("\t", " ")
+    while "  " in s:
+        s = s.replace("  ", " ")
+    return s
+
+
 def extract_text_py(html: bytes | str | None) -> str | None:
     """Pure-Python text extraction; THE reference implementation.
 
-    Used verbatim by the pandas UDF on executors and by the pytest oracle on
+    Used verbatim by the Arrow pass on executors and by the pytest oracle on
     the driver, so byte-identity is structural, not incidental.
     """
     if html is None:
@@ -68,29 +74,9 @@ def extract_text_py(html: bytes | str | None) -> str | None:
         s = s.replace(ent, ch)
     s = _NUMERIC_ENTITY_RE.sub(lambda m: chr(int(m.group(1))), s)
     s = _HEX_ENTITY_RE.sub(lambda m: chr(int(m.group(1), 16)), s)
-    s = _SPACE_RUN_RE.sub(" ", s)
+    s = collapse_space_runs(s)
     lines = [ln.strip() for ln in s.split("\n")]
     s = "\n".join(lines)
     s = _BLANK_LINES_RE.sub("\n", s).strip()
     return s
 
-
-@F.pandas_udf(StringType())
-def extract_text_udf(html: pd.Series) -> pd.Series:
-    """Arrow-batched wrapper around :func:`extract_text_py`."""
-    return html.map(extract_text_py)
-
-
-def with_extracted_text(pages):
-    """pages(url, warc_ts, html, text, lang) -> same + text filled.
-
-    Rows that already carry ``text`` keep it (the Common-Crawl WET case);
-    NULL text rows run extraction. Column pruning still applies: only
-    ``html`` crosses the Arrow boundary, and only for rows that need it.
-    """
-    return pages.withColumn(
-        "text",
-        F.when(F.col("text").isNotNull(), F.col("text")).otherwise(
-            extract_text_udf(F.col("html"))
-        ),
-    )

@@ -114,7 +114,8 @@ def galois_close_intents(intents: DataFrame, max_rounds: int = 32,
     only through a shared item, so intersections are always nonempty; the
     tables are CONCEPT-sized (≪ instances) and localCheckpoint per round
     keeps lineage O(1). Rounds needed ≤ max intent size (each chain step
-    strictly shrinks the set); a non-converged loop is logged.
+    strictly shrinks the set, plus one round that finds nothing new); a
+    loop that has not converged after ``max_rounds`` raises ``ValueError``.
 
     ``max_item_freq`` > 0 additionally drops items occurring in more than
     that many generators from PAIR GENERATION (not from the intents) — the
@@ -175,9 +176,9 @@ def galois_close_intents(intents: DataFrame, max_rounds: int = 32,
         known = known.unionByName(new).localCheckpoint(eager=True)
         frontier = new
     if not converged:
-        _log.warning(
-            "galois_close_intents: fixpoint not reached in %d rounds; "
-            "closure may be partial", max_rounds,
+        raise ValueError(
+            f"galois_close_intents: fixpoint not reached in {max_rounds} "
+            "rounds; the closure would be partial"
         )
     return known
 

@@ -10,12 +10,13 @@ stage's DataFrame plus the stage metrics.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..fixtures.pages import RELATION_PATTERNS, make_gazetteer
-from ..functions.mentions import extract_mention_pairs
-from ..functions.text import with_extracted_text
+from ..functions.mentions import explode_pairs, text_and_mention_pairs
 from ..operators.concepts import build_hierarchy
 from ..operators.features import characteristic_sets, structural_features
 from ..operators.graph import graph_from_triples
@@ -58,12 +59,14 @@ def run_pipeline(
 ) -> dict:
     """Run (or resume) the full pipeline; returns stage DataFrames.
 
-    ``parallelism`` sets the partition count for the CPU-bound pandas-UDF
-    stages (S1 extraction, S2 mentions). Parquet splits input by BYTES
-    (maxPartitionBytes / openCostInBytes bin-packing), which undercuts a
-    compute-bound stage — a 16 MB input is one split even on 32 cores, and
-    tiny stage outputs get packed into one partition. Defaults to
-    2× defaultParallelism.
+    ``parallelism`` sets the partition count for the CPU-bound Python
+    pass (S1 extraction + S2 mention detection, one ``mapInArrow``).
+    Parquet splits input by BYTES (maxPartitionBytes / openCostInBytes
+    bin-packing), which undercuts a compute-bound stage — a 16 MB input
+    is one split even on 32 cores. Defaults to 2× defaultParallelism.
+
+    Raises ``ValueError`` when the workdir holds an ``s1_text`` snapshot
+    without the ``pairs`` column (written before S1 and S2 were one pass).
     """
     runner = StageRunner(spark, workdir, fmt=fmt)
     par = parallelism or spark.sparkContext.defaultParallelism * 2
@@ -72,25 +75,27 @@ def run_pipeline(
         # only pay the shuffle when the byte-based split is too coarse
         return df.repartition(par) if df.rdd.getNumPartitions() < par else df
 
-    # S1 — boilerplate-stripped text (vectorized pandas UDF; filter first so
-    # non-target languages never cross the Arrow boundary)
+    # S1 + S2 — text and gazetteer mention pairs, one Python pass (filter
+    # first so non-target languages never cross the Arrow boundary). The
+    # detector vocabulary (mention_entities) may exceed the link KB
+    # (n_entities) — the open-vocabulary case where recognition outruns
+    # the knowledge base; S3's CC canonicalizer absorbs the difference.
+    # s1_text commits (url, text, pairs) and is the resume point; S2 is a
+    # JVM explode of the committed pairs.
     s1 = runner.stage(
         "s1_text",
-        lambda: with_extracted_text(
-            _spread(pages.where(F.col("lang") == lang))
-        ).select("url", "text"),
-    )
-
-    # S2 — gazetteer mention detection + relation patterns. The detector
-    # vocabulary (mention_entities) may exceed the link KB (n_entities) —
-    # the open-vocabulary case where recognition outruns the knowledge
-    # base; S3's CC canonicalizer absorbs the difference.
-    s2 = runner.stage(
-        "s2_mentions",
-        lambda: extract_mention_pairs(
-            _spread(s1), all_surfaces(mention_entities or n_entities), phrase_map()
+        lambda: text_and_mention_pairs(
+            _spread(pages.where(F.col("lang") == lang)),
+            all_surfaces(mention_entities or n_entities),
+            phrase_map(),
         ),
     )
+    if "pairs" not in s1.columns:
+        raise ValueError(
+            f"{os.path.join(workdir, 's1_text')}: snapshot has no 'pairs' "
+            "column (written before S1 and S2 were one pass); delete it to rebuild"
+        )
+    s2 = runner.stage("s2_mentions", lambda: explode_pairs(s1))
 
     # S3 — linking. Exact gazetteer dimension join (broadcast) resolves
     # known surfaces; with open_vocab=True the residual surfaces go
@@ -161,7 +166,7 @@ def run_pipeline(
 
     runner.write_run_metrics()
     return {
-        "text": s1,
+        "text": s1.select("url", "text"),
         "mention_pairs": s2,
         "triples": s3,
         "nodes": s4_nodes,

@@ -1995,7 +1995,7 @@ def dd_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # KG pipeline on the synthetic pages corpus (non-SQL-expressible stages:
-# pandas-UDF extraction + mention detection + iterative CC → rows-only check)
+# Arrow-pass extraction + mention detection + iterative CC → rows-only check)
 # ---------------------------------------------------------------------------
 
 
@@ -2005,7 +2005,7 @@ def _fixture_pages(spark: SparkSession, n_pages: int = 300, n_entities: int = 80
     return pages_spark_df(spark, n_pages, n_entities=n_entities)
 
 
-# The two pandas-UDF extraction stages are not SQL-expressible, so their
+# The Python extraction stages are not SQL-expressible, so their
 # oracles are STORED-GOLDEN comparisons: `tools/gen_goldens.py` persisted
 # each stage's output over the deterministic fixture as a committed parquet
 # snapshot, and the DuckDB twin reads it. Any drift in extraction, mention
@@ -2018,13 +2018,20 @@ _GOLDEN_DIR = str(_Path(__file__).resolve().parent / "fixtures" / "golden")
     f"SELECT url, text FROM read_parquet('{_GOLDEN_DIR}/pl_extracted_text.parquet')",
 )
 def pl_extracted_text(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """S1 — boilerplate-stripped text via vectorized pandas UDF (byte-
-    identical per url to the pure-Python oracle; pytest asserts identity,
-    the driver gate compares against the committed golden snapshot)."""
-    from .functions.text import with_extracted_text
+    """S1 — boilerplate-stripped text from the pipeline's fused S1+S2
+    Arrow pass (byte-identical per url to the pure-Python oracle; pytest
+    asserts identity, the DuckDB twin compares against the committed
+    golden snapshot)."""
+    return _pl_text_and_pairs(spark).select("url", "text")
 
-    pages = _fixture_pages(spark)
-    return with_extracted_text(pages.where(F.col("lang") == "en")).select("url", "text")
+
+def _pl_text_and_pairs(spark: SparkSession) -> DataFrame:
+    """The pipeline's S1+S2 pass over the English 300-page fixture."""
+    from .functions.mentions import text_and_mention_pairs
+    from .plans.pipeline import all_surfaces, phrase_map
+
+    pages = _fixture_pages(spark).where(F.col("lang") == "en")
+    return text_and_mention_pairs(pages, all_surfaces(80), phrase_map())
 
 
 _PL_TRIPLES_CACHE: dict[str, DataFrame] = {}
@@ -2038,16 +2045,11 @@ def _pl_triples_cached(spark: SparkSession) -> DataFrame:
     key = spark.sparkContext.applicationId
     df = _PL_TRIPLES_CACHE.get(key)
     if df is None:
-        from .functions.mentions import extract_mention_pairs
-        from .functions.text import with_extracted_text
+        from .functions.mentions import explode_pairs
         from .operators.triples import triples_from_mention_pairs
-        from .plans.pipeline import all_surfaces, gazetteer_df, phrase_map
+        from .plans.pipeline import gazetteer_df
 
-        pages = _fixture_pages(spark)
-        text = with_extracted_text(pages.where(F.col("lang") == "en")).select(
-            "url", "text"
-        )
-        mp = extract_mention_pairs(text, all_surfaces(80), phrase_map())
+        mp = explode_pairs(_pl_text_and_pairs(spark))
         links = gazetteer_df(spark, 80).select("surface", "canonical")
         df = triples_from_mention_pairs(mp, links).localCheckpoint(eager=True)
         _PL_TRIPLES_CACHE[key] = df

@@ -249,6 +249,22 @@ def test_galois_closure_cap_raises(spark, monkeypatch):
         build_hierarchy(_instances(spark, rows), galois=True)
 
 
+def test_galois_non_convergence_raises(spark):
+    """{a,b},{a,c} closes to {a} in round 1 and is confirmed closed in
+    round 2: one round must raise rather than return a closure that may
+    be partial, two rounds return the exact fixpoint."""
+    from concept_hierarchy_formation_in_property_graphs_spark.operators.concepts import (
+        galois_close_intents,
+    )
+
+    rows = [("a" + SEP + "b", ["a", "b"]), ("a" + SEP + "c", ["a", "c"])]
+    df = _instances(spark, rows).withColumnRenamed("instance_id", "cid")
+    with pytest.raises(ValueError, match="fixpoint not reached in 1 rounds"):
+        galois_close_intents(df, max_rounds=1)
+    got = {tuple(r["intent"]) for r in galois_close_intents(df, max_rounds=2).collect()}
+    assert got == {("a", "b"), ("a", "c"), ("a",)}
+
+
 def _skewed_rows(alphabet, n, max_size, seed):
     rnd = random.Random(seed)
     return [

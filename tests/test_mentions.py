@@ -56,3 +56,28 @@ def test_matcher_equals_regex_on_fixture_corpus():
             extract_mention_pairs_py(url, text, mt, pm)
         for line in text.split("\n"):
             assert _spans(mt, line) == _spans(rx, line)
+
+
+def test_first_word_scan_keeps_every_match():
+    """The trie scan reports a word start only when its whole word is a
+    first word, so a line with none costs no Python step: a key seen once,
+    a key fused into a longer word run on either side, a key right after
+    punctuation and a key-free line all match the regex oracle span for
+    span."""
+    surfaces = ("Acme5", "Acme5 Corp.", "Widget7 Pro", "Springfield2")
+    rx = compile_surface_regex(surfaces)
+    mt = SurfaceMatcher(surfaces)
+    lines = [
+        "only one key: Widget7 Pro here",
+        "Acme5x and xAcme5 and Acme5_ are single words",
+        "fused Acme5x but then Springfield2",
+        "(Acme5),Springfield2;[Widget7 Pro]",
+        "punctuation:Acme5 Corp.!",
+        "no gazetteer word on this line",
+        "Widget7",
+    ]
+    expected_hits = [1, 0, 1, 3, 1, 0, 0]
+    for line, hits in zip(lines, expected_hits):
+        spans = _spans(mt, line)
+        assert spans == _spans(rx, line), line
+        assert len(spans) == hits, line

@@ -9,6 +9,7 @@ fixture); determinism uses a smaller corpus at two partition counts.
 from __future__ import annotations
 
 import os
+import re
 import shutil
 import tempfile
 from pathlib import Path
@@ -144,6 +145,67 @@ def test_failed_build_leaves_no_trusted_snapshot(spark):
             assert runner.is_complete(name)
         assert not any(m["resumed"] for m in runner.metrics)
         assert not [d for d in os.listdir(wd) if d.startswith("_tmp_")]
+    finally:
+        shutil.rmtree(wd, ignore_errors=True)
+
+
+class _StopAfterS2(Exception):
+    pass
+
+
+def test_s1_is_one_arrow_pass_and_s2_runs_in_the_jvm(spark, monkeypatch):
+    """S1 and S2 cross into Python once: the S1 plan holds exactly one
+    Python node, a MapInArrow whose input sends html only for rows
+    without text; the S2 plan (an explode of S1's pairs) holds none."""
+    from concept_hierarchy_formation_in_property_graphs_spark.plans.checkpoint import (
+        StageRunner,
+    )
+
+    plans: dict[str, str] = {}
+    stage = StageRunner.stage
+
+    def spy(self, name, build):
+        def traced():
+            df = build()
+            plans[name] = df._jdf.queryExecution().executedPlan().toString()
+            if name == "s2_mentions":
+                raise _StopAfterS2
+            return df
+
+        return stage(self, name, traced)
+
+    monkeypatch.setattr(StageRunner, "stage", spy)
+    wd = tempfile.mkdtemp(prefix="chf_plan_")
+    try:
+        with pytest.raises(_StopAfterS2):
+            run_pipeline(spark, pages_spark_df(spark, 30, n_entities=20), wd,
+                         n_entities=20)
+    finally:
+        shutil.rmtree(wd, ignore_errors=True)
+    python_nodes = re.compile(r"\b\w*(?:InArrow|InPandas|EvalPython)\b")
+    assert python_nodes.findall(plans["s1_text"]) == ["MapInArrow"]
+    assert re.search(
+        r"CASE WHEN isnull\(text#\d+\) THEN html#\d+ END AS html#\d+", plans["s1_text"]
+    ), plans["s1_text"]
+    assert python_nodes.findall(plans["s2_mentions"]) == [], plans["s2_mentions"]
+
+
+def test_old_shape_s1_snapshot_is_refused(spark):
+    """An ``s1_text`` committed before S1 and S2 were one pass has no
+    ``pairs`` column; resume raises a ValueError naming that directory
+    instead of failing later in S2."""
+    wd = tempfile.mkdtemp(prefix="chf_old_s1_")
+    try:
+        s1 = os.path.join(wd, "s1_text")
+        spark.createDataFrame(
+            [("https://a.example/1", "Acme0 acquired Acme1")], "url string, text string"
+        ).write.parquet(s1)
+        with open(os.path.join(s1, "_metrics.json"), "w") as f:
+            f.write('{"stage": "s1_text", "resumed": false, "rows": 1}')
+        with pytest.raises(ValueError, match=re.escape(s1) + ".*no 'pairs' column"):
+            run_pipeline(spark, pages_spark_df(spark, 10, n_entities=10), wd,
+                         n_entities=10)
+        assert not os.path.exists(os.path.join(wd, "s2_mentions"))
     finally:
         shutil.rmtree(wd, ignore_errors=True)
 

@@ -2,6 +2,7 @@
 
 - SurfaceMatcher ≡ the regex oracle on arbitrary generated text, including
   punctuation, adjacency and substring-surface traps.
+- extract_text_py's space-run collapse ≡ collapsing every space/tab run.
 - build_hierarchy invariants hold and parents are the most specific proper
   subsumer for arbitrary intent multisets.
 - salted_dim_join ≡ plain join under a hub-skewed key distribution.
@@ -26,7 +27,8 @@ SURFACES = (
 
 _words = st.sampled_from(
     ["Acme", "Corporation", "Corp.", "A.", "Smith", "University", "of", "X",
-     "Widget", "zeta", "the", "and,", "x(y)", ""]
+     "Widget", "zeta", "the", "and,", "x(y)", "", "xAcme", "Acme5", "Smith_",
+     "(Smith),", "WidgetX"]
 )
 _line = st.lists(_words, min_size=0, max_size=12).map(" ".join)
 
@@ -39,6 +41,20 @@ def test_matcher_equals_regex_property(line):
     got_rx = [(m.start(), m.end(), m.group(0)) for m in rx.finditer(line)]
     got_mt = list(mt.finditer(line))
     assert got_rx == got_mt, line
+
+
+@settings(max_examples=300, deadline=None)
+@given(st.text(alphabet=" \t\na&;", max_size=80))
+def test_space_run_collapse_equals_reference(s):
+    """extract_text_py collapses space/tab runs with string methods; the
+    result must equal the ``[ \\t]+`` regex rewrite."""
+    import re
+
+    from concept_hierarchy_formation_in_property_graphs_spark.functions.text import (
+        collapse_space_runs,
+    )
+
+    assert collapse_space_runs(s) == re.sub(r"[ \t]+", " ", s)
 
 
 def _rand_instances(seed: int, n: int):

@@ -1,9 +1,9 @@
-"""Generate committed golden parquet snapshots for the pandas-UDF pipeline
+"""Generate committed golden parquet snapshots for the Python pipeline
 stages (S1 text extraction, S1→S3 triples) on the deterministic pages
 fixture.
 
 The stages themselves are not SQL-expressible (regex HTML stripping +
-gazetteer mention detection in Arrow-batched pandas UDFs), so their driver
+gazetteer mention detection in one Arrow-batched ``mapInArrow`` pass), so their
 oracle is a STORED-GOLDEN comparison: this script runs each stage once and
 writes the result as a single parquet file under
 ``concept_hierarchy_formation_in_property_graphs_spark/fixtures/golden/``

@@ -1,5 +1,5 @@
 """Scaling-efficiency evidence: one job on one input at two local[]
-parallelism levels, each in a fresh JVM.
+parallelism levels, each in a fresh JVM, pinned and unpinned.
 
 Usage: python tools/scaling.py {pipeline|corpus} [n] [lo] [hi]
 
@@ -11,9 +11,17 @@ Usage: python tools/scaling.py {pipeline|corpus} [n] [lo] [hi]
 
 The input is generated once at the host's core count, then each level
 runs as a fresh subprocess of this file: one small warm-up run of the
-same worker (JIT, codegen, Python workers), then the timed run. The JVM
-heap follows ``session.get_spark``'s rule. Prints one JSON line with both
-level records and efficiency = (T_lo·lo) / (T_hi·hi).
+same worker (JIT, codegen, Python workers), then the timed run. Each
+level runs twice. Pinned, the subprocess first restricts itself with
+``os.sched_setaffinity`` to its first ``cpus`` allowed cores, so the JVM,
+its GC threads and the Python workers it forks share exactly those
+cores. Unpinned, local[cpus] bounds only the task slots, and a local[1]
+run still gets the other cores for GC and Python workers, which
+understates the efficiency. The JVM heap follows ``session.get_spark``'s
+rule. Prints one JSON line with, for ``pinned`` and ``unpinned``: both
+level records, efficiency = (T_lo·lo) / (T_hi·hi) of the totals, and the
+same ratio per stage from the stages' ``seconds`` (the records
+``run_metrics.json`` holds).
 """
 
 from __future__ import annotations
@@ -44,6 +52,25 @@ def efficiency(t_lo: float, lo: int, t_hi: float, hi: int) -> float:
     return (t_lo * lo) / (t_hi * hi)
 
 
+def summarize(rec_lo: dict, lo: int, rec_hi: dict, hi: int) -> dict:
+    """Both level records, the total efficiency and the per-stage one
+    (stages that ran for more than 0 s at both levels)."""
+    stages = {
+        s: round(efficiency(t, lo, rec_hi["stages"][s], hi), 3)
+        for s, t in rec_lo["stages"].items()
+        if t > 0 and rec_hi["stages"].get(s, 0) > 0
+    }
+    return {
+        "lo": rec_lo, "hi": rec_hi,
+        "efficiency": round(efficiency(rec_lo["wall_s"], lo, rec_hi["wall_s"], hi), 3),
+        "stage_efficiency": stages,
+    }
+
+
+def _stage_seconds(metrics: list[dict]) -> dict[str, float]:
+    return {m["stage"]: m["seconds"] for m in metrics}
+
+
 def pipeline_level(spark, pages) -> dict:
     """Time the full KG pipeline over ``pages`` in a fresh workdir."""
     from concept_hierarchy_formation_in_property_graphs_spark.plans.pipeline import (
@@ -60,9 +87,11 @@ def pipeline_level(spark, pages) -> dict:
         wall = time.time() - t0
     finally:
         shutil.rmtree(wd, ignore_errors=True)
-    return {"cpus": spark.sparkContext.defaultParallelism, "items": n,
+    return {"cpus": spark.sparkContext.defaultParallelism,
+            "affinity": host_cpus(), "items": n,
             "triples": n_triples, "wall_s": round(wall, 2),
-            "items_per_s": round(n / wall, 2)}
+            "items_per_s": round(n / wall, 2),
+            "stages": _stage_seconds(out["metrics"])}
 
 
 def corpus_level(spark, docs: str, bench: str) -> dict:
@@ -77,9 +106,11 @@ def corpus_level(spark, docs: str, bench: str) -> dict:
     finally:
         shutil.rmtree(wd, ignore_errors=True)
     return {"cpus": spark.sparkContext.defaultParallelism,
+            "affinity": host_cpus(),
             "items": out["total"], "admitted": out["admitted"],
             "wall_s": round(wall, 2),
-            "items_per_s": round(out["total"] / wall, 2)}
+            "items_per_s": round(out["total"] / wall, 2),
+            "stages": _stage_seconds(out["metrics"])}
 
 
 def _synth_corpus(spark, path: str, n_docs: int, seed: int) -> None:
@@ -127,7 +158,15 @@ def _gen(mode: str, n: int, data: str) -> None:
     spark.stop()
 
 
-def _level(mode: str, cpus: int, data: str) -> dict:
+def pin_to(cpus: int) -> None:
+    """Restrict this process, and every process it starts later, to its
+    first ``cpus`` allowed cores."""
+    os.sched_setaffinity(0, sorted(os.sched_getaffinity(0))[:cpus])
+
+
+def _level(mode: str, cpus: int, data: str, pinned: bool) -> dict:
+    if pinned:
+        pin_to(cpus)
     spark = _session(mode, cpus)
     if mode == "pipeline":
         from concept_hierarchy_formation_in_property_graphs_spark.fixtures.pages import (
@@ -157,7 +196,7 @@ def main(argv: list[str]) -> None:
         _gen(argv[1], int(argv[2]), argv[3])
         return
     if argv[:1] == ["--level"]:
-        print(json.dumps(_level(argv[1], int(argv[2]), argv[3])))
+        print(json.dumps(_level(argv[1], int(argv[2]), argv[3], argv[4] == "pinned")))
         return
     if not argv or argv[0] not in DEFAULT_N:
         raise SystemExit(__doc__)
@@ -169,17 +208,17 @@ def main(argv: list[str]) -> None:
     data = tempfile.mkdtemp(prefix=f"chf_scaling_{mode}_")
     try:
         _child("--gen", mode, n, data)
-        levels = {}
-        for cpus in (lo, hi):
-            levels[cpus] = json.loads(_child("--level", mode, cpus, data).splitlines()[-1])
-            print(f"# local[{cpus}]: {levels[cpus]}", file=sys.stderr)
+        result = {"mode": mode, "n": n}
+        for pin in ("pinned", "unpinned"):
+            levels = {}
+            for cpus in (lo, hi):
+                out = _child("--level", mode, cpus, data, pin)
+                levels[cpus] = json.loads(out.splitlines()[-1])
+                print(f"# local[{cpus}] {pin}: {levels[cpus]}", file=sys.stderr)
+            result[pin] = summarize(levels[lo], lo, levels[hi], hi)
     finally:
         shutil.rmtree(data, ignore_errors=True)
-    print(json.dumps({
-        "mode": mode, "n": n, "lo": levels[lo], "hi": levels[hi],
-        "efficiency": round(efficiency(levels[lo]["wall_s"], lo,
-                                       levels[hi]["wall_s"], hi), 3),
-    }))
+    print(json.dumps(result))
 
 
 if __name__ == "__main__":
