@@ -80,15 +80,18 @@ BENCH_QUERIES = [
 def main() -> None:
     sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     n_pages = int(os.environ.get("SPARK_GRAFT_BENCH_PAGES", "4000"))
     n_entities = int(os.environ.get("SPARK_GRAFT_BENCH_ENTITIES", "500"))
     rounds = int(os.environ.get("SPARK_GRAFT_BENCH_ROUNDS", "3"))
     settle = float(os.environ.get("SPARK_GRAFT_BENCH_SETTLE", "15"))
 
     from concept_hierarchy_formation_in_property_graphs_spark import queries as q
-    from concept_hierarchy_formation_in_property_graphs_spark.session import get_spark
+    from concept_hierarchy_formation_in_property_graphs_spark.session import (
+        default_cpus,
+        get_spark,
+    )
 
+    cpus = default_cpus()
     spark = get_spark(app_name="chf-bench", cpus=cpus)
     spark.sparkContext.setLogLevel("ERROR")
 

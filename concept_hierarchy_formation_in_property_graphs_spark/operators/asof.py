@@ -11,7 +11,7 @@ per-key ordered window carries the most recent right payload forward
 timestamp ties so equality is inclusive. ONE shuffle on the key, whole-
 stage codegen, no pandas, and — unlike the bucketize-and-filter scheme —
 no range explosion on skewed gaps. At 100 TB both inputs shuffle once on
-``by`` (or not at all if pre-bucketed on it, `sources/bucketed`); state
+``by`` (or not at all if pre-bucketed on it with ``bucketBy``); state
 per key inside the window is a single struct.
 
 The DuckDB twin is the native ``ASOF LEFT JOIN`` (same semantics), so the

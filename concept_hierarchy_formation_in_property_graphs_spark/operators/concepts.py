@@ -35,13 +35,11 @@ up to 379k concepts are in BASELINE.md ("One lattice engine").
 
 from __future__ import annotations
 
-import logging
+from collections.abc import Iterable
 
 import numpy as np
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-_log = logging.getLogger(__name__)
 
 SEP = "\x1f"
 RESIDUAL_SUFFIX = "\x1e*"
@@ -54,133 +52,6 @@ def _canonical_intents(instances: DataFrame) -> DataFrame:
         "instance_id",
         F.array_sort(F.array_distinct("intent")).alias("intent"),
     ).withColumn("cid", F.concat_ws(SEP, "intent"))
-
-
-def subsumption_pairs(intents: DataFrame) -> DataFrame:
-    """intents(cid, intent, size) → (desc_cid, anc_cid, anc_size).
-
-    anc ⊂ desc (proper). Candidates join on the ancestor's globally rarest
-    item — each ancestor probes the index exactly once per occurrence of its
-    rarest item, which bounds fan-out by the rarest-item frequency.
-    """
-    nonempty = intents.where(F.col("size") > 0)
-    items = nonempty.select(
-        "cid", "intent", "size", F.explode("intent").alias("item")
-    )
-    freq = items.groupBy("item").agg(F.count("*").alias("item_freq"))
-    w = Window.partitionBy("cid").orderBy(F.asc("item_freq"), F.asc("item"))
-    rare = (
-        items.join(F.broadcast(freq), "item")
-        .withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") == 1)
-        .select(
-            F.col("cid").alias("anc_cid"),
-            F.col("intent").alias("anc_intent"),
-            F.col("size").alias("anc_size"),
-            F.col("item").alias("rare_item"),
-        )
-    )
-    desc_items = items.select(
-        F.col("cid").alias("desc_cid"),
-        F.col("intent").alias("desc_intent"),
-        F.col("size").alias("desc_size"),
-        F.col("item").alias("rare_item"),
-    )
-    return (
-        rare.join(desc_items, "rare_item")
-        .where(F.col("anc_size") < F.col("desc_size"))
-        .where(F.size(F.array_except("anc_intent", "desc_intent")) == 0)
-        .select("desc_cid", "anc_cid", "anc_size")
-    )
-
-
-def galois_close_intents(intents: DataFrame, max_rounds: int = 32,
-                         max_item_freq: int = 0) -> DataFrame:
-    """Close a distinct-intent table under pairwise intersection (the
-    Galois/FCA concept closure — Godin et al., cited by the thesis as the
-    principled construction, `doc/thesis/06-conclusions.tex:13`).
-
-    Internal concepts of a planted taxonomy are exactly the intersections
-    of observed leaf intents, so closure is what turns a flat exact-intent
-    lattice into the full tree.
-
-    Every closed set is an intersection of a subset of GENERATORS, and any
-    such intersection is reachable one generator at a time — so each round
-    intersects only the previous round's NEW sets against the (fixed,
-    small) generator table, never known×known. Pair fan-out per round is
-    O(|frontier|·|generators|) through shared items instead of the growing
-    O(|closed|²); the fixpoint is identical (same set as the DuckDB
-    recursive-CTE twin, `queries.py kg_galois_closure`). Candidates pair
-    only through a shared item, so intersections are always nonempty; the
-    tables are CONCEPT-sized (≪ instances) and localCheckpoint per round
-    keeps lineage O(1). Rounds needed ≤ max intent size (each chain step
-    strictly shrinks the set, plus one round that finds nothing new); a
-    loop that has not converged after ``max_rounds`` raises ``ValueError``.
-
-    ``max_item_freq`` > 0 additionally drops items occurring in more than
-    that many generators from PAIR GENERATION (not from the intents) — the
-    hub-item guard for 100×-cardinality inputs. Pairs sharing any other
-    item still form; only intersections reachable exclusively through hub
-    items are lost, and the drop is logged. Default 0 = exact closure.
-
-    intents: (cid, intent) distinct. Returns the closed (cid, intent) set.
-    """
-    gen = intents.select("cid", "intent").localCheckpoint(eager=True)
-    gen_items = gen.select(
-        F.col("cid").alias("g_cid"),
-        F.col("intent").alias("g_intent"),
-        F.explode("intent").alias("item"),
-    )
-    if max_item_freq > 0:
-        hot = (
-            gen_items.groupBy("item")
-            .agg(F.count("*").alias("_f"))
-            .where(F.col("_f") > max_item_freq)
-            .select("item")
-        )
-        n_hot = hot.count()
-        if n_hot:
-            _log.warning(
-                "galois_close_intents: excluding %d hub items "
-                "(> %d generators) from pair generation",
-                n_hot, max_item_freq,
-            )
-            gen_items = gen_items.join(F.broadcast(hot), "item", "left_anti")
-    gen_items = gen_items.localCheckpoint(eager=True)
-
-    known = gen
-    frontier = gen
-    converged = False
-    for _ in range(max_rounds):
-        f_items = frontier.select(
-            "cid", "intent", F.explode("intent").alias("item")
-        )
-        cand = (
-            f_items.join(gen_items, "item")
-            .where(F.col("cid") != F.col("g_cid"))
-            .select(
-                F.array_sort(
-                    F.array_intersect(F.col("intent"), F.col("g_intent"))
-                ).alias("intent")
-            )
-            .dropDuplicates(["intent"])
-            .withColumn("cid", F.concat_ws(SEP, "intent"))
-            .select("cid", "intent")
-        )
-        new = cand.join(known.select("cid"), "cid", "left_anti").localCheckpoint(
-            eager=True
-        )
-        if new.limit(1).count() == 0:
-            converged = True
-            break
-        known = known.unionByName(new).localCheckpoint(eager=True)
-        frontier = new
-    if not converged:
-        raise ValueError(
-            f"galois_close_intents: fixpoint not reached in {max_rounds} "
-            "rounds; the closure would be partial"
-        )
-    return known
 
 
 def build_hierarchy(instances: DataFrame, root_seed: str = "c",
@@ -270,16 +141,54 @@ def update_hierarchy(prev_state: DataFrame | None, new_instances: DataFrame,
 DRIVER_CLOSURE_CAP = 250_000
 
 
+def galois_closure(intents: Iterable[Iterable[str]]) -> set[frozenset]:
+    """Close a set of intents under pairwise intersection: the Galois/FCA
+    concept closure (Godin et al., cited by the thesis as the principled
+    construction, `doc/thesis/06-conclusions.tex:13`). Internal concepts
+    of a planted taxonomy are exactly the intersections of observed leaf
+    intents, so closure turns a flat exact-intent lattice into the tree.
+
+    Every closed set is an intersection of generators (the nonempty
+    intents) reachable one generator at a time, so each round intersects
+    only the previous round's NEW sets with the generators, never
+    known×known. Empty intersections are dropped, as in the DuckDB
+    recursive-CTE oracle (`queries.py kg_galois_closure`).
+
+    No round limit is needed: a set new in round r is f & g ≠ f for some
+    f in round r's frontier (round 1's is the input), i.e. a proper
+    subset of it. Sizes strictly fall from frontier to frontier, so round
+    r finds only sets of at most (max intent size − r) items, and the
+    loop ends after at most max intent size + 1 rounds (the last finds
+    nothing). Raises ``ValueError`` past ``DRIVER_CLOSURE_CAP`` closed
+    sets.
+    """
+    closed = {frozenset(t) for t in intents}
+    gens = [g for g in closed if g]
+    frontier = closed
+    while frontier:
+        new = set()
+        for f in frontier:
+            for g in gens:
+                x = f & g
+                if x and x not in closed:
+                    new.add(x)
+        closed |= new
+        if len(closed) > DRIVER_CLOSURE_CAP:
+            raise ValueError(
+                f"Galois closure reached {len(closed)} closed sets, "
+                f"over DRIVER_CLOSURE_CAP={DRIVER_CLOSURE_CAP}"
+            )
+        frontier = new
+    return closed
+
+
 def _hierarchy_from_state(spark, exact: DataFrame, inst: DataFrame,
                           root_seed: str, galois: bool) -> dict[str, DataFrame]:
     """The lattice engine. ONE Spark job collects the exact-intent state
     (cid, intent, n_exact, size); the concept side then runs on the driver:
-      * Galois closure: frontier×generators intersection fixpoint (the
-        fixpoint of ``galois_close_intents``), ValueError past
-        ``DRIVER_CLOSURE_CAP`` closed sets
+      * Galois closure (``galois_closure``), when ``galois``
       * parent: most specific proper subsumer, ties → smallest cid
-        (``_best_parents``, the semantics of ``subsumption_pairs`` + a
-        best-parent window)
+        (``_best_parents``)
       * residual leaves, zero-count pruning, labels/depth/closure/counts
         via ``_tree_metadata_driver``
     Only ``assignments`` stays distributed: instance → concept with the
@@ -293,24 +202,7 @@ def _hierarchy_from_state(spark, exact: DataFrame, inst: DataFrame,
         n_exact[cid] = n_exact.get(cid, 0) + int(r["n_exact"])
 
     if galois:
-        gens = {frozenset(v) for v in intent_of.values() if v}
-        closed = {frozenset(v) for v in intent_of.values()}
-        frontier = closed
-        while frontier:
-            new = set()
-            for f in frontier:
-                for g in gens:
-                    x = f & g
-                    if x and x not in closed:
-                        new.add(x)
-            closed |= new
-            if len(closed) > DRIVER_CLOSURE_CAP:
-                raise ValueError(
-                    f"Galois closure reached {len(closed)} closed sets, "
-                    f"over DRIVER_CLOSURE_CAP={DRIVER_CLOSURE_CAP}"
-                )
-            frontier = new
-        for s in closed:
+        for s in galois_closure(intent_of.values()):
             t = tuple(sorted(s))
             cid = SEP.join(t)
             if cid not in intent_of:

@@ -224,7 +224,7 @@ def simhash(docs: DataFrame, text_col: str = "text", bits: int = 32) -> DataFram
 # small side, so the ingest joins are written store-scan-once: the batch's
 # keys are broadcast, the store is semi-join-filtered by them (never
 # shuffled), and the small matched set is broadcast back as an anti-join
-# filter on the batch. With the store bucketed by key (sources/bucketed.py)
+# filter on the batch. With the store bucketed by key (``bucketBy``)
 # plus parquet min/max + bloom filters, the store scan itself prunes to the
 # buckets the batch touches.
 # ---------------------------------------------------------------------------

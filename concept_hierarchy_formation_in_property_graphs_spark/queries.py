@@ -29,10 +29,11 @@ from pyspark.sql import functions as F
 
 from .functions.hashing import md5_long, md5_long_sql, perm_coeffs, permuted_sql
 from .operators.concepts import (
+    _best_parents,
     category_utility,
     concept_stats,
     expected_attribute_prediction,
-    subsumption_pairs,
+    galois_closure,
 )
 from .operators.dedup import (
     minhash_near_dup_pairs,
@@ -199,8 +200,8 @@ def tpch_edges_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     materialization each reference re-scans the TPC-H sources — 24 scans
     in kg_structural_features' round-2 plan, and at 100 TB that is six
     reads of the biggest table. ``localCheckpoint(eager=True)`` is the
-    in-session stand-in for the production shape: a bucketed managed edge
-    table derived once and queried many times (`sources/bucketed.py`).
+    in-session stand-in for the production shape: an edge table derived
+    once and queried many times.
     Keyed by applicationId so a restarted session re-materializes.
     """
     key = (spark.sparkContext.applicationId, sf_dir)
@@ -291,14 +292,6 @@ cs AS (
          array_to_string(list_sort(list_distinct(list(rel_type))), ',') AS cid
   FROM inct GROUP BY id
 )"""
-
-
-def _graph_nodes(edges: DataFrame) -> DataFrame:
-    return (
-        edges.select(F.col("src").alias("id"))
-        .union(edges.select(F.col("dst").alias("id")))
-        .distinct()
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -796,27 +789,18 @@ SELECT cid, parent_cid FROM parents
 """,
 )
 def kg_concept_parents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Subsumption: parent = most specific proper subsumer (rarest-item
-    candidate join, `operators/concepts.subsumption_pairs`)."""
+    """Subsumption: parent = most specific proper subsumer, by the lattice
+    engine's driver pass (`operators/concepts._best_parents`) over the
+    collected, concept-sized distinct intents (``characteristic_sets``
+    sorts each one). Cids are ","-joined, so the (size desc, cid asc)
+    tie-break is the oracle's ORDER BY."""
     cs = characteristic_sets_cached(spark, sf_dir)
-    intents = (
-        cs.select(
-            F.array_sort("rel_types").alias("intent"),
-            F.concat_ws(",", F.array_sort("rel_types")).alias("cid"),
-        )
-        .groupBy("cid", "intent")
-        .agg(F.count("*").alias("n_exact"))
-        .withColumn("size", F.size("intent"))
-    )
-    pairs = subsumption_pairs(intents.select("cid", "intent", "size"))
-    w = Window.partitionBy("desc_cid").orderBy(F.desc("anc_size"), F.asc("anc_cid"))
-    best = (
-        pairs.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") == 1)
-        .select(F.col("desc_cid").alias("cid"), F.col("anc_cid").alias("parent_id"))
-    )
-    return intents.join(best, "cid", "left").select(
-        "cid", F.coalesce("parent_id", F.lit("")).alias("parent_cid")
+    intent_of = {
+        ",".join(r[0]): tuple(r[0]) for r in cs.select("rel_types").distinct().collect()
+    }
+    parent = _best_parents(intent_of)
+    return spark.createDataFrame(
+        [(c, parent.get(c, "")) for c in intent_of], "cid string, parent_cid string"
     )
 
 
@@ -1199,19 +1183,15 @@ SELECT array_to_string(intent, ',') AS cid FROM clos
 )
 def kg_galois_closure(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Galois/FCA intersection closure of the characteristic-set intents
-    (the thesis's cited principled construction; `operators/concepts.
-    galois_close_intents`). The DuckDB twin is the recursive-CTE fixpoint
-    of pairwise intersections."""
-    from .operators.concepts import galois_close_intents
-
+    (the thesis's cited principled construction), by the lattice engine's
+    `operators/concepts.galois_closure` over the collected, concept-sized
+    distinct intents. The DuckDB twin is the recursive-CTE fixpoint of
+    pairwise intersections."""
     cs = characteristic_sets_cached(spark, sf_dir)
-    intents = (
-        cs.select(F.array_sort("rel_types").alias("intent"))
-        .distinct()
-        .withColumn("cid", F.concat_ws("\x1f", "intent"))
+    intents = [r[0] for r in cs.select("rel_types").distinct().collect()]
+    return spark.createDataFrame(
+        [(",".join(sorted(s)),) for s in galois_closure(intents)], "cid string"
     )
-    closed = galois_close_intents(intents.select("cid", "intent"))
-    return closed.select(F.concat_ws(",", "intent").alias("cid"))
 
 
 @_register(

@@ -5,10 +5,9 @@ crawl snapshots): persist ``partitionBy(col)`` so the physical layout is
 ``path/col=value/part-*.parquet`` and every query filtering on the
 partition column prunes whole directories at PLANNING time — the scan
 never lists, opens, or reads a pruned partition's files. This is the
-coarse-grained complement to the repo's other layout tools:
+coarse-grained complement to parquet's min/max footer stats:
 
   * partitionBy (here)      — eliminate partitions by filter (time/tenant)
-  * bucketBy (bucketed.py)  — eliminate shuffles for repeated key joins
   * min/max footer stats    — eliminate row groups inside surviving files
 
 At a year of hourly telemetry, a one-day dashboard query touches 24 of

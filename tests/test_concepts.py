@@ -21,8 +21,8 @@ from concept_hierarchy_formation_in_property_graphs_spark.operators.concepts imp
     cutoff_labels,
     cutoff_level,
     expected_attribute_prediction,
+    galois_closure,
     invariant_violations,
-    subsumption_pairs,
 )
 
 
@@ -86,32 +86,6 @@ def test_hierarchy_structure_and_labels(spark):
         "orphans": 0,
         "partition_counts": 0,
     }
-
-
-def test_subsumption_pairs_matches_bruteforce(spark):
-    rng = random.Random(11)
-    universe = list("abcdefgh")
-    intents = []
-    seen = set()
-    for _ in range(40):
-        s = tuple(sorted(rng.sample(universe, rng.randint(1, 5))))
-        if s not in seen:
-            seen.add(s)
-            intents.append(s)
-    df = spark.createDataFrame(
-        [(SEP.join(s), list(s), len(s)) for s in intents],
-        "cid string, intent array<string>, size int",
-    )
-    got = {
-        (r["desc_cid"], r["anc_cid"]) for r in subsumption_pairs(df).collect()
-    }
-    exp = {
-        (SEP.join(d), SEP.join(a))
-        for d in intents
-        for a in intents
-        if len(a) < len(d) and set(a) <= set(d)
-    }
-    assert got == exp
 
 
 def test_cutoff_level_log2_rule(spark):
@@ -249,20 +223,25 @@ def test_galois_closure_cap_raises(spark, monkeypatch):
         build_hierarchy(_instances(spark, rows), galois=True)
 
 
-def test_galois_non_convergence_raises(spark):
-    """{a,b},{a,c} closes to {a} in round 1 and is confirmed closed in
-    round 2: one round must raise rather than return a closure that may
-    be partial, two rounds return the exact fixpoint."""
-    from concept_hierarchy_formation_in_property_graphs_spark.operators.concepts import (
-        galois_close_intents,
-    )
-
-    rows = [("a" + SEP + "b", ["a", "b"]), ("a" + SEP + "c", ["a", "c"])]
-    df = _instances(spark, rows).withColumnRenamed("instance_id", "cid")
-    with pytest.raises(ValueError, match="fixpoint not reached in 1 rounds"):
-        galois_close_intents(df, max_rounds=1)
-    got = {tuple(r["intent"]) for r in galois_close_intents(df, max_rounds=2).collect()}
-    assert got == {("a", "b"), ("a", "c"), ("a",)}
+@pytest.mark.parametrize(
+    "intents,want",
+    [
+        # {a} is found in round 1 and confirmed closed in round 2
+        ([("a", "b"), ("a", "c")], {("a", "b"), ("a", "c"), ("a",)}),
+        # the 4-subsets of abcde: round r finds the (4 − r)-subsets, so
+        # the 1-subsets appear only in round 3; the closure is every
+        # nonempty subset
+        (
+            list(itertools.combinations("abcde", 4)),
+            {t for k in range(1, 5) for t in itertools.combinations("abcde", k)},
+        ),
+    ],
+    ids=["two_generators", "subset_chain"],
+)
+def test_galois_closure_reaches_the_fixpoint(intents, want):
+    """The closure loop runs until a round finds nothing new, however many
+    rounds the input needs; no round limit cuts it short."""
+    assert {tuple(sorted(s)) for s in galois_closure(intents)} == want
 
 
 def _skewed_rows(alphabet, n, max_size, seed):
@@ -318,24 +297,17 @@ def test_parent_map_matches_all_pairs_reference(spark, rows):
     assert got == want
 
 
-def test_galois_closure_equals_bruteforce_at_10x(spark):
+def test_galois_closure_equals_bruteforce_at_10x():
     """Generator-only intersection must reach the SAME fixpoint as the
     known×known definition — validated against a brute-force Python closure
     on a 10×-cardinality intent table (300 draws over a 12-item alphabet),
     inside the normal test budget."""
-    from concept_hierarchy_formation_in_property_graphs_spark.operators.concepts import (
-        galois_close_intents,
-    )
-
     rnd = random.Random(7)
     distinct = sorted({
         tuple(sorted({rnd.choice("abcdefghijkl") for _ in range(5)}))
         for _ in range(300)
     })
-    df = _instances(
-        spark, [(SEP.join(t), list(t)) for t in distinct]
-    ).withColumnRenamed("instance_id", "cid")
-    got = {tuple(r["intent"]) for r in galois_close_intents(df).collect()}
+    got = {tuple(sorted(s)) for s in galois_closure(distinct)}
 
     closed = {frozenset(t) for t in distinct}
     while True:

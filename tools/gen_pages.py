@@ -20,7 +20,7 @@ def main() -> None:
     )
     from concept_hierarchy_formation_in_property_graphs_spark.session import get_spark
 
-    spark = get_spark(app_name="chf-gen", cpus=len(os.sched_getaffinity(0)))
+    spark = get_spark(app_name="chf-gen")
     spark.sparkContext.setLogLevel("ERROR")
     df = pages_spark_df_distributed(
         spark, n_pages, n_entities=n_entities, content_scale=content_scale,
