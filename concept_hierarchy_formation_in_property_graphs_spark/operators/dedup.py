@@ -1,8 +1,9 @@
 """Deduplication operators over the ``documents`` table.
 
-Exact (hash-groupBy), MinHash signatures + LSH banding (scale path),
-SimHash, and exact n-gram Jaccard pairs (the small-scale gold standard the
-LSH path is validated against). All hash math uses the portable md5 family
+Exact (hash-groupBy), MinHash signatures + LSH banding (scale path, on the
+shared blocking in operators/lsh.py), SimHash, and exact word-set / n-gram
+Jaccard pairs (the small-scale gold standards the LSH path is validated
+against). All hash math uses the portable md5 family
 (functions/hashing.py) so every sketch is reproducible in the DuckDB oracle.
 """
 
@@ -11,7 +12,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.hashing import md5_long, perm_coeffs, permuted
+from ..functions.hashing import md5_long
+from .lsh import band_keys, bucket_pairs, jaccard_verify, minhash
 
 
 def exact_duplicates(docs: DataFrame, text_col: str = "text") -> DataFrame:
@@ -62,21 +64,43 @@ def ngram_jaccard_pairs(docs: DataFrame, text_col: str = "text", n: int = 3,
     """All-pairs exact word-N-GRAM Jaccard (order-sensitive gold standard;
     quadratic — gate with max_id at test scale, block with LSH at corpus
     scale)."""
+    return _all_pairs_jaccard(docs, word_ngrams(F.col(text_col), n), threshold, max_id)
+
+
+def exact_jaccard_pairs(docs: DataFrame, text_col: str = "text",
+                        threshold: float = 0.5, max_id: int | None = None) -> DataFrame:
+    """All-pairs exact word-set Jaccard (gold standard; quadratic — gate
+    with max_id at test scale; the LSH path is the production variant)."""
+    return _all_pairs_jaccard(docs, _word_set(text_col), threshold, max_id)
+
+
+def _all_pairs_jaccard(docs: DataFrame, items: F.Column, threshold: float,
+                       max_id: int | None) -> DataFrame:
+    """Every id_a < id_b pair of ``docs`` (cross join of the skinny ids),
+    verified on the ``items`` shingles — the gold standards differ only
+    in the shingler."""
     d = docs if max_id is None else docs.where(F.col("doc_id") < max_id)
-    shingles = d.select(
-        "doc_id", word_ngrams(F.col(text_col), n).alias("toks")
+    sets = d.select(F.col("doc_id").alias("id"), items.alias("items"))
+    ids = sets.select("id")
+    pairs = (
+        ids.alias("a").crossJoin(ids.alias("b"))
+        .where(F.col("a.id") < F.col("b.id"))
+        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
     )
-    a = shingles.select(F.col("doc_id").alias("id_a"), F.col("toks").alias("t_a"))
-    b = shingles.select(F.col("doc_id").alias("id_b"), F.col("toks").alias("t_b"))
-    return (
-        a.crossJoin(b)
-        .where(F.col("id_a") < F.col("id_b"))
-        .withColumn("inter", F.size(F.array_intersect("t_a", "t_b")))
-        .withColumn("uni", F.size(F.array_union("t_a", "t_b")))
-        .withColumn("jaccard", F.col("inter") / F.col("uni"))
-        .where(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
-    )
+    return _rounded(jaccard_verify(pairs, sets, threshold))
+
+
+def _word_set(text_col: str) -> F.Column:
+    return F.array_distinct(word_tokens(F.col(text_col)))
+
+
+def _word_sets(docs: DataFrame, text_col: str) -> DataFrame:
+    """(id, items): the distinct word tokens of each document."""
+    return docs.select(F.col("doc_id").alias("id"), _word_set(text_col).alias("items"))
+
+
+def _rounded(verified: DataFrame) -> DataFrame:
+    return verified.select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
 
 
 def minhash_signatures(docs: DataFrame, text_col: str = "text",
@@ -84,44 +108,11 @@ def minhash_signatures(docs: DataFrame, text_col: str = "text",
     """(doc_id, mh0..mh{n-1}) over distinct word tokens.
 
     Wide-column output (not array) so the DuckDB oracle can reproduce each
-    value independently; explode → min-agg is one shuffle with map-side
-    partial mins.
+    value independently.
     """
-    toks = docs.select(
-        "doc_id", F.explode(F.array_distinct(word_tokens(F.col(text_col)))).alias("tok")
-    ).withColumn("h", md5_long(F.col("tok")))
-    aggs = [
-        F.min(permuted(F.col("h"), a, b)).alias(f"mh{i}")
-        for i, (a, b) in enumerate(perm_coeffs(num_perm))
-    ]
-    return toks.groupBy("doc_id").agg(*aggs)
-
-
-def band_projection(docs: DataFrame, text_col: str = "text",
-                    num_perm: int = 16, bands: int = 8) -> DataFrame:
-    """(doc_id, band_idx, band_hash) — the LSH banding of the MinHash
-    signature. Band hash = md5 over the '|'-joined band slice, portable to
-    the DuckDB oracle (same string, same md5), unlike xxhash64. Shared by
-    the batch pair-finder and the incremental ingest path so both generate
-    bit-identical candidate buckets."""
-    sigs = minhash_signatures(docs, text_col, num_perm)
-    rows_per_band = num_perm // bands
-    return sigs.select(
-        "doc_id",
-        F.posexplode(
-            F.array(*[
-                F.md5(
-                    F.concat_ws(
-                        "|",
-                        *[
-                            F.col(f"mh{i * rows_per_band + j}").cast("string")
-                            for j in range(rows_per_band)
-                        ],
-                    )
-                )
-                for i in range(bands)
-            ])
-        ).alias("band_idx", "band_hash"),
+    return minhash(_word_sets(docs, text_col), num_perm).select(
+        F.col("id").alias("doc_id"),
+        *[F.col("sig")[i].alias(f"mh{i}") for i in range(num_perm)],
     )
 
 
@@ -131,13 +122,10 @@ def minhash_near_dup_pairs(docs: DataFrame, text_col: str = "text",
                            max_bucket: int = 0) -> DataFrame:
     """Scale path: LSH banding → candidate pairs → exact Jaccard verify.
 
-    The band join key (band_idx, band_hash) is high-cardinality; hot buckets
-    (boilerplate-heavy corpora) are split by AQE skew-join. ``max_bucket``
-    > 0 additionally DROPS buckets larger than the cap before the self-join
-    — the standard web-corpus guard against boilerplate mega-buckets, which
-    otherwise go quadratic (a bucket of B docs yields B·(B−1)/2 candidates;
-    one 100k-doc boilerplate bucket = 5e9 pairs). Pairs lost to a dropped
-    bucket in one band still surface through the other bands.
+    ``max_bucket`` > 0 DROPS band buckets larger than the cap before the
+    self-join (`lsh.bucket_pairs`) — the standard web-corpus guard against
+    boilerplate mega-buckets, which otherwise go quadratic (one 100k-doc
+    boilerplate bucket = 5e9 pairs).
 
     The banded projection appears up to 3× in the plan (bucket sizing +
     both self-join sides) but is NOT checkpointed: Spark's ReuseExchange
@@ -147,34 +135,9 @@ def minhash_near_dup_pairs(docs: DataFrame, text_col: str = "text",
     finding; the static explain's scan count overstates the runtime scans
     here.)
     """
-    banded = band_projection(docs, text_col, num_perm, bands)
-    if max_bucket > 0:
-        small = (
-            banded.groupBy("band_idx", "band_hash")
-            .agg(F.count("*").alias("_bsz"))
-            .where(F.col("_bsz") <= max_bucket)
-            .drop("_bsz")
-        )
-        banded = banded.join(small, ["band_idx", "band_hash"])
-    cand = (
-        banded.alias("a")
-        .join(banded.alias("b"), ["band_idx", "band_hash"])
-        .where(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
-        .distinct()
-    )
-    toksets = docs.select(
-        "doc_id", F.array_distinct(word_tokens(F.col(text_col))).alias("toks")
-    )
-    return (
-        cand.join(toksets.select(F.col("doc_id").alias("id_a"), F.col("toks").alias("t_a")), "id_a")
-        .join(toksets.select(F.col("doc_id").alias("id_b"), F.col("toks").alias("t_b")), "id_b")
-        .withColumn("inter", F.size(F.array_intersect("t_a", "t_b")))
-        .withColumn("uni", F.size(F.array_union("t_a", "t_b")))
-        .withColumn("jaccard", F.col("inter") / F.col("uni"))
-        .where(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
-    )
+    sets = _word_sets(docs, text_col)
+    banded = band_keys(minhash(sets, num_perm), num_perm, bands)
+    return _rounded(jaccard_verify(bucket_pairs(banded, max_bucket), sets, threshold))
 
 
 def simhash(docs: DataFrame, text_col: str = "text", bits: int = 32) -> DataFrame:
@@ -184,7 +147,7 @@ def simhash(docs: DataFrame, text_col: str = "text", bits: int = 32) -> DataFram
     in DuckDB.
     """
     toks = docs.select(
-        "doc_id", F.explode(F.array_distinct(word_tokens(F.col(text_col)))).alias("tok")
+        "doc_id", F.explode(_word_set(text_col)).alias("tok")
     ).withColumn("h", md5_long(F.col("tok")))
     bit_sums = toks.groupBy("doc_id").agg(
         *[
@@ -224,9 +187,8 @@ def simhash(docs: DataFrame, text_col: str = "text", bits: int = 32) -> DataFram
 # small side, so the ingest joins are written store-scan-once: the batch's
 # keys are broadcast, the store is semi-join-filtered by them (never
 # shuffled), and the small matched set is broadcast back as an anti-join
-# filter on the batch. With the store bucketed by key (``bucketBy``)
-# plus parquet min/max + bloom filters, the store scan itself prunes to the
-# buckets the batch touches.
+# filter on the batch. The store is plain per-batch parquet (no bucketing),
+# so that semi join scans every committed history file once.
 # ---------------------------------------------------------------------------
 
 
@@ -405,59 +367,35 @@ def ingest_batch_near_dup(batch: DataFrame, store_dir: str, batch_id: int,
     import os
 
     spark = batch.sparkSession
-    new_bands = band_projection(batch, text_col, num_perm, bands)
-    new_toks = batch.select(
-        "doc_id", F.array_distinct(word_tokens(F.col(text_col))).alias("toks")
-    )
+    new_sets = _word_sets(batch, text_col)
+    new_bands = band_keys(minhash(new_sets, num_perm), num_perm, bands)
     # in-batch pairs: the batch self-join (small); drop the later id
-    in_batch_dropped = minhash_near_dup_pairs(
-        batch, text_col, num_perm, bands, threshold
-    ).select(F.col("id_b").alias("doc_id"))
+    dropped = jaccard_verify(bucket_pairs(new_bands), new_sets, threshold).select(
+        F.col("id_b").alias("doc_id")
+    )
     prev_bands = _read_history(spark, store_dir, "bands", batch_id)
-    cross_dropped = None
     if prev_bands is not None:
         prev_toks = _read_history(spark, store_dir, "toks", batch_id)
         cand = (
-            prev_bands.withColumnRenamed("doc_id", "id_old")
+            prev_bands.withColumnRenamed("doc_id", "id_a")
             .join(
-                F.broadcast(
-                    new_bands.withColumnRenamed("doc_id", "id_new")
-                ),
+                F.broadcast(new_bands.withColumnRenamed("id", "id_b")),
                 ["band_idx", "band_hash"],
             )
-            .select("id_old", "id_new")
+            .select("id_a", "id_b")
             .distinct()
         )
-        cross_dropped = (
-            cand.join(
-                prev_toks.select(
-                    F.col("doc_id").alias("id_old"), F.col("toks").alias("t_old")
-                ),
-                "id_old",
-            )
-            .join(
-                new_toks.select(
-                    F.col("doc_id").alias("id_new"), F.col("toks").alias("t_new")
-                ),
-                "id_new",
-            )
-            .withColumn(
-                "jaccard",
-                F.size(F.array_intersect("t_old", "t_new"))
-                / F.size(F.array_union("t_old", "t_new")),
-            )
-            .where(F.col("jaccard") >= threshold)
-            .select(F.col("id_new").alias("doc_id"))
+        cross = jaccard_verify(
+            cand, prev_toks.select(F.col("doc_id").alias("id"), F.col("toks").alias("items")),
+            threshold, sets_b=new_sets,
         )
-    dropped = (
-        in_batch_dropped if cross_dropped is None
-        else in_batch_dropped.unionByName(cross_dropped)
-    ).distinct()
+        dropped = dropped.unionByName(cross.select(F.col("id_b").alias("doc_id")))
+    dropped = dropped.distinct()
     retained = batch.join(dropped, "doc_id", "left_anti")
-    new_bands.write.mode("overwrite").parquet(
+    new_bands.withColumnRenamed("id", "doc_id").write.mode("overwrite").parquet(
         os.path.join(store_dir, "bands", f"b{batch_id}")
     )
-    new_toks.write.mode("overwrite").parquet(
+    new_sets.toDF("doc_id", "toks").write.mode("overwrite").parquet(
         os.path.join(store_dir, "toks", f"b{batch_id}")
     )
     retained.write.mode("overwrite").parquet(
@@ -473,25 +411,6 @@ def load_retained(spark, store_dir: str) -> DataFrame:
     if not paths:
         raise ValueError(f"no committed batches under {store_dir}")
     return spark.read.parquet(*paths)
-
-
-def exact_jaccard_pairs(docs: DataFrame, text_col: str = "text",
-                        threshold: float = 0.5, max_id: int | None = None) -> DataFrame:
-    """All-pairs exact word-set Jaccard (gold standard; quadratic — gate
-    with max_id at test scale; the LSH path is the production variant)."""
-    d = docs if max_id is None else docs.where(F.col("doc_id") < max_id)
-    toksets = d.select("doc_id", F.array_distinct(word_tokens(F.col(text_col))).alias("toks"))
-    a = toksets.select(F.col("doc_id").alias("id_a"), F.col("toks").alias("t_a"))
-    b = toksets.select(F.col("doc_id").alias("id_b"), F.col("toks").alias("t_b"))
-    return (
-        a.crossJoin(b)
-        .where(F.col("id_a") < F.col("id_b"))
-        .withColumn("inter", F.size(F.array_intersect("t_a", "t_b")))
-        .withColumn("uni", F.size(F.array_union("t_a", "t_b")))
-        .withColumn("jaccard", F.col("inter") / F.col("uni"))
-        .where(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
-    )
 
 
 def decontaminate(docs: DataFrame, bench_docs: DataFrame, n: int = 4,

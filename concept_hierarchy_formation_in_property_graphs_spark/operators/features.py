@@ -17,8 +17,7 @@ F3 `extractCharacteristicSet` (`algos/PropertyGraphCobweb.java:250-258`):
 Shuffle plan: degrees = two groupBys on edges; the neighbour gather is one
 self-join of the incidence list with the per-node degree table. The degree
 table has one row per node — under head-entity skew (hub nodes appear in a
-large fraction of incidence rows) AQE skew-join splits the hot partitions;
-an explicit salted variant is provided for the pathological case.
+large fraction of incidence rows) AQE skew-join splits the hot partitions.
 """
 
 from __future__ import annotations
@@ -49,22 +48,7 @@ def degrees(edges: DataFrame) -> DataFrame:
     )
 
 
-def salted_dim_join(fact: DataFrame, dim: DataFrame, key: str,
-                    n_salt: int = 8) -> DataFrame:
-    """Skew-safe fact⋈dim when dim has one row per key: replicate dim
-    n_salt× and scatter fact rows across the replicas. Defuses head-entity
-    hot keys without relying on AQE detection."""
-    salted_dim = dim.withColumn(
-        "_salt", F.explode(F.sequence(F.lit(0), F.lit(n_salt - 1)))
-    )
-    salted_fact = fact.withColumn(
-        "_salt", F.pmod(F.xxhash64(F.monotonically_increasing_id()), F.lit(n_salt))
-    )
-    return salted_fact.join(salted_dim, [key, "_salt"]).drop("_salt")
-
-
-def structural_features(nodes: DataFrame | None, edges: DataFrame,
-                        salt: int | None = None) -> DataFrame:
+def structural_features(nodes: DataFrame | None, edges: DataFrame) -> DataFrame:
     """F2 for every node id in ``nodes`` (isolated nodes get 0s).
 
     nodes=None means the node set IS the edge endpoints — skips the
@@ -79,12 +63,7 @@ def structural_features(nodes: DataFrame | None, edges: DataFrame,
         F.col("out_deg").alias("o_out"),
         F.col("in_deg").alias("o_in"),
     )
-    joined = (
-        salted_dim_join(inc, dim, "other", salt)
-        if salt
-        else inc.join(dim, "other")
-    )
-    nbr = joined.groupBy("id").agg(
+    nbr = inc.join(dim, "other").groupBy("id").agg(
         F.sum("o_deg").alias("tnd"),
         F.sum("o_out").alias("tno"),
         F.sum("o_in").alias("tni"),

@@ -16,6 +16,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .lsh import bucket_pairs
+
 
 def _dot(a, b):
     return F.aggregate(
@@ -169,9 +171,9 @@ def embedding_near_dup_pairs(embeddings: DataFrame, threshold: float = 0.4,
     near-duplicates (cosine ≥ 0.9), ≈0.75 at the demo threshold 0.4 used
     on the synthetic embeddings (documented approximation; the oracle twin
     recomputes the SAME blocking, so the correctness gate is exact). The
-    per-band bucket join replaces the O(n²) cross join — the same blocking
-    shape as the MinHash text-dedup path, and at 100 TB the same
-    hot-bucket cap applies."""
+    per-band bucket self-join is the MinHash paths' own
+    (`lsh.bucket_pairs`), replacing the O(n²) cross join; it has no
+    hot-bucket cap here, so a mega-cluster still costs B·(B−1)/2 pairs."""
     rng = np.random.RandomState(seed)
     # (dim, n_planes) so the signature step is ONE matmul per Arrow batch
     planes_t = rng.randn(n_planes, dim).T.copy()
@@ -192,44 +194,30 @@ def embedding_near_dup_pairs(embeddings: DataFrame, threshold: float = 0.4,
         hashes = (bits.reshape(-1, bands, r) * band_weights).sum(axis=2)
         return pd.Series(list(hashes.astype(np.int32)))
 
-    # ONE linear DAG, two shuffles, zero joins, zero checkpoints:
-    #   scan → signature UDF → per-band explode → groupBy bucket
-    #   (collect members WITH their vectors) → in-bucket pair explosion +
-    #   inline cosine verify (whole-stage codegen, never materialized) →
-    #   distinct on the surviving skinny pairs.
-    # The round-2 shape (banded self-join + two verify joins against a
-    # checkpointed signature table) spent more time on stage scheduling
-    # and join overhead than on math; carrying the vector inside the
-    # bucket group removes every join. Bucket member lists are bounded by
-    # the band selectivity (≈ n/2^r per band uniformly), the same place
-    # the text-dedup path applies its hot-bucket cap at corpus scale.
+    # The sign-bit band rows are skinny (vec_id, band_idx, band_hash), so
+    # the shared bucket self-join never holds a vector, and a bucket is
+    # pairs, not one row that grows with the corpus; cosine is verified
+    # by joining the vectors back onto the distinct candidate pairs.
     banded = embeddings.select(
-        "vec_id", "embedding",
-        _norm(F.col("embedding")).alias("nrm"),
+        F.col("vec_id").alias("id"),
         F.posexplode(band_hash_udf(F.col("embedding"))).alias(
             "band_idx", "band_hash"
         ),
     )
-    buckets = banded.groupBy("band_idx", "band_hash").agg(
-        F.collect_list(F.struct("vec_id", "embedding", "nrm")).alias("mem")
+    vecs = embeddings.select(
+        "vec_id", "embedding", _norm(F.col("embedding")).alias("nrm")
     )
-    pairs = (
-        buckets.select(F.explode("mem").alias("a"), "mem")
-        .select("a", F.explode("mem").alias("b"))
-        .where(F.col("a.vec_id") < F.col("b.vec_id"))
-    )
+    a = vecs.toDF("id_a", "e_a", "n_a")
+    b = vecs.toDF("id_b", "e_b", "n_b")
     return (
-        pairs.select(
-            F.col("a.vec_id").alias("id_a"),
-            F.col("b.vec_id").alias("id_b"),
-            (
-                _dot(F.col("a.embedding"), F.col("b.embedding"))
-                / (F.col("a.nrm") * F.col("b.nrm"))
-            ).alias("score"),
+        bucket_pairs(banded).join(a, "id_a").join(b, "id_b")
+        .select(
+            "id_a", "id_b",
+            (_dot(F.col("e_a"), F.col("e_b")) / (F.col("n_a") * F.col("n_b")))
+            .alias("score"),
         )
         .where(F.col("score") >= threshold)
         .select("id_a", "id_b", F.round("score", 4).alias("score4"))
-        .distinct()
     )
 
 

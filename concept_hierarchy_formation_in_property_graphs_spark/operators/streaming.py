@@ -182,7 +182,8 @@ def run_hierarchy_stream(instances_stream: DataFrame, state_dir: str,
                          timeout_sec: int = 300):
     """Streaming concept-hierarchy maintenance: every micro-batch of
     instances (instance_id, intent ARRAY<STRING>) merges its concept-sized
-    intent-state delta via ``concepts.update_hierarchy`` — the streaming
+    intent-state delta via ``merge_batch_into_state`` (``concepts.intent_state``
+    + ``concepts.merge_intent_state``) — the streaming
     form of the reference's incremental Cobweb insertion, order-free.
 
     State layout under ``state_dir``:

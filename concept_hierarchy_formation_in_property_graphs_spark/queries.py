@@ -3046,9 +3046,9 @@ GROUP BY 1
 )
 def kg_degree_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Log2-bucketed degree distribution of the entity graph — the
-    skew evidence behind the engine's salting (`operators/features.py`)
-    and AQE skew-join gates: the top bucket holds the hub entities whose
-    partitions would dominate an unsalted shuffle. One aggregate over
+    skew evidence behind the AQE skew-join gates: the top bucket holds
+    the hub entities whose partitions would dominate a plain hash
+    shuffle. One aggregate over
     the materialized degree table."""
     edges = tpch_edges_cached(spark, sf_dir)
     degs = degrees(edges).where(F.col("deg") > 0)

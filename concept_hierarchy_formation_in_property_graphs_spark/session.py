@@ -28,9 +28,8 @@ def get_spark(
     """Build (or reuse) a SparkSession.
 
     AQE is enabled so the skew-join handling and post-shuffle coalescing the
-    north rule asks for are active at any scale; explicit salting is still
-    applied in the closure/neighbour joins (see operators/features.py,
-    operators/concepts.py) for the pathological head-entity case.
+    north rule asks for are active at any scale; AQE's skew split is the
+    only head-entity skew guard in the neighbour joins (no explicit salting).
     """
     n = cpus or default_cpus()
     builder = (

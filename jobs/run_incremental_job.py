@@ -2,7 +2,8 @@
 
 Each launch merges one new instance batch into the persisted intent state
 (never rescanning previous batches' instances) and re-emits the hierarchy
-tables — the production shape of `operators/concepts.update_hierarchy`:
+tables through `operators/streaming.merge_batch_into_state`
+(`concepts.intent_state` + `concepts.merge_intent_state`):
 
     zip -r chf_spark.zip concept_hierarchy_formation_in_property_graphs_spark
     spark-submit --master <cluster> --py-files chf_spark.zip \

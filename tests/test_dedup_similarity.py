@@ -173,6 +173,44 @@ def test_embedding_near_dup_banding_recall(spark):
     assert all(r["score4"] >= 0.9 for r in got)
 
 
+def test_embedding_mega_bucket_matches_numpy_reference(spark):
+    """A planted mega-cluster (300 near-identical vectors among random
+    ones) shares every band bucket: the blocked pairs must equal a NumPy
+    reference — pairs sharing any band hash with cosine ≥ threshold — and
+    the plan must pair bucket members by self-join, never by collecting a
+    bucket into one row that grows with the cluster."""
+    import numpy as np
+
+    from concept_hierarchy_formation_in_property_graphs_spark.operators.similarity import (
+        embedding_near_dup_pairs,
+    )
+
+    dim, n_planes, bands, seed, threshold = 16, 32, 8, 19, 0.9
+    rs = np.random.RandomState(5)
+    hub = rs.randn(dim)
+    vecs = np.vstack([hub + 0.01 * rs.randn(300, dim), rs.randn(200, dim)])
+    vecs = vecs.astype(np.float32).astype(np.float64)  # the stored precision
+    df = embedding_near_dup_pairs(
+        _emb(spark, vecs.tolist()), threshold=threshold, n_planes=n_planes,
+        bands=bands, seed=seed, dim=dim,
+    )
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    assert "collect_list" not in plan
+    got = {(r["id_a"], r["id_b"]) for r in df.collect()}
+
+    planes = np.random.RandomState(seed).randn(n_planes, dim)
+    r = n_planes // bands
+    bits = (vecs @ planes.T >= 0.0).astype(np.int64).reshape(-1, bands, r)
+    keys = (bits << np.arange(r)).sum(axis=2)
+    share = (keys[:, None, :] == keys[None, :, :]).any(axis=2)
+    nrm = np.linalg.norm(vecs, axis=1)
+    cos = vecs @ vecs.T / np.outer(nrm, nrm)
+    ia, ib = np.nonzero(np.triu(share & (cos >= threshold), k=1))
+    want = set(zip(ia.tolist(), ib.tolist()))
+    assert len(want) >= 300 * 299 // 2  # the whole cluster pairs up
+    assert got == want
+
+
 def test_lsh_multiprobe_dominates_single_probe(spark):
     """Hamming-1 probing must find a superset of single-probe results and
     strictly improve recall vs brute-force top-k on gaussian vectors."""

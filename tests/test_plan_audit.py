@@ -102,8 +102,8 @@ def test_decontaminate_broadcasts_bench_grams(spark):
 def test_aqe_splits_skewed_join_partitions(spark):
     """The session's AQE skew-join path actually fires: a join with one
     hot key (200k of 220k rows) must show SortMergeJoin(skew=true) in
-    the FINAL adaptive plan — the runtime answer to head-entity skew
-    that complements the explicit salting in operators/features.py."""
+    the FINAL adaptive plan — the runtime answer to head-entity skew in
+    the neighbour joins of operators/features.py."""
     from pyspark.sql import functions as F
 
     tuned = {

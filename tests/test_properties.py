@@ -5,7 +5,6 @@
 - extract_text_py's space-run collapse ≡ collapsing every space/tab run.
 - build_hierarchy invariants hold and parents are the most specific proper
   subsumer for arbitrary intent multisets.
-- salted_dim_join ≡ plain join under a hub-skewed key distribution.
 """
 
 from __future__ import annotations
@@ -98,28 +97,6 @@ def test_hierarchy_invariants_random_intents(spark):
                 default=None,
             )
             assert len(pin) == best, (seed, cid, pid)
-
-
-def test_salted_join_equals_plain_join(spark):
-    from concept_hierarchy_formation_in_property_graphs_spark.operators.features import (
-        salted_dim_join,
-    )
-
-    rng = random.Random(5)
-    # hub-skew: 60% of fact rows hit one key
-    fact = spark.createDataFrame(
-        [("hub" if rng.random() < 0.6 else f"k{rng.randint(0, 20)}", i)
-         for i in range(2000)],
-        "key string, payload long",
-    )
-    dim = spark.createDataFrame(
-        [(f"k{i}", i * 10) for i in range(21)] + [("hub", -1)],
-        "key string, dimval long",
-    )
-    plain = sorted(map(tuple, fact.join(dim, "key").select("key", "payload", "dimval").collect()))
-    salted = sorted(map(tuple, salted_dim_join(fact, dim, "key", n_salt=8)
-                        .select("key", "payload", "dimval").collect()))
-    assert plain == salted and len(plain) == 2000
 
 
 def test_connected_components_equals_union_find(spark):

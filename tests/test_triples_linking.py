@@ -74,32 +74,43 @@ def test_lsh_bucket_cap_bounds_candidates_keeps_components(spark):
     from pyspark.sql import functions as F
 
     from concept_hierarchy_formation_in_property_graphs_spark.operators.linking import (
-        lsh_candidate_pairs,
-        minhash_signature,
+        char_shingles,
+    )
+    from concept_hierarchy_formation_in_property_graphs_spark.operators.lsh import (
+        band_keys,
+        bucket_pairs,
+        minhash,
     )
 
     mega = [(f"globex holdings incorporated branch office {i:03d}",) for i in range(500)]
     other = [("tiny llc",), ("tiny l.l.c.",), ("unrelated zebra phrase",)]
     uniq = spark.createDataFrame(mega + other, "surface string")
-    sig = minhash_signature(uniq, "surface", num_perm=16).localCheckpoint(eager=True)
+    sets = uniq.select(
+        F.col("surface").alias("id"), char_shingles(F.col("surface")).alias("items")
+    )
+    sig = minhash(sets, num_perm=16).localCheckpoint(eager=True)
+    banded = band_keys(sig, num_perm=16, bands=16)
 
-    uncapped = lsh_candidate_pairs(sig, "surface", num_perm=16, bands=16)
-    capped = lsh_candidate_pairs(sig, "surface", num_perm=16, bands=16, max_bucket=64)
+    uncapped = bucket_pairs(banded)
+    capped = bucket_pairs(banded, max_bucket=64, chain=True)
     n_uncapped, n_capped = uncapped.count(), capped.count()
     assert n_capped < n_uncapped / 4  # the quadratic bulk is gone
     assert n_capped > 0
 
     from concept_hierarchy_formation_in_property_graphs_spark.operators.linking import (
         connected_components,
+    )
+    from concept_hierarchy_formation_in_property_graphs_spark.operators.lsh import (
         jaccard_verify,
     )
 
-    comp_un = connected_components(
-        jaccard_verify(uncapped, uniq, "surface", "surface", 0.5).select("src", "dst")
-    )
-    comp_cap = connected_components(
-        jaccard_verify(capped, uniq, "surface", "surface", 0.5).select("src", "dst")
-    )
+    def edges(pairs):
+        return jaccard_verify(pairs, sets, 0.5).select(
+            F.col("id_a").alias("src"), F.col("id_b").alias("dst")
+        )
+
+    comp_un = connected_components(edges(uncapped))
+    comp_cap = connected_components(edges(capped))
     as_map = lambda df: {r["id"]: r["component"] for r in df.collect()}
     assert as_map(comp_un) == as_map(comp_cap)
 

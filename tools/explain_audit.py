@@ -69,7 +69,7 @@ def main() -> None:
     from concept_hierarchy_formation_in_property_graphs_spark import queries as q
     from concept_hierarchy_formation_in_property_graphs_spark.session import get_spark
 
-    spark = get_spark(app_name="chf-explain", cpus=8)
+    spark = get_spark(app_name="chf-explain")
     spark.sparkContext.setLogLevel("ERROR")
     reg = q.registry()
     for name in names:

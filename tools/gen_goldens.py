@@ -41,7 +41,7 @@ def main() -> None:
     from concept_hierarchy_formation_in_property_graphs_spark import queries as q
     from concept_hierarchy_formation_in_property_graphs_spark.session import get_spark
 
-    spark = get_spark(app_name="chf-goldens", cpus=8)
+    spark = get_spark(app_name="chf-goldens")
     spark.sparkContext.setLogLevel("ERROR")
     os.makedirs(GOLDEN_DIR, exist_ok=True)
     reg = q.registry()

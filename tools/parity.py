@@ -50,7 +50,7 @@ def main() -> int:
     import __spark_entry__ as e
     from concept_hierarchy_formation_in_property_graphs_spark.session import get_spark
 
-    spark = get_spark(cpus=8)
+    spark = get_spark()
     spark.sparkContext.setLogLevel("ERROR")
 
     con = duckdb.connect()
