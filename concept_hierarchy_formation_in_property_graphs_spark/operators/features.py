@@ -14,6 +14,11 @@ F2 `extractStructuralFeatures` (`algos/PropertyGraphCobweb.java:394-431`):
 F3 `extractCharacteristicSet` (`algos/PropertyGraphCobweb.java:250-258`):
   set of distinct rel types incident to the node, either direction.
 
+Every intent family (F1 labels and property items, F3, the F6 ablations
+and the F7 phase-1 trees in `operators/two_phase.py`) is built from three
+shared pieces: the two-way ``incidence``, the ``prop_items`` "key=value"
+expression and the ``collect_intents`` sorted-set collector.
+
 Shuffle plan: degrees = two groupBys on edges; the neighbour gather is one
 self-join of the incidence list with the per-node degree table. The degree
 table has one row per node — under head-entity skew (hub nodes appear in a
@@ -22,14 +27,43 @@ large fraction of incidence rows) AQE skew-join splits the hot partitions.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
 def incidence(edges: DataFrame) -> DataFrame:
-    """(id, other) — one row per (node, incident edge), both directions."""
-    return edges.select(F.col("src").alias("id"), F.col("dst").alias("other")).union(
-        edges.select(F.col("dst").alias("id"), F.col("src").alias("other"))
+    """(id, other, rel_type) — one row per (node, incident edge), both
+    directions; callers select the columns they need and Catalyst prunes
+    the rest."""
+    return edges.select(
+        F.col("src").alias("id"), F.col("dst").alias("other"), "rel_type"
+    ).union(edges.select(F.col("dst").alias("id"), F.col("src").alias("other"), "rel_type"))
+
+
+def prop_items(props: str | Column) -> Column:
+    """ARRAY<STRING> of "key=value" items of a MAP<STRING,STRING> column —
+    the nominal property items of the F1 record conversion
+    (`algos/ConceptNode.java:98-145`)."""
+    return F.transform(
+        F.map_entries(props), lambda e: F.concat(e["key"], F.lit("="), e["value"])
+    )
+
+
+def collect_intents(items: DataFrame, nodes: DataFrame | None = None) -> DataFrame:
+    """items(id, item) → (id, intent ARRAY<STRING>), one sorted set per id.
+
+    ``array_sort`` makes the set canonical so it can serve directly as a
+    groupBy key in the lattice stage. With ``nodes`` every node id is
+    returned, ``[]`` for a node without items; nodes=None returns only the
+    ids that have items.
+    """
+    out = items.groupBy("id").agg(F.array_sort(F.collect_set("item")).alias("intent"))
+    if nodes is None:
+        return out
+    return (
+        nodes.select("id")
+        .join(out, "id", "left")
+        .select("id", F.coalesce("intent", F.array().cast("array<string>")).alias("intent"))
     )
 
 
@@ -56,7 +90,7 @@ def structural_features(nodes: DataFrame | None, edges: DataFrame) -> DataFrame:
     degree row already), the common case when the graph came from triples.
     """
     degs = degrees(edges)
-    inc = incidence(edges)
+    inc = incidence(edges).select("id", "other")
     dim = degs.select(
         F.col("id").alias("other"),
         F.col("deg").alias("o_deg"),
@@ -96,24 +130,8 @@ def structural_features(nodes: DataFrame | None, edges: DataFrame) -> DataFrame:
 def characteristic_sets(nodes: DataFrame | None, edges: DataFrame) -> DataFrame:
     """F3: (id, rel_types ARRAY<STRING> sorted) — the FCA intent column.
 
-    ``array_sort`` makes the set canonical so it can serve directly as a
-    groupBy key in the lattice stage. nodes=None ⇒ node set = edge
-    endpoints (skips the distinct + outer join; isolated nodes can't
-    exist then).
+    nodes=None ⇒ node set = edge endpoints (skips the outer join; isolated
+    nodes can't exist then).
     """
-    inc_types = edges.select(F.col("src").alias("id"), "rel_type").union(
-        edges.select(F.col("dst").alias("id"), "rel_type")
-    )
-    cs = inc_types.groupBy("id").agg(
-        F.array_sort(F.collect_set("rel_type")).alias("rel_types")
-    )
-    if nodes is None:
-        return cs
-    return (
-        nodes.select("id")
-        .join(cs, "id", "left")
-        .select(
-            "id",
-            F.coalesce("rel_types", F.array().cast("array<string>")).alias("rel_types"),
-        )
-    )
+    items = incidence(edges).select("id", F.col("rel_type").alias("item"))
+    return collect_intents(items, nodes).withColumnRenamed("intent", "rel_types")

@@ -21,7 +21,7 @@ from __future__ import annotations
 
 import logging
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .lsh import band_keys, bucket_pairs, jaccard_verify, minhash
@@ -38,8 +38,7 @@ def char_shingles(col, n: int = 3):
     return F.array_distinct(grams)
 
 
-def connected_components(edges: DataFrame, spark: SparkSession | None = None,
-                         max_iter: int = 25) -> DataFrame:
+def connected_components(edges: DataFrame, max_iter: int = 25) -> DataFrame:
     """Min-label propagation CC over edges(src, dst) → (id, component).
 
     Driver-side loop (the reference's only iteration is also driver-side);
@@ -55,14 +54,15 @@ def connected_components(edges: DataFrame, spark: SparkSession | None = None,
     hitting ``max_iter`` without convergence raises (partial components
     would silently merge fewer aliases).
     """
-    sym = edges.select("src", "dst").union(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-    labels = (
-        sym.select(F.col("src").alias("id"))
-        .union(sym.select(F.col("dst").alias("id")))
-        .distinct()
-        .withColumn("component", F.col("id"))
+    # checkpoint before deriving labels: round 1 reads labels three times
+    # (neighbour join, path halving, changed check) and must not re-run
+    # the upstream plan (the LSH blocking + verify) for each
+    sym = (
+        edges.select("src", "dst")
+        .union(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
+        .localCheckpoint(eager=True)
     )
-    sym = sym.localCheckpoint(eager=True)
+    labels = sym.select(F.col("src").alias("id")).distinct().withColumn("component", F.col("id"))
     converged = False
     rounds = 0
     for rounds in range(1, max_iter + 1):

@@ -18,29 +18,37 @@ DFS of the reference (its hot spot) is one hash join here.
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .concepts import build_hierarchy, cutoff_labels, cutoff_level
-from .features import structural_features
+from .features import collect_intents, incidence, prop_items, structural_features
+
+
+def _items(nodes: DataFrame, edges: DataFrame | None, families) -> DataFrame:
+    """(id, item) rows of the chosen feature families (the parts of an
+    ablation name), union'd; the item prefixes keep the families disjoint."""
+    rows = {
+        "label": lambda: nodes.select("id", F.explode("labels").alias("item")),
+        "prop": lambda: nodes.select("id", F.explode(prop_items("props")).alias("item")),
+        "struct": lambda: structural_intents(nodes, edges).select(
+            F.col("instance_id").alias("id"), F.explode("intent").alias("item")
+        ),
+        "char": lambda: incidence(edges).select(
+            "id", F.concat(F.lit("Rel:"), F.col("rel_type")).alias("item")
+        ),
+    }
+    return reduce(DataFrame.unionByName, (rows[f]() for f in families))
 
 
 def node_prop_intents(nodes: DataFrame) -> DataFrame:
     """(instance_id, intent) — labels ∪ "key=value" nominal property items
-    (F1 record conversion, `algos/ConceptNode.java:98-145`)."""
-    labels = nodes.select(
-        F.col("id").alias("instance_id"), F.explode("labels").alias("item")
-    )
-    props = nodes.select(
-        F.col("id").alias("instance_id"), F.explode(F.map_entries("props")).alias("e")
-    ).select(
-        "instance_id", F.concat(F.col("e.key"), F.lit("="), F.col("e.value")).alias("item")
-    )
-    return (
-        labels.unionByName(props)
-        .groupBy("instance_id")
-        .agg(F.array_sort(F.collect_set("item")).alias("intent"))
-    )
+    (F1 record conversion, `algos/ConceptNode.java:98-145`); nodes with
+    neither are absent."""
+    items = _items(nodes, None, ("label", "prop"))
+    return collect_intents(items).withColumnRenamed("id", "instance_id")
 
 
 def structural_intents(nodes: DataFrame, edges: DataFrame) -> DataFrame:
@@ -81,10 +89,7 @@ def relationship_intents(edges: DataFrame) -> DataFrame:
         F.array_sort(
             F.concat(
                 F.array(F.concat(F.lit("RelType="), F.col("rel_type"))),
-                F.transform(
-                    F.map_entries(F.col("props")),
-                    lambda e: F.concat(e["key"], F.lit("="), e["value"]),
-                ),
+                prop_items("props"),
             )
         ).alias("intent"),
     ).distinct()
@@ -117,59 +122,13 @@ def feature_ablation_intents(nodes: DataFrame, edges: DataFrame,
     (`algos/PropertyGraphCobweb.java:40-248`; the Neo4j procedure entry uses
     labels+structural+characteristic, `proc/PropertyGraphCobwebProc.java:40`).
 
-    Returns (instance_id, intent) with the chosen feature families union'd
-    into one intent set; prefixes keep the families disjoint.
+    Returns (instance_id, intent) for every node, with the chosen feature
+    families union'd into one intent set (``[]`` for a node without items).
     """
     if variant not in ABLATION_VARIANTS:
         raise ValueError(f"unknown variant {variant!r}")
-    parts = [
-        nodes.select(
-            F.col("id").alias("instance_id"),
-            F.explode("labels").alias("item"),
-        )
-    ]
-    if "prop" in variant:
-        parts.append(
-            nodes.select(
-                F.col("id").alias("instance_id"),
-                F.explode(F.map_entries("props")).alias("e"),
-            ).select(
-                "instance_id",
-                F.concat(F.col("e.key"), F.lit("="), F.col("e.value")).alias("item"),
-            )
-        )
-    if "struct" in variant:
-        parts.append(
-            structural_intents(nodes, edges).select(
-                "instance_id", F.explode("intent").alias("item")
-            )
-        )
-    if "char" in variant:
-        inc = edges.select(F.col("src").alias("instance_id"), "rel_type").union(
-            edges.select(F.col("dst").alias("instance_id"), "rel_type")
-        )
-        parts.append(
-            inc.select(
-                "instance_id", F.concat(F.lit("Rel:"), F.col("rel_type")).alias("item")
-            )
-        )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return (
-        nodes.select(F.col("id").alias("instance_id"))
-        .join(
-            out.groupBy("instance_id").agg(
-                F.array_sort(F.collect_set("item")).alias("intent")
-            ),
-            "instance_id",
-            "left",
-        )
-        .select(
-            "instance_id",
-            F.coalesce("intent", F.array().cast("array<string>")).alias("intent"),
-        )
-    )
+    items = _items(nodes, edges, variant.split("_"))
+    return collect_intents(items, nodes).withColumnRenamed("id", "instance_id")
 
 
 def two_phase_hierarchy(spark: SparkSession, nodes: DataFrame,
@@ -197,14 +156,11 @@ def two_phase_hierarchy(spark: SparkSession, nodes: DataFrame,
     rel_kind = rel_int.select(
         F.col("rel_type"), F.col("instance_id")
     ).join(r_lab, "instance_id").select("rel_type", "r_lab")
-    inc = edges.select(F.col("src").alias("id"), "rel_type").union(
-        edges.select(F.col("dst").alias("id"), "rel_type")
-    )
-    node_rel_labels = (
-        inc.join(F.broadcast(rel_kind), "rel_type")
-        .groupBy("id")
-        .agg(F.collect_set(F.concat(F.lit("R:"), F.col("r_lab"))).alias("r_items"))
-    )
+    node_rel_labels = collect_intents(
+        incidence(edges)
+        .join(F.broadcast(rel_kind), "rel_type")
+        .select("id", F.concat(F.lit("R:"), F.col("r_lab")).alias("item"))
+    ).withColumnRenamed("intent", "r_items")
 
     summary = (
         nodes.select("id")

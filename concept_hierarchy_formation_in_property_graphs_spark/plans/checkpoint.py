@@ -1,7 +1,7 @@
 """Checkpointed stage runner — the resume spine (north rule).
 
-Each pipeline stage materializes to a flat snapshot directory (Parquet;
-Iceberg at cluster scale — the writer is format-agnostic) together with:
+Each pipeline stage materializes to a flat Parquet snapshot directory
+together with:
   * per-partition lineage counters (``_lineage.json``), and
   * a stage metrics record (``_metrics.json``: rows, partitions, seconds).
 
@@ -31,10 +31,9 @@ from pyspark.sql import DataFrame, SparkSession
 
 
 class StageRunner:
-    def __init__(self, spark: SparkSession, base_dir: str, fmt: str = "parquet"):
+    def __init__(self, spark: SparkSession, base_dir: str):
         self.spark = spark
         self.base_dir = base_dir
-        self.fmt = fmt
         self.metrics: list[dict] = []
         os.makedirs(base_dir, exist_ok=True)
 
@@ -46,36 +45,28 @@ class StageRunner:
 
     @staticmethod
     def _footer_lineage(path: str) -> list[tuple[str, int]]:
-        """(file, num_rows) per written part file, from columnar footers
-        (parquet or ORC — both carry row counts in file metadata; an
-        Iceberg snapshot exposes the identical counts in its manifest)."""
-        out = []
-        for fn in sorted(os.listdir(path)):
-            if not fn.startswith("part-"):
-                continue
-            full = os.path.join(path, fn)
-            if fn.endswith(".parquet"):
-                import pyarrow.parquet as pq
+        """(file, num_rows) per written part file, from the parquet footers
+        (an Iceberg snapshot exposes the identical counts in its manifest)."""
+        import pyarrow.parquet as pq
 
-                out.append((fn, pq.read_metadata(full).num_rows))
-            elif fn.endswith(".orc"):
-                import pyarrow.orc as po
-
-                out.append((fn, po.ORCFile(full).nrows))
-        return out
+        return [
+            (fn, pq.read_metadata(os.path.join(path, fn)).num_rows)
+            for fn in sorted(os.listdir(path))
+            if fn.startswith("part-") and fn.endswith(".parquet")
+        ]
 
     def stage(self, name: str, build: Callable[[], DataFrame]) -> DataFrame:
         """Run (or resume) one stage; returns the materialized DataFrame."""
         path = self._path(name)
         t0 = time.time()
         if self.is_complete(name):
-            df = self.spark.read.format(self.fmt).load(path)
+            df = self.spark.read.parquet(path)
             self.metrics.append(
                 {"stage": name, "resumed": True, "seconds": round(time.time() - t0, 3)}
             )
             return df
         tmp = self._path(f"_tmp_{name}")
-        build().write.mode("overwrite").format(self.fmt).save(tmp)
+        build().write.mode("overwrite").parquet(tmp)
         # per-partition lineage counters from the parquet footers — pure
         # metadata reads on the driver, zero extra Spark jobs per stage
         # (works the same against HDFS/S3 via pyarrow filesystems; an
@@ -96,7 +87,7 @@ class StageRunner:
         shutil.rmtree(path, ignore_errors=True)
         os.replace(tmp, path)
         self.metrics.append(rec)
-        return self.spark.read.format(self.fmt).load(path)
+        return self.spark.read.parquet(path)
 
     def write_run_metrics(self) -> str:
         p = os.path.join(self.base_dir, "run_metrics.json")

@@ -52,24 +52,23 @@ def run_pipeline(
     workdir: str,
     n_entities: int = 500,
     lang: str = "en",
-    parallelism: int | None = None,
     open_vocab: bool = False,
     mention_entities: int | None = None,
-    fmt: str = "parquet",
 ) -> dict:
     """Run (or resume) the full pipeline; returns stage DataFrames.
 
-    ``parallelism`` sets the partition count for the CPU-bound Python
-    pass (S1 extraction + S2 mention detection, one ``mapInArrow``).
-    Parquet splits input by BYTES (maxPartitionBytes / openCostInBytes
-    bin-packing), which undercuts a compute-bound stage — a 16 MB input
-    is one split even on 32 cores. Defaults to 2× defaultParallelism.
+    Stages are parquet snapshots under ``workdir``. The CPU-bound Python
+    pass (S1 extraction + S2 mention detection, one ``mapInArrow``) runs
+    on at least 2× defaultParallelism partitions: parquet splits input by
+    BYTES (maxPartitionBytes / openCostInBytes bin-packing), which
+    undercuts a compute-bound stage — a 16 MB input is one split even on
+    32 cores.
 
     Raises ``ValueError`` when the workdir holds an ``s1_text`` snapshot
     without the ``pairs`` column (written before S1 and S2 were one pass).
     """
-    runner = StageRunner(spark, workdir, fmt=fmt)
-    par = parallelism or spark.sparkContext.defaultParallelism * 2
+    runner = StageRunner(spark, workdir)
+    par = spark.sparkContext.defaultParallelism * 2
 
     def _spread(df: DataFrame) -> DataFrame:
         # only pay the shuffle when the byte-based split is too coarse
@@ -102,8 +101,8 @@ def run_pipeline(
     # through the north-star canonicalizer — MinHash-LSH blocking over
     # char shingles + iterative connected components — and join the link
     # dimension with their CC-canonical form (lexicographic component
-    # minimum). localCheckpoint so the two broadcast copies (subj/obj
-    # side) don't each re-evaluate the dimension plan.
+    # minimum). The committed s3_links snapshot is a small parquet read,
+    # so both broadcast copies (subj/obj side) read it directly.
     def build_links() -> DataFrame:
         links = gazetteer_df(spark, n_entities).select("surface", "canonical")
         if open_vocab:
@@ -120,9 +119,8 @@ def run_pipeline(
         return links
 
     s3_links = runner.stage("s3_links", build_links)
-    links = s3_links.localCheckpoint(eager=True)
     s3 = runner.stage(
-        "s3_triples", lambda: triples_from_mention_pairs(s2, links)
+        "s3_triples", lambda: triples_from_mention_pairs(s2, s3_links)
     )
 
     # S4 — property-graph materialization + features

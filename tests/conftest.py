@@ -7,6 +7,6 @@ import pytest
 def spark():
     from concept_hierarchy_formation_in_property_graphs_spark.session import get_spark
 
-    s = get_spark(app_name="chf-tests", cpus=8, shuffle_partitions=8)
+    s = get_spark(app_name="chf-tests", cpus=8)
     s.sparkContext.setLogLevel("ERROR")
     yield s

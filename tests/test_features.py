@@ -102,3 +102,92 @@ def test_approximate_aggregates_within_tolerance(spark):
     ).first()
     assert abs(row["approx_orders"] - row["exact_orders"]) / row["exact_orders"] < 0.05
     assert abs(row["approx_p50"] - row["exact_p50"]) / row["exact_p50"] < 0.01
+
+
+# A hand-built property graph for the intent families: duplicate labels,
+# string props, one node with neither labels nor props (d), parallel
+# a→c edges, one isolated node (e) and edge props.
+_NODES = [
+    ("a", ["Person", "Person"], {"city": "X", "age": "30"}),
+    ("b", ["Person"], {"city": "X"}),
+    ("c", ["Org"], {}),
+    ("d", [], {}),
+    ("e", ["Org"], {"city": "Y"}),
+]
+_EDGES = [
+    ("a", "c", "WORKS_AT", {"since": "2019"}),
+    ("a", "c", "WORKS_AT", {"since": "2019"}),
+    ("b", "c", "WORKS_AT", {"since": "2020"}),
+    ("c", "d", "ACQUIRED", {}),
+    ("b", "a", "KNOWS", {}),
+]
+
+
+def _family_items_py() -> dict[str, dict[str, set[str]]]:
+    """family → node → item set, from the graph above in plain Python."""
+    out_d = {n: sum(s == n for s, _, _, _ in _EDGES) for n, _, _ in _NODES}
+    in_d = {n: sum(d == n for _, d, _, _ in _EDGES) for n, _, _ in _NODES}
+    deg = {n: out_d[n] + in_d[n] for n in out_d}
+    inc = [(s, d, t) for s, d, t, _ in _EDGES] + [(d, s, t) for s, d, t, _ in _EDGES]
+
+    def bucket(name: str, v: int) -> str:
+        return f"{name}:b{v.bit_length() - 1 if v > 0 else -1}"
+
+    fam: dict[str, dict[str, set[str]]] = {f: {} for f in ("label", "prop", "struct", "char")}
+    for n, labels, props in _NODES:
+        others = [o for i, o, _ in inc if i == n]
+        feats = {
+            "EgoDegree": deg[n],
+            "AverageNeighbourDegree": sum(deg[o] for o in others) // deg[n] if deg[n] else 0,
+            "EgoNetOutgoingEdges": out_d[n] + sum(out_d[o] for o in others),
+            "EgoNetIncomingEdges": in_d[n] + sum(in_d[o] for o in others),
+        }
+        fam["label"][n] = set(labels)
+        fam["prop"][n] = {f"{k}={v}" for k, v in props.items()}
+        fam["struct"][n] = {bucket(k, v) for k, v in feats.items()}
+        fam["char"][n] = {f"Rel:{t}" for i, _, t in inc if i == n}
+    return fam
+
+
+def test_intent_families_match_python_sets(spark):
+    from concept_hierarchy_formation_in_property_graphs_spark.operators.two_phase import (
+        ABLATION_VARIANTS,
+        feature_ablation_intents,
+        node_prop_intents,
+        relationship_intents,
+    )
+
+    nodes = spark.createDataFrame(
+        _NODES, "id string, labels array<string>, props map<string,string>"
+    )
+    edges = spark.createDataFrame(
+        _EDGES, "src string, dst string, rel_type string, props map<string,string>"
+    )
+    fam = _family_items_py()
+    ids = [n for n, _, _ in _NODES]
+
+    for variant in ABLATION_VARIANTS:
+        want = {n: sorted(set().union(*(fam[f][n] for f in variant.split("_")))) for n in ids}
+        got = {
+            r["instance_id"]: r["intent"]
+            for r in feature_ablation_intents(nodes, edges, variant).collect()
+        }
+        assert got == want, variant
+
+    # labels ∪ property items; d has neither and is absent
+    want = {n: sorted(fam["label"][n] | fam["prop"][n]) for n in ids}
+    want = {n: v for n, v in want.items() if v}
+    assert set(want) == {"a", "b", "c", "e"}
+    got = {r["instance_id"]: r["intent"] for r in node_prop_intents(nodes).collect()}
+    assert got == want
+
+    # one row per distinct relationship record (parallel a→c collapses)
+    want = set()
+    for _, _, t, p in _EDGES:
+        intent = tuple(sorted([f"RelType={t}"] + [f"{k}={v}" for k, v in p.items()]))
+        want.add(("|".join(intent), intent, t))
+    got = {
+        (r["instance_id"], tuple(r["intent"]), r["rel_type"])
+        for r in relationship_intents(edges).collect()
+    }
+    assert got == want and len(want) == 4

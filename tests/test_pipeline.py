@@ -260,46 +260,6 @@ def test_open_vocab_canonicalization(spark):
         shutil.rmtree(wd, ignore_errors=True)
 
 
-def test_pipeline_orc_format_end_to_end_with_resume(spark):
-    """The StageRunner writer is format-agnostic (Iceberg at cluster
-    scale); prove the non-parquet seam actually works by running the full
-    pipeline on ORC: same triples as parquet, footer lineage populated,
-    and stage resume honoured after wiping the last stage."""
-    wd = tempfile.mkdtemp(prefix="chf_orc_")
-    try:
-        pages = pages_spark_df(spark, 60, n_entities=30)
-        out = run_pipeline(spark, pages, wd, n_entities=30, fmt="orc")
-        got = set(map(tuple, out["triples"].collect()))
-        assert got, "orc pipeline produced no triples"
-        # lineage counters came from ORC footers, not parquet
-        import glob
-        import json
-
-        lineage_files = glob.glob(os.path.join(wd, "*", "_lineage.json"))
-        assert lineage_files
-        rows = sum(
-            n
-            for lf in lineage_files
-            for _, n in json.load(open(lf))["files"]
-        )
-        assert rows > 0
-        assert glob.glob(os.path.join(wd, "s3_triples", "part-*.orc"))
-
-        wdp = tempfile.mkdtemp(prefix="chf_par_")
-        try:
-            out_p = run_pipeline(spark, pages, wdp, n_entities=30)
-            assert got == set(map(tuple, out_p["triples"].collect()))
-        finally:
-            shutil.rmtree(wdp, ignore_errors=True)
-
-        shutil.rmtree(os.path.join(wd, "s6_concepts"))
-        out2 = run_pipeline(spark, pages, wd, n_entities=30, fmt="orc")
-        resumed = [m["stage"] for m in out2["metrics"] if m.get("resumed")]
-        assert "s3_triples" in resumed and "s6_concepts" not in resumed
-    finally:
-        shutil.rmtree(wd, ignore_errors=True)
-
-
 def test_iceberg_read_surfaces_real_error_without_fallback(spark):
     """No Iceberg jar in the sandbox: read_pages must chain the REAL
     loader failure (not swallow it) when no parquet fallback exists, and

@@ -20,6 +20,9 @@ AUDIT = [
     "q_revenue_by_nation",
     "kg_record_triples",
     "kg_structural_features",
+    "kg_characteristic_sets",
+    "kg_ablation_label_char",
+    "kg_ablation_label_struct",
     "kg_concept_intents",
     "dd_lsh_near_dup_capped",
     "dd_embedding_near_dup",
@@ -50,9 +53,11 @@ def audit_plan(name: str, plan: str) -> list[str]:
     n_exchange = len(re.findall(r"Exchange", plan))
     n_bcast = len(re.findall(r"BroadcastExchange", plan))
     scans = re.findall(r"ReadSchema: (.*)", plan)
+    # scans of localCheckpointed inputs (the kg_* edge table) carry no ReadSchema
+    n_rdd = len(re.findall(r"^\(\d+\) Scan ExistingRDD", plan, re.M))
     notes.append(
         f"codegen spans={n_codegen} exchanges={n_exchange} "
-        f"(broadcast={n_bcast}) scans={len(scans)}"
+        f"(broadcast={n_bcast}) scans={len(scans)} rdd_scans={n_rdd}"
     )
     for s in scans:
         notes.append(f"  ReadSchema: {s[:140]}")
