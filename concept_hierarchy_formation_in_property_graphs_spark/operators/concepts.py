@@ -102,41 +102,6 @@ def merge_intent_state(a: DataFrame, b: DataFrame) -> DataFrame:
     )
 
 
-def update_hierarchy(prev_state: DataFrame | None, new_instances: DataFrame,
-                     prev_inst: DataFrame | None = None,
-                     root_seed: str = "c",
-                     galois: bool = False) -> dict[str, DataFrame]:
-    """Incremental hierarchy maintenance — the distributed, ORDER-FREE
-    analogue of the reference's incremental Cobweb insertion (O3/O4/O5:
-    create/merge/split, `algos/Cobweb.java:23-160`).
-
-    The new batch contributes only its concept-sized intent-state delta;
-    old INSTANCES are never rescanned (the reference's incremental claim):
-    each ingest touches the new data plus a concept-sized state table.
-    Because the lattice construction is a pure function of the merged
-    state, ``update_hierarchy(state(D1), D2)`` is BIT-IDENTICAL to
-    ``build_hierarchy(D1 ∪ D2)`` — the order-effect the reference
-    mitigates by shuffling (T8) cannot exist here. Test-enforced,
-    including the leaf→inner transition where previously-assigned
-    instances remap to a fresh residual leaf.
-
-    ``prev_inst``: the previous instance→cid map (appendable, e.g. a
-    parquet table) — needed only if ``assignments`` over OLD instances
-    should be part of the result; pass None to get assignments for the
-    new batch only. Returns the hierarchy dict plus ``state`` and
-    ``inst`` (carry both into the next update).
-    """
-    spark = new_instances.sparkSession
-    delta = intent_state(new_instances)
-    state = delta if prev_state is None else merge_intent_state(prev_state, delta)
-    inst_new = _canonical_intents(new_instances)
-    inst = inst_new if prev_inst is None else prev_inst.unionByName(inst_new)
-    out = _hierarchy_from_state(spark, state, inst, root_seed, galois)
-    out["state"] = state
-    out["inst"] = inst
-    return out
-
-
 # Galois closure driver cap: the closure raises past this many closed sets.
 DRIVER_CLOSURE_CAP = 250_000
 
@@ -189,8 +154,12 @@ def _hierarchy_from_state(spark, exact: DataFrame, inst: DataFrame,
       * Galois closure (``galois_closure``), when ``galois``
       * parent: most specific proper subsumer, ties → smallest cid
         (``_best_parents``)
-      * residual leaves, zero-count pruning, labels/depth/closure/counts
-        via ``_tree_metadata_driver``
+      * residual leaves, then subtree counts (post-order from ROOT_ID) so
+        instance-free subtrees — possible when Galois closure adds concepts
+        nothing maps through — are pruned before labeling
+      * one pre-order walk for depth, label and ancestor path, with the
+        labeling rule of T3 (`util/TreeUtils.java:82-90`): child rank =
+        ascending cid, label = parent label + rank
     Only ``assignments`` stays distributed: instance → concept with the
     (tiny, broadcast) residual remap.
     """
@@ -213,26 +182,56 @@ def _hierarchy_from_state(spark, exact: DataFrame, inst: DataFrame,
         intent_of[ROOT_ID] = ()
         n_exact.setdefault(ROOT_ID, 0)
 
+    # ROOT_ID is the only concept without a parent
     parent: dict[str, str | None] = _best_parents(intent_of)
     parent[ROOT_ID] = None
+    children: dict[str, list[str]] = {}
+    for cid, pid in parent.items():
+        if pid is not None:
+            children.setdefault(pid, []).append(cid)
 
     # residual leaves: concept has children AND exact-intent instances
-    inner = {p for p in parent.values() if p is not None}
     res_pairs: list[tuple[str, str]] = []
-    for cid in [c for c in intent_of if c in inner and n_exact.get(c, 0) > 0]:
+    for cid in [c for c in intent_of if c in children and n_exact[c] > 0]:
         rcid = cid + RESIDUAL_SUFFIX
         intent_of[rcid] = intent_of[cid]
         n_exact[rcid] = n_exact[cid]
         n_exact[cid] = 0
         parent[rcid] = cid
+        children[cid].append(rcid)
         res_pairs.append((cid, rcid))
 
-    rows = [
-        {"cid": c, "intent": list(intent_of[c]), "n_exact": n_exact[c],
-         "parent_id": parent[c]}
-        for c in intent_of
-    ]
-    concepts, closure = _tree_metadata_driver(spark, rows, root_seed)
+    order = [ROOT_ID]
+    for cid in order:  # breadth-first; reversed, every child precedes its parent
+        order.extend(children.get(cid, ()))
+    count: dict[str, int] = {}
+    for cid in reversed(order):
+        count[cid] = n_exact[cid] + sum(count[k] for k in children.get(cid, ()))
+
+    # (depth, label, ancestor path, is_leaf) of every surviving concept:
+    # the root and each concept with a nonzero subtree count
+    meta: dict[str, tuple[int, str, list[str], bool]] = {}
+    stack = [(ROOT_ID, 0, root_seed, [])]
+    while stack:
+        cid, d, lbl, path = stack.pop()
+        kids = sorted(k for k in children.get(cid, ()) if count[k])
+        meta[cid] = (d, lbl, path, not kids)
+        for rank, kid in enumerate(kids):
+            stack.append((kid, d + 1, lbl + str(rank), path + [cid]))
+
+    kept = [c for c in intent_of if c in meta]
+    concepts = spark.createDataFrame(
+        [
+            (c, parent[c], meta[c][0], meta[c][1], count[c], list(intent_of[c]), meta[c][3])
+            for c in kept
+        ],
+        "concept_id string, parent_id string, depth int, label string, "
+        "count long, intent array<string>, is_leaf boolean",
+    )
+    closure = spark.createDataFrame(
+        [(c, a) for c in kept for a in [c, *meta[c][2]]],
+        "desc string, anc string",
+    )
 
     if res_pairs:
         res_map = F.broadcast(
@@ -302,86 +301,6 @@ def _best_parents(intent_of: dict[str, tuple]) -> dict[str, str]:
     return {
         c: cids[by_rank[b]] if b < n else ROOT_ID for c, b in zip(cids, best.tolist())
     }
-
-
-def _tree_metadata_driver(spark, rows, root_seed: str):
-    """Depth/label/closure/count pass on the collected concept table.
-
-    Pure-Python BFS over the (small) concept adjacency — the same labeling
-    rule as T3 (`util/TreeUtils.java:82-90`): child rank = ascending cid,
-    label = parent label + rank. ``rows`` is the already-collected parents
-    table (cid, intent, n_exact, parent_id). Returns (concepts, closure)
-    DataFrames.
-    """
-    info = {r["cid"]: (r["intent"], r["n_exact"], r["parent_id"]) for r in rows}
-    children: dict[str, list[str]] = {}
-    roots = []
-    for cid, (_, _, pid) in info.items():
-        if pid is None:
-            roots.append(cid)
-        else:
-            children.setdefault(pid, []).append(cid)
-
-    # subtree counts first (post-order), so instance-free subtrees —
-    # possible when Galois closure adds concepts nothing maps through —
-    # can be pruned before labeling
-    count: dict[str, int] = {}
-
-    def _subtree_count(start: str) -> None:
-        order = []
-        stack = [start]
-        while stack:
-            cid = stack.pop()
-            order.append(cid)
-            stack.extend(children.get(cid, ()))
-        for cid in reversed(order):
-            count[cid] = info[cid][1] + sum(
-                count[k] for k in children.get(cid, ())
-            )
-
-    for r in roots:
-        _subtree_count(r)
-    pruned = {cid for cid in info if count[cid] == 0 and cid not in roots}
-    if pruned:
-        info = {c: v for c, v in info.items() if c not in pruned}
-        children = {
-            c: [k for k in kids if k not in pruned]
-            for c, kids in children.items()
-            if c not in pruned
-        }
-
-    depth: dict[str, int] = {}
-    label: dict[str, str] = {}
-    anc_path: dict[str, list[str]] = {}
-    stack = [(r, 0, root_seed, []) for r in sorted(roots)]
-    while stack:
-        cid, d, lbl, path = stack.pop()
-        depth[cid] = d
-        label[cid] = lbl
-        anc_path[cid] = path
-        for rank, kid in enumerate(sorted(children.get(cid, ()))):
-            stack.append((kid, d + 1, lbl + str(rank), path + [cid]))
-    concepts = spark.createDataFrame(
-        [
-            (
-                cid,
-                info[cid][2],
-                depth[cid],
-                label[cid],
-                count[cid],
-                list(info[cid][0]),
-                not children.get(cid),
-            )
-            for cid in info
-        ],
-        "concept_id string, parent_id string, depth int, label string, "
-        "count long, intent array<string>, is_leaf boolean",
-    )
-    closure = spark.createDataFrame(
-        [(cid, a) for cid in info for a in [cid, *anc_path[cid]]],
-        "desc string, anc string",
-    )
-    return concepts, closure
 
 
 # ---------------------------------------------------------------------------

@@ -15,6 +15,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from .dedup import committed_ids
 
@@ -22,6 +23,17 @@ EVENTS_SCHEMA = (
     "event_id long, ts timestamp, user_id long, event_type string, "
     "value double, props string"
 )
+
+
+def _drain(writer: DataStreamWriter, timeout_sec: int, message: str) -> StreamingQuery:
+    """Start ``writer`` with an AvailableNow trigger and wait for it to
+    drain; stop it and raise ``TimeoutError(message)`` past
+    ``timeout_sec``. Returns the completed StreamingQuery."""
+    q = writer.trigger(availableNow=True).start()
+    if not q.awaitTermination(timeout_sec):
+        q.stop()
+        raise TimeoutError(message)
+    return q
 
 
 def read_events_stream(spark: SparkSession, path: str,
@@ -207,16 +219,11 @@ def run_hierarchy_stream(instances_stream: DataFrame, state_dir: str,
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         merge_batch_into_state(batch_df, batch_id, state_dir)
 
-    q = (
+    return _drain(
         instances_stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", state_dir + "/_ckpt")
-        .trigger(availableNow=True)
-        .start()
+        .option("checkpointLocation", state_dir + "/_ckpt"),
+        timeout_sec, "hierarchy stream did not drain",
     )
-    if not q.awaitTermination(timeout_sec):
-        q.stop()
-        raise TimeoutError("hierarchy stream did not drain")
-    return q
 
 
 def merge_batch_into_state(batch_df: DataFrame, batch_id: int,
@@ -224,7 +231,14 @@ def merge_batch_into_state(batch_df: DataFrame, batch_id: int,
     """The foreachBatch handler body of :func:`run_hierarchy_stream`,
     exposed module-level so the replay contract is directly testable:
     calling this twice with the same ``batch_id`` must leave the state
-    byte-identical to calling it once (idempotent replay)."""
+    byte-identical to calling it once (idempotent replay).
+
+    Old instances are never rescanned: a batch adds only its concept-sized
+    intent-state delta. The tree is a pure function of the merged state,
+    so ingesting D1 then D2 and reading ``hierarchy_from_state_dir`` is
+    BIT-IDENTICAL to ``build_hierarchy(D1 ∪ D2)`` in either order,
+    including the leaf→inner transition where earlier instances remap to a
+    fresh residual leaf (tests/test_concepts.py)."""
     import os
 
     from .concepts import _canonical_intents, intent_state, merge_intent_state
@@ -383,16 +397,11 @@ def run_dedup_stream(docs_stream: DataFrame, store_dir: str,
         if compact_every and (batch_id + 1) % compact_every == 0:
             compact_store(batch_df.sparkSession, store_dir)
 
-    q = (
+    return _drain(
         docs_stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", store_dir + "/_ckpt")
-        .trigger(availableNow=True)
-        .start()
+        .option("checkpointLocation", store_dir + "/_ckpt"),
+        timeout_sec, "dedup stream did not drain",
     )
-    if not q.awaitTermination(timeout_sec):
-        q.stop()
-        raise TimeoutError("dedup stream did not drain")
-    return q
 
 
 def run_stream_available_now(result: DataFrame, query_name: str,
@@ -414,21 +423,15 @@ def run_stream_available_now(result: DataFrame, query_name: str,
     emitted once finalized and its state is evicted, keeping state
     bounded by (watermark horizon / window size).
     """
-    q = (
+    return _drain(
         result.writeStream.format("memory")
         .queryName(query_name)
         .outputMode(output_mode)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+        .option("checkpointLocation", checkpoint_dir),
+        timeout_sec,
+        f"stream {query_name!r} did not drain within {timeout_sec}s; "
+        "memory table would be partial",
     )
-    if not q.awaitTermination(timeout_sec):
-        q.stop()
-        raise TimeoutError(
-            f"stream {query_name!r} did not drain within {timeout_sec}s; "
-            "memory table would be partial"
-        )
-    return q
 
 
 def run_watermark_dedup_stream(events_stream: DataFrame, out_dir: str,
@@ -448,17 +451,12 @@ def run_watermark_dedup_stream(events_stream: DataFrame, out_dir: str,
     AvailableNow drain.
     """
     key_cols = key_cols or ["event_id"]
-    q = (
+    return _drain(
         events_stream.withWatermark(ts_col, delay)
         .dropDuplicatesWithinWatermark(key_cols)
         .writeStream.format("parquet")
         .option("path", out_dir + "/data")
         .option("checkpointLocation", out_dir + "/_ckpt")
-        .trigger(availableNow=True)
-        .outputMode("append")
-        .start()
+        .outputMode("append"),
+        timeout_sec, "watermark dedup stream did not drain",
     )
-    if not q.awaitTermination(timeout_sec):
-        q.stop()
-        raise TimeoutError("watermark dedup stream did not drain")
-    return q

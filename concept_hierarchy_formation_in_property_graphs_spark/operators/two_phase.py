@@ -27,11 +27,15 @@ from .concepts import build_hierarchy, cutoff_labels, cutoff_level
 from .features import collect_intents, incidence, prop_items, structural_features
 
 
-def _items(nodes: DataFrame, edges: DataFrame | None, families) -> DataFrame:
+def _items(nodes: DataFrame, edges: DataFrame | None, families,
+           every_node: bool = False) -> DataFrame:
     """(id, item) rows of the chosen feature families (the parts of an
-    ablation name), union'd; the item prefixes keep the families disjoint."""
+    ablation name), union'd; the item prefixes keep the families disjoint.
+    ``every_node`` gives a node without labels one null label item, so
+    grouping the rows covers every node (``collect_set`` drops the null)."""
+    explode = F.explode_outer if every_node else F.explode
     rows = {
-        "label": lambda: nodes.select("id", F.explode("labels").alias("item")),
+        "label": lambda: nodes.select("id", explode("labels").alias("item")),
         "prop": lambda: nodes.select("id", F.explode(prop_items("props")).alias("item")),
         "struct": lambda: structural_intents(nodes, edges).select(
             F.col("instance_id").alias("id"), F.explode("intent").alias("item")
@@ -124,11 +128,13 @@ def feature_ablation_intents(nodes: DataFrame, edges: DataFrame,
 
     Returns (instance_id, intent) for every node, with the chosen feature
     families union'd into one intent set (``[]`` for a node without items).
+    Every variant includes ``label``, whose rows reach every node, so the
+    node set is not joined back in.
     """
     if variant not in ABLATION_VARIANTS:
         raise ValueError(f"unknown variant {variant!r}")
-    items = _items(nodes, edges, variant.split("_"))
-    return collect_intents(items, nodes).withColumnRenamed("id", "instance_id")
+    items = _items(nodes, edges, variant.split("_"), every_node=True)
+    return collect_intents(items).withColumnRenamed("id", "instance_id")
 
 
 def two_phase_hierarchy(spark: SparkSession, nodes: DataFrame,

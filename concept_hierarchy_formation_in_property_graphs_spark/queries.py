@@ -189,7 +189,16 @@ def tpch_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
-_EDGES_CACHE: dict[tuple[str, str], DataFrame] = {}
+_MEMO: dict[tuple, object] = {}
+
+
+def _session_memo(spark: SparkSession, key: tuple, build):
+    """``build()`` once per (session, key). Keyed by applicationId, so a
+    restarted session re-materializes instead of reusing a dead handle."""
+    k = (spark.sparkContext.applicationId, *key)
+    if k not in _MEMO:
+        _MEMO[k] = build()
+    return _MEMO[k]
 
 
 def tpch_edges_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -202,17 +211,11 @@ def tpch_edges_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     reads of the biggest table. ``localCheckpoint(eager=True)`` is the
     in-session stand-in for the production shape: an edge table derived
     once and queried many times.
-    Keyed by applicationId so a restarted session re-materializes.
     """
-    key = (spark.sparkContext.applicationId, sf_dir)
-    df = _EDGES_CACHE.get(key)
-    if df is None:
-        df = tpch_edges(spark, sf_dir).localCheckpoint(eager=True)
-        _EDGES_CACHE[key] = df
-    return df
-
-
-_PR_GRAPH_CACHE: dict[tuple[str, str], tuple[DataFrame, DataFrame]] = {}
+    return _session_memo(
+        spark, ("edges", sf_dir),
+        lambda: tpch_edges(spark, sf_dir).localCheckpoint(eager=True),
+    )
 
 
 def pagerank_graph_cached(spark: SparkSession, sf_dir: str):
@@ -226,15 +229,10 @@ def pagerank_graph_cached(spark: SparkSession, sf_dir: str):
     work; both go to `operators/pagerank.pagerank(graph=...)`."""
     from .operators.pagerank import build_surrogate_graph
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    g = _PR_GRAPH_CACHE.get(key)
-    if g is None:
-        g = build_surrogate_graph(tpch_edges_cached(spark, sf_dir))
-        _PR_GRAPH_CACHE[key] = g
-    return g
-
-
-_CS_CACHE: dict[tuple[str, str], DataFrame] = {}
+    return _session_memo(
+        spark, ("pagerank_graph", sf_dir),
+        lambda: build_surrogate_graph(tpch_edges_cached(spark, sf_dir)),
+    )
 
 
 def characteristic_sets_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -247,14 +245,12 @@ def characteristic_sets_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     itself stays un-memoized in `kg_characteristic_sets`, which times the
     stage honestly from the materialized edge table.
     """
-    key = (spark.sparkContext.applicationId, sf_dir)
-    df = _CS_CACHE.get(key)
-    if df is None:
-        df = characteristic_sets(
+    return _session_memo(
+        spark, ("characteristic_sets", sf_dir),
+        lambda: characteristic_sets(
             None, tpch_edges_cached(spark, sf_dir)
-        ).localCheckpoint(eager=True)
-        _CS_CACHE[key] = df
-    return df
+        ).localCheckpoint(eager=True),
+    )
 
 
 _EDGES_SQL = """
@@ -858,19 +854,29 @@ def kg_concept_hierarchy(spark: SparkSession, sf_dir: str) -> DataFrame:
     `PropertyGraphCobwebProcTest.java:122-199`). Path labels are exercised
     by pytest; here cid is translated to a ','-joined form so the DuckDB
     twin can recompute the whole tree relationally."""
-    from .operators.concepts import RESIDUAL_SUFFIX, SEP, build_hierarchy
+    from .operators.concepts import build_hierarchy
 
     cs = characteristic_sets_cached(spark, sf_dir)
     h = build_hierarchy(
         cs.select(F.col("id").alias("instance_id"), F.col("rel_types").alias("intent"))
     )
-    c = h["concepts"]
-    tr = lambda col: F.replace(  # noqa: E731
-        F.replace(col, F.lit(SEP), F.lit(",")), F.lit(RESIDUAL_SUFFIX), F.lit(",*")
-    )
-    return c.select(
-        tr(F.col("concept_id")).alias("cid"),
-        tr(F.col("parent_id")).alias("parent_cid"),
+    return _oracle_tree(h["concepts"])
+
+
+def _oracle_tree(concepts: DataFrame) -> DataFrame:
+    """(cid, parent_cid, depth, count, is_leaf) with cids in the DuckDB
+    twins' form: ',' for SEP and ',*' for RESIDUAL_SUFFIX."""
+    from .operators.concepts import RESIDUAL_SUFFIX, SEP
+
+    def tr(col: str) -> F.Column:
+        return F.replace(
+            F.replace(F.col(col), F.lit(SEP), F.lit(",")),
+            F.lit(RESIDUAL_SUFFIX), F.lit(",*"),
+        )
+
+    return concepts.select(
+        tr("concept_id").alias("cid"),
+        tr("parent_id").alias("parent_cid"),
         "depth",
         F.col("count"),
         "is_leaf",
@@ -984,32 +990,34 @@ LEFT JOIN counts k ON t.cid = k.cid
 """,
 )
 def kg_incremental_hierarchy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental maintenance (O3/O4/O5 as order-free state merges,
-    `operators/concepts.update_hierarchy`): the instance table arrives in
-    TWO batches (deterministic hash split); the second update must land on
-    the SAME tree the batch oracle computes over all instances at once —
-    the incremental==batch property, value-hash-gated by the driver."""
-    from .operators.concepts import RESIDUAL_SUFFIX, SEP, update_hierarchy
+    """Incremental maintenance (O3/O4/O5 as order-free state merges): the
+    instance table arrives in TWO batches (deterministic hash split), each
+    merged into a persisted state dir by
+    ``streaming.merge_batch_into_state`` — the path the incremental job and
+    the hierarchy stream run. The tree read back with
+    ``hierarchy_from_state_dir`` must be the SAME tree the batch oracle
+    computes over all instances at once — the incremental==batch property,
+    value-hash-gated by the driver."""
+    import shutil
+    import tempfile
+
+    from .operators.streaming import hierarchy_from_state_dir, merge_batch_into_state
 
     cs = characteristic_sets_cached(spark, sf_dir)
     inst = cs.select(
         F.col("id").alias("instance_id"), F.col("rel_types").alias("intent")
     )
-    first = inst.where(md5_long(F.col("instance_id")) % 2 == 0)
-    second = inst.where(md5_long(F.col("instance_id")) % 2 == 1)
-    o1 = update_hierarchy(None, first)
-    o2 = update_hierarchy(o1["state"], second)
-    c = o2["concepts"]
-    tr = lambda col: F.replace(  # noqa: E731
-        F.replace(col, F.lit(SEP), F.lit(",")), F.lit(RESIDUAL_SUFFIX), F.lit(",*")
-    )
-    return c.select(
-        tr(F.col("concept_id")).alias("cid"),
-        tr(F.col("parent_id")).alias("parent_cid"),
-        "depth",
-        F.col("count"),
-        "is_leaf",
-    )
+    state_dir = tempfile.mkdtemp(prefix="kg_inc_state_")
+    try:
+        for b in (0, 1):
+            batch = inst.where(md5_long(F.col("instance_id")) % 2 == b)
+            merge_batch_into_state(batch, b, state_dir)
+        # concepts is built on the driver from the collected state, so the
+        # returned frame reads nothing under state_dir
+        concepts = hierarchy_from_state_dir(spark, state_dir)["concepts"]
+    finally:
+        shutil.rmtree(state_dir, ignore_errors=True)
+    return _oracle_tree(concepts)
 
 
 @_register(
@@ -2014,26 +2022,21 @@ def _pl_text_and_pairs(spark: SparkSession) -> DataFrame:
     return text_and_mention_pairs(pages, all_surfaces(80), phrase_map())
 
 
-_PL_TRIPLES_CACHE: dict[str, DataFrame] = {}
-
-
 def _pl_triples_cached(spark: SparkSession) -> DataFrame:
     """S1→S3 triples over the 300-page fixture, materialized once per
     session — three registered queries (pl_triples, pl_two_phase_hierarchy,
     pl_concept_hierarchy) consume the same stage output, exactly like the
     pipeline's persisted S3 checkpoint."""
-    key = spark.sparkContext.applicationId
-    df = _PL_TRIPLES_CACHE.get(key)
-    if df is None:
-        from .functions.mentions import explode_pairs
-        from .operators.triples import triples_from_mention_pairs
-        from .plans.pipeline import gazetteer_df
+    from .functions.mentions import explode_pairs
+    from .operators.triples import triples_from_mention_pairs
+    from .plans.pipeline import gazetteer_df
 
+    def build() -> DataFrame:
         mp = explode_pairs(_pl_text_and_pairs(spark))
         links = gazetteer_df(spark, 80).select("surface", "canonical")
-        df = triples_from_mention_pairs(mp, links).localCheckpoint(eager=True)
-        _PL_TRIPLES_CACHE[key] = df
-    return df
+        return triples_from_mention_pairs(mp, links).localCheckpoint(eager=True)
+
+    return _session_memo(spark, ("pl_triples",), build)
 
 
 @_register(

@@ -15,7 +15,10 @@ intent ARRAY<STRING>). The state dir uses the same versioned layout as
 `operators/streaming.run_hierarchy_stream` (state/v{N} + CURRENT pointer +
 per-batch inst/b{N}/), so a batch job and a streaming job can share state.
 Because the lattice is a pure function of the merged state, any batch
-arrival order yields the identical tree (test-enforced).
+arrival order yields the identical tree, bit-identical to
+`build_hierarchy` over the union. This is the package's one incremental
+path: `tests/test_concepts.py`'s incremental tests and the
+`kg_incremental_hierarchy` oracle query both run it.
 """
 
 from __future__ import annotations

@@ -8,6 +8,8 @@ from __future__ import annotations
 import itertools
 import math
 import random
+import shutil
+import tempfile
 
 import pytest
 from pyspark.sql import functions as F
@@ -319,32 +321,44 @@ def test_galois_closure_equals_bruteforce_at_10x():
     assert got == want
 
 
-def test_incremental_update_equals_batch_rebuild(spark):
-    """The reference's core USP (incremental insertion) without its order
-    dependence: update_hierarchy(state(D1), D2) must be BIT-IDENTICAL to
-    build_hierarchy(D1 ∪ D2) — including the leaf→inner transition where
-    i1's concept {a} gains a child {a,b} and i1 remaps to the fresh
-    residual leaf."""
-    from concept_hierarchy_formation_in_property_graphs_spark.operators.concepts import (
-        update_hierarchy,
+def _ingest(spark, batches):
+    """Merge each batch into a fresh persisted state dir (batch ids 0, 1,
+    ...) and read the tree back — the incremental job's and the hierarchy
+    stream's path."""
+    from concept_hierarchy_formation_in_property_graphs_spark.operators.streaming import (
+        hierarchy_from_state_dir,
+        merge_batch_into_state,
     )
 
+    state_dir = tempfile.mkdtemp(prefix="chf_inc_")
+    try:
+        for b, rows in enumerate(batches):
+            merge_batch_into_state(_instances(spark, rows), b, state_dir)
+        h = hierarchy_from_state_dir(spark, state_dir, galois=True)
+        return {k: sorted(map(tuple, h[k].collect()))
+                for k in ("concepts", "assignments", "closure")}
+    finally:
+        shutil.rmtree(state_dir, ignore_errors=True)
+
+
+def test_incremental_update_equals_batch_rebuild(spark):
+    """The reference's core USP (incremental insertion) without its order
+    dependence: merging D2 into the persisted state of D1 must be
+    BIT-IDENTICAL to build_hierarchy(D1 ∪ D2) — including the leaf→inner
+    transition where i1's concept {a} gains a child {a,b} and i1 remaps to
+    the fresh residual leaf."""
     d1 = [("i1", ["a"]), ("i2", ["b", "c"]), ("i3", ["a"])]
     d2 = [("i4", ["a", "b"]), ("i5", ["b", "c"]), ("i6", ["b"])]
 
-    out1 = update_hierarchy(None, _instances(spark, d1), galois=True)
-    out2 = update_hierarchy(
-        out1["state"], _instances(spark, d2), prev_inst=out1["inst"], galois=True
-    )
+    inc = _ingest(spark, [d1, d2])
     batch = build_hierarchy(_instances(spark, d1 + d2), galois=True)
 
     for key in ("concepts", "assignments", "closure"):
-        inc = sorted(map(tuple, out2[key].collect()))
         full = sorted(map(tuple, batch[key].collect()))
-        assert inc == full, f"incremental != batch in {key}"
+        assert inc[key] == full, f"incremental != batch in {key}"
 
     # the leaf→inner remap happened: i1/i3 now live under the residual of 'a'
-    assign = {r["instance_id"]: r["concept_id"] for r in out2["assignments"].collect()}
+    assign = dict(inc["assignments"])
     assert assign["i1"] == "a" + RESIDUAL_SUFFIX
     assert assign["i4"] == "a" + SEP + "b"
 
@@ -352,26 +366,16 @@ def test_incremental_update_equals_batch_rebuild(spark):
 def test_incremental_update_order_free(spark):
     """Batch arrival order must not matter (the order effect the reference
     mitigates by shuffling, T8 — impossible here by construction)."""
-    from concept_hierarchy_formation_in_property_graphs_spark.operators.concepts import (
-        update_hierarchy,
-    )
-
     rows = [
         (f"i{k}", sorted({random.Random(500 + k).choice("abcde") for _ in range(3)}))
         for k in range(40)
     ]
     a, b = rows[:20], rows[20:]
 
-    ab1 = update_hierarchy(None, _instances(spark, a), galois=True)
-    ab = update_hierarchy(ab1["state"], _instances(spark, b),
-                          prev_inst=ab1["inst"], galois=True)
-    ba1 = update_hierarchy(None, _instances(spark, b), galois=True)
-    ba = update_hierarchy(ba1["state"], _instances(spark, a),
-                          prev_inst=ba1["inst"], galois=True)
+    ab = _ingest(spark, [a, b])
+    ba = _ingest(spark, [b, a])
     for key in ("concepts", "assignments", "closure"):
-        assert sorted(map(tuple, ab[key].collect())) == sorted(
-            map(tuple, ba[key].collect())
-        ), f"order dependence in {key}"
+        assert ab[key] == ba[key], f"order dependence in {key}"
 
 
 def test_empty_inputs_degenerate_gracefully(spark):

@@ -99,6 +99,18 @@ def test_decontaminate_broadcasts_bench_grams(spark):
     assert "SortMergeJoin" not in plan, "corpus grams shuffled for the join"
 
 
+def test_ablation_intents_read_the_node_set_once(spark):
+    """The label rows already reach every node (explode_outer), so the
+    ablation intents aggregate the items alone: no join back onto a
+    second node-set aggregate, and four reads of the checkpointed edge
+    table (node ids from src and dst, Rel items from src and dst) instead
+    of six."""
+    plan = _plan(spark, "kg_ablation_label_char")
+    assert "Join" not in plan, "node set joined back onto the intents"
+    n_rdd = len(re.findall(r"^\(\d+\) Scan ExistingRDD", plan, re.M))
+    assert n_rdd == 4, f"{n_rdd} edge-table scans"
+
+
 def test_aqe_splits_skewed_join_partitions(spark):
     """The session's AQE skew-join path actually fires: a join with one
     hot key (200k of 220k rows) must show SortMergeJoin(skew=true) in

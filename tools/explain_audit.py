@@ -50,14 +50,14 @@ def audit_plan(name: str, plan: str) -> list[str]:
     if "BatchEvalPython" in plan:
         notes.append("HAZARD: row-at-a-time Python UDF in plan")
     n_codegen = len(set(re.findall(r"\[codegen id : (\d+)\]", plan)))
-    n_exchange = len(re.findall(r"Exchange", plan))
-    n_bcast = len(re.findall(r"BroadcastExchange", plan))
+    # one numbered detail header per plan node; a ReusedExchange is no new one
+    nodes = re.findall(r"^\(\d+\) (.+?)\s*$", plan, re.M)
     scans = re.findall(r"ReadSchema: (.*)", plan)
     # scans of localCheckpointed inputs (the kg_* edge table) carry no ReadSchema
-    n_rdd = len(re.findall(r"^\(\d+\) Scan ExistingRDD", plan, re.M))
     notes.append(
-        f"codegen spans={n_codegen} exchanges={n_exchange} "
-        f"(broadcast={n_bcast}) scans={len(scans)} rdd_scans={n_rdd}"
+        f"codegen spans={n_codegen} shuffles={nodes.count('Exchange')} "
+        f"broadcasts={nodes.count('BroadcastExchange')} scans={len(scans)} "
+        f"rdd_scans={nodes.count('Scan ExistingRDD')}"
     )
     for s in scans:
         notes.append(f"  ReadSchema: {s[:140]}")
