@@ -22,10 +22,11 @@ FOREST_MIN_SUPPORT = 0.005  # TreeUtils.java:199
 TABLE_MIN_SUPPORT = 0.05    # TreeUtils.java:133
 
 
-def _collect_tree(concepts: DataFrame):
-    rows = concepts.select(
-        "concept_id", "parent_id", "depth", "label", "count"
-    ).collect()
+def _collect_tree(concepts: DataFrame, name_col: str = "label"):
+    cols = ["concept_id", "parent_id", "depth", "label", "count"]
+    if name_col not in cols:
+        cols.append(name_col)
+    rows = concepts.select(*cols).collect()
     info = {r["concept_id"]: r.asDict() for r in rows}
     children: dict[str, list[str]] = {}
     roots = []
@@ -67,16 +68,10 @@ def to_bracket(concepts: DataFrame, name_col: str = "label",
                min_support: float = 0.0) -> str:
     """P7 — bracket notation `{root{kid}{kid...}}` (the format apted.jar
     consumes, `tree_edit_distance.py:53-124`)."""
-    cols = ["concept_id", "parent_id", "depth", "label", "count"]
-    if name_col not in cols:
-        cols.append(name_col)
-    info2 = {
-        r["concept_id"]: r.asDict() for r in concepts.select(*cols).collect()
-    }
-    info, children, roots = _collect_tree(concepts)
+    info, children, roots = _collect_tree(concepts, name_col)
 
     def rec(cid: str) -> str:
-        name = str(info2[cid][name_col])
+        name = str(info[cid][name_col])
         kids = "".join(
             rec(k) for k in children.get(cid, ())
             if _support_ok(info, info[cid], k, min_support)
@@ -276,8 +271,10 @@ def _parse_bracket(s: str) -> tuple[str, list]:
 
 
 def _postorder(tree: tuple[str, list]) -> tuple[list[str], list[int]]:
-    """(labels, leftmost-leaf-descendant index) in postorder, iteratively
-    (planted taxonomies can be deeper than the recursion limit)."""
+    """(labels, leftmost-leaf-descendant index) in postorder, by a
+    recursive walk: one Python frame per tree level, so a tree deeper
+    than the interpreter's recursion limit raises RecursionError (as
+    `_parse_bracket` does on the same input)."""
     labels: list[str] = []
     lml: list[int] = []
 

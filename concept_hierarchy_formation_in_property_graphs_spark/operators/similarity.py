@@ -1,12 +1,15 @@
 """Similarity search over the ``embeddings`` table (array<float> column).
 
 Brute-force cosine top-k (correctness baseline) and LSH/IVF-bucketed
-approximate variants (scale path). Per-pair verify dots run JVM-side via
-``zip_with`` + ``aggregate`` in double precision; the many-plane
-signature/quantizer projections run as ONE Arrow-batched NumPy matmul per
-batch against a closure-broadcast matrix (vectorized, no per-row Python)
-— Catalyst evaluates a 32-plane expression tree mostly interpreted, which
-was the round-2 hot spot.
+approximate variants (scale path). Every ANN path builds its own join
+(cross join, centroid lists, or sign buckets with their multi-probe list)
+and hands it to the one scorer, ``_top_k``. Per-pair verify dots run
+JVM-side via ``zip_with`` + ``aggregate`` in double precision; the
+many-plane projections run as ONE Arrow-batched NumPy matmul per batch
+against a closure-broadcast matrix (vectorized, no per-row Python):
+``_sign_codes`` for random-hyperplane sign codes, ``_matmul_udf`` for the
+IVF centroid scores. Catalyst evaluates a 32-plane expression tree mostly
+interpreted, which was the round-2 hot spot.
 """
 
 from __future__ import annotations
@@ -28,12 +31,41 @@ def _dot(a, b):
 
 
 def _norm(a):
-    return F.sqrt(
-        F.aggregate(
-            F.transform(a, lambda x: x.cast("double") * x.cast("double")),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
+    return F.sqrt(_dot(a, a))
+
+
+def _with_norm(embeddings: DataFrame, *extra) -> DataFrame:
+    """Base side: (vec_id, embedding, nrm, *extra)."""
+    return embeddings.select(
+        "vec_id", "embedding", _norm(F.col("embedding")).alias("nrm"), *extra
+    )
+
+
+def _query_side(base: DataFrame, query_ids: list[int], *extra) -> DataFrame:
+    """Query side (tiny, broadcast by the caller): (query_id, q_emb, q_nrm,
+    *extra) for the query rows of a ``_with_norm`` base."""
+    return base.where(F.col("vec_id").isin(query_ids)).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("q_emb"),
+        F.col("nrm").alias("q_nrm"),
+        *extra,
+    )
+
+
+def _top_k(joined: DataFrame, k: int) -> DataFrame:
+    """(query_id, neighbor_id, rank, score4) over a base ⋈ query-side
+    candidate join: cosine score, then a per-query top-k window. rank
+    breaks ties by neighbor_id so output is engine-stable."""
+    scored = joined.where(F.col("vec_id") != F.col("query_id")).withColumn(
+        "score",
+        _dot(F.col("embedding"), F.col("q_emb")) / (F.col("nrm") * F.col("q_nrm")),
+    )
+    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("vec_id"))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= k)
+        .select("query_id", F.col("vec_id").alias("neighbor_id"), "rank",
+                F.round("score", 4).alias("score4"))
     )
 
 
@@ -42,34 +74,10 @@ def cosine_topk_bruteforce(embeddings: DataFrame, query_ids: list[int],
     """(query_id, neighbor_id, rank, score4) — exact top-k by cosine.
 
     Queries are a tiny dimension → broadcast; the big side streams through
-    one codegen'd projection, then a per-query top-k window. rank breaks
-    ties by neighbor_id so output is engine-stable.
+    one codegen'd projection, then a per-query top-k window.
     """
-    base = embeddings.select("vec_id", "embedding", _norm(F.col("embedding")).alias("nrm"))
-    queries = base.where(F.col("vec_id").isin(query_ids)).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("nrm").alias("q_nrm"),
-    )
-    scored = (
-        base.crossJoin(F.broadcast(queries))
-        .where(F.col("vec_id") != F.col("query_id"))
-        .withColumn(
-            "score",
-            _dot(F.col("embedding"), F.col("q_emb")) / (F.col("nrm") * F.col("q_nrm")),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            "rank",
-            F.round("score", 4).alias("score4"),
-        )
-    )
+    base = _with_norm(embeddings)
+    return _top_k(base.crossJoin(F.broadcast(_query_side(base, query_ids))), k)
 
 
 def _matmul_udf(matrix: "np.ndarray"):
@@ -89,6 +97,28 @@ def _matmul_udf(matrix: "np.ndarray"):
         return pd.Series(list(m @ mat_t))
 
     return dots_udf
+
+
+def _sign_codes(n_planes: int, bands: int, seed: int, dim: int):
+    """array<int> pandas UDF: ``bands`` random-hyperplane sign codes per
+    row. The planes are ``RandomState(seed).randn(n_planes, dim)``; band b
+    covers planes [b·r, (b+1)·r) with r = n_planes // bands, and plane i
+    of a band is bit i of its code. All sign dots of an Arrow batch are
+    ONE NumPy matmul against the closure-broadcast plane matrix."""
+    planes_t = np.random.RandomState(seed).randn(n_planes, dim).T.copy()
+    r = n_planes // bands
+    weights = 1 << np.arange(r, dtype=np.int64)
+
+    @F.pandas_udf("array<int>")
+    def sign_codes_udf(emb: pd.Series) -> pd.Series:
+        m = np.asarray(emb.tolist(), dtype=np.float64)
+        if m.size == 0:
+            return pd.Series([], dtype=object)
+        bits = (m @ planes_t >= 0.0).astype(np.int64)
+        codes = (bits.reshape(-1, bands, r) * weights).sum(axis=2)
+        return pd.Series(list(codes.astype(np.int32)))
+
+    return sign_codes_udf
 
 
 def _argmax_positions(scores, n: int) -> list:
@@ -123,41 +153,17 @@ def ivf_ann(embeddings: DataFrame, query_ids: list[int], k: int = 5,
     centroid so a probe is a partition-pruned scan of nprobe/n_centroids
     of the data, no shuffle at query time.
     """
-    rng = np.random.RandomState(seed)
-    cents = rng.randn(n_centroids, dim)
-
-    base = embeddings.select(
-        "vec_id", "embedding",
-        _norm(F.col("embedding")).alias("nrm"),
-        _matmul_udf(cents)(F.col("embedding")).alias("cscores"),
+    cents = np.random.RandomState(seed).randn(n_centroids, dim)
+    base = _with_norm(
+        embeddings, _matmul_udf(cents)(F.col("embedding")).alias("cscores")
     ).withColumn(
         "centroid", F.array_position(F.col("cscores"), F.array_max("cscores"))
     ).localCheckpoint(eager=False)
     probes = _argmax_positions(F.col("cscores"), nprobe)
-    queries = (
-        base.where(F.col("vec_id").isin(query_ids))
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("q_emb"),
-            F.col("nrm").alias("q_nrm"),
-            F.explode(F.array(*probes)).alias("centroid"),
-        )
+    queries = _query_side(
+        base, query_ids, F.explode(F.array(*probes)).alias("centroid")
     )
-    scored = (
-        base.join(F.broadcast(queries), "centroid")
-        .where(F.col("vec_id") != F.col("query_id"))
-        .withColumn(
-            "score",
-            _dot(F.col("embedding"), F.col("q_emb")) / (F.col("nrm") * F.col("q_nrm")),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", F.col("vec_id").alias("neighbor_id"), "rank",
-                F.round("score", 4).alias("score4"))
-    )
+    return _top_k(base.join(F.broadcast(queries), "centroid"), k)
 
 
 def embedding_near_dup_pairs(embeddings: DataFrame, threshold: float = 0.4,
@@ -174,39 +180,17 @@ def embedding_near_dup_pairs(embeddings: DataFrame, threshold: float = 0.4,
     per-band bucket self-join is the MinHash paths' own
     (`lsh.bucket_pairs`), replacing the O(n²) cross join; it has no
     hot-bucket cap here, so a mega-cluster still costs B·(B−1)/2 pairs."""
-    rng = np.random.RandomState(seed)
-    # (dim, n_planes) so the signature step is ONE matmul per Arrow batch
-    planes_t = rng.randn(n_planes, dim).T.copy()
-    r = n_planes // bands
-    band_weights = 1 << np.arange(r, dtype=np.int64)
-
-    @F.pandas_udf("array<int>")
-    def band_hash_udf(emb: pd.Series) -> pd.Series:
-        # n_planes sign dots per row as a single NumPy matrix multiply
-        # against the closure-broadcast plane matrix — vectorized math,
-        # no per-row Python, ~1000× fewer interpreter steps than the
-        # equivalent 32× aggregate(zip_with(...)) Catalyst expression
-        # tree this replaced (round-2 hot spot: 17-21 s → sub-second).
-        mat = np.asarray(emb.tolist(), dtype=np.float64)
-        if mat.size == 0:
-            return pd.Series([], dtype=object)
-        bits = (mat @ planes_t >= 0.0).astype(np.int64)
-        hashes = (bits.reshape(-1, bands, r) * band_weights).sum(axis=2)
-        return pd.Series(list(hashes.astype(np.int32)))
-
     # The sign-bit band rows are skinny (vec_id, band_idx, band_hash), so
     # the shared bucket self-join never holds a vector, and a bucket is
     # pairs, not one row that grows with the corpus; cosine is verified
     # by joining the vectors back onto the distinct candidate pairs.
     banded = embeddings.select(
         F.col("vec_id").alias("id"),
-        F.posexplode(band_hash_udf(F.col("embedding"))).alias(
-            "band_idx", "band_hash"
-        ),
+        F.posexplode(
+            _sign_codes(n_planes, bands, seed, dim)(F.col("embedding"))
+        ).alias("band_idx", "band_hash"),
     )
-    vecs = embeddings.select(
-        "vec_id", "embedding", _norm(F.col("embedding")).alias("nrm")
-    )
+    vecs = _with_norm(embeddings)
     a = vecs.toDF("id_a", "e_a", "n_a")
     b = vecs.toDF("id_b", "e_b", "n_b")
     return (
@@ -228,9 +212,10 @@ def lsh_bucketed_ann(embeddings: DataFrame, query_ids: list[int], k: int = 5,
     """Random-hyperplane LSH ANN: bucket by sign pattern, search own bucket.
 
     The planes are a deterministic pseudo-random matrix generated from the
-    seed (no runtime randomness). At 100 TB the bucket join replaces the
-    cross join — candidate count drops by ~2^n_planes. Pass ``dim``
-    explicitly to avoid the driver-side first() schema sniff.
+    seed (no runtime randomness); the bucket is the single-band
+    ``_sign_codes`` code. At 100 TB the bucket join replaces the cross
+    join — candidate count drops by ~2^n_planes. Pass ``dim`` explicitly
+    to avoid the driver-side first() schema sniff.
 
     ``multiprobe=True`` additionally probes every Hamming-distance-1
     bucket (each sign bit flipped once): a true neighbour differs from the
@@ -242,56 +227,19 @@ def lsh_bucketed_ann(embeddings: DataFrame, query_ids: list[int], k: int = 5,
     """
     if dim is None:
         dim = len(embeddings.select("embedding").first()[0])
-    rng = np.random.RandomState(seed)
-    planes_t = rng.randn(n_planes, dim).T.copy()
-    weights = 1 << np.arange(n_planes, dtype=np.int64)
-
-    @F.pandas_udf("int")
-    def bucket_udf(emb: pd.Series) -> pd.Series:
-        # all sign dots in one Arrow-batched matmul (see _matmul_udf)
-        m = np.asarray(emb.tolist(), dtype=np.float64)
-        if m.size == 0:
-            return pd.Series([], dtype="int32")
-        buckets = ((m @ planes_t >= 0.0) * weights).sum(axis=1)
-        return pd.Series(buckets.astype(np.int32))
-
     # two plan branches (big side + query side) reference the bucketed
     # projection — materialize it once
-    base = embeddings.select(
-        "vec_id", "embedding",
-        _norm(F.col("embedding")).alias("nrm"),
-        bucket_udf(F.col("embedding")).alias("bucket"),
+    base = _with_norm(
+        embeddings,
+        _sign_codes(n_planes, 1, seed, dim)(F.col("embedding"))[0].alias("bucket"),
     ).localCheckpoint(eager=False)
-    queries = base.where(F.col("vec_id").isin(query_ids)).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("nrm").alias("q_nrm"),
-        F.col("bucket").alias("q_bucket"),
-    )
+    queries = _query_side(base, query_ids, F.col("bucket").alias("q_bucket"))
     if multiprobe:
-        probe_list = F.array(
-            F.col("q_bucket"),
-            *[
-                F.col("q_bucket").bitwiseXOR(F.lit(1 << i))
-                for i in range(n_planes)
-            ],
-        )
+        q = F.col("q_bucket")
+        probes = F.array(q, *[q.bitwiseXOR(F.lit(1 << i)) for i in range(n_planes)])
         queries = queries.select(
-            "query_id", "q_emb", "q_nrm",
-            F.explode(probe_list).alias("q_bucket"),
+            "query_id", "q_emb", "q_nrm", F.explode(probes).alias("q_bucket")
         )
-    scored = (
-        base.join(F.broadcast(queries), F.col("bucket") == F.col("q_bucket"))
-        .where(F.col("vec_id") != F.col("query_id"))
-        .withColumn(
-            "score",
-            _dot(F.col("embedding"), F.col("q_emb")) / (F.col("nrm") * F.col("q_nrm")),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", F.col("vec_id").alias("neighbor_id"), "rank",
-                F.round("score", 4).alias("score4"))
+    return _top_k(
+        base.join(F.broadcast(queries), F.col("bucket") == F.col("q_bucket")), k
     )

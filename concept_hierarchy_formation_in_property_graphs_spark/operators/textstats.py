@@ -33,11 +33,35 @@ def token_counts(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
+def _n_stop(t):
+    stops = F.array(*[F.lit(s) for s in EN_STOPWORDS])
+    return F.size(F.filter(t, lambda x: F.array_contains(stops, x)))
+
+
+def _lang_col(text_col: str, threshold: float):
+    t = _tokens(F.col(text_col))
+    ratio = _n_stop(t) / F.size(t)
+    return F.when(ratio >= threshold, F.lit("en")).otherwise(F.lit("other"))
+
+
+def _quality_col(text_col: str):
+    t = _tokens(F.col(text_col))
+    n = F.size(t)
+    length_score = F.least(n / F.lit(100.0), F.lit(1.0))
+    diversity = F.size(F.array_distinct(t)) / n
+    stop_score = F.least(_n_stop(t) / n / F.lit(0.1), F.lit(1.0))
+    return F.round(0.4 * length_score + 0.3 * diversity + 0.3 * stop_score, 4)
+
+
+def _fingerprint_col(text_col: str):
+    t = _tokens(F.col(text_col))
+    return F.md5(F.concat_ws(" ", F.array_sort(F.array_distinct(t))))
+
+
 def stopword_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """(doc_id, n_stop, stop_ratio4) — stopword density."""
     t = _tokens(F.col(text_col))
-    stops = F.array(*[F.lit(s) for s in EN_STOPWORDS])
-    n_stop = F.size(F.filter(t, lambda x: F.array_contains(stops, x)))
+    n_stop = _n_stop(t)
     return docs.select(
         "doc_id",
         n_stop.alias("n_stop"),
@@ -48,39 +72,19 @@ def stopword_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
 def language_id(docs: DataFrame, text_col: str = "text",
                 threshold: float = 0.05) -> DataFrame:
     """(doc_id, lang_pred) — 'en' if stopword density >= threshold."""
-    t = _tokens(F.col(text_col))
-    stops = F.array(*[F.lit(s) for s in EN_STOPWORDS])
-    ratio = F.size(F.filter(t, lambda x: F.array_contains(stops, x))) / F.size(t)
-    return docs.select(
-        "doc_id",
-        F.when(ratio >= threshold, F.lit("en")).otherwise(F.lit("other")).alias("lang_pred"),
-    )
+    return docs.select("doc_id", _lang_col(text_col, threshold).alias("lang_pred"))
 
 
 def quality_scores(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """(doc_id, quality4) — composite in [0,1]:
     0.4·length_score + 0.3·lexical_diversity + 0.3·stopword_presence."""
-    t = _tokens(F.col(text_col))
-    n = F.size(t)
-    stops = F.array(*[F.lit(s) for s in EN_STOPWORDS])
-    stop_ratio = F.size(F.filter(t, lambda x: F.array_contains(stops, x))) / n
-    length_score = F.least(n / F.lit(100.0), F.lit(1.0))
-    diversity = F.size(F.array_distinct(t)) / n
-    stop_score = F.least(stop_ratio / F.lit(0.1), F.lit(1.0))
-    return docs.select(
-        "doc_id",
-        F.round(0.4 * length_score + 0.3 * diversity + 0.3 * stop_score, 4).alias("quality4"),
-    )
+    return docs.select("doc_id", _quality_col(text_col).alias("quality4"))
 
 
 def fingerprints(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """(doc_id, fingerprint) — md5 over the sorted distinct token set
     (order-insensitive content fingerprint)."""
-    t = _tokens(F.col(text_col))
-    return docs.select(
-        "doc_id",
-        F.md5(F.concat_ws(" ", F.array_sort(F.array_distinct(t)))).alias("fingerprint"),
-    )
+    return docs.select("doc_id", _fingerprint_col(text_col).alias("fingerprint"))
 
 
 def repetition_signals(docs: DataFrame, text_col: str = "text") -> DataFrame:
@@ -223,23 +227,11 @@ def admission_signals(docs: DataFrame, text_col: str = "text") -> DataFrame:
     naive composition of the single-signal operators costs 6 scans + 5
     joins — the difference is ~40% of the curation job's hot stage.
     """
-    t = _tokens(F.col(text_col))
-    n = F.size(t)
-    stops = F.array(*[F.lit(s) for s in EN_STOPWORDS])
-    n_stop = F.size(F.filter(t, lambda x: F.array_contains(stops, x)))
-    stop_ratio = n_stop / n
-    length_score = F.least(n / F.lit(100.0), F.lit(1.0))
-    diversity = F.size(F.array_distinct(t)) / n
-    stop_score = F.least(stop_ratio / F.lit(0.1), F.lit(1.0))
-
     flat = docs.select(
         "doc_id",
-        F.round(0.4 * length_score + 0.3 * diversity + 0.3 * stop_score, 4)
-        .alias("quality4"),
-        F.when(stop_ratio >= 0.05, F.lit("en")).otherwise(F.lit("other"))
-        .alias("lang_pred"),
-        F.md5(F.concat_ws(" ", F.array_sort(F.array_distinct(t))))
-        .alias("fingerprint"),
+        _quality_col(text_col).alias("quality4"),
+        _lang_col(text_col, 0.05).alias("lang_pred"),
+        _fingerprint_col(text_col).alias("fingerprint"),
         _dup_trigram_col(text_col).alias("dup_trigram_frac4"),
     )
     return _join_agg_signals(flat, docs, text_col)

@@ -29,6 +29,8 @@ from pyspark.sql import functions as F
 
 from .functions.hashing import md5_long, md5_long_sql, perm_coeffs, permuted_sql
 from .operators.concepts import (
+    RESIDUAL_SUFFIX,
+    SEP,
     _best_parents,
     category_utility,
     concept_stats,
@@ -863,20 +865,20 @@ def kg_concept_hierarchy(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _oracle_tree(h["concepts"])
 
 
+def _oracle_cid(col: str) -> F.Column:
+    """A concept id in the DuckDB twins' form: ',' for SEP and ',*' for
+    RESIDUAL_SUFFIX."""
+    return F.replace(
+        F.replace(F.col(col), F.lit(SEP), F.lit(",")),
+        F.lit(RESIDUAL_SUFFIX), F.lit(",*"),
+    )
+
+
 def _oracle_tree(concepts: DataFrame) -> DataFrame:
-    """(cid, parent_cid, depth, count, is_leaf) with cids in the DuckDB
-    twins' form: ',' for SEP and ',*' for RESIDUAL_SUFFIX."""
-    from .operators.concepts import RESIDUAL_SUFFIX, SEP
-
-    def tr(col: str) -> F.Column:
-        return F.replace(
-            F.replace(F.col(col), F.lit(SEP), F.lit(",")),
-            F.lit(RESIDUAL_SUFFIX), F.lit(",*"),
-        )
-
+    """(cid, parent_cid, depth, count, is_leaf) with `_oracle_cid` cids."""
     return concepts.select(
-        tr("concept_id").alias("cid"),
-        tr("parent_id").alias("parent_cid"),
+        _oracle_cid("concept_id").alias("cid"),
+        _oracle_cid("parent_id").alias("parent_cid"),
         "depth",
         F.col("count"),
         "is_leaf",
@@ -1245,16 +1247,16 @@ def kg_concept_factor(spark: SparkSession, sf_dir: str) -> DataFrame:
     h = build_hierarchy(
         cs.select(F.col("id").alias("instance_id"), F.col("rel_types").alias("intent"))
     )
-    tr = lambda col: F.replace(F.col(col), F.lit("\x1f"), F.lit(","))  # noqa: E731
     # residual leaves are a tree artifact, not concepts — exclude from the
     # factor table (they only ever appear as closure descendants)
     closure = (
         h["closure"]
-        .where(~F.col("desc").contains("\x1e"))
-        .select(tr("desc").alias("desc"), tr("anc").alias("anc"))
+        .where(~F.col("desc").contains(RESIDUAL_SUFFIX))
+        .select(_oracle_cid("desc").alias("desc"), _oracle_cid("anc").alias("anc"))
     )
     counts = h["concepts"].select(
-        tr("concept_id").alias("cid"), F.col("count").cast("double").alias("cnt")
+        _oracle_cid("concept_id").alias("cid"),
+        F.col("count").cast("double").alias("cnt"),
     )
     up = closure.select(
         F.col("desc").alias("this"), F.col("anc").alias("val"), F.lit(1.0).alias("factor")

@@ -1,30 +1,26 @@
 """SQL surface over the engine: every registered query as a temp view.
 
 A user who lives in SQL should not need the Python API to consume the
-engine's outputs. ``register_catalog`` registers (a) the raw tables of an
-sf directory and (b) every ``queries.registry()`` entry as a lazy temp
-view, so
+engine's outputs. :class:`LazyCatalog` registers (a) the raw tables of an
+sf directory and (b) every ``queries.registry()`` entry as a view, so
 
-    register_catalog(spark, sf_dir)
-    spark.sql("SELECT * FROM kg_concept_hierarchy").show()
-    spark.sql(\"\"\"SELECT h.label, p.scaled_rank4
-                 FROM kg_pagerank p JOIN kg_degrees d ON p.id = d.id
-                 ORDER BY p.scaled_rank4 DESC LIMIT 10\"\"\")
+    cat = LazyCatalog(spark, sf_dir)
+    cat.sql("SELECT * FROM kg_concept_hierarchy").show()
+    cat.sql(\"\"\"SELECT p.id, p.scaled_rank4, d.deg
+               FROM kg_pagerank p JOIN kg_degrees d ON p.id = d.id
+               ORDER BY p.scaled_rank4 DESC LIMIT 10\"\"\")
 
 works, composes (views join against views and raw tables), and inherits
 every physical-plan property of the DataFrame implementations — the view
 is the SAME lazy plan, so Catalyst fuses user SQL on top of it (filters
 push into the view, unused columns prune out of it).
 
-Most views are lazy — registering them costs one plan analysis. The
-exceptions are the driver-coordinated queries (the hierarchy family's
-fast path, pagerank's checkpointed iteration loop, the pipeline/fixture
-``pl_*``/``mm_*`` stages): their builders do real work when invoked.
-``register_catalog`` runs every builder up front (fine for a handful of
-views, or with ``include``); :class:`LazyCatalog` is the production
-shape — registration records only the builder thunks, and a view's
-builder runs on the FIRST ``catalog.sql(...)`` that references it, so a
-session that only ever touches three views pays for three.
+Registration records only the builder thunks. Most builders are cheap
+(one plan analysis), but the driver-coordinated ones (the hierarchy
+family, pagerank's checkpointed iteration loop, the pipeline/fixture
+``pl_*``/``mm_*`` stages) do real work when invoked, so a view's builder
+runs on the FIRST ``catalog.sql(...)`` that references it: a session that
+only ever touches three views pays for three.
 """
 
 from __future__ import annotations
@@ -37,31 +33,6 @@ from . import queries as _q
 from .sources.tables import TPCH_TABLES, load_table
 
 CATALOG_TABLES = tuple(TPCH_TABLES)  # already includes events/documents/embeddings
-
-
-def register_catalog(spark: SparkSession, sf_dir: str,
-                     include: list[str] | None = None,
-                     eager: bool = False) -> list[str]:
-    """Register raw tables + query views; returns the view names.
-
-    ``include`` limits which query views are registered (None = all).
-    ``eager=True`` forces each view's plan to build at registration time
-    (surface errors early); the default defers everything.
-    """
-    for t in CATALOG_TABLES:
-        load_table(spark, sf_dir, t).createOrReplaceTempView(t)
-
-    names = []
-    for name, fn in _q.registry().items():
-        if include is not None and name not in include:
-            continue
-        df = fn(spark, sf_dir)
-        df.createOrReplaceTempView(name)
-        if eager:
-            df.schema  # force analysis
-        names.append(name)
-    return names
-
 
 _IDENT = re.compile(r"[A-Za-z_][A-Za-z0-9_]*")
 

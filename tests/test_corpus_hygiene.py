@@ -73,6 +73,37 @@ def test_repetition_signals_keep_sub_bigram_docs(spark):
     assert sig.count() == 3, "admission_signals dropped short docs"
 
 
+def test_admission_signals_agree_with_single_signal_operators(spark):
+    """The curation job reads quality, language and fingerprint from
+    admission_signals' one fused select; they must equal the standalone
+    operators row for row, on the edge shapes the formulas divide by."""
+    from concept_hierarchy_formation_in_property_graphs_spark.operators.textstats import (
+        admission_signals,
+        fingerprints,
+        language_id,
+        quality_scores,
+    )
+
+    docs = _docs(spark, [
+        "solo",                          # 1 token
+        "the of and to",                 # stopwords only
+        "spark spark data data spark",   # repeated tokens, no stopword
+        "the cat and the hat",           # mixed, repeated stopword
+    ])
+    fused = {r["doc_id"]: (r["quality4"], r["lang_pred"], r["fingerprint"])
+             for r in admission_signals(docs).collect()}
+    single = {}
+    for q, lang, fp in zip(
+        sorted(quality_scores(docs).collect()),
+        sorted(language_id(docs).collect()),
+        sorted(fingerprints(docs).collect()),
+    ):
+        assert q["doc_id"] == lang["doc_id"] == fp["doc_id"]
+        single[q["doc_id"]] = (q["quality4"], lang["lang_pred"], fp["fingerprint"])
+    assert fused == single
+    assert {v[1] for v in fused.values()} == {"en", "other"}
+
+
 def test_stratified_sample_deterministic_and_capped(spark):
     df = spark.createDataFrame(
         [(i, f"s{i % 3}") for i in range(40)], "doc_id long, source string"

@@ -1,27 +1,29 @@
-"""The SQL surface: query views compose under spark.sql."""
+"""The SQL surface: query views compose under LazyCatalog.sql."""
 
 from __future__ import annotations
 
+import pytest
+
 from concept_hierarchy_formation_in_property_graphs_spark.sql_catalog import (
-    register_catalog,
+    LazyCatalog,
 )
 
 SF_DIR = "/root/testdata/sf0.001"
 
 
 def test_catalog_views_compose_in_sql(spark):
-    names = register_catalog(
+    cat = LazyCatalog(
         spark, SF_DIR,
         include=["kg_degrees", "kg_pagerank", "tx_quality_scores",
                  "q_top2_orders_per_customer"],
     )
-    assert len(names) == 4
+    assert len(cat.pending) == 4
 
     # plain view read
-    assert spark.sql("SELECT * FROM tx_quality_scores").count() > 0
+    assert cat.sql("SELECT * FROM tx_quality_scores").count() > 0
 
     # view ⋈ view composition with user SQL on top
-    top = spark.sql("""
+    top = cat.sql("""
         SELECT p.id, p.scaled_rank4, d.deg
         FROM kg_pagerank p JOIN kg_degrees d ON p.id = d.id
         ORDER BY p.scaled_rank4 DESC, p.id LIMIT 5
@@ -32,7 +34,7 @@ def test_catalog_views_compose_in_sql(spark):
     assert top[0]["deg"] > 100
 
     # view ⋈ raw table: the catalog registers both layers
-    joined = spark.sql("""
+    joined = cat.sql("""
         SELECT count(*) AS n
         FROM q_top2_orders_per_customer t JOIN customer c
           ON t.o_custkey = c.c_custkey
@@ -40,37 +42,19 @@ def test_catalog_views_compose_in_sql(spark):
     assert joined > 0
 
 
-import os
-
-import pytest
-
-
-@pytest.mark.skipif(os.environ.get("CHF_FULL_CATALOG") != "1",
-                    reason="registers all 66 views incl. eager builders "
-                           "(~4 min); run with CHF_FULL_CATALOG=1")
-def test_catalog_registers_every_query(spark):
-    names = register_catalog(spark, SF_DIR)
-    from concept_hierarchy_formation_in_property_graphs_spark import queries as q
-
-    assert set(names) == set(q.registry())
-
-
 def test_lazy_catalog_defers_builders_until_referenced(spark):
     """LazyCatalog registers the FULL query surface at zero builder cost;
     a view's builder (incl. the driver-coordinated ones like pagerank's
     iteration loop) runs only when a sql() statement first names it."""
     from concept_hierarchy_formation_in_property_graphs_spark import queries as q
-    from concept_hierarchy_formation_in_property_graphs_spark.sql_catalog import (
-        LazyCatalog,
-    )
 
     spark.catalog.dropTempView("kg_pagerank")  # isolate from other tests
     cat = LazyCatalog(spark, SF_DIR)
     assert set(cat.pending) == set(q.registry())
     assert cat.built == []
     # full-surface registration must not run any builder: the pending
-    # views' temp views do not exist yet (eager registration of the same
-    # surface takes minutes — CHF_FULL_CATALOG)
+    # views' temp views do not exist yet (running every builder takes
+    # minutes)
     assert not spark.catalog.tableExists("kg_pagerank")
 
     rows = cat.sql("""
@@ -98,8 +82,8 @@ def test_view_filter_pushes_into_parquet_scan(spark):
     import io
     from contextlib import redirect_stdout
 
-    register_catalog(spark, SF_DIR, include=["tx_quality_scores"])
-    df = spark.sql("SELECT * FROM tx_quality_scores WHERE doc_id = 7")
+    cat = LazyCatalog(spark, SF_DIR, include=["tx_quality_scores"])
+    df = cat.sql("SELECT * FROM tx_quality_scores WHERE doc_id = 7")
     buf = io.StringIO()
     with redirect_stdout(buf):
         df.explain("formatted")
@@ -112,10 +96,6 @@ def test_failed_builder_stays_pending_and_retries(spark):
     """ADVICE r4: a builder that raises must NOT be consumed — the view
     stays pending, the original error surfaces on every attempt, and a
     fixed builder (here: flaky-once) succeeds on retry."""
-    from concept_hierarchy_formation_in_property_graphs_spark.sql_catalog import (
-        LazyCatalog,
-    )
-
     cat = LazyCatalog(spark, SF_DIR, include=["kg_degrees"])
     calls = {"n": 0}
     real = cat._pending["kg_degrees"]

@@ -57,7 +57,8 @@ def audit_plan(name: str, plan: str) -> list[str]:
     notes.append(
         f"codegen spans={n_codegen} shuffles={nodes.count('Exchange')} "
         f"broadcasts={nodes.count('BroadcastExchange')} scans={len(scans)} "
-        f"rdd_scans={nodes.count('Scan ExistingRDD')}"
+        f"rdd_scans={nodes.count('Scan ExistingRDD')} "
+        f"python_evals={nodes.count('ArrowEvalPython')}"
     )
     for s in scans:
         notes.append(f"  ReadSchema: {s[:140]}")
