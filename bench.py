@@ -32,6 +32,10 @@ order-sensitive, which hid a regression):
   * queries run as full interleaved sweeps (q1..qN, q1..qN, ...) rather
     than back-to-back repeats, so no query's median benefits from its own
     just-warmed page cache more than the others.
+  * a query is timed through a ``noop`` write of all its columns, and
+    its row count is taken once, after the timed region: a bare ``count()``
+    lets Catalyst prune most of a plan, so medians from before this rule
+    (which timed ``count()``) are not comparable with later ones.
 
 Scaling evidence (north rule): run twice, SPARK_GRAFT_CPUS=8 then =32, on
 identical input; efficiency = T_8 / (4 * T_32).
@@ -159,10 +163,12 @@ def main() -> None:
     row_counts: dict[str, int] = {}
     for _ in range(rounds):
         for name in BENCH_QUERIES:
-            fn = reg[name]
             t0 = time.time()
-            row_counts[name] = fn(spark, sf_dir).count()
+            df = reg[name](spark, sf_dir)
+            df.write.format("noop").mode("overwrite").save()
             query_runs[name].append(round(time.time() - t0, 3))
+            if name not in row_counts:  # once, outside the timed region
+                row_counts[name] = df.count()
     timings = {
         name: round(statistics.median(runs), 3)
         for name, runs in query_runs.items()

@@ -179,12 +179,17 @@ def text_and_mention_pairs(
     Rows that already carry ``text`` keep it and send no html; NULL-text
     rows run :func:`extract_text_py`. ``pairs`` holds the page's mention
     pairs in text order, built as Arrow arrays (no pandas frame).
+    The pass runs on at least 2× defaultParallelism partitions (parquet
+    splits by BYTES: a 16 MB input is one split even on 32 cores); the
+    repartition sits above the html projection, so WET rows ship no html.
     """
     surfaces = tuple(surfaces)
     phrases = dict(phrase_to_pred)
     src = pages.select(
         "url", "text", F.when(F.col("text").isNull(), F.col("html")).alias("html")
     )
+    par = pages.sparkSession.sparkContext.defaultParallelism * 2
+    src = src.repartition(par) if src.rdd.getNumPartitions() < par else src
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         matcher = compile_surface_matcher(surfaces)

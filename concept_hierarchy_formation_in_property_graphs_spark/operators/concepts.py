@@ -35,6 +35,7 @@ up to 379k concepts are in BASELINE.md ("One lattice engine").
 
 from __future__ import annotations
 
+from collections import defaultdict
 from collections.abc import Iterable
 
 import numpy as np
@@ -160,27 +161,24 @@ def _hierarchy_from_state(spark, exact: DataFrame, inst: DataFrame,
       * one pre-order walk for depth, label and ancestor path, with the
         labeling rule of T3 (`util/TreeUtils.java:82-90`): child rank =
         ascending cid, label = parent label + rank
-    Only ``assignments`` stays distributed: instance → concept with the
-    (tiny, broadcast) residual remap.
+    The driver hands Spark ONE local table, ``tree``: the concept columns
+    plus ``ancestors`` (the root-first path). Every output is a JVM
+    projection of it: ``concepts`` drops ``ancestors``, ``closure``
+    explodes ``[concept_id] ++ ancestors``, and ``assignments`` maps each
+    instance's cid through the residual remap (the tree rows whose id is
+    parent_id + RESIDUAL_SUFFIX, broadcast) with a left join.
     """
     intent_of: dict[str, tuple] = {}
-    n_exact: dict[str, int] = {}
+    n_exact: dict[str, int] = defaultdict(int)  # 0 for closure-only concepts and ⊤
     for r in exact.collect():
         cid = r["cid"]
         intent_of[cid] = tuple(r["intent"])
-        n_exact[cid] = n_exact.get(cid, 0) + int(r["n_exact"])
+        n_exact[cid] += int(r["n_exact"])
 
     if galois:
-        for s in galois_closure(intent_of.values()):
-            t = tuple(sorted(s))
-            cid = SEP.join(t)
-            if cid not in intent_of:
-                intent_of[cid] = t
-                n_exact[cid] = 0
-
-    if ROOT_ID not in intent_of:
-        intent_of[ROOT_ID] = ()
-        n_exact.setdefault(ROOT_ID, 0)
+        for t in (tuple(sorted(s)) for s in galois_closure(intent_of.values())):
+            intent_of.setdefault(SEP.join(t), t)
+    intent_of.setdefault(ROOT_ID, ())
 
     # ROOT_ID is the only concept without a parent
     parent: dict[str, str | None] = _best_parents(intent_of)
@@ -191,7 +189,6 @@ def _hierarchy_from_state(spark, exact: DataFrame, inst: DataFrame,
             children.setdefault(pid, []).append(cid)
 
     # residual leaves: concept has children AND exact-intent instances
-    res_pairs: list[tuple[str, str]] = []
     for cid in [c for c in intent_of if c in children and n_exact[c] > 0]:
         rcid = cid + RESIDUAL_SUFFIX
         intent_of[rcid] = intent_of[cid]
@@ -199,7 +196,6 @@ def _hierarchy_from_state(spark, exact: DataFrame, inst: DataFrame,
         n_exact[cid] = 0
         parent[rcid] = cid
         children[cid].append(rcid)
-        res_pairs.append((cid, rcid))
 
     order = [ROOT_ID]
     for cid in order:  # breadth-first; reversed, every child precedes its parent
@@ -208,43 +204,32 @@ def _hierarchy_from_state(spark, exact: DataFrame, inst: DataFrame,
     for cid in reversed(order):
         count[cid] = n_exact[cid] + sum(count[k] for k in children.get(cid, ()))
 
-    # (depth, label, ancestor path, is_leaf) of every surviving concept:
-    # the root and each concept with a nonzero subtree count
-    meta: dict[str, tuple[int, str, list[str], bool]] = {}
+    # one tree row per surviving concept: the root and each concept with a
+    # nonzero subtree count, ancestors = the root-first path
+    rows = []
     stack = [(ROOT_ID, 0, root_seed, [])]
     while stack:
         cid, d, lbl, path = stack.pop()
         kids = sorted(k for k in children.get(cid, ()) if count[k])
-        meta[cid] = (d, lbl, path, not kids)
+        rows.append((cid, parent[cid], d, lbl, count[cid], list(intent_of[cid]), not kids, path))
         for rank, kid in enumerate(kids):
             stack.append((kid, d + 1, lbl + str(rank), path + [cid]))
-
-    kept = [c for c in intent_of if c in meta]
-    concepts = spark.createDataFrame(
-        [
-            (c, parent[c], meta[c][0], meta[c][1], count[c], list(intent_of[c]), meta[c][3])
-            for c in kept
-        ],
+    tree = spark.createDataFrame(
+        rows,
         "concept_id string, parent_id string, depth int, label string, "
-        "count long, intent array<string>, is_leaf boolean",
+        "count long, intent array<string>, is_leaf boolean, ancestors array<string>",
     )
-    closure = spark.createDataFrame(
-        [(c, a) for c in kept for a in [c, *meta[c][2]]],
-        "desc string, anc string",
+    closure = tree.select(
+        F.col("concept_id").alias("desc"),
+        F.explode(F.concat(F.array("concept_id"), "ancestors")).alias("anc"),
     )
-
-    if res_pairs:
-        res_map = F.broadcast(
-            spark.createDataFrame(res_pairs, "cid string, res_cid string")
-        )
-        assignments = inst.join(res_map, "cid", "left").select(
-            "instance_id", F.coalesce("res_cid", "cid").alias("concept_id")
-        )
-    else:
-        assignments = inst.select(
-            "instance_id", F.col("cid").alias("concept_id")
-        )
-    return {"concepts": concepts, "assignments": assignments, "closure": closure}
+    remap = tree.where(
+        F.col("concept_id") == F.concat("parent_id", F.lit(RESIDUAL_SUFFIX))
+    ).select(F.col("parent_id").alias("cid"), F.col("concept_id").alias("res_cid"))
+    assignments = inst.join(F.broadcast(remap), "cid", "left").select(
+        "instance_id", F.coalesce("res_cid", "cid").alias("concept_id")
+    )
+    return {"concepts": tree.drop("ancestors"), "assignments": assignments, "closure": closure}
 
 
 def _best_parents(intent_of: dict[str, tuple]) -> dict[str, str]:

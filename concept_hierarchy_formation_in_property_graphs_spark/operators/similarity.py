@@ -104,7 +104,11 @@ def _sign_codes(n_planes: int, bands: int, seed: int, dim: int):
     row. The planes are ``RandomState(seed).randn(n_planes, dim)``; band b
     covers planes [b·r, (b+1)·r) with r = n_planes // bands, and plane i
     of a band is bit i of its code. All sign dots of an Arrow batch are
-    ONE NumPy matmul against the closure-broadcast plane matrix."""
+    ONE NumPy matmul against the closure-broadcast plane matrix. Raises
+    ``ValueError`` unless ``bands`` divides ``n_planes`` with 1 ≤ r ≤ 31
+    (a code is a non-negative int32)."""
+    if bands < 1 or n_planes % bands or not 1 <= n_planes // bands <= 31:
+        raise ValueError(f"n_planes={n_planes} and bands={bands}: need bands | n_planes, r <= 31")
     planes_t = np.random.RandomState(seed).randn(n_planes, dim).T.copy()
     r = n_planes // bands
     weights = 1 << np.arange(r, dtype=np.int64)

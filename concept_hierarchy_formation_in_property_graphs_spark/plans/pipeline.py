@@ -57,22 +57,12 @@ def run_pipeline(
 ) -> dict:
     """Run (or resume) the full pipeline; returns stage DataFrames.
 
-    Stages are parquet snapshots under ``workdir``. The CPU-bound Python
-    pass (S1 extraction + S2 mention detection, one ``mapInArrow``) runs
-    on at least 2× defaultParallelism partitions: parquet splits input by
-    BYTES (maxPartitionBytes / openCostInBytes bin-packing), which
-    undercuts a compute-bound stage — a 16 MB input is one split even on
-    32 cores.
+    Stages are parquet snapshots under ``workdir``.
 
     Raises ``ValueError`` when the workdir holds an ``s1_text`` snapshot
     without the ``pairs`` column (written before S1 and S2 were one pass).
     """
     runner = StageRunner(spark, workdir)
-    par = spark.sparkContext.defaultParallelism * 2
-
-    def _spread(df: DataFrame) -> DataFrame:
-        # only pay the shuffle when the byte-based split is too coarse
-        return df.repartition(par) if df.rdd.getNumPartitions() < par else df
 
     # S1 + S2 — text and gazetteer mention pairs, one Python pass (filter
     # first so non-target languages never cross the Arrow boundary). The
@@ -84,7 +74,7 @@ def run_pipeline(
     s1 = runner.stage(
         "s1_text",
         lambda: text_and_mention_pairs(
-            _spread(pages.where(F.col("lang") == lang)),
+            pages.where(F.col("lang") == lang),
             all_surfaces(mention_entities or n_entities),
             phrase_map(),
         ),

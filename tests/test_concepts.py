@@ -81,6 +81,17 @@ def test_hierarchy_structure_and_labels(spark):
     # assignments: leaves only, residual remap
     assign = {r["instance_id"]: r["concept_id"] for r in h["assignments"].collect()}
     assert assign == {"i1": res_a, "i2": ab, "i3": ab, "i4": ac, "i5": res_root}
+    # closure: every concept with itself and each ancestor, residuals included
+    closure = {(r["desc"], r["anc"]) for r in h["closure"].collect()}
+    assert h["closure"].count() == len(closure) == 14
+    assert closure == {
+        ("", ""),
+        ("a", "a"), ("a", ""),
+        (ab, ab), (ab, "a"), (ab, ""),
+        (ac, ac), (ac, "a"), (ac, ""),
+        (res_root, res_root), (res_root, ""),
+        (res_a, res_a), (res_a, "a"), (res_a, ""),
+    }
     # reference invariant suite
     assert invariant_violations(h["concepts"], h["assignments"]) == {
         "dup_instance": 0,
@@ -92,8 +103,12 @@ def test_hierarchy_structure_and_labels(spark):
 
 def test_cutoff_level_log2_rule(spark):
     # log2(deepest)+1 with integer log2 and log2(0) = -1 (MathUtils.java:20-25)
-    root_only = _instances(spark, [("i", [])])
-    assert cutoff_level(build_hierarchy(root_only)["concepts"]) == 0
+    root_only = build_hierarchy(_instances(spark, [("i", [])]))
+    assert cutoff_level(root_only["concepts"]) == 0
+    # no residual leaf: the instance keeps its own (root) concept
+    assert {r["instance_id"]: r["concept_id"] for r in root_only["assignments"].collect()} == {
+        "i": ""
+    }
     h = build_hierarchy(
         _instances(spark, [("1", ["a"]), ("2", ["a", "b"]), ("3", ["a", "b", "c"])])
     )

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from concept_hierarchy_formation_in_property_graphs_spark.operators.dedup import (
@@ -13,6 +14,7 @@ from concept_hierarchy_formation_in_property_graphs_spark.operators.dedup import
     simhash,
 )
 from concept_hierarchy_formation_in_property_graphs_spark.operators.similarity import (
+    _sign_codes,
     cosine_topk_bruteforce,
     lsh_bucketed_ann,
 )
@@ -237,6 +239,19 @@ def test_lsh_multiprobe_dominates_single_probe(spark):
         for r in cosine_topk_bruteforce(emb, qs, k=5).collect()
     }
     assert len(multi & truth) > len(single & truth)
+
+
+def test_sign_codes_fit_int32(spark):
+    """A band code packs r = n_planes // bands sign bits into an int32:
+    r = 32 would wrap the top bit negative and a split that leaves planes
+    over would mix rows, so both raise; r = 31 codes stay non-negative."""
+    with pytest.raises(ValueError, match="n_planes=32 and bands=1"):
+        _sign_codes(32, 1, 0, 4)
+    with pytest.raises(ValueError, match="n_planes=10 and bands=3"):
+        _sign_codes(10, 3, 0, 4)
+    emb = _emb(spark, [[1.0, 2.0, 3.0, 4.0], [-1.0, 0.5, -2.0, 1.0]])
+    codes = emb.select(_sign_codes(62, 2, 0, 4)(F.col("embedding")).alias("c")).collect()
+    assert all(len(r["c"]) == 2 and all(0 <= c < 2**31 for c in r["c"]) for r in codes)
 
 
 def test_ngram_jaccard_is_order_sensitive(spark):

@@ -156,7 +156,9 @@ class _StopAfterS2(Exception):
 def test_s1_is_one_arrow_pass_and_s2_runs_in_the_jvm(spark, monkeypatch):
     """S1 and S2 cross into Python once: the S1 plan holds exactly one
     Python node, a MapInArrow whose input sends html only for rows
-    without text; the S2 plan (an explode of S1's pairs) holds none."""
+    without text, projected below the repartition so the exchange carries
+    no html for WET rows; the S2 plan (an explode of S1's pairs) holds
+    none."""
     from concept_hierarchy_formation_in_property_graphs_spark.plans.checkpoint import (
         StageRunner,
     )
@@ -177,16 +179,22 @@ def test_s1_is_one_arrow_pass_and_s2_runs_in_the_jvm(spark, monkeypatch):
     monkeypatch.setattr(StageRunner, "stage", spy)
     wd = tempfile.mkdtemp(prefix="chf_plan_")
     try:
+        # parquet input, as in production: over an in-memory relation
+        # Catalyst evaluates the html projection at planning time
+        src = os.path.join(wd, "pages")
+        pages_spark_df(spark, 30, n_entities=20).write.parquet(src)
         with pytest.raises(_StopAfterS2):
-            run_pipeline(spark, pages_spark_df(spark, 30, n_entities=20), wd,
-                         n_entities=20)
+            run_pipeline(spark, spark.read.parquet(src), wd, n_entities=20)
     finally:
         shutil.rmtree(wd, ignore_errors=True)
     python_nodes = re.compile(r"\b\w*(?:InArrow|InPandas|EvalPython)\b")
     assert python_nodes.findall(plans["s1_text"]) == ["MapInArrow"]
-    assert re.search(
+    case = re.search(
         r"CASE WHEN isnull\(text#\d+\) THEN html#\d+ END AS html#\d+", plans["s1_text"]
-    ), plans["s1_text"]
+    )
+    assert case, plans["s1_text"]
+    # a parent node prints above its child: the Exchange consumes the projection
+    assert -1 < plans["s1_text"].find("Exchange") < case.start(), plans["s1_text"]
     assert python_nodes.findall(plans["s2_mentions"]) == [], plans["s2_mentions"]
 
 
