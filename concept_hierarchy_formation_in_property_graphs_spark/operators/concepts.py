@@ -114,38 +114,30 @@ def galois_closure(intents: Iterable[Iterable[str]]) -> set[frozenset]:
     of a planted taxonomy are exactly the intersections of observed leaf
     intents, so closure turns a flat exact-intent lattice into the tree.
 
-    Every closed set is an intersection of generators (the nonempty
-    intents) reachable one generator at a time, so each round intersects
-    only the previous round's NEW sets with the generators, never
-    known×known. Empty intersections are dropped, as in the DuckDB
-    recursive-CTE oracle (`queries.py kg_galois_closure`).
-
-    No round limit is needed: a set new in round r is f & g ≠ f for some
-    f in round r's frontier (round 1's is the input), i.e. a proper
-    subset of it. Sizes strictly fall from frontier to frontier, so round
-    r finds only sets of at most (max intent size − r) items, and the
-    loop ends after at most max intent size + 1 rounds (the last finds
-    nothing). Raises ``ValueError`` past ``DRIVER_CLOSURE_CAP`` closed
-    sets.
+    One pass of Godin's incremental rule, closure(S ∪ {g}) = closure(S) ∪
+    {c ∩ g : c ∈ closure(S)} ∪ {g}, over the generators (the distinct
+    nonempty intents). Each intent is a Python int bitmask over the sorted
+    item alphabet, so ∩ is ``&`` at any alphabet width. Generators go in
+    ascending mask order, so the point where the cap is hit is
+    reproducible. Empty intersections are dropped, as in the DuckDB
+    recursive-CTE oracle (`queries.py kg_galois_closure`); the input sets,
+    the empty intent included, are returned as given. Raises
+    ``ValueError`` past ``DRIVER_CLOSURE_CAP`` closed sets.
     """
-    closed = {frozenset(t) for t in intents}
-    gens = [g for g in closed if g]
-    frontier = closed
-    while frontier:
-        new = set()
-        for f in frontier:
-            for g in gens:
-                x = f & g
-                if x and x not in closed:
-                    new.add(x)
-        closed |= new
+    sets = {frozenset(t) for t in intents}
+    items = sorted(set().union(*sets))
+    bit = {x: 1 << k for k, x in enumerate(items)}
+    closed: set[int] = set()
+    for g in sorted({sum(bit[x] for x in s) for s in sets if s}):
+        closed |= {c & g for c in closed}
+        closed.discard(0)
+        closed.add(g)
         if len(closed) > DRIVER_CLOSURE_CAP:
             raise ValueError(
                 f"Galois closure reached {len(closed)} closed sets, "
                 f"over DRIVER_CLOSURE_CAP={DRIVER_CLOSURE_CAP}"
             )
-        frontier = new
-    return closed
+    return sets | {frozenset(x for k, x in enumerate(items) if m >> k & 1) for m in closed}
 
 
 def _hierarchy_from_state(spark, exact: DataFrame, inst: DataFrame,

@@ -236,18 +236,18 @@ def test_galois_closure_cap_raises(spark, monkeypatch):
 
     rows = [("i1", ["a", "b", "c"]), ("i2", ["a", "b", "d"]), ("i3", ["a", "c", "d"])]
     monkeypatch.setattr(C, "DRIVER_CLOSURE_CAP", 1)
-    with pytest.raises(ValueError, match=r"reached 6 closed sets, over DRIVER_CLOSURE_CAP=1"):
+    with pytest.raises(ValueError, match=r"reached 3 closed sets, over DRIVER_CLOSURE_CAP=1"):
         build_hierarchy(_instances(spark, rows), galois=True)
 
 
 @pytest.mark.parametrize(
     "intents,want",
     [
-        # {a} is found in round 1 and confirmed closed in round 2
+        # {a} is the second generator's meet with the first
         ([("a", "b"), ("a", "c")], {("a", "b"), ("a", "c"), ("a",)}),
-        # the 4-subsets of abcde: round r finds the (4 − r)-subsets, so
-        # the 1-subsets appear only in round 3; the closure is every
-        # nonempty subset
+        # the 4-subsets of abcde: a k-subset is the meet of the 5 − k
+        # generators that contain it, so each 1-subset needs four of them;
+        # the closure is every nonempty subset
         (
             list(itertools.combinations("abcde", 4)),
             {t for k in range(1, 5) for t in itertools.combinations("abcde", k)},
@@ -256,8 +256,8 @@ def test_galois_closure_cap_raises(spark, monkeypatch):
     ids=["two_generators", "subset_chain"],
 )
 def test_galois_closure_reaches_the_fixpoint(intents, want):
-    """The closure loop runs until a round finds nothing new, however many
-    rounds the input needs; no round limit cuts it short."""
+    """One pass over the generators reaches the whole closure, however
+    many generators a closed set is the meet of."""
     assert {tuple(sorted(s)) for s in galois_closure(intents)} == want
 
 

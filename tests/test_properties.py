@@ -5,6 +5,8 @@
 - extract_text_py's space-run collapse ≡ collapsing every space/tab run.
 - build_hierarchy invariants hold and parents are the most specific proper
   subsumer for arbitrary intent multisets.
+- galois_closure ≡ the known×known intersection closure on arbitrary
+  intents over alphabets wider than 64 items, the empty intent included.
 """
 
 from __future__ import annotations
@@ -97,6 +99,37 @@ def test_hierarchy_invariants_random_intents(spark):
                 default=None,
             )
             assert len(pin) == best, (seed, cid, pid)
+
+
+@st.composite
+def _intents(draw):
+    """Up to 12 intents over a shared pool of up to 20 of 100 items, so they
+    overlap, and maybe the whole alphabet as one more intent. With it, bit
+    k is item k of the sorted alphabet, so masks span two 64-bit words."""
+    pool = draw(st.lists(st.integers(0, 99), min_size=1, max_size=20, unique=True))
+    intents = draw(st.lists(st.lists(st.sampled_from(pool), max_size=len(pool)), max_size=12))
+    if draw(st.booleans()):
+        intents.append(range(100))
+    return [[f"x{k:02d}" for k in t] for t in intents]
+
+
+@settings(max_examples=300, deadline=None)
+@given(_intents())
+def test_galois_closure_equals_known_by_known_closure(intents):
+    """The one-pass bitmask closure equals the definition: intersect every
+    pair of closed sets until nothing new appears, dropping empty
+    intersections and keeping the input sets as given."""
+    from concept_hierarchy_formation_in_property_graphs_spark.operators.concepts import (
+        galois_closure,
+    )
+
+    closed = {frozenset(t) for t in intents}
+    while True:
+        new = {a & b for a in closed for b in closed if a & b} - closed
+        if not new:
+            break
+        closed |= new
+    assert galois_closure(intents) == closed
 
 
 def test_connected_components_equals_union_find(spark):

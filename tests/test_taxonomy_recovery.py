@@ -5,6 +5,7 @@ parent-child edges (the JVM-free stand-in for the apted.jar TED scoring)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from concept_hierarchy_formation_in_property_graphs_spark.fixtures.synthetic_labels import (
@@ -72,6 +73,40 @@ def test_taxonomy_recovery_under_noise(spark):
     assert invariant_violations(h["concepts"], h["assignments"]) == {
         "dup_instance": 0, "assign_to_inner": 0, "orphans": 0, "partition_counts": 0,
     }
+
+
+@pytest.mark.parametrize(
+    "noise,n_concepts,p,ted,ted_pruned",
+    [
+        (0.0, 121, 1.0, 0, 0),
+        (0.05, 151, 120 / 143, 30, 8),
+        (0.10, 194, 120 / 172, 73, 15),
+        (0.20, 252, 120 / 208, 131, 28),
+        (0.33, 301, 120 / 233, 180, 52),
+    ],
+    ids=["noise0", "noise5", "noise10", "noise20", "noise33"],
+)
+def test_noise_sweep_is_pinned(spark, noise, n_concepts, p, ted, ted_pruned):
+    """The reference's noise sweep (0/5/10/20/33 %) on a 3-wide, 4-deep
+    planted taxonomy (120 edges), 5 records per leaf: every planted edge
+    survives (R = 1), while each noisy record adds spurious concepts, so P
+    falls and TED grows with noise. Pruning below 5 % of the parent's
+    support, the reference's table threshold (`TreeUtils.java:133`),
+    removes most of that TED. The quality baseline in BASELINE.md."""
+    df = labels_spark_df(spark, width=3, depth=4, iterations=5, noise=noise, seed=7)
+    h = build_hierarchy(
+        df.select(F.col("id").alias("instance_id"), F.col("labels").alias("intent")),
+        galois=True,
+    )
+    _, truth_edges, truth_bracket = generate_labels(3, 4, 5, noise, seed=7)
+    concepts = h["concepts"].where(~F.col("concept_id").contains("\x1e"))
+    named = concepts.withColumn("name", _name_expr())
+    assert concepts.count() == n_concepts
+    got = hierarchy_edge_sets(concepts, _name_expr())
+    assert edge_precision_recall(got, truth_edges) == (p, 1.0)
+    assert tree_edit_distance(to_bracket(named, name_col="name"), truth_bracket) == ted
+    pruned = to_bracket(named, name_col="name", min_support=0.05)
+    assert tree_edit_distance(pruned, truth_bracket) == ted_pruned
 
 
 def test_bracket_export_matches_truth_shape(spark):
