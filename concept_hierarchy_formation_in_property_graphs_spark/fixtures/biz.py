@@ -21,11 +21,12 @@ ALCOHOL = ["full_bar", "beer_and_wine", "none", None]
 ATTIRE = ["casual", "dressy", None]
 NOISE = ["quiet", "average", "loud", None]
 PRICE = ["1", "2", "3", "4", None]
+BIZ_SEED = 42
 
 
-def generate_biz(n: int, seed: int = 42):
+def generate_biz(n: int):
     """Returns (records, expected_triples) — records as list of dicts."""
-    rng = random.Random(seed)
+    rng = random.Random(BIZ_SEED)
     records = []
     triples: set[tuple[str, str, str]] = set()
     for i in range(n):
@@ -82,8 +83,8 @@ BIZ_SCHEMA = (
 )
 
 
-def biz_spark_df(spark, n: int, seed: int = 42):
-    records, _ = generate_biz(n, seed)
+def biz_spark_df(spark, n: int):
+    records, _ = generate_biz(n)
     return spark.createDataFrame(
         [tuple(r.values()) for r in records], BIZ_SCHEMA
     )

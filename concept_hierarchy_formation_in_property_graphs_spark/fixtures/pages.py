@@ -30,6 +30,7 @@ import pandas as pd
 from ..functions.text import extract_text_py
 
 KINDS = ("ORG", "PERSON", "CITY", "PRODUCT", "UNIV")
+PAGES_SEED = 42  # the corpus seed of generate_pages and pages_spark_df
 
 # (subject kind, phrase, object kind, predicate)
 RELATION_PATTERNS = (
@@ -103,8 +104,8 @@ _HTML_TEMPLATE = """<html><head><title>Doc {doc_id}</title>
 </body></html>"""
 
 
-def generate_page(doc_id: int, gaz: list[Entity], n_hubs: int, seed: int = 42,
-                  content_scale: int = 1):
+def generate_page(doc_id: int, gaz: list[Entity], n_hubs: int,
+                  seed: int = PAGES_SEED, content_scale: int = 1):
     """Return (row dict, list of planted canonical triples).
 
     ``content_scale`` multiplies the page body (relation sentences + filler
@@ -153,8 +154,7 @@ def generate_page(doc_id: int, gaz: list[Entity], n_hubs: int, seed: int = 42,
     return row, triples
 
 
-def generate_pages(n_pages: int, n_entities: int = 500, seed: int = 42,
-                   content_scale: int = 1):
+def generate_pages(n_pages: int, n_entities: int = 500, content_scale: int = 1):
     """Returns (pages pandas.DataFrame, expected_text df, expected_triples df).
 
     expected_triples is the DISTINCT set of planted canonical triples over
@@ -165,7 +165,7 @@ def generate_pages(n_pages: int, n_entities: int = 500, seed: int = 42,
     n_hubs = max(1, n_entities // 50)
     rows, texts, all_triples = [], [], set()
     for i in range(n_pages):
-        row, triples = generate_page(i, gaz, n_hubs, seed, content_scale)
+        row, triples = generate_page(i, gaz, n_hubs, PAGES_SEED, content_scale)
         rows.append(row)
         texts.append({"url": row["url"], "text": extract_text_py(row["html"])})
         all_triples.update(triples)
@@ -182,45 +182,16 @@ PAGES_SCHEMA_DDL = (
 )
 
 
-def pages_spark_df(spark, n_pages: int, n_entities: int = 500, seed: int = 42,
+def pages_spark_df(spark, n_pages: int, n_entities: int = 500,
                    partitions: int | None = None, content_scale: int = 1):
-    """Materialize the fixture as a Spark DataFrame with the contract schema."""
-    from pyspark.sql.types import (
-        BinaryType,
-        StringType,
-        StructField,
-        StructType,
-        TimestampType,
-    )
+    """The fixture as a Spark DataFrame with the contract schema, generated
+    ON THE EXECUTORS.
 
-    pages, _, _ = generate_pages(n_pages, n_entities, seed, content_scale)
-    schema = StructType(
-        [
-            StructField("url", StringType()),
-            StructField("warc_ts", TimestampType()),
-            StructField("html", BinaryType()),
-            StructField("text", StringType()),
-            StructField("lang", StringType()),
-        ]
-    )
-    df = spark.createDataFrame(pages, schema=schema)
-    if partitions:
-        df = df.repartition(partitions)
-    return df
-
-
-def pages_spark_df_distributed(spark, n_pages: int, n_entities: int = 500,
-                               seed: int = 42, partitions: int | None = None,
-                               content_scale: int = 1):
-    """Corpus-scale fixture: pages generated ON THE EXECUTORS.
-
-    spark.range drives doc_ids; each Arrow batch synthesizes its pages with
-    the same deterministic per-doc RNG as the driver generator, so output is
-    byte-identical to :func:`pages_spark_df` at any parallelism — but the
-    driver never materializes the corpus (a 10^12-row fixture is just a
-    bigger range)."""
-    import pandas as pd  # noqa: F811 (executor-side import)
-
+    spark.range drives doc_ids over ``partitions`` (default: the default
+    parallelism); each Arrow batch synthesizes its pages with the same
+    deterministic per-doc RNG as :func:`generate_pages`, so the rows equal
+    ``generate_pages(...)[0]`` at any parallelism — but the driver never
+    materializes the corpus (a 10^12-row fixture is just a bigger range)."""
     n_parts = partitions or spark.sparkContext.defaultParallelism
 
     def gen(batches):
@@ -228,7 +199,7 @@ def pages_spark_df_distributed(spark, n_pages: int, n_entities: int = 500,
         n_hubs = max(1, n_entities // 50)
         for pdf in batches:
             rows = [
-                generate_page(int(i), gaz, n_hubs, seed, content_scale)[0]
+                generate_page(int(i), gaz, n_hubs, PAGES_SEED, content_scale)[0]
                 for i in pdf["id"]
             ]
             yield pd.DataFrame(rows, columns=["url", "warc_ts", "html", "text", "lang"])
@@ -239,8 +210,8 @@ def pages_spark_df_distributed(spark, n_pages: int, n_entities: int = 500,
     )
 
 
-def expected_triples_for(n_pages: int, n_entities: int = 500, seed: int = 42,
-                         content_scale: int = 1):
+def expected_triples_for(n_pages: int, n_entities: int = 500,
+                         seed: int = PAGES_SEED, content_scale: int = 1):
     """Planted-truth triples without materializing page bodies (P/R gate
     for corpus-scale runs)."""
     gaz = make_gazetteer(n_entities)

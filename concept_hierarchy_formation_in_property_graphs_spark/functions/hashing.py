@@ -18,6 +18,7 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 HASH_PRIME = 2_147_483_647  # 2^31 - 1
+PERM_SEED = 0x9E3779B9  # seeds the LCG behind every MinHash permutation
 
 
 def md5_long(col: Column) -> Column:
@@ -30,10 +31,10 @@ def md5_long_sql(expr: str) -> str:
     return f"(('0x' || substring(md5({expr}), 1, 15))::BIGINT)"
 
 
-def perm_coeffs(n: int, seed: int = 0x9E3779B9) -> list[tuple[int, int]]:
+def perm_coeffs(n: int) -> list[tuple[int, int]]:
     """n deterministic (a, b) pairs, 1 <= a < p, 0 <= b < p (seeded LCG)."""
     out = []
-    x = seed % HASH_PRIME
+    x = PERM_SEED % HASH_PRIME
     for _ in range(n):
         x = (x * 48271) % HASH_PRIME  # Lehmer
         a = x or 1

@@ -25,8 +25,7 @@ from pyspark.sql import functions as F
 
 
 def range_self_join(events: DataFrame, id_col: str = "event_id",
-                    on: str = "ts", window_sec: int = 300,
-                    payload: list[str] | None = None) -> DataFrame:
+                    on: str = "ts", window_sec: int = 300) -> DataFrame:
     """All pairs of rows within ``window_sec`` of each other — the pure
     RANGE join (no equi key), which Spark would otherwise plan as a
     BroadcastNestedLoopJoin/cartesian.
@@ -39,13 +38,11 @@ def range_self_join(events: DataFrame, id_col: str = "event_id",
     At 100 TB ``window_sec`` controls the candidate blow-up explicitly —
     the knob a cartesian hides.
     """
-    payload = payload or []
     base = events.select(
         F.col(id_col).alias("_id"),
         F.unix_micros(F.col(on).cast("timestamp")).alias("_t")
         if dict(events.dtypes)[on].startswith("timestamp")
         else F.col(on).cast("long").alias("_t"),
-        *payload,
     )
     width = window_sec * 1_000_000
     bucketed = base.withColumn("_b", F.floor(F.col("_t") / width))
@@ -71,14 +68,13 @@ def range_self_join(events: DataFrame, id_col: str = "event_id",
 
 
 def asof_join(left: DataFrame, right: DataFrame, on: str = "ts",
-              by: str = "user_id", right_cols: list[str] | None = None,
-              suffix: str = "") -> DataFrame:
+              by: str = "user_id", right_cols: list[str] | None = None) -> DataFrame:
     """Backward-inclusive left as-of join.
 
     ``right`` must be unique per (by, on) — pre-aggregate otherwise (the
     match at a tied timestamp would be ambiguous). ``right_cols``: payload
-    columns to carry (default: everything but the keys), emitted as
-    ``<col><suffix>``; unmatched left rows get NULLs.
+    columns to carry (default: everything but the keys), emitted under
+    their own names; unmatched left rows get NULLs.
     """
     rc = right_cols or [c for c in right.columns if c not in (by, on)]
     lpay_t = left.select(F.struct(*left.columns).alias("s")).schema[0].dataType
@@ -108,6 +104,6 @@ def asof_join(left: DataFrame, right: DataFrame, on: str = "ts",
         .where(F.col("_il") == 1)
         .select(
             *[F.col(f"_lpay.{c}").alias(c) for c in left.columns],
-            *[F.col(f"_c.{c}").alias(c + suffix) for c in rc],
+            *[F.col(f"_c.{c}").alias(c) for c in rc],
         )
     )

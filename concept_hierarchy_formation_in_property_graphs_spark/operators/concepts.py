@@ -77,29 +77,23 @@ def build_hierarchy(instances: DataFrame, root_seed: str = "c",
 
 
 def intent_state(instances: DataFrame) -> DataFrame:
-    """(cid, intent, n_exact, size) — the exact-intent concept STATE of an
+    """(cid, intent, n_exact) — the exact-intent concept STATE of an
     instance batch: the only thing hierarchy construction needs besides
     the instance→cid map. Concept-sized, mergeable (``merge_intent_state``),
     and the unit of incremental maintenance."""
     inst = _canonical_intents(instances)
-    return (
-        inst.groupBy("cid", "intent")
-        .agg(F.count("*").alias("n_exact"))
-        .withColumn("size", F.size("intent"))
-    )
+    return inst.groupBy("cid", "intent").agg(F.count("*").alias("n_exact"))
 
 
 def merge_intent_state(a: DataFrame, b: DataFrame) -> DataFrame:
-    """Additive merge of two intent states — one concept-sized groupBy."""
+    """Additive merge of two intent states — one concept-sized groupBy.
+    Reads only (cid, intent, n_exact) of each side, so a state written
+    with extra columns still merges."""
+    cols = ["cid", "intent", "n_exact"]
     return (
-        a.unionByName(b)
+        a.select(*cols).unionByName(b.select(*cols))
         .groupBy("cid")
-        .agg(
-            F.first("intent").alias("intent"),
-            F.sum("n_exact").alias("n_exact"),
-            F.max("size").alias("size"),
-        )
-        .select("cid", "intent", "n_exact", "size")
+        .agg(F.first("intent").alias("intent"), F.sum("n_exact").alias("n_exact"))
     )
 
 
@@ -143,7 +137,7 @@ def galois_closure(intents: Iterable[Iterable[str]]) -> set[frozenset]:
 def _hierarchy_from_state(spark, exact: DataFrame, inst: DataFrame,
                           root_seed: str, galois: bool) -> dict[str, DataFrame]:
     """The lattice engine. ONE Spark job collects the exact-intent state
-    (cid, intent, n_exact, size); the concept side then runs on the driver:
+    (cid, intent, n_exact); the concept side then runs on the driver:
       * Galois closure (``galois_closure``), when ``galois``
       * parent: most specific proper subsumer, ties → smallest cid
         (``_best_parents``)

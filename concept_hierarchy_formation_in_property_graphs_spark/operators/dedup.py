@@ -15,25 +15,33 @@ from pyspark.sql import functions as F
 from ..functions.hashing import md5_long
 from .lsh import band_keys, bucket_pairs, jaccard_verify, minhash
 
+# The near-dup LSH setting shared by the batch pairs and incremental ingest,
+# so ingesting in batches retains exactly the full-corpus survivors.
+NEAR_DUP_NUM_PERM = 16
+NEAR_DUP_BANDS = 8
+NEAR_DUP_THRESHOLD = 0.7
+COMPACT_SUBS = ("seen", "bands", "toks", "retained")
+COMPACT_MAX_RECORDS_PER_FILE = 1_000_000
 
-def exact_duplicates(docs: DataFrame, text_col: str = "text") -> DataFrame:
+
+def exact_duplicates(docs: DataFrame) -> DataFrame:
     """Groups of byte-identical texts: (text_hash, keep_id, n_dups).
 
     One map-side-combinable groupBy on md5(text) — the canonical
     keep-smallest-id policy makes the result deterministic.
     """
     return (
-        docs.select(F.md5(F.col(text_col)).alias("text_hash"), F.col("doc_id"))
+        docs.select(F.md5(F.col("text")).alias("text_hash"), F.col("doc_id"))
         .groupBy("text_hash")
         .agg(F.min("doc_id").alias("keep_id"), F.count("*").alias("n_dups"))
         .where(F.col("n_dups") > 1)
     )
 
 
-def dedup_exact(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def dedup_exact(docs: DataFrame) -> DataFrame:
     """documents minus exact duplicates (keep the smallest doc_id)."""
     keep = (
-        docs.select(F.md5(F.col(text_col)).alias("text_hash"), "doc_id")
+        docs.select(F.md5(F.col("text")).alias("text_hash"), "doc_id")
         .groupBy("text_hash")
         .agg(F.min("doc_id").alias("doc_id"))
     )
@@ -58,20 +66,19 @@ def word_ngrams(col, n: int = 3) -> F.Column:
     )
 
 
-def ngram_jaccard_pairs(docs: DataFrame, text_col: str = "text", n: int = 3,
-                        threshold: float = 0.5,
+def ngram_jaccard_pairs(docs: DataFrame, n: int = 3, threshold: float = 0.5,
                         max_id: int | None = None) -> DataFrame:
     """All-pairs exact word-N-GRAM Jaccard (order-sensitive gold standard;
     quadratic — gate with max_id at test scale, block with LSH at corpus
     scale)."""
-    return _all_pairs_jaccard(docs, word_ngrams(F.col(text_col), n), threshold, max_id)
+    return _all_pairs_jaccard(docs, word_ngrams(F.col("text"), n), threshold, max_id)
 
 
-def exact_jaccard_pairs(docs: DataFrame, text_col: str = "text",
-                        threshold: float = 0.5, max_id: int | None = None) -> DataFrame:
+def exact_jaccard_pairs(docs: DataFrame, threshold: float = 0.5,
+                        max_id: int | None = None) -> DataFrame:
     """All-pairs exact word-set Jaccard (gold standard; quadratic — gate
     with max_id at test scale; the LSH path is the production variant)."""
-    return _all_pairs_jaccard(docs, _word_set(text_col), threshold, max_id)
+    return _all_pairs_jaccard(docs, _word_set(), threshold, max_id)
 
 
 def _all_pairs_jaccard(docs: DataFrame, items: F.Column, threshold: float,
@@ -90,35 +97,34 @@ def _all_pairs_jaccard(docs: DataFrame, items: F.Column, threshold: float,
     return _rounded(jaccard_verify(pairs, sets, threshold))
 
 
-def _word_set(text_col: str) -> F.Column:
-    return F.array_distinct(word_tokens(F.col(text_col)))
+def _word_set() -> F.Column:
+    return F.array_distinct(word_tokens(F.col("text")))
 
 
-def _word_sets(docs: DataFrame, text_col: str) -> DataFrame:
+def _word_sets(docs: DataFrame) -> DataFrame:
     """(id, items): the distinct word tokens of each document."""
-    return docs.select(F.col("doc_id").alias("id"), _word_set(text_col).alias("items"))
+    return docs.select(F.col("doc_id").alias("id"), _word_set().alias("items"))
 
 
 def _rounded(verified: DataFrame) -> DataFrame:
     return verified.select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
 
 
-def minhash_signatures(docs: DataFrame, text_col: str = "text",
-                       num_perm: int = 8) -> DataFrame:
+def minhash_signatures(docs: DataFrame, num_perm: int = 8) -> DataFrame:
     """(doc_id, mh0..mh{n-1}) over distinct word tokens.
 
     Wide-column output (not array) so the DuckDB oracle can reproduce each
     value independently.
     """
-    return minhash(_word_sets(docs, text_col), num_perm).select(
+    return minhash(_word_sets(docs), num_perm).select(
         F.col("id").alias("doc_id"),
         *[F.col("sig")[i].alias(f"mh{i}") for i in range(num_perm)],
     )
 
 
-def minhash_near_dup_pairs(docs: DataFrame, text_col: str = "text",
-                           num_perm: int = 16, bands: int = 8,
-                           threshold: float = 0.7,
+def minhash_near_dup_pairs(docs: DataFrame, num_perm: int = NEAR_DUP_NUM_PERM,
+                           bands: int = NEAR_DUP_BANDS,
+                           threshold: float = NEAR_DUP_THRESHOLD,
                            max_bucket: int = 0) -> DataFrame:
     """Scale path: LSH banding → candidate pairs → exact Jaccard verify.
 
@@ -135,19 +141,19 @@ def minhash_near_dup_pairs(docs: DataFrame, text_col: str = "text",
     finding; the static explain's scan count overstates the runtime scans
     here.)
     """
-    sets = _word_sets(docs, text_col)
+    sets = _word_sets(docs)
     banded = band_keys(minhash(sets, num_perm), num_perm, bands)
     return _rounded(jaccard_verify(bucket_pairs(banded, max_bucket), sets, threshold))
 
 
-def simhash(docs: DataFrame, text_col: str = "text", bits: int = 32) -> DataFrame:
+def simhash(docs: DataFrame, bits: int = 32) -> DataFrame:
     """(doc_id, simhash BIGINT): sign-aggregated token hash bits.
 
     Pure conditional sums — whole-stage codegen, no UDF; identical SQL runs
     in DuckDB.
     """
     toks = docs.select(
-        "doc_id", F.explode(_word_set(text_col)).alias("tok")
+        "doc_id", F.explode(_word_set()).alias("tok")
     ).withColumn("h", md5_long(F.col("tok")))
     bit_sums = toks.groupBy("doc_id").agg(
         *[
@@ -248,9 +254,7 @@ def _read_history(spark, store_dir: str, sub: str, below: int) -> DataFrame | No
     return spark.read.parquet(*paths)
 
 
-def compact_store(spark, store_dir: str,
-                  subs: tuple[str, ...] = ("seen", "bands", "toks", "retained"),
-                  max_records_per_file: int = 1_000_000) -> dict:
+def compact_store(spark, store_dir: str) -> dict:
     """Compact an incremental-ingest store's accumulated per-batch dirs.
 
     After thousands of ingested batches the ``b{i}`` layout is a classic
@@ -278,7 +282,7 @@ def compact_store(spark, store_dir: str,
     import shutil
 
     stats: dict = {}
-    for sub in subs:
+    for sub in COMPACT_SUBS:
         ids = committed_ids(os.path.join(store_dir, sub), "b")
         if len(ids) < 2:
             continue
@@ -292,10 +296,10 @@ def compact_store(spark, store_dir: str,
         )
         df = spark.read.parquet(*paths)
         n_rows = df.count()
-        n_parts = max(1, -(-n_rows // max_records_per_file))
+        n_parts = max(1, -(-n_rows // COMPACT_MAX_RECORDS_PER_FILE))
         gdir = os.path.join(store_dir, sub, f"g{hi}")
         df.repartition(n_parts).write.mode("overwrite") \
-            .option("maxRecordsPerFile", max_records_per_file).parquet(gdir)
+            .option("maxRecordsPerFile", COMPACT_MAX_RECORDS_PER_FILE).parquet(gdir)
         # committed — now retire the consumed inputs
         for g in _committed_gens(store_dir, sub):
             if g < hi:
@@ -314,8 +318,7 @@ def compact_store(spark, store_dir: str,
     return stats
 
 
-def ingest_batch_exact(batch: DataFrame, store_dir: str, batch_id: int,
-                       text_col: str = "text") -> DataFrame:
+def ingest_batch_exact(batch: DataFrame, store_dir: str, batch_id: int) -> DataFrame:
     """Exact-dedup one batch against the seen store; returns the retained
     rows (first-seen wins: min doc_id within the batch, drop anything whose
     text hash was seen in a committed earlier batch). Appends the batch's
@@ -324,7 +327,7 @@ def ingest_batch_exact(batch: DataFrame, store_dir: str, batch_id: int,
     import os
 
     spark = batch.sparkSession
-    hashed = batch.withColumn("_h", F.md5(F.col(text_col)))
+    hashed = batch.withColumn("_h", F.md5(F.col("text")))
     in_batch_keep = hashed.groupBy("_h").agg(F.min("doc_id").alias("doc_id"))
     seen = _read_history(spark, store_dir, "seen", batch_id)
     if seen is not None:
@@ -346,20 +349,20 @@ def ingest_batch_exact(batch: DataFrame, store_dir: str, batch_id: int,
     return retained
 
 
-def ingest_batch_near_dup(batch: DataFrame, store_dir: str, batch_id: int,
-                          text_col: str = "text", num_perm: int = 16,
-                          bands: int = 8, threshold: float = 0.7) -> DataFrame:
+def ingest_batch_near_dup(batch: DataFrame, store_dir: str, batch_id: int) -> DataFrame:
     """Near-dup novelty filter for one batch: a document is dropped iff it
-    is an LSH-verified near-duplicate (word-set Jaccard ≥ threshold) of any
-    EARLIER document — a smaller doc_id in the same batch, or any document
-    of a committed earlier batch, retained or not (dropped docs still
-    suppress, exactly like a seen-set Bloom filter).
+    is an LSH-verified near-duplicate (word-set Jaccard ≥
+    ``NEAR_DUP_THRESHOLD``) of any EARLIER document — a smaller doc_id in
+    the same batch, or any document of a committed earlier batch, retained
+    or not (dropped docs still suppress, exactly like a seen-set Bloom
+    filter).
 
     Because the band keys are deterministic per document, ingesting a
     corpus in doc_id-ordered batches retains exactly the documents that are
     not the ``id_b`` of any pair in the full-corpus
-    :func:`minhash_near_dup_pairs` — order-independent semantics, which is
-    what makes the query oracle-able and the ingest safely re-batchable.
+    :func:`minhash_near_dup_pairs` at its default LSH setting —
+    order-independent semantics, which is what makes the query oracle-able
+    and the ingest safely re-batchable.
 
     Appends the batch's band keys + token sets to the store; idempotent per
     batch_id (replay-safe).
@@ -367,10 +370,11 @@ def ingest_batch_near_dup(batch: DataFrame, store_dir: str, batch_id: int,
     import os
 
     spark = batch.sparkSession
-    new_sets = _word_sets(batch, text_col)
-    new_bands = band_keys(minhash(new_sets, num_perm), num_perm, bands)
+    new_sets = _word_sets(batch)
+    new_bands = band_keys(minhash(new_sets, NEAR_DUP_NUM_PERM), NEAR_DUP_NUM_PERM,
+                          NEAR_DUP_BANDS)
     # in-batch pairs: the batch self-join (small); drop the later id
-    dropped = jaccard_verify(bucket_pairs(new_bands), new_sets, threshold).select(
+    dropped = jaccard_verify(bucket_pairs(new_bands), new_sets, NEAR_DUP_THRESHOLD).select(
         F.col("id_b").alias("doc_id")
     )
     prev_bands = _read_history(spark, store_dir, "bands", batch_id)
@@ -387,7 +391,7 @@ def ingest_batch_near_dup(batch: DataFrame, store_dir: str, batch_id: int,
         )
         cross = jaccard_verify(
             cand, prev_toks.select(F.col("doc_id").alias("id"), F.col("toks").alias("items")),
-            threshold, sets_b=new_sets,
+            NEAR_DUP_THRESHOLD, sets_b=new_sets,
         )
         dropped = dropped.unionByName(cross.select(F.col("id_b").alias("doc_id")))
     dropped = dropped.distinct()
@@ -413,8 +417,7 @@ def load_retained(spark, store_dir: str) -> DataFrame:
     return spark.read.parquet(*paths)
 
 
-def decontaminate(docs: DataFrame, bench_docs: DataFrame, n: int = 4,
-                  text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def decontaminate(docs: DataFrame, bench_docs: DataFrame, n: int = 4) -> DataFrame:
     """Benchmark n-gram decontamination: flag training documents sharing
     any token n-gram with an evaluation/benchmark set.
 
@@ -430,14 +433,14 @@ def decontaminate(docs: DataFrame, bench_docs: DataFrame, n: int = 4,
     """
     def grams(df: DataFrame) -> DataFrame:
         return df.select(
-            F.col(id_col),
-            F.explode(word_ngrams(F.col(text_col), n)).alias("g"),
+            F.col("doc_id"),
+            F.explode(word_ngrams(F.col("text"), n)).alias("g"),
         )
 
     bench = grams(bench_docs).select("g").distinct()
     return (
         grams(docs)
         .join(F.broadcast(bench), "g")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(F.count_distinct(F.col("g")).alias("n_hit_grams"))
     )

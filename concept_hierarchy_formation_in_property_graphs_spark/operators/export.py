@@ -40,7 +40,7 @@ def _collect_tree(concepts: DataFrame, name_col: str = "label"):
     return info, children, sorted(roots, key=lambda c: info[c]["label"])
 
 
-def render_ascii(concepts: DataFrame, min_support: float = 0.0) -> str:
+def render_ascii(concepts: DataFrame) -> str:
     """T5 printRec — indented ASCII tree ordered by path label."""
     info, children, roots = _collect_tree(concepts)
     lines: list[str] = []
@@ -48,9 +48,8 @@ def render_ascii(concepts: DataFrame, min_support: float = 0.0) -> str:
     def rec(cid: str, indent: int):
         r = info[cid]
         lines.append("  " * indent + f"{r['label']} (count={r['count']})")
-        for kid in children.get(cid, ()):  # pruned children keep order
-            if _support_ok(info, r, kid, min_support):
-                rec(kid, indent + 1)
+        for kid in children.get(cid, ()):
+            rec(kid, indent + 1)
 
     for root in roots:
         rec(root, 0)
@@ -83,8 +82,7 @@ def to_bracket(concepts: DataFrame, name_col: str = "label",
     return "{forest" + "".join(rec(r) for r in roots) + "}"
 
 
-def to_tex_forest(concepts: DataFrame,
-                  min_support: float = FOREST_MIN_SUPPORT) -> str:
+def to_tex_forest(concepts: DataFrame) -> str:
     """T5 getTexForrest — tikz forest body with 0.5% support pruning."""
     info, children, roots = _collect_tree(concepts)
 
@@ -92,7 +90,7 @@ def to_tex_forest(concepts: DataFrame,
         r = info[cid]
         kids = " ".join(
             rec(k) for k in children.get(cid, ())
-            if _support_ok(info, r, k, min_support)
+            if _support_ok(info, r, k, FOREST_MIN_SUPPORT)
         )
         body = f"{{{r['label']} ({r['count']})}}"
         return f"[{body} {kids}]" if kids else f"[{body}]"
@@ -101,15 +99,14 @@ def to_tex_forest(concepts: DataFrame,
     return "\\begin{forest}\n" + inner + "\n\\end{forest}\n"
 
 
-def to_tex_tables(concept_stats: DataFrame, concepts: DataFrame,
-                  min_support: float = TABLE_MIN_SUPPORT) -> str:
+def to_tex_tables(concept_stats: DataFrame, concepts: DataFrame) -> str:
     """T5 getTexTables — one LaTeX tabular per kept concept: attribute →
     value histogram rows, concepts below 5% support of their parent pruned."""
     info, children, roots = _collect_tree(concepts)
     keep = set(roots)
     for cid, r in info.items():
         for k in children.get(cid, ()):
-            if _support_ok(info, r, k, min_support):
+            if _support_ok(info, r, k, TABLE_MIN_SUPPORT):
                 keep.add(k)
     stats = concept_stats.collect()
     by_cid: dict[str, list] = {}
@@ -222,12 +219,11 @@ def single_linkage_matrix(n: int,
 
 
 def linkage_to_bracket(n: int,
-                       merges: list[tuple[int, int, float, int]],
-                       names: list[str] | None = None) -> str:
+                       merges: list[tuple[int, int, float, int]]) -> str:
     """Flatten a linkage matrix to the bracket notation apted.jar consumes
-    (`tree_edit_distance.py:53-124`); internal nodes are named c<k>."""
-    names = names or [str(i) for i in range(n)]
-    sub: dict[int, str] = {i: "{" + names[i] + "}" for i in range(n)}
+    (`tree_edit_distance.py:53-124`); leaf i is named i, internal nodes
+    c<k>."""
+    sub: dict[int, str] = {i: "{" + str(i) + "}" for i in range(n)}
     for k, (a, b, _d, _sz) in enumerate(merges):
         sub[n + k] = "{c" + str(k) + sub.pop(a) + sub.pop(b) + "}"
     roots = [sub[k] for k in sorted(sub)]

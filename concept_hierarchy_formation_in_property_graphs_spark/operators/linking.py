@@ -28,13 +28,20 @@ from .lsh import band_keys, bucket_pairs, jaccard_verify, minhash
 
 _log = logging.getLogger(__name__)
 
+# Surface LSH: 1 row per band, so candidate recall at the moderate Jaccard
+# levels alias pairs sit at (~0.4-0.6) stays >0.999; buckets past
+# SURFACE_MAX_BUCKET members are chained, not dropped.
+SURFACE_NUM_PERM = 16
+SURFACE_BANDS = 16
+SURFACE_MAX_BUCKET = 256
 
-def char_shingles(col, n: int = 3):
-    """Distinct character n-grams of lower(trimmed string) — pure SQL:
+
+def char_shingles(col):
+    """Distinct character 3-grams of lower(trimmed string) — pure SQL:
     sequence over offsets + transform + array_distinct (codegen'd)."""
     s = F.lower(F.trim(col))
-    cnt = F.greatest(F.length(s) - (n - 1), F.lit(1))
-    grams = F.transform(F.sequence(F.lit(1), cnt), lambda i: s.substr(i, F.lit(n)))
+    cnt = F.greatest(F.length(s) - 2, F.lit(1))
+    grams = F.transform(F.sequence(F.lit(1), cnt), lambda i: s.substr(i, F.lit(3)))
     return F.array_distinct(grams)
 
 
@@ -120,27 +127,24 @@ def connected_components(edges: DataFrame, max_iter: int = 25) -> DataFrame:
     return labels
 
 
-def canonicalize_surfaces(surfaces: DataFrame, threshold: float = 0.6,
-                          num_perm: int = 16, bands: int = 16,
-                          max_bucket: int = 256) -> DataFrame:
+def canonicalize_surfaces(surfaces: DataFrame, threshold: float = 0.6) -> DataFrame:
     """surfaces(surface) → (surface, canonical) via LSH + CC.
 
     canonical = lexicographically smallest surface in each component
     (deterministic, order-free — a correctness upgrade over the reference's
     shuffled insertion order, documented divergence per SURVEY §2.1 O1).
 
-    Default bands = num_perm (1 row/band): candidate recall at the moderate
-    Jaccard levels alias pairs sit at (~0.4-0.6) stays >0.999; precision is
-    restored by the exact-Jaccard verify, so extra candidates only cost the
-    (band-bucketed, skew-safe) join.
+    The LSH setting is SURFACE_NUM_PERM / SURFACE_BANDS (1 row per band);
+    precision is restored by the exact-Jaccard verify, so extra candidates
+    only cost the (band-bucketed, skew-safe) join.
     """
     uniq = surfaces.select("surface").distinct()
     sets = uniq.select(
         F.col("surface").alias("id"), char_shingles(F.col("surface")).alias("items")
     )
-    banded = band_keys(minhash(sets, num_perm), num_perm, bands)
+    banded = band_keys(minhash(sets, SURFACE_NUM_PERM), SURFACE_NUM_PERM, SURFACE_BANDS)
     verified = jaccard_verify(
-        bucket_pairs(banded, max_bucket, chain=True), sets, threshold
+        bucket_pairs(banded, SURFACE_MAX_BUCKET, chain=True), sets, threshold
     )
     comps = connected_components(
         verified.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))

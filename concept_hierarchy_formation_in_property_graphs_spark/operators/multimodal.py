@@ -35,6 +35,7 @@ ASSET_SCHEMA = (
 )
 
 FEATURE_DIM = 16
+ASSET_SEED = 42  # seeds generate_assets_df's payload bytes and sizes
 
 
 PNG_MAGIC = b"\x89PNG\r\n\x1a\n"
@@ -183,18 +184,18 @@ def _decode_stub(data: bytes, kind: str) -> dict:
     return {"fps": 24 + h0 % 6, "n_frames": 1 + h1, "width": 320, "height": 240}
 
 
-def _features_stub(data: bytes, dim: int = FEATURE_DIM) -> list[float]:
-    """STUB feature extractor: dim floats derived from a rolling md5 chain
+def _features_stub(data: bytes) -> list[float]:
+    """STUB feature extractor: FEATURE_DIM floats derived from a rolling md5 chain
     over the hex rendering (oracle-portable, see ``_decode_stub``) — the
     real model call (CLIP/wav2vec/...) drops in here unchanged."""
     out: list[float] = []
     m = data.hex()
-    while len(out) < dim:
+    while len(out) < FEATURE_DIM:
         m = hashlib.md5(m.encode()).hexdigest()
         for i in range(0, 32, 8):
             u = int.from_bytes(bytes.fromhex(m[i : i + 8]), "little")
             out.append(round(u / 2**32 * 2.0 - 1.0, 4))
-    return out[:dim]
+    return out[:FEATURE_DIM]
 
 
 def decode_assets(assets: DataFrame) -> DataFrame:
@@ -227,7 +228,7 @@ def decode_assets(assets: DataFrame) -> DataFrame:
     )
 
 
-def extract_features(assets: DataFrame, dim: int = FEATURE_DIM) -> DataFrame:
+def extract_features(assets: DataFrame) -> DataFrame:
     """(asset_id, embedding ARRAY<FLOAT>) — the ANN-ready feature column;
     feeds operators/similarity.py directly."""
     src = assets.select("asset_id", "data")
@@ -238,7 +239,7 @@ def extract_features(assets: DataFrame, dim: int = FEATURE_DIM) -> DataFrame:
                 {
                     "asset_id": pdf["asset_id"].astype("int64"),
                     "embedding": [
-                        _features_stub(bytes(d), dim) for d in pdf["data"]
+                        _features_stub(bytes(d)) for d in pdf["data"]
                     ],
                 }
             )
@@ -268,25 +269,25 @@ def frame_sample(assets: DataFrame, every_n: int = 10) -> DataFrame:
     )
 
 
-def persist_assets_parquet(spark, path: str, n: int = 120, seed: int = 42) -> str:
+def persist_assets_parquet(spark, path: str) -> str:
     """Write the deterministic asset fixture to parquet (overwrite) so the
     DuckDB oracle twins can recompute decode/feature/frame values from the
     EXACT same rows via ``read_parquet``. Overwritten on every call — 120
     tiny rows — so the oracle can never read a stale fixture."""
-    generate_assets_df(spark, n, seed).write.mode("overwrite").parquet(path)
+    generate_assets_df(spark, 120).write.mode("overwrite").parquet(path)
     return path
 
 
-def generate_assets_df(spark, n: int, seed: int = 42) -> DataFrame:
+def generate_assets_df(spark, n: int) -> DataFrame:
     """Deterministic binary-asset fixture (no external data): payload bytes
     derive from the asset id, sizes vary 1-64 KB."""
     import random
 
     rows = []
     for i in range(n):
-        rng = random.Random(i * 7919 + seed)
+        rng = random.Random(i * 7919 + ASSET_SEED)
         kind = ("image", "audio", "video")[i % 3]
         size = rng.randint(1024, 65536)
-        data = hashlib.md5(str((i, seed)).encode()).digest() * (size // 16 + 1)
+        data = hashlib.md5(str((i, ASSET_SEED)).encode()).digest() * (size // 16 + 1)
         rows.append((i, kind, bytes(data[:size]), {"source": f"synthetic/{i}"}))
     return spark.createDataFrame(rows, ASSET_SCHEMA)

@@ -30,16 +30,18 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+HLL_RSD = 0.02  # approx_count_distinct's target relative standard deviation
+AUDIT_PCTS = (0.5, 0.9, 0.99)
+AUDIT_ACCURACY = 1000
 
-def vocab_sketch(docs: DataFrame, text_col: str = "text",
-                 by: str = "source", rsd: float = 0.02,
-                 bound: float = 0.10) -> DataFrame:
-    """Per-group vocabulary size: exact + HLL++ contract check.
 
-    (by, n_tokens, n_types_exact, sketch_ok)
+def vocab_sketch(docs: DataFrame, bound: float = 0.10) -> DataFrame:
+    """Per-source vocabulary size: exact + HLL++ contract check.
+
+    (source, n_tokens, n_types_exact, sketch_ok)
 
     ``approx_count_distinct`` is Spark's HyperLogLog++ with target
-    relative standard deviation ``rsd``; ``sketch_ok`` asserts the
+    relative standard deviation ``HLL_RSD``; ``sketch_ok`` asserts the
     estimate landed within ``bound``. rsd is a standard deviation, not a
     hard guarantee, so the hash-matched contract column uses a WIDE 5σ
     bound (miss probability ~6e-7 per group — an unlucky-but-correct
@@ -50,24 +52,23 @@ def vocab_sketch(docs: DataFrame, text_col: str = "text",
     column is the one you drop: HLL shuffles a 2^p register array per
     group instead of every distinct token.
     """
-    toks = docs.select(by, F.explode(F.split(F.col(text_col), " ")).alias("tok"))
+    toks = docs.select("source", F.explode(F.split(F.col("text"), " ")).alias("tok"))
     return (
-        toks.groupBy(by)
+        toks.groupBy("source")
         .agg(
             F.count("*").cast("long").alias("n_tokens"),
             F.countDistinct("tok").cast("long").alias("n_types_exact"),
-            F.approx_count_distinct("tok", rsd).alias("_approx"),
+            F.approx_count_distinct("tok", HLL_RSD).alias("_approx"),
         )
         .select(
-            by, "n_tokens", "n_types_exact",
+            "source", "n_tokens", "n_types_exact",
             (F.abs(F.col("_approx") - F.col("n_types_exact"))
              <= F.lit(bound) * F.col("n_types_exact")).alias("sketch_ok"),
         )
     )
 
 
-def dup_rate_sketch(docs: DataFrame, text_col: str = "text",
-                    rsd: float = 0.02, bound: float = 0.10) -> DataFrame:
+def dup_rate_sketch(docs: DataFrame, bound: float = 0.10) -> DataFrame:
     """Corpus-level exact-duplicate rate: exact + HLL++ contract check.
 
     (n_docs, n_unique_exact, dup_rate4, sketch_ok)
@@ -79,12 +80,12 @@ def dup_rate_sketch(docs: DataFrame, text_col: str = "text",
     for the same reason as :func:`vocab_sketch` (rsd is a σ, not a
     guarantee; the tight 3σ check is a test, not a correctness gate).
     """
-    h = F.md5(F.col(text_col).cast("binary"))
+    h = F.md5(F.col("text").cast("binary"))
     return (
         docs.agg(
             F.count("*").cast("long").alias("n_docs"),
             F.countDistinct(h).cast("long").alias("n_unique_exact"),
-            F.approx_count_distinct(h, rsd).alias("_approx"),
+            F.approx_count_distinct(h, HLL_RSD).alias("_approx"),
         )
         .select(
             "n_docs", "n_unique_exact",
@@ -96,58 +97,56 @@ def dup_rate_sketch(docs: DataFrame, text_col: str = "text",
     )
 
 
-def approx_percentile_audit(df: DataFrame, value_col: str = "value",
-                            by: str = "event_type",
-                            pcts: tuple[float, ...] = (0.5, 0.9, 0.99),
-                            accuracy: int = 1000) -> DataFrame:
-    """Exact percentiles + rank-contract audit of ``approx_percentile``.
+def approx_percentile_audit(df: DataFrame) -> DataFrame:
+    """Exact ``AUDIT_PCTS`` percentiles of ``value`` per ``event_type`` +
+    rank-contract audit of ``approx_percentile``.
 
-    (by, pct, exact4, sketch_ok)
+    (event_type, pct, exact4, sketch_ok)
 
     ``approx_percentile`` (Greenwald-Khanna summary, mergeable) promises
-    the returned element's RANK is within n/accuracy of the target rank
+    the returned element's RANK is within n/AUDIT_ACCURACY of the target rank
     — a rank guarantee, not a value guarantee, so the audit recounts:
     for each approximate answer v, rank(v) = |{x ≤ v}| must satisfy
-    |rank − p·n| ≤ n/accuracy + 1. The recount joins the group-level
+    |rank − p·n| ≤ n/AUDIT_ACCURACY + 1. The recount joins the group-level
     approx table (tiny: |groups|·|pcts| rows, broadcast) back onto the
     data — one extra scan, zero extra shuffles of the big side.
 
     ``exact4`` is the interpolated exact percentile (percentile_cont
     semantics, hash-matched by the DuckDB oracle's quantile_cont).
     """
-    plist = list(pcts)
-    agg = df.groupBy(by).agg(
+    plist = list(AUDIT_PCTS)
+    agg = df.groupBy("event_type").agg(
         F.count("*").cast("long").alias("n"),
-        F.percentile_approx(value_col, plist, accuracy).alias("apx"),
-        F.percentile(value_col, F.array(*[F.lit(p) for p in plist])).alias("exc"),
+        F.percentile_approx("value", plist, AUDIT_ACCURACY).alias("apx"),
+        F.percentile("value", F.array(*[F.lit(p) for p in plist])).alias("exc"),
     )
     per_pct = agg.select(
-        by, "n",
+        "event_type", "n",
         F.explode(F.arrays_zip(
             F.array(*[F.lit(p) for p in plist]).alias("p"),
             F.col("apx").alias("av"),
             F.col("exc").alias("ev"),
         )).alias("z"),
     ).select(
-        by, "n", F.col("z.p").alias("p"), F.col("z.av").alias("av"),
+        "event_type", "n", F.col("z.p").alias("p"), F.col("z.av").alias("av"),
         F.col("z.ev").alias("ev"),
     )
     ranks = (
-        df.select(by, value_col)
-        .join(F.broadcast(per_pct.select(by, "p", "av")), by)
-        .groupBy(by, "p")
-        .agg(F.sum(F.when(F.col(value_col) <= F.col("av"), 1).otherwise(0))
+        df.select("event_type", "value")
+        .join(F.broadcast(per_pct.select("event_type", "p", "av")), "event_type")
+        .groupBy("event_type", "p")
+        .agg(F.sum(F.when(F.col("value") <= F.col("av"), 1).otherwise(0))
              .cast("long").alias("rank_av"))
     )
     return (
-        per_pct.join(F.broadcast(ranks), [by, "p"])
+        per_pct.join(F.broadcast(ranks), ["event_type", "p"])
         .select(
-            by,
+            "event_type",
             F.concat(F.lit("p"), (F.col("p") * 100).cast("int").cast("string"))
             .alias("pct"),
             F.round("ev", 4).alias("exact4"),
             (F.abs(F.col("rank_av") - F.col("p") * F.col("n"))
-             <= F.col("n") / accuracy + 1).alias("sketch_ok"),
+             <= F.col("n") / AUDIT_ACCURACY + 1).alias("sketch_ok"),
         )
     )
 

@@ -23,6 +23,10 @@ EVENTS_SCHEMA = (
     "event_id long, ts timestamp, user_id long, event_type string, "
     "value double, props string"
 )
+# AvailableNow drains past these raise TimeoutError: the memory-sink
+# helper's, and the foreachBatch / parquet-sink streams'.
+MEMORY_DRAIN_TIMEOUT_SEC = 120
+DRAIN_TIMEOUT_SEC = 300
 
 
 def _drain(writer: DataStreamWriter, timeout_sec: int, message: str) -> StreamingQuery:
@@ -46,13 +50,13 @@ def read_events_stream(spark: SparkSession, path: str,
     return reader.parquet(path)
 
 
-def windowed_event_counts(events: DataFrame, window: str = "1 hour",
-                          watermark: str = "2 hours") -> DataFrame:
-    """Tumbling event-time window per event_type with a late-data
-    watermark; works identically on a batch or streaming DataFrame."""
-    src = events.withWatermark("ts", watermark) if events.isStreaming else events
+def windowed_event_counts(events: DataFrame) -> DataFrame:
+    """Hourly tumbling event-time window per event_type with a 2-hour
+    late-data watermark; works identically on a batch or streaming
+    DataFrame."""
+    src = events.withWatermark("ts", "2 hours") if events.isStreaming else events
     return (
-        src.groupBy(F.window("ts", window).alias("win"), "event_type")
+        src.groupBy(F.window("ts", "1 hour").alias("win"), "event_type")
         .agg(
             F.count("*").alias("n_events"),
             F.round(F.sum("value"), 2).alias("sum_value"),
@@ -64,9 +68,7 @@ def windowed_event_counts(events: DataFrame, window: str = "1 hour",
     )
 
 
-def rollup_time_buckets(events: DataFrame, ts_col: str = "ts",
-                        keys: tuple[str, ...] = ("event_type",),
-                        value_col: str = "value") -> dict[str, DataFrame]:
+def rollup_time_buckets(events: DataFrame) -> dict[str, DataFrame]:
     """Hypertable-style continuous-aggregate ladder: hourly buckets from
     the raw events, DAILY buckets re-aggregated FROM THE HOURLY table —
     each coarser granularity reads the previous rollup (hours per day,
@@ -75,19 +77,19 @@ def rollup_time_buckets(events: DataFrame, ts_col: str = "ts",
     avg is carried as (sum, count).
 
     Returns {"hourly": df, "daily": df} with
-    (bucket, *keys, n_events, sum_value).
+    (bucket, event_type, n_events, sum_value).
     """
     hourly = (
         events.groupBy(
-            F.date_trunc("hour", ts_col).alias("bucket"), *keys
+            F.date_trunc("hour", "ts").alias("bucket"), "event_type"
         ).agg(
             F.count("*").alias("n_events"),
-            F.sum(value_col).alias("sum_value"),
+            F.sum("value").alias("sum_value"),
         )
     )
     daily = (
         hourly.groupBy(
-            F.date_trunc("day", "bucket").alias("bucket"), *keys
+            F.date_trunc("day", "bucket").alias("bucket"), "event_type"
         ).agg(
             F.sum("n_events").alias("n_events"),
             F.sum("sum_value").alias("sum_value"),
@@ -190,8 +192,7 @@ def sessionize_stream(events: DataFrame, gap_sec: int = 43_200) -> DataFrame:
     )
 
 
-def run_hierarchy_stream(instances_stream: DataFrame, state_dir: str,
-                         timeout_sec: int = 300):
+def run_hierarchy_stream(instances_stream: DataFrame, state_dir: str):
     """Streaming concept-hierarchy maintenance: every micro-batch of
     instances (instance_id, intent ARRAY<STRING>) merges its concept-sized
     intent-state delta via ``merge_batch_into_state`` (``concepts.intent_state``
@@ -222,7 +223,7 @@ def run_hierarchy_stream(instances_stream: DataFrame, state_dir: str,
     return _drain(
         instances_stream.writeStream.foreachBatch(handle)
         .option("checkpointLocation", state_dir + "/_ckpt"),
-        timeout_sec, "hierarchy stream did not drain",
+        DRAIN_TIMEOUT_SEC, "hierarchy stream did not drain",
     )
 
 
@@ -256,9 +257,9 @@ def merge_batch_into_state(batch_df: DataFrame, batch_id: int,
     state = delta if prev is None else merge_intent_state(prev, delta)
     vdir = os.path.join(state_dir, "state", f"v{batch_id}")
     state.write.mode("overwrite").parquet(vdir)
-    _canonical_intents(batch_df).write.mode("overwrite").parquet(
-        os.path.join(state_dir, "inst", f"b{batch_id}")
-    )
+    # the engine maps instances through their cid only
+    _canonical_intents(batch_df).select("instance_id", "cid").write.mode(
+        "overwrite").parquet(os.path.join(state_dir, "inst", f"b{batch_id}"))
     tmp = os.path.join(state_dir, "CURRENT.tmp")
     with open(tmp, "w") as f:
         f.write(f"v{batch_id}")
@@ -364,11 +365,10 @@ def hierarchy_at(spark: SparkSession, state_dir: str, batch_id: int,
 
 
 def run_dedup_stream(docs_stream: DataFrame, store_dir: str,
-                     mode: str = "exact", timeout_sec: int = 300,
-                     compact_every: int | None = None, **dedup_kw):
+                     compact_every: int | None = None):
     """Streaming ingestion dedup: every micro-batch of documents
-    (doc_id, text, ...) is deduplicated against the persisted seen store via
-    ``dedup.ingest_batch_exact`` / ``ingest_batch_near_dup`` — the streaming
+    (doc_id, text, ...) is exact-deduplicated against the persisted seen
+    store via ``dedup.ingest_batch_exact`` — the streaming
     form of batch-incremental corpus dedup. Replay-safe for the same reason
     the hierarchy stream is: the handlers derive history from committed
     per-batch _SUCCESS markers strictly below the current batch id and
@@ -388,30 +388,27 @@ def run_dedup_stream(docs_stream: DataFrame, store_dir: str,
 
     Read the deduplicated corpus with ``dedup.load_retained``.
     """
-    from .dedup import compact_store, ingest_batch_exact, ingest_batch_near_dup
-
-    ingest = {"exact": ingest_batch_exact, "near_dup": ingest_batch_near_dup}[mode]
+    from .dedup import compact_store, ingest_batch_exact
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
-        ingest(batch_df, store_dir, batch_id, **dedup_kw)
+        ingest_batch_exact(batch_df, store_dir, batch_id)
         if compact_every and (batch_id + 1) % compact_every == 0:
             compact_store(batch_df.sparkSession, store_dir)
 
     return _drain(
         docs_stream.writeStream.foreachBatch(handle)
         .option("checkpointLocation", store_dir + "/_ckpt"),
-        timeout_sec, "dedup stream did not drain",
+        DRAIN_TIMEOUT_SEC, "dedup stream did not drain",
     )
 
 
 def run_stream_available_now(result: DataFrame, query_name: str,
-                             checkpoint_dir: str, timeout_sec: int = 120,
-                             output_mode: str = "complete"):
+                             checkpoint_dir: str, output_mode: str = "complete"):
     """Drain all available input into an in-memory sink (exactly-once),
     return the completed StreamingQuery.
 
     Raises TimeoutError if the drain does not finish within
-    ``timeout_sec`` — a partial memory table must never be mistaken for
+    ``MEMORY_DRAIN_TIMEOUT_SEC`` — a partial memory table must never be mistaken for
     the full result.
 
     ``output_mode`` caveat: the default ``complete`` keeps ALL window
@@ -428,16 +425,15 @@ def run_stream_available_now(result: DataFrame, query_name: str,
         .queryName(query_name)
         .outputMode(output_mode)
         .option("checkpointLocation", checkpoint_dir),
-        timeout_sec,
-        f"stream {query_name!r} did not drain within {timeout_sec}s; "
+        MEMORY_DRAIN_TIMEOUT_SEC,
+        f"stream {query_name!r} did not drain within {MEMORY_DRAIN_TIMEOUT_SEC}s; "
         "memory table would be partial",
     )
 
 
 def run_watermark_dedup_stream(events_stream: DataFrame, out_dir: str,
                                key_cols: list[str] | None = None,
-                               ts_col: str = "ts", delay: str = "1 hour",
-                               timeout_sec: int = 300):
+                               delay: str = "1 hour"):
     """Built-in streaming dedup: ``dropDuplicatesWithinWatermark`` keeps
     the first arrival per key and ages its dedup state out with the
     watermark — O(keys-within-delay) state instead of the unbounded
@@ -452,11 +448,11 @@ def run_watermark_dedup_stream(events_stream: DataFrame, out_dir: str,
     """
     key_cols = key_cols or ["event_id"]
     return _drain(
-        events_stream.withWatermark(ts_col, delay)
+        events_stream.withWatermark("ts", delay)
         .dropDuplicatesWithinWatermark(key_cols)
         .writeStream.format("parquet")
         .option("path", out_dir + "/data")
         .option("checkpointLocation", out_dir + "/_ckpt")
         .outputMode("append"),
-        timeout_sec, "watermark dedup stream did not drain",
+        DRAIN_TIMEOUT_SEC, "watermark dedup stream did not drain",
     )

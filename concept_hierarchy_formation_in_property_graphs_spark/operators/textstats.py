@@ -14,21 +14,22 @@ EN_STOPWORDS = (
     "the", "a", "an", "and", "or", "of", "to", "in", "is", "it",
     "on", "for", "with", "as", "by", "at", "this", "that",
 )
+LANG_THRESHOLD = 0.05  # stopword density at or above which a doc is 'en'
 
 
 def _tokens(col):
     return F.split(col, " ")
 
 
-def token_counts(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def token_counts(docs: DataFrame) -> DataFrame:
     """(doc_id, n_tokens, n_distinct_tokens, avg_token_len4)."""
-    t = _tokens(F.col(text_col))
+    t = _tokens(F.col("text"))
     return docs.select(
         "doc_id",
         F.size(t).alias("n_tokens"),
         F.size(F.array_distinct(t)).alias("n_distinct_tokens"),
         F.round(
-            (F.length(F.col(text_col)) - F.size(t) + 1) / F.size(t), 4
+            (F.length(F.col("text")) - F.size(t) + 1) / F.size(t), 4
         ).alias("avg_token_len4"),
     )
 
@@ -38,14 +39,14 @@ def _n_stop(t):
     return F.size(F.filter(t, lambda x: F.array_contains(stops, x)))
 
 
-def _lang_col(text_col: str, threshold: float):
-    t = _tokens(F.col(text_col))
+def _lang_col():
+    t = _tokens(F.col("text"))
     ratio = _n_stop(t) / F.size(t)
-    return F.when(ratio >= threshold, F.lit("en")).otherwise(F.lit("other"))
+    return F.when(ratio >= LANG_THRESHOLD, F.lit("en")).otherwise(F.lit("other"))
 
 
-def _quality_col(text_col: str):
-    t = _tokens(F.col(text_col))
+def _quality_col():
+    t = _tokens(F.col("text"))
     n = F.size(t)
     length_score = F.least(n / F.lit(100.0), F.lit(1.0))
     diversity = F.size(F.array_distinct(t)) / n
@@ -53,14 +54,14 @@ def _quality_col(text_col: str):
     return F.round(0.4 * length_score + 0.3 * diversity + 0.3 * stop_score, 4)
 
 
-def _fingerprint_col(text_col: str):
-    t = _tokens(F.col(text_col))
+def _fingerprint_col():
+    t = _tokens(F.col("text"))
     return F.md5(F.concat_ws(" ", F.array_sort(F.array_distinct(t))))
 
 
-def stopword_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def stopword_stats(docs: DataFrame) -> DataFrame:
     """(doc_id, n_stop, stop_ratio4) — stopword density."""
-    t = _tokens(F.col(text_col))
+    t = _tokens(F.col("text"))
     n_stop = _n_stop(t)
     return docs.select(
         "doc_id",
@@ -69,25 +70,24 @@ def stopword_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def language_id(docs: DataFrame, text_col: str = "text",
-                threshold: float = 0.05) -> DataFrame:
-    """(doc_id, lang_pred) — 'en' if stopword density >= threshold."""
-    return docs.select("doc_id", _lang_col(text_col, threshold).alias("lang_pred"))
+def language_id(docs: DataFrame) -> DataFrame:
+    """(doc_id, lang_pred) — 'en' if stopword density >= LANG_THRESHOLD."""
+    return docs.select("doc_id", _lang_col().alias("lang_pred"))
 
 
-def quality_scores(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def quality_scores(docs: DataFrame) -> DataFrame:
     """(doc_id, quality4) — composite in [0,1]:
     0.4·length_score + 0.3·lexical_diversity + 0.3·stopword_presence."""
-    return docs.select("doc_id", _quality_col(text_col).alias("quality4"))
+    return docs.select("doc_id", _quality_col().alias("quality4"))
 
 
-def fingerprints(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def fingerprints(docs: DataFrame) -> DataFrame:
     """(doc_id, fingerprint) — md5 over the sorted distinct token set
     (order-insensitive content fingerprint)."""
-    return docs.select("doc_id", _fingerprint_col(text_col).alias("fingerprint"))
+    return docs.select("doc_id", _fingerprint_col().alias("fingerprint"))
 
 
-def repetition_signals(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def repetition_signals(docs: DataFrame) -> DataFrame:
     """Gopher/MassiveText-style repetition quality signals, token-based:
 
     (doc_id, dup_trigram_frac4, top_bigram_frac4, max_token_run)
@@ -107,12 +107,11 @@ def repetition_signals(docs: DataFrame, text_col: str = "text") -> DataFrame:
     partial aggregation, no all-pairs or window over the whole corpus.
     """
     dup_tri = docs.select(
-        "doc_id", _dup_trigram_col(text_col).alias("dup_trigram_frac4"))
-    return _join_agg_signals(dup_tri, docs, text_col)
+        "doc_id", _dup_trigram_col().alias("dup_trigram_frac4"))
+    return _join_agg_signals(dup_tri, docs)
 
 
-def _join_agg_signals(flat: DataFrame, docs: DataFrame,
-                      text_col: str) -> DataFrame:
+def _join_agg_signals(flat: DataFrame, docs: DataFrame) -> DataFrame:
     """Attach the two aggregate-shaped repetition signals to a per-doc
     projection. LEFT joins, not inner: ``_top_bigram_agg`` emits no row
     for documents with fewer than two tokens (the bigram explode is
@@ -121,13 +120,13 @@ def _join_agg_signals(flat: DataFrame, docs: DataFrame,
     defaults are the semantically-true values for a short doc: no bigram
     exists, so top-bigram coverage is 0.0; ``split`` always yields at
     least one token, so the longest run is at least 1."""
-    return (flat.join(_top_bigram_agg(docs, text_col), "doc_id", "left")
-            .join(_max_run_agg(docs, text_col), "doc_id", "left")
+    return (flat.join(_top_bigram_agg(docs), "doc_id", "left")
+            .join(_max_run_agg(docs), "doc_id", "left")
             .na.fill({"top_bigram_frac4": 0.0, "max_token_run": 1}))
 
 
-def _grams_col(text_col: str, width: int):
-    t = _tokens(F.col(text_col))
+def _grams_col(width: int):
+    t = _tokens(F.col("text"))
     n = F.size(t)
     seq = F.sequence(F.lit(1), n - (width - 1))
     built = F.transform(seq, lambda i: F.concat_ws(" ", F.slice(t, i, width)))
@@ -136,22 +135,22 @@ def _grams_col(text_col: str, width: int):
     return F.when(n >= width, built).otherwise(F.array().cast("array<string>"))
 
 
-def _dup_trigram_col(text_col: str):
-    tri = _grams_col(text_col, 3)
+def _dup_trigram_col():
+    tri = _grams_col(3)
     return F.when(
         F.size(tri) > 0,
         F.round(1.0 - F.size(F.array_distinct(tri)) / F.size(tri), 4),
     ).otherwise(F.lit(0.0))
 
 
-def _top_bigram_agg(docs: DataFrame, text_col: str) -> DataFrame:
+def _top_bigram_agg(docs: DataFrame) -> DataFrame:
     # grams are hashed to 8-byte longs BEFORE the shuffle — the signal
     # only needs the max multiplicity, never the gram text, and a 64-bit
     # in-document collision (p ≈ n²/2^65 per doc) is beyond negligible
-    n = F.size(_tokens(F.col(text_col)))
+    n = F.size(_tokens(F.col("text")))
     return (
         docs.select("doc_id", n.alias("n_tokens"),
-                    F.explode(_grams_col(text_col, 2)).alias("g"))
+                    F.explode(_grams_col(2)).alias("g"))
         .select("doc_id", "n_tokens", F.xxhash64("g").alias("g"))
         .groupBy("doc_id", "g")
         .agg(F.count("*").alias("c"), F.max("n_tokens").alias("n_tokens"))
@@ -161,12 +160,12 @@ def _top_bigram_agg(docs: DataFrame, text_col: str) -> DataFrame:
     )
 
 
-def _max_run_agg(docs: DataFrame, text_col: str) -> DataFrame:
+def _max_run_agg(docs: DataFrame) -> DataFrame:
     from pyspark.sql import Window
 
     # token identity via xxhash64 — run detection compares equality only
     pos = docs.select(
-        "doc_id", F.posexplode(_tokens(F.col(text_col))).alias("pos", "tok")
+        "doc_id", F.posexplode(_tokens(F.col("text"))).alias("pos", "tok")
     ).select("doc_id", "pos", F.xxhash64("tok").alias("tok"))
     w = Window.partitionBy("doc_id", "tok").orderBy("pos")
     return (
@@ -178,8 +177,7 @@ def _max_run_agg(docs: DataFrame, text_col: str) -> DataFrame:
     )
 
 
-def tfidf_keywords(docs: DataFrame, k: int = 5,
-                   text_col: str = "text") -> DataFrame:
+def tfidf_keywords(docs: DataFrame, k: int = 5) -> DataFrame:
     """Top-k tf-idf keywords per document:
     (doc_id, keyword, krank, tfidf4).
 
@@ -194,7 +192,7 @@ def tfidf_keywords(docs: DataFrame, k: int = 5,
     from pyspark.sql import Window
 
     n_docs = docs.count()
-    toks = docs.select("doc_id", F.explode(_tokens(F.col(text_col))).alias("tok"))
+    toks = docs.select("doc_id", F.explode(_tokens(F.col("text"))).alias("tok"))
     tf = toks.groupBy("doc_id", "tok").agg(F.count("*").alias("tf"))
     df_tbl = tf.groupBy("tok").agg(F.count("*").alias("df"))
     scored = (
@@ -211,7 +209,7 @@ def tfidf_keywords(docs: DataFrame, k: int = 5,
     )
 
 
-def admission_signals(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def admission_signals(docs: DataFrame) -> DataFrame:
     """All per-document admission signals in minimal passes:
 
     (doc_id, quality4, lang_pred, fingerprint, dup_trigram_frac4,
@@ -229,9 +227,57 @@ def admission_signals(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """
     flat = docs.select(
         "doc_id",
-        _quality_col(text_col).alias("quality4"),
-        _lang_col(text_col, 0.05).alias("lang_pred"),
-        _fingerprint_col(text_col).alias("fingerprint"),
-        _dup_trigram_col(text_col).alias("dup_trigram_frac4"),
+        _quality_col().alias("quality4"),
+        _lang_col().alias("lang_pred"),
+        _fingerprint_col().alias("fingerprint"),
+        _dup_trigram_col().alias("dup_trigram_frac4"),
     )
-    return _join_agg_signals(flat, docs, text_col)
+    return _join_agg_signals(flat, docs)
+
+
+def admission_flags(signals: DataFrame, contaminated: DataFrame | None,
+                    min_quality: float = 0.5, max_dup_trigram: float = 0.2,
+                    max_top_bigram: float = 0.125,
+                    max_token_run: int = 2) -> DataFrame:
+    """The curation admission policy as per-document stage flags:
+
+    (doc_id, quality, language, exact_dedup, repetition, decontaminated)
+
+    Each flag is true iff the document survives that stage and every
+    earlier one: quality4 ≥ ``min_quality`` → lang_pred 'en' → first per
+    fingerprint by doc_id (ranked AFTER the quality/language predicates, so
+    a twin that fails quality never shadows a good doc) → the three
+    repetition thresholds → not in ``contaminated`` (a doc_id table such as
+    ``dedup.decontaminate``'s; None skips that stage). ``signals`` is
+    :func:`admission_signals`' output; ``decontaminated`` is the admitted
+    set.
+    """
+    from pyspark.sql import Window
+
+    w = Window.partitionBy("fingerprint").orderBy("doc_id")
+    kept = (
+        signals.where((F.col("quality4") >= min_quality)
+                      & (F.col("lang_pred") == "en"))
+        .withColumn("_rn", F.row_number().over(w))
+        .where(F.col("_rn") == 1)
+        .select("doc_id", F.lit(True).alias("_kept"))
+    )
+    flags = signals.join(kept, "doc_id", "left")
+    clean = F.lit(True)
+    if contaminated is not None:
+        flags = flags.join(
+            contaminated.select("doc_id", F.lit(True).alias("_hit")), "doc_id", "left")
+        clean = F.col("_hit").isNull()
+    quality = F.col("quality4") >= min_quality
+    exact = F.col("_kept").isNotNull()
+    repetition = exact & ((F.col("dup_trigram_frac4") <= max_dup_trigram)
+                          & (F.col("top_bigram_frac4") <= max_top_bigram)
+                          & (F.col("max_token_run") <= max_token_run))
+    return flags.select(
+        "doc_id",
+        quality.alias("quality"),
+        (quality & (F.col("lang_pred") == "en")).alias("language"),
+        exact.alias("exact_dedup"),
+        repetition.alias("repetition"),
+        (repetition & clean).alias("decontaminated"),
+    )

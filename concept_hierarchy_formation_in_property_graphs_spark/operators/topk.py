@@ -9,11 +9,12 @@ from pyspark.sql import functions as F
 
 
 def top_k_per_group(df: DataFrame, group_cols: list[str], order_col: str,
-                    k: int = 2, descending: bool = True,
+                    k: int = 2,
                     tiebreak_cols: list[str] | None = None) -> DataFrame:
-    """Deterministic top-k: explicit tiebreak columns keep the result
-    engine-stable (required for the DuckDB oracle comparison)."""
-    ordering = [F.desc(order_col) if descending else F.asc(order_col)]
+    """Deterministic top-k by descending ``order_col``: explicit tiebreak
+    columns keep the result engine-stable (required for the DuckDB oracle
+    comparison)."""
+    ordering = [F.desc(order_col)]
     for c in tiebreak_cols or []:
         ordering.append(F.asc(c))
     w = Window.partitionBy(*group_cols).orderBy(*ordering)

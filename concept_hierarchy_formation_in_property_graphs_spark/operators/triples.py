@@ -27,9 +27,8 @@ def emit_record_triples(
     subj_col: str,
     relations: Sequence[tuple[str, str]],
     explode_relations: Sequence[tuple[str, str]] = (),
-    distinct: bool = True,
 ) -> DataFrame:
-    """records → triples(subj, pred, obj).
+    """records → distinct triples(subj, pred, obj).
 
     relations: (pred, scalar obj column); NULL objects emit nothing
     (load_yelp.cql's CASE WHEN guards). explode_relations: (pred, array
@@ -55,7 +54,7 @@ def emit_record_triples(
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)
-    return out.dropDuplicates(["subj", "pred", "obj"]) if distinct else out
+    return out.dropDuplicates(["subj", "pred", "obj"])
 
 
 def triples_from_mention_pairs(pairs: DataFrame, links: DataFrame) -> DataFrame:

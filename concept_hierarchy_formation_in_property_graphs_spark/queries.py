@@ -2465,7 +2465,7 @@ GROUP BY 1
 )
 def pl_training_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-shard manifest of the deterministic training-shard export
-    (sources/compaction.write_training_shards, key='portable'): shard
+    (sources/compaction.write_training_shards): shard
     membership is pmod(md5_long(doc_id:seed), n) — a pure function of
     (doc_id, seed, n) that DuckDB recomputes bit-identically. The
     balanced counts double as the shard-size audit a data loader needs."""
@@ -2807,47 +2807,25 @@ def tx_admission_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     survivor counts for: corpus → quality ≥ 0.5 → language 'en' → exact
     dedup (first per fingerprint) → repetition thresholds
     (dup-trigram ≤ 0.2, top-bigram coverage ≤ 0.125, run ≤ 2) →
-    4-gram decontamination vs the held-out eval split. Composes five
-    operators (`quality_scores`/`language_id`/`fingerprints`/
-    `repetition_signals`/`decontaminate`); the per-doc flags are computed
-    in one pass and the six counts come from a single aggregate
-    (`stack` unpivot), so the funnel costs one extra job, not six."""
+    4-gram decontamination vs the held-out eval split. The per-doc stage
+    flags are `textstats.admission_flags` over `admission_signals` and
+    `decontaminate` — the policy jobs/run_corpus_job.py admits by — and
+    the six counts come from a single aggregate (`stack` unpivot), so the
+    funnel costs one extra job, not six."""
     from .operators.dedup import decontaminate
-    from .operators.textstats import admission_signals
+    from .operators.textstats import admission_flags, admission_signals
 
     docs = load_table(spark, sf_dir, "documents")
     bench = docs.where(F.col("doc_id") % 23 == 0)
     train = docs.where(F.col("doc_id") % 23 != 0)
-
-    sig = admission_signals(train)  # one pass for all per-doc signals
-    w = Window.partitionBy("fingerprint").orderBy("doc_id")
-    s3_keep = (
-        sig.where((F.col("quality4") >= 0.5) & (F.col("lang_pred") == "en"))
-        .withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") == 1)
-        .select("doc_id", F.lit(True).alias("kept"))
-    )
-    cont = decontaminate(train, bench, n=4).select(
-        "doc_id", F.lit(True).alias("contaminated"))
-
-    flags = sig.join(s3_keep, "doc_id", "left").join(cont, "doc_id", "left")
-    q_ok = F.col("quality4") >= 0.5
-    en_ok = q_ok & (F.col("lang_pred") == "en")
-    kept = F.coalesce(F.col("kept"), F.lit(False))
-    rep_cond = ((F.col("dup_trigram_frac4") <= 0.2)
-                & (F.col("top_bigram_frac4") <= 0.125)
-                & (F.col("max_token_run") <= 2))
-    rok = kept & rep_cond
-    clean = rok & ~F.coalesce(F.col("contaminated"), F.lit(False))
+    flags = admission_flags(admission_signals(train), decontaminate(train, bench, n=4))
 
     def n(cond):
         return F.sum(F.when(cond, 1).otherwise(0)).cast("long")
 
-    agg = flags.agg(
-        F.count("*").cast("long").alias("n0"),
-        n(q_ok).alias("n1"), n(en_ok).alias("n2"), n(kept).alias("n3"),
-        n(rok).alias("n4"), n(clean).alias("n5"),
-    )
+    stages = ["quality", "language", "exact_dedup", "repetition", "decontaminated"]
+    agg = flags.agg(F.count("*").cast("long").alias("n0"),
+                    *[n(F.col(c)).alias(f"n{i}") for i, c in enumerate(stages, 1)])
     return agg.select(F.expr(
         "stack(6, 0, 'corpus', n0, 1, 'quality', n1, 2, 'language', n2, "
         "3, 'exact_dedup', n3, 4, 'repetition', n4, "

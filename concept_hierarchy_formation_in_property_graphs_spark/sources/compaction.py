@@ -15,10 +15,10 @@ shuffle is paid once and every later scan reads big, sequential files.
 **Training shards.** A training-data export wants (a) a deterministic
 global shuffle — examples from the same crawl/domain must not cluster in
 a shard — and (b) uniformly sized shard files a data loader can stripe
-across workers. ``write_training_shards`` derives a stable 64-bit shuffle
-key from the row's id columns (``xxhash64`` with a seed, so re-running
-the export is byte-for-byte reproducible and a new seed is a fresh
-shuffle) and assigns ``shard = pmod(key, n_shards)`` **explicitly** —
+across workers. ``write_training_shards`` derives a stable 60-bit shuffle
+key from the row's id columns (``portable_shard_key``, seeded md5, so
+re-running the export is byte-for-byte reproducible, a new seed is a
+fresh shuffle, and DuckDB recomputes the same assignment) and assigns ``shard = pmod(key, n_shards)`` **explicitly** —
 NOT via ``repartitionByRange``, whose sampled range boundaries depend on
 the RDD id and therefore change between runs of the same job. Each shard
 is hash-clustered into a single task and written as one file under a
@@ -53,7 +53,6 @@ def compact_table(
     dst: str,
     partition_cols: list[str] | None = None,
     max_records_per_file: int = 1_000_000,
-    fmt: str = "parquet",
 ) -> None:
     """Rewrite the table at ``src`` into ``dst`` with the minimum number
     of files per partition directory (1 + overflow under the row cap).
@@ -62,12 +61,11 @@ def compact_table(
     partition's rows land in a single task; unpartitioned tables coalesce
     to the fewest partitions that respect ``max_records_per_file``.
     """
-    df = spark.read.format(fmt).load(src)
+    df = spark.read.parquet(src)
     if partition_cols:
         writer = (
             df.repartition(*[F.col(c) for c in partition_cols])
-            .write.format(fmt)
-            .mode("overwrite")
+            .write.mode("overwrite")
             .option("maxRecordsPerFile", max_records_per_file)
             .partitionBy(*partition_cols)
         )
@@ -76,15 +74,13 @@ def compact_table(
         n_parts = max(1, -(-n_rows // max_records_per_file))
         writer = (
             df.repartition(n_parts)
-            .write.format(fmt)
-            .mode("overwrite")
+            .write.mode("overwrite")
             .option("maxRecordsPerFile", max_records_per_file)
         )
-    writer.save(dst)
+    writer.parquet(dst)
 
 
-def files_per_partition(spark: SparkSession, path: str,
-                        fmt: str = "parquet") -> dict[str, int]:
+def files_per_partition(spark: SparkSession, path: str) -> dict[str, int]:
     """Data-file count per Hive partition directory ('' = unpartitioned),
     for compaction tests/audits."""
     import os
@@ -107,43 +103,33 @@ def write_training_shards(
     n_shards: int,
     id_cols: list[str],
     seed: int = 0,
-    fmt: str = "parquet",
-    key: str = "xxhash64",
 ) -> None:
     """Deterministically shuffle ``df`` into ``n_shards`` balanced shard
     directories ``shard=0..n-1`` under ``path`` (one file per shard;
     shard membership and in-file order are a pure function of the id
-    columns + seed). ``key='portable'`` uses the md5 hash family instead
-    of xxhash64 so the assignment is reproducible outside Spark."""
-    if key == "portable":
-        shuffle_key = portable_shard_key(id_cols, seed)
-    else:
-        shuffle_key = F.xxhash64(*[F.col(c) for c in id_cols], F.lit(seed))
-    keyed = df.withColumn(_SHUFFLE_KEY, shuffle_key).withColumn(
-        "shard", F.pmod(F.col(_SHUFFLE_KEY), F.lit(n_shards)).cast("int")
-    )
+    columns + seed, through :func:`portable_shard_key`)."""
+    keyed = df.withColumn(_SHUFFLE_KEY, portable_shard_key(id_cols, seed))
+    keyed = keyed.withColumn(
+        "shard", F.pmod(F.col(_SHUFFLE_KEY), F.lit(n_shards)).cast("int"))
     (
         # hash-cluster on the shard value: every row of a shard lands in
         # exactly one task, so each shard=K/ directory gets one file
         keyed.repartition(n_shards, F.col("shard"))
         .sortWithinPartitions("shard", _SHUFFLE_KEY)
         .drop(_SHUFFLE_KEY)
-        .write.format(fmt)
-        .mode("overwrite")
+        .write.mode("overwrite")
         .partitionBy("shard")
-        .save(path)
+        .parquet(path)
     )
 
 
-def read_training_shards(spark: SparkSession, path: str,
-                         fmt: str = "parquet") -> DataFrame:
+def read_training_shards(spark: SparkSession, path: str) -> DataFrame:
     """Read shards back, dropping the layout-only ``shard`` column."""
-    return spark.read.format(fmt).load(path).drop("shard")
+    return spark.read.parquet(path).drop("shard")
 
 
 def plan_packed_sequences(docs: DataFrame, seq_len: int, n_shards: int,
-                          seed: int = 0, id_col: str = "doc_id",
-                          text_col: str = "text") -> DataFrame:
+                          seed: int = 0) -> DataFrame:
     """Deterministic concatenate-and-cut packing plan for LM training:
 
     (doc_id, shard, seq_id, seq_offset, n_tokens)
@@ -164,10 +150,10 @@ def plan_packed_sequences(docs: DataFrame, seq_len: int, n_shards: int,
     the parallelism knob, sized so a shard's plan rows fit one task; the
     cumulative sum never sees the corpus globally).
     """
-    key = portable_shard_key([id_col], seed)
-    toks = F.size(F.split(F.col(text_col), " "))
+    key = portable_shard_key(["doc_id"], seed)
+    toks = F.size(F.split(F.col("text"), " "))
     keyed = docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.pmod(key, F.lit(n_shards)).cast("int").alias("shard"),
         key.alias(_SHUFFLE_KEY),
         toks.cast("long").alias("n_tokens"),
@@ -176,12 +162,12 @@ def plan_packed_sequences(docs: DataFrame, seq_len: int, n_shards: int,
 
     w = (
         Window.partitionBy("shard")
-        .orderBy(_SHUFFLE_KEY, id_col)
+        .orderBy(_SHUFFLE_KEY, "doc_id")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     cum_end = F.sum("n_tokens").over(w)
     return keyed.select(
-        id_col, "shard", "n_tokens",
+        "doc_id", "shard", "n_tokens",
         F.floor((cum_end - F.col("n_tokens")) / seq_len).alias("seq_id"),
         F.pmod(cum_end - F.col("n_tokens"), F.lit(seq_len)).cast("long")
         .alias("seq_offset"),

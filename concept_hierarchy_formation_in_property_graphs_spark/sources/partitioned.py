@@ -28,31 +28,28 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
-def write_partitioned(df: DataFrame, path: str, partition_cols: list[str],
-                      fmt: str = "parquet") -> None:
+def write_partitioned(df: DataFrame, path: str, partition_cols: list[str]) -> None:
     """Persist ``df`` under a Hive layout partitioned by ``partition_cols``
     (overwrite). The partition columns are stored in the directory names,
     not the data files — readers recover them automatically."""
     (
-        df.write.format(fmt)
-        .mode("overwrite")
+        df.write.mode("overwrite")
         .partitionBy(*partition_cols)
-        .save(path)
+        .parquet(path)
     )
 
 
-def with_date_partition(events: DataFrame, ts_col: str = "ts",
-                        part_col: str = "event_date") -> DataFrame:
-    """Add the canonical daily partition column (DATE, low cardinality)."""
-    return events.withColumn(part_col, F.to_date(F.col(ts_col)))
+def with_date_partition(events: DataFrame) -> DataFrame:
+    """Add the canonical daily partition column ``event_date`` = the DATE
+    of ``ts`` (low cardinality)."""
+    return events.withColumn("event_date", F.to_date(F.col("ts")))
 
 
-def read_partitioned(spark: SparkSession, path: str,
-                     fmt: str = "parquet") -> DataFrame:
+def read_partitioned(spark: SparkSession, path: str) -> DataFrame:
     """Read a Hive-layout table; filters on partition columns become
     ``PartitionFilters`` (directory pruning), everything else stays a
     ``PushedFilters`` row-group predicate."""
-    return spark.read.format(fmt).load(path)
+    return spark.read.parquet(path)
 
 
 def partition_filters(df: DataFrame) -> str:

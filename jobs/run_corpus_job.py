@@ -28,13 +28,11 @@ def run(spark, documents_path: str, workdir: str, bench_path: str | None = None,
         n_shards: int = 16, min_quality: float = 0.5,
         max_dup_trigram: float = 0.2, max_top_bigram: float = 0.125,
         max_token_run: int = 2) -> dict:
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
     from concept_hierarchy_formation_in_property_graphs_spark.operators.dedup import (
         decontaminate,
     )
     from concept_hierarchy_formation_in_property_graphs_spark.operators.textstats import (
+        admission_flags,
         admission_signals,
     )
     from concept_hierarchy_formation_in_property_graphs_spark.plans.checkpoint import (
@@ -63,27 +61,11 @@ def run(spark, documents_path: str, workdir: str, bench_path: str | None = None,
         contaminated = None
 
     def build_admitted():
-        # fingerprint dedup ranks AFTER the quality/language predicates —
-        # the same stage order as tx_admission_funnel and its oracle, so
-        # the funnel diagnostic describes exactly this job's admitted set
-        # (a doc whose fingerprint twin fails quality must not shadow it)
-        w = Window.partitionBy("fingerprint").orderBy("doc_id")
-        keep = (
-            signals.where(
-                (F.col("quality4") >= min_quality)
-                & (F.col("lang_pred") == "en")
-            )
-            .withColumn("fp_rank", F.row_number().over(w).cast("long"))
-            .where(
-                (F.col("fp_rank") == 1)
-                & (F.col("dup_trigram_frac4") <= max_dup_trigram)
-                & (F.col("top_bigram_frac4") <= max_top_bigram)
-                & (F.col("max_token_run") <= max_token_run)
-            ).select("doc_id")
-        )
-        if contaminated is not None:
-            keep = keep.join(contaminated.select("doc_id"), "doc_id", "left_anti")
-        return docs.join(keep, "doc_id")
+        flags = admission_flags(signals, contaminated, min_quality=min_quality,
+                                max_dup_trigram=max_dup_trigram,
+                                max_top_bigram=max_top_bigram,
+                                max_token_run=max_token_run)
+        return docs.join(flags.where("decontaminated").select("doc_id"), "doc_id")
 
     admitted = runner.stage("c3_admitted", build_admitted)
 
@@ -92,7 +74,7 @@ def run(spark, documents_path: str, workdir: str, bench_path: str | None = None,
     if not os.path.exists(os.path.join(shards_dir, "_SUCCESS")):
         write_training_shards(
             admitted, shards_dir, n_shards,
-            id_cols=["doc_id"], seed=7, key="portable")
+            id_cols=["doc_id"], seed=7)
 
     return {
         "total": docs.count(),

@@ -106,17 +106,15 @@ def test_training_shards_deterministic_and_balanced(spark, tmpdir):
 
 
 def test_portable_shards_match_manifest_query(spark, tmpdir):
-    """key='portable' shard membership must equal the oracle-checkable
-    assignment pl_training_shards computes (pmod(md5_long(id:seed), n))."""
+    """Shard membership must equal the oracle-checkable assignment
+    pl_training_shards computes (pmod(md5_long(id:seed), n))."""
     from concept_hierarchy_formation_in_property_graphs_spark.sources.compaction import (
         portable_shard_key,
     )
 
     docs = spark.range(0, 500).select(F.col("id").alias("doc_id"))
     out = tmpdir + "/shards"
-    write_training_shards(
-        docs, out, n_shards=16, id_cols=["doc_id"], seed=7, key="portable"
-    )
+    write_training_shards(docs, out, n_shards=16, id_cols=["doc_id"], seed=7)
     got = {
         (r.doc_id, int(r.shard))
         for r in spark.read.parquet(out)

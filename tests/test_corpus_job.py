@@ -77,3 +77,29 @@ def test_corpus_job_without_bench_skips_decontamination(spark, corpus_paths, tmp
     admitted = spark.read.parquet(os.path.join(wd, "c3_admitted"))
     ids = sorted(r["doc_id"] for r in admitted.select("doc_id").collect())
     assert 6 in ids  # nothing to decontaminate against -> doc 6 survives
+
+
+def test_corpus_job_admits_the_admission_funnel_survivors(spark, corpus_paths, tmp_path):
+    """The job and tx_admission_funnel share one admission policy: over a
+    documents table holding the same docs plus the bench text at doc_id 23
+    (the funnel's held-out split is doc_id % 23 == 0), the funnel's
+    decontaminated count is the job's admitted set."""
+    from pyspark.sql import functions as F
+    from run_corpus_job import run
+
+    from concept_hierarchy_formation_in_property_graphs_spark.queries import (
+        tx_admission_funnel,
+    )
+
+    dpath, bpath, wd = corpus_paths
+    run(spark, dpath, wd, bench_path=bpath, n_shards=2)
+    admitted = spark.read.parquet(os.path.join(wd, "c3_admitted"))
+    ids = sorted(r["doc_id"] for r in admitted.select("doc_id").collect())
+
+    sf = str(tmp_path / "sf")
+    bench = spark.read.parquet(bpath).withColumn("doc_id", F.lit(23).cast("long"))
+    spark.read.parquet(dpath).unionByName(bench).write.parquet(sf + "/documents.parquet")
+    funnel = {r["stage"]: r["n_docs"] for r in tx_admission_funnel(spark, sf).collect()}
+    assert ids == [1, 2]
+    assert funnel["corpus"] == 6
+    assert funnel["decontaminated"] == len(ids)

@@ -88,7 +88,7 @@ def test_incremental_near_dup_equals_full_corpus_formula(spark, store):
     docs = _docs(spark)
     kw = dict(num_perm=16, bands=8, threshold=0.7)
     for i, b in enumerate(_batches(docs, [20, 35])):
-        ingest_batch_near_dup(b, store, i, **kw)
+        ingest_batch_near_dup(b, store, i)
     pairs = minhash_near_dup_pairs(docs, **kw)
     dropped = {r["id_b"] for r in pairs.select("id_b").collect()}
     expect = _ids(docs) - dropped
@@ -127,7 +127,7 @@ def test_streaming_dedup_equals_batch(spark, store):
             .option("recursiveFileLookup", "true")
             .parquet(src)
         )
-        run_dedup_stream(stream, store, mode="exact")
+        run_dedup_stream(stream, store)
         # micro-batch ARRIVAL order isn't contractual for a file stream, so
         # assert the order-independent invariant: exactly one survivor per
         # distinct text, none lost
@@ -161,7 +161,7 @@ def test_streaming_dedup_with_periodic_compaction(spark, store):
             .option("recursiveFileLookup", "true")
             .parquet(src)
         )
-        run_dedup_stream(stream, store, mode="exact", compact_every=2)
+        run_dedup_stream(stream, store, compact_every=2)
         retained = load_retained(spark, store)
         n_texts = docs.select("text").distinct().count()
         assert retained.count() == n_texts

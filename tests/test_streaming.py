@@ -191,6 +191,10 @@ def test_hierarchy_stream_replay_is_idempotent(spark):
         # and the replayed state still equals the batch build over all rows
         batch = build_hierarchy(_inst_df(spark, rows))
         assert snap["concepts"] == sorted(map(tuple, batch["concepts"].collect()))
+        # the persisted layout holds only the columns the engine reads
+        read = spark.read.parquet
+        assert read(f"{state_dir}/state/v1").columns == ["cid", "intent", "n_exact"]
+        assert read(f"{state_dir}/inst/b1").columns == ["instance_id", "cid"]
     finally:
         shutil.rmtree(state_dir, ignore_errors=True)
 

@@ -43,6 +43,23 @@ def test_extract_text_none_and_str():
     assert extract_text_py("<p>x</p>") == "x"
 
 
+def test_pages_spark_df_rows_equal_generate_pages(spark):
+    """The executor-side generator emits exactly the pure-Python oracle's
+    rows, schema included, at any partitioning."""
+    want, _, _ = generate_pages(60, 20, content_scale=3)
+
+    def norm(rows):
+        return sorted(
+            (r.url, r.warc_ts.timestamp(), bytes(r.html), r.text, r.lang) for r in rows)
+
+    for partitions in (None, 7):
+        df = pages_spark_df(spark, 60, n_entities=20, partitions=partitions,
+                            content_scale=3)
+        assert df.schema.simpleString() == (
+            "struct<url:string,warc_ts:timestamp,html:binary,text:string,lang:string>")
+        assert norm(df.collect()) == norm(want.itertuples(index=False))
+
+
 def test_distributed_extraction_byte_identical(spark):
     pages = pages_spark_df(spark, 150, n_entities=40, partitions=7)
     _, expected, _ = generate_pages(150, 40)

@@ -16,13 +16,13 @@ def main() -> None:
     out_path = sys.argv[4]
 
     from concept_hierarchy_formation_in_property_graphs_spark.fixtures.pages import (
-        pages_spark_df_distributed,
+        pages_spark_df,
     )
     from concept_hierarchy_formation_in_property_graphs_spark.session import get_spark
 
     spark = get_spark(app_name="chf-gen")
     spark.sparkContext.setLogLevel("ERROR")
-    df = pages_spark_df_distributed(
+    df = pages_spark_df(
         spark, n_pages, n_entities=n_entities, content_scale=content_scale,
         partitions=128,
     )

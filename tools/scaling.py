@@ -144,10 +144,10 @@ def _gen(mode: str, n: int, data: str) -> None:
     spark = _session(mode, host_cpus())
     if mode == "pipeline":
         from concept_hierarchy_formation_in_property_graphs_spark.fixtures.pages import (
-            pages_spark_df_distributed,
+            pages_spark_df,
         )
 
-        pages_spark_df_distributed(
+        pages_spark_df(
             spark, n, n_entities=N_ENTITIES, content_scale=CONTENT_SCALE,
             partitions=128,
         ).write.mode("overwrite").parquet(os.path.join(data, "pages"))
