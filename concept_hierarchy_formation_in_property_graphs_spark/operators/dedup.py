@@ -24,28 +24,26 @@ COMPACT_SUBS = ("seen", "bands", "toks", "retained")
 COMPACT_MAX_RECORDS_PER_FILE = 1_000_000
 
 
-def exact_duplicates(docs: DataFrame) -> DataFrame:
-    """Groups of byte-identical texts: (text_hash, keep_id, n_dups).
-
-    One map-side-combinable groupBy on md5(text) — the canonical
-    keep-smallest-id policy makes the result deterministic.
-    """
+def _exact_groups(docs: DataFrame) -> DataFrame:
+    """(text_hash, keep_id, n_dups) for every distinct text: one
+    map-side-combinable groupBy on md5(text), keeping the smallest doc_id
+    so the result is deterministic."""
     return (
-        docs.select(F.md5(F.col("text")).alias("text_hash"), F.col("doc_id"))
+        docs.select(F.md5(F.col("text")).alias("text_hash"), "doc_id")
         .groupBy("text_hash")
         .agg(F.min("doc_id").alias("keep_id"), F.count("*").alias("n_dups"))
-        .where(F.col("n_dups") > 1)
     )
+
+
+def exact_duplicates(docs: DataFrame) -> DataFrame:
+    """Groups of byte-identical texts: (text_hash, keep_id, n_dups)."""
+    return _exact_groups(docs).where(F.col("n_dups") > 1)
 
 
 def dedup_exact(docs: DataFrame) -> DataFrame:
     """documents minus exact duplicates (keep the smallest doc_id)."""
-    keep = (
-        docs.select(F.md5(F.col("text")).alias("text_hash"), "doc_id")
-        .groupBy("text_hash")
-        .agg(F.min("doc_id").alias("doc_id"))
-    )
-    return docs.join(keep.select("doc_id"), "doc_id")
+    keep = _exact_groups(docs).select(F.col("keep_id").alias("doc_id"))
+    return docs.join(keep, "doc_id")
 
 
 def word_tokens(col) -> F.Column:

@@ -38,6 +38,7 @@ from .operators.concepts import (
     galois_closure,
 )
 from .operators.dedup import (
+    _exact_groups,
     minhash_near_dup_pairs,
     minhash_signatures,
     simhash,
@@ -1087,6 +1088,23 @@ def kg_category_utility(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cu.where(F.col("concept_id") == "").select(F.round("cu", 4).alias("cu4"))
 
 
+def _tpch_ablation_intents(spark: SparkSession, sf_dir: str, mode: str) -> DataFrame:
+    """(instance_id, intent) of ``feature_ablation_intents`` over the graph
+    of the TPC-H edge table, the intent joined with commas."""
+    from .operators.graph import graph_from_triples
+    from .operators.two_phase import feature_ablation_intents
+
+    triples = tpch_edges_cached(spark, sf_dir).select(
+        F.col("src").alias("subj"), F.col("rel_type").alias("pred"),
+        F.col("dst").alias("obj"),
+    )
+    nodes, edges = graph_from_triples(triples)
+    intents = feature_ablation_intents(nodes, edges, mode)
+    return intents.select(
+        "instance_id", F.concat_ws(",", "intent").alias("intent")
+    )
+
+
 @_register(
     "kg_ablation_label_char",
     f"""
@@ -1107,18 +1125,7 @@ FROM items GROUP BY instance_id
 def kg_ablation_label_char(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F6 feature ablation (labels + characteristic set — one of the
     reference's 8 `integrate*` variants, `PropertyGraphCobweb.java:40-248`)."""
-    from .operators.graph import graph_from_triples
-    from .operators.two_phase import feature_ablation_intents
-
-    triples = tpch_edges_cached(spark, sf_dir).select(
-        F.col("src").alias("subj"), F.col("rel_type").alias("pred"),
-        F.col("dst").alias("obj"),
-    )
-    nodes, edges = graph_from_triples(triples)
-    intents = feature_ablation_intents(nodes, edges, "label_char")
-    return intents.select(
-        "instance_id", F.concat_ws(",", "intent").alias("intent")
-    )
+    return _tpch_ablation_intents(spark, sf_dir, "label_char")
 
 
 @_register(
@@ -1162,18 +1169,7 @@ def kg_ablation_label_struct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F6 feature ablation (labels + log2-bucketed structural features —
     another of the 8 `integrate*` variants); buckets via exact integer
     log2 (bin-length), portable across engines."""
-    from .operators.graph import graph_from_triples
-    from .operators.two_phase import feature_ablation_intents
-
-    triples = tpch_edges_cached(spark, sf_dir).select(
-        F.col("src").alias("subj"), F.col("rel_type").alias("pred"),
-        F.col("dst").alias("obj"),
-    )
-    nodes, edges = graph_from_triples(triples)
-    intents = feature_ablation_intents(nodes, edges, "label_struct")
-    return intents.select(
-        "instance_id", F.concat_ws(",", "intent").alias("intent")
-    )
+    return _tpch_ablation_intents(spark, sf_dir, "label_struct")
 
 
 @_register(
@@ -1383,12 +1379,7 @@ FROM documents GROUP BY md5(text)
 )
 def dd_exact_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact dedup — hash-groupBy with deterministic keep-smallest-id."""
-    docs = load_table(spark, sf_dir, "documents")
-    return (
-        docs.select(F.md5(F.col("text")).alias("text_hash"), "doc_id")
-        .groupBy("text_hash")
-        .agg(F.min("doc_id").alias("keep_id"), F.count("*").alias("n_dups"))
-    )
+    return _exact_groups(load_table(spark, sf_dir, "documents"))
 
 
 def _minhash_oracle_sql(num_perm: int) -> str:
@@ -1989,17 +1980,39 @@ def dd_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _fixture_pages(spark: SparkSession, n_pages: int = 300, n_entities: int = 80):
-    from .fixtures.pages import pages_spark_df
+def _pl_run(spark: SparkSession, n_pages: int, **kw) -> dict[str, DataFrame]:
+    """``run_pipeline`` with ``kw`` over ``n_pages`` fixture pages, once per
+    session: the pl_* queries read its stage outputs, so they check the
+    pipeline's own wiring. The run uses a fresh temporary workdir (a fixed
+    one would resume snapshots written by older code); the outputs the
+    queries read are localCheckpointed before the workdir is removed."""
+    import shutil
+    import tempfile
 
-    return pages_spark_df(spark, n_pages, n_entities=n_entities)
+    from .fixtures.pages import pages_spark_df
+    from .plans.pipeline import run_pipeline
+
+    def build() -> dict[str, DataFrame]:
+        wd = tempfile.mkdtemp(prefix="chf_pl_")
+        try:
+            pages = pages_spark_df(spark, n_pages, n_entities=80)
+            out = run_pipeline(spark, pages, wd, **kw)
+            return {
+                k: out[k].localCheckpoint(eager=True)
+                for k in ("text", "triples", "nodes", "edges", "intents", "concepts")
+            }
+        finally:
+            shutil.rmtree(wd, ignore_errors=True)
+
+    return _session_memo(spark, ("pl_run", n_pages, *sorted(kw.items())), build)
 
 
 # The Python extraction stages are not SQL-expressible, so their
 # oracles are STORED-GOLDEN comparisons: `tools/gen_goldens.py` persisted
-# each stage's output over the deterministic fixture as a committed parquet
-# snapshot, and the DuckDB twin reads it. Any drift in extraction, mention
-# detection, linking, or the Arrow plumbing breaks the value hash.
+# each stage's output of `run_pipeline` over the deterministic fixture as a
+# committed parquet snapshot, and the DuckDB twin reads it. Any drift in
+# extraction, mention detection, linking, the stage wiring or the Arrow
+# plumbing breaks the value hash.
 _GOLDEN_DIR = str(_Path(__file__).resolve().parent / "fixtures" / "golden")
 
 
@@ -2012,33 +2025,7 @@ def pl_extracted_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     Arrow pass (byte-identical per url to the pure-Python oracle; pytest
     asserts identity, the DuckDB twin compares against the committed
     golden snapshot)."""
-    return _pl_text_and_pairs(spark).select("url", "text")
-
-
-def _pl_text_and_pairs(spark: SparkSession) -> DataFrame:
-    """The pipeline's S1+S2 pass over the English 300-page fixture."""
-    from .functions.mentions import text_and_mention_pairs
-    from .plans.pipeline import all_surfaces, phrase_map
-
-    pages = _fixture_pages(spark).where(F.col("lang") == "en")
-    return text_and_mention_pairs(pages, all_surfaces(80), phrase_map())
-
-
-def _pl_triples_cached(spark: SparkSession) -> DataFrame:
-    """S1→S3 triples over the 300-page fixture, materialized once per
-    session — three registered queries (pl_triples, pl_two_phase_hierarchy,
-    pl_concept_hierarchy) consume the same stage output, exactly like the
-    pipeline's persisted S3 checkpoint."""
-    from .functions.mentions import explode_pairs
-    from .operators.triples import triples_from_mention_pairs
-    from .plans.pipeline import gazetteer_df
-
-    def build() -> DataFrame:
-        mp = explode_pairs(_pl_text_and_pairs(spark))
-        links = gazetteer_df(spark, 80).select("surface", "canonical")
-        return triples_from_mention_pairs(mp, links).localCheckpoint(eager=True)
-
-    return _session_memo(spark, ("pl_triples",), build)
+    return _pl_run(spark, 300, n_entities=80)["text"]
 
 
 @_register(
@@ -2049,7 +2036,7 @@ def pl_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S1→S3 — extraction → gazetteer mentions → canonical triples (the
     north-star output; P/R gate lives in pytest against planted truth, the
     driver gate compares against the committed golden snapshot)."""
-    return _pl_triples_cached(spark)
+    return _pl_run(spark, 300, n_entities=80)["triples"]
 
 
 _PL_SURFACES_PATH = str(
@@ -2147,12 +2134,12 @@ def pl_two_phase_hierarchy(spark: SparkSession, sf_dir: str) -> DataFrame:
     phase-2 summary-intent table persists to parquet and the DuckDB twin
     rebuilds the labeled hierarchy from it (the three phase-1 trees stay
     covered by pytest)."""
-    from .operators.graph import graph_from_triples
     from .operators.two_phase import two_phase_hierarchy
 
-    triples = pl_triples(spark, sf_dir)
-    nodes, edges = graph_from_triples(triples)
-    h = two_phase_hierarchy(spark, nodes, edges, summary_sink=_PL_SUMMARY_PATH)
+    run = _pl_run(spark, 300, n_entities=80)
+    h = two_phase_hierarchy(
+        spark, run["nodes"], run["edges"], summary_sink=_PL_SUMMARY_PATH
+    )
     return h["concepts"].select(
         "concept_id", "parent_id", "depth", "label", "count", "is_leaf"
     )
@@ -2170,20 +2157,9 @@ def pl_open_vocab_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
     loop is not SQL-expressible, so the driver gate compares against the
     committed golden snapshot (`tools/gen_goldens.py`) — the end-to-end
     run is deterministic, so any drift in any stage breaks the hash."""
-    import shutil
-    import tempfile
-
-    from .plans.pipeline import run_pipeline
-
-    pages = _fixture_pages(spark, 150, 80)
-    wd = tempfile.mkdtemp(prefix="chf_ovq_")
-    try:
-        out = run_pipeline(spark, pages, wd, n_entities=60, open_vocab=True,
-                           mention_entities=80)
-        triples = out["triples"].localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(wd, ignore_errors=True)
-    return triples
+    return _pl_run(
+        spark, 150, n_entities=60, open_vocab=True, mention_entities=80
+    )["triples"]
 
 
 _PL_INTENTS_PATH = str(
@@ -2292,20 +2268,11 @@ def pl_concept_hierarchy(spark: SparkSession, sf_dir: str) -> DataFrame:
     round 2 the hierarchy — including path LABELS — is oracled: the
     pipeline-derived intent table is persisted to parquet and the DuckDB
     twin rebuilds the whole tree relationally from it."""
-    from .operators.concepts import build_hierarchy
-    from .operators.graph import graph_from_triples
-
-    triples = pl_triples(spark, sf_dir)
-    nodes, edges = graph_from_triples(triples)
-    cs = characteristic_sets(nodes, edges)
-    inst = cs.select(
+    run = _pl_run(spark, 300, n_entities=80)
+    run["intents"].select(
         F.col("id").alias("instance_id"), F.col("rel_types").alias("intent")
-    )
-    inst.write.mode("overwrite").parquet(_PL_INTENTS_PATH)
-    h = build_hierarchy(
-        spark.read.parquet(_PL_INTENTS_PATH)
-    )
-    return h["concepts"].select(
+    ).write.mode("overwrite").parquet(_PL_INTENTS_PATH)
+    return run["concepts"].select(
         "concept_id", "parent_id", "depth", "label", "count", "is_leaf"
     )
 

@@ -9,6 +9,7 @@ shuffle partitions sized to cores.
 from __future__ import annotations
 
 import os
+from pathlib import Path
 
 from pyspark.sql import SparkSession
 
@@ -17,6 +18,31 @@ def default_cpus() -> int:
     """``SPARK_GRAFT_CPUS`` when set, else the cores this process may run on."""
     env = os.environ.get("SPARK_GRAFT_CPUS")
     return int(env) if env else len(os.sched_getaffinity(0))
+
+
+# GiB of memory left outside the JVM heap: the Python driver, one Python
+# worker per task slot (each holding an Arrow batch) and the JVM's own
+# off-heap memory (metaspace, thread stacks, direct buffers).
+HEAP_HEADROOM_GIB = 4
+
+
+def usable_memory_bytes() -> int:
+    """Physical memory, or the memory cgroup's limit when that is lower."""
+    usable = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    for path in (Path("/sys/fs/cgroup/memory.max"),
+                 Path("/sys/fs/cgroup/memory/memory.limit_in_bytes")):
+        limit = path.read_text().strip() if path.exists() else ""
+        if limit.isdigit():
+            usable = min(usable, int(limit))
+    return usable
+
+
+def driver_memory_gib(cpus: int, usable_bytes: int) -> int:
+    """The default ``spark.driver.memory`` in GiB: 2 GiB per task slot and
+    at least 16, capped at the usable memory minus ``HEAP_HEADROOM_GIB``
+    (and never below 1), so the heap cannot outgrow a small host."""
+    cap = (usable_bytes - HEAP_HEADROOM_GIB * 2**30) // 2**30
+    return max(1, min(max(16, 2 * cpus), cap))
 
 
 def get_spark(
@@ -53,10 +79,14 @@ def get_spark(
         # and a 16g heap under 32 tasks GC-thrashes exactly the queries
         # that build per-task hash tables (observed as multi-10s outliers
         # only at local[32], never at local[8]). -Xmx is a cap, not a
-        # reservation, so the larger ceiling costs nothing when idle.
+        # reservation, but a cap above the host's memory lets the JVM grow
+        # into the Python workers' share, so driver_memory_gib caps it.
         .config(
             "spark.driver.memory",
-            os.environ.get("SPARK_GRAFT_DRIVER_MEM", f"{max(16, 2 * n)}g"),
+            os.environ.get(
+                "SPARK_GRAFT_DRIVER_MEM",
+                f"{driver_memory_gib(n, usable_memory_bytes())}g",
+            ),
         )
     )
     for k, v in (extra_conf or {}).items():

@@ -80,7 +80,7 @@ def compact_table(
     writer.parquet(dst)
 
 
-def files_per_partition(spark: SparkSession, path: str) -> dict[str, int]:
+def files_per_partition(path: str) -> dict[str, int]:
     """Data-file count per Hive partition directory ('' = unpartitioned),
     for compaction tests/audits."""
     import os

@@ -43,10 +43,10 @@ def test_compact_partitioned_collapses_small_files(spark, tmpdir):
     )
     # fragment: 8 writer tasks x 4 partition values = 32 small files
     ev.repartition(8).write.partitionBy("shard").parquet(src)
-    assert sum(files_per_partition(spark, src).values()) >= 16
+    assert sum(files_per_partition(src).values()) >= 16
 
     compact_table(spark, src, dst, partition_cols=["shard"])
-    per_dir = files_per_partition(spark, dst)
+    per_dir = files_per_partition(dst)
     assert len(per_dir) == 4 and all(n == 1 for n in per_dir.values()), per_dir
     # Hive directory values are type-inferred on read (shard=0 -> int);
     # compare on a common type
@@ -61,7 +61,7 @@ def test_compact_respects_row_cap(spark, tmpdir):
     df = spark.range(0, 1000).select(F.col("id"), (F.col("id") % 3).alias("v"))
     df.repartition(10).write.parquet(src)
     compact_table(spark, src, dst, max_records_per_file=300)
-    per_dir = files_per_partition(spark, dst)
+    per_dir = files_per_partition(dst)
     # 1000 rows / cap 300 -> 4 partitions, each within the cap
     assert sum(per_dir.values()) == 4, per_dir
     assert _rows(spark.read.parquet(dst)) == _rows(df)
@@ -77,7 +77,7 @@ def test_training_shards_deterministic_and_balanced(spark, tmpdir):
     write_training_shards(docs, b, n_shards=8, id_cols=["doc_id"], seed=7)
     write_training_shards(docs, c, n_shards=8, id_cols=["doc_id"], seed=8)
 
-    per_a = files_per_partition(spark, a)
+    per_a = files_per_partition(a)
     assert sum(per_a.values()) == 8, per_a
 
     back = read_training_shards(spark, a)

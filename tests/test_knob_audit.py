@@ -73,3 +73,38 @@ def test_every_defaulted_parameter_is_set_by_some_call_site():
         ("pages", "expected_triples_for", "seed"),
         ("pages", "expected_triples_for", "content_scale"),
     }
+
+
+def _is_registered_query(fn: ast.FunctionDef) -> bool:
+    return any(
+        isinstance(d, ast.Call) and getattr(d.func, "id", None) == "_register"
+        for d in fn.decorator_list
+    )
+
+
+def test_every_parameter_is_read_in_its_body():
+    unread = set()
+    for path in _sources([PKG]):
+        for node in ast.parse(path.read_text()).body:
+            if not isinstance(node, ast.FunctionDef) or node.name.startswith("_"):
+                continue
+            a = node.args
+            params = [p.arg for p in a.posonlyargs + a.args + a.kwonlyargs]
+            params += [p.arg for p in (a.vararg, a.kwarg) if p is not None]
+            read = {
+                n.id for stmt in node.body for n in ast.walk(stmt)
+                if isinstance(n, ast.Name)
+            }
+            for name in params:
+                # a registered query takes (spark, sf_dir) by the QueryFn
+                # contract, also when its input is a fixture, not sf_dir
+                if name == "sf_dir" and _is_registered_query(node):
+                    continue
+                if name not in read:
+                    unread.add((path.stem, node.name, name))
+    # drop_checkpoint_tables is a no-op kept for perfbench/workloads.py,
+    # which imports it; removing it is a change to the benchmark itself
+    assert unread == {
+        ("checkpoint", "drop_checkpoint_tables", "spark"),
+        ("checkpoint", "drop_checkpoint_tables", "base_dir"),
+    }

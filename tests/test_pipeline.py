@@ -279,3 +279,34 @@ def test_iceberg_read_surfaces_real_error_without_fallback(spark):
     with pytest.raises(RuntimeError, match="Iceberg read") as ei:
         read_pages(spark, iceberg_table="db.pages")
     assert ei.value.__cause__ is not None  # the Spark loader error is chained
+
+
+def test_pl_queries_read_two_pipeline_runs_and_match_the_goldens(spark, monkeypatch):
+    """The pl_* oracle queries take their stage outputs from run_pipeline
+    itself, one memoized run per fixture (300 pages closed-vocabulary,
+    150 pages open-vocabulary), and the golden-backed ones reproduce the
+    committed snapshots row for row."""
+    import pyarrow.parquet as pq
+
+    from concept_hierarchy_formation_in_property_graphs_spark import queries as q
+    from concept_hierarchy_formation_in_property_graphs_spark.plans import pipeline
+
+    calls = []
+
+    def counted(*args, **kwargs):
+        calls.append(kwargs)
+        return run_pipeline(*args, **kwargs)
+
+    monkeypatch.setattr(q, "_MEMO", {})
+    monkeypatch.setattr(pipeline, "run_pipeline", counted)
+    reg = q.registry()
+    golden = {}
+    for name in ("pl_extracted_text", "pl_triples", "pl_open_vocab_triples"):
+        golden[name] = reg[name](spark, "unused").collect()
+    assert reg["pl_two_phase_hierarchy"](spark, "unused").count() > 0
+    assert len(calls) == 2, calls
+    for name, rows in golden.items():
+        want = pq.read_table(os.path.join(q._GOLDEN_DIR, f"{name}.parquet"))
+        assert sorted(map(tuple, rows)) == sorted(
+            map(tuple, (r.values() for r in want.to_pylist()))
+        ), name

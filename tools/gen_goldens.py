@@ -1,16 +1,16 @@
 """Generate committed golden parquet snapshots for the Python pipeline
-stages (S1 text extraction, S1→S3 triples) on the deterministic pages
-fixture.
+stages (S1 text, S1→S3 triples, open-vocabulary triples) on the
+deterministic pages fixture.
 
-The stages themselves are not SQL-expressible (regex HTML stripping +
-gazetteer mention detection in one Arrow-batched ``mapInArrow`` pass), so their
-oracle is a STORED-GOLDEN comparison: this script runs each stage once and
-writes the result as a single parquet file under
+The stages are not SQL-expressible (one Arrow-batched ``mapInArrow`` pass
+for HTML stripping + mention detection, iterative connected components),
+so their oracle is a STORED-GOLDEN comparison: this script runs each
+``pl_*`` query, which reads a stage output of ``run_pipeline``, and writes
+the result as one parquet file under
 ``concept_hierarchy_formation_in_property_graphs_spark/fixtures/golden/``
-(committed to git); the DuckDB twin just reads the golden. The check is
-meaningful because the fixture corpus is fully deterministic — any drift in
-extraction, mention detection, linking, or the Arrow plumbing changes the
-value hash.
+(committed to git); the DuckDB twin just reads the golden. The fixture is
+fully deterministic, so any drift in extraction, mention detection,
+linking, the stage wiring or the Arrow plumbing changes the value hash.
 
 Regenerate ONLY after an intentional semantic change to those stages:
 
